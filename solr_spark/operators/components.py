@@ -651,15 +651,12 @@ def explain_scores(spark: SparkSession, reader, query_text: str, k: int = 10,
         return spark.createDataFrame([], out_schema)
     topk = bm25_topk(spark, reader, query_text, k=k, mode="wand",
                      boosts=boosts)
-    dict_rows = (reader.dictionary(spark)
-                 .where(F.col("term").isin(qterms))
-                 .select("term", "df").collect())          # bounded: #terms
-    if not dict_rows:
+    term_stats = reader.term_stats(qterms)
+    if not term_stats:
         return spark.createDataFrame([], out_schema)
     bst = boosts or {}
-    stats = [(r["term"], int(r["df"]),
-              float(bst.get(r["term"], 1.0)) * _idf(reader.n_docs, r["df"]))
-             for r in dict_rows]
+    stats = [(t, df, float(bst.get(t, 1.0)) * _idf(reader.n_docs, df))
+             for t, (df, _cf) in sorted(term_stats.items())]
     stats_df = spark.createDataFrame(stats, "term string, df long, idf double")
 
     post = terms_postings(spark, reader, [t for t, _, _ in stats])
@@ -721,10 +718,7 @@ def spellcheck_collate(spark: SparkSession, reader, query_text: str,
     out_schema = "collation string, hits long"
     if not qterms:
         return spark.createDataFrame([], out_schema)
-    present = {r["term"] for r in
-               reader.dictionary(spark)
-                     .where(F.col("term").isin(qterms))
-                     .select("term").distinct().collect()}     # bounded: #terms
+    present = set(reader.term_stats(qterms))
     options: list[list[str]] = []
     for t in qterms:
         if t in present:

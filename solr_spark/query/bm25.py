@@ -12,35 +12,42 @@ length and avgdl = sumTotalTermFreq/docCount. Ties break by docid ascending.
 
 Distributed two-phase top-k (the reference's GET_TOP_IDS / GET_FIELDS split,
 handler/component/QueryComponent.java:789,971,1402):
-  phase 1: term-bucket-pruned posting scan -> per-range vectorized scoring kernel ->
-           bounded candidates; global orderBy(score desc, docid).limit(k)
-  phase 2: join winning docids back to the doc map for (conv_id, turn_idx).
+  plan:    on the driver, with no Spark action — query analysis, dictionary
+           df/cf from one term_bucket-pruned pyarrow read, per-term weights.
+  phase 1: term-bucket-pruned posting scan -> ONE repartition(range_id) -> the
+           scoring kernel (the query's only Python stage) -> per-partition top-k.
+  phase 2: the candidates are broadcast into a join with the cached doc map for
+           (conv_id, turn_idx); one global aggregate sorts them by (score desc,
+           docid), keeps k and ranks them by position.
+A plain query runs 2 Spark jobs: the candidates' broadcast, then the collect.
 
-Global (not per-shard) df/N/avgdl are broadcast into the kernels — the
+Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
 
 WAND mode (reference exposure: QueryComponent.java:448-452, RankQParserPlugin.java:32):
-posting-range rows carry max_tf; the per-range score upper bound
+posting-range rows carry max_tf. The kernel receives every posting row of its
+ranges, sums per range the similarity's bound over the range's terms, e.g. BM25's
   sum_t weight_t * max_tf/(max_tf + k1*(1-b))          (dl -> 0 bound)
-is computed JVM-side. Ranges are processed per-partition in descending bound order by
-a mapInPandas kernel holding a bounded min-heap of size k; a range whose bound is
-strictly below the partition's current k-th score is skipped without decoding.
-Skipping against the partition-local k-th is safe: the global top-k is a subset of the
-union of partition top-k's.
+and scores ranges in (bound desc, range_id) order against a running top-k; a range
+whose bound is strictly below the partition's current k-th score is skipped without
+decoding. Skipping against the partition-local k-th is safe: the global top-k is a
+subset of the union of partition top-k's. The kernel reads the norms (one byte per
+doc) of only the ranges it receives, straight from the index's norms parquet.
 """
 
 from __future__ import annotations
 
-import heapq
 import json
 import os
 from collections import Counter
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from solr_spark.analysis import analyze_text
 from solr_spark.codec.smallfloat import norm_length_table
@@ -49,6 +56,7 @@ from solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from solr_spark.indexing.build import live_segments
 
 _TOPK_SCHEMA = "docid long, score double"
+_OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
 
 from solr_spark.query.similarity import BM25Similarity as _BM25Sim  # noqa: E402
 from solr_spark.query.similarity import resolve as _resolve_sim  # noqa: E402
@@ -72,6 +80,7 @@ class IndexReader:
     avgdl: float
     config: IndexConfig
     _cached: dict = None  # populated by warm()
+    _forward_text: DataFrame = None  # memoized by forward_text()
 
     @classmethod
     def open(cls, index_dir: str, config: IndexConfig | None = None) -> "IndexReader":
@@ -95,9 +104,7 @@ class IndexReader:
     def doc_map(self, spark: SparkSession) -> DataFrame:
         if self._cached and "doc_map" in self._cached:
             return self._cached["doc_map"]
-        return spark.read.parquet(
-            os.path.join(self.index_dir, "analyzed", "batch-*")
-        ).select("docid", "conv_id", "turn_idx")
+        return self.forward_text(spark).select("docid", "conv_id", "turn_idx")
 
     def forward(self, spark: SparkSession) -> DataFrame:
         """The FULL forward table: docid, conv_id, turn_idx, dl, toks, plus
@@ -106,6 +113,18 @@ class IndexReader:
         the parquet scan; column pruning drops toks when unused."""
         return spark.read.parquet(
             os.path.join(self.index_dir, "analyzed", "batch-*"))
+
+    def forward_text(self, spark: SparkSession) -> DataFrame:
+        """The forward table with the analyzed tokens `toks` exposed as
+        `text` — the field name every filter compiler (fq strings, JSON
+        facet domains, field sort, XML queries) addresses. The handle is
+        resolved once per reader: resolving it infers the parquet schema,
+        which is a Spark job."""
+        fwd = self._forward_text
+        if fwd is None or fwd.sparkSession is not spark:
+            fwd = self._forward_text = self.forward(spark).withColumnRenamed(
+                "toks", "text")
+        return fwd
 
     def norms(self, spark: SparkSession) -> DataFrame:
         if self._cached and "norms" in self._cached:
@@ -117,12 +136,37 @@ class IndexReader:
             return self._cached["dictionary"]
         return spark.read.parquet(os.path.join(self.index_dir, "dictionary"))
 
+    def term_stats(self, terms) -> dict[str, tuple[int, int]]:
+        """term -> (df, cf) for the dictionary terms among `terms` (absent
+        terms are omitted). One driver-side pyarrow read pruned to the terms'
+        term_bucket partitions, as LocalSearcher's postings fetch does: no
+        Spark job, and the rows read are bounded by the query's terms."""
+        import pyarrow.dataset as ds
+
+        terms = sorted(set(terms))
+        dic = ds.dataset(os.path.join(self.index_dir, "dictionary"),
+                         partitioning="hive")
+        if not terms or "term_bucket" not in dic.schema.names:
+            return {}  # (an empty index writes no dictionary partition)
+        buckets = sorted(set(_term_buckets(terms, self.config.num_term_buckets)))
+        tbl = dic.to_table(columns=["term", "df", "cf"],
+                           filter=ds.field("term_bucket").isin(buckets)
+                           & ds.field("term").isin(terms))
+        return {t: (int(d), int(c)) for t, d, c in zip(
+            tbl["term"].to_pylist(), tbl["df"].to_pylist(),
+            tbl["cf"].to_pylist())}
+
     def segments_df(self, spark: SparkSession) -> DataFrame:
         if self._cached and "segments" in self._cached:
             return self._cached["segments"]
-        from solr_spark.indexing.build import read_segments
+        from solr_spark.indexing.build import SEGMENT_SCHEMA
 
-        return read_segments(spark, self.segment_paths())
+        # the segment schema is fixed: naming it skips parquet schema
+        # inference, a Spark job per segment root on every query
+        schema = f"{SEGMENT_SCHEMA}, term_bucket int"
+        return reduce(DataFrame.unionByName,
+                      [spark.read.schema(schema).parquet(p)
+                       for p in self.segment_paths()])
 
     def warm(self, spark: SparkSession, segments: bool = False) -> "IndexReader":
         """Persist + materialize the hot query-side structures (idempotent).
@@ -172,7 +216,17 @@ def _idf(n_docs: int, df: int) -> float:
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
-def _score_group(pdf: pd.Series, weights: dict, cfg: IndexConfig, avgdl: float,
+def _empty_df(spark: SparkSession, schema: str) -> DataFrame:
+    """A zero-row DataFrame of `schema` that the optimizer folds to an empty
+    local relation, so collecting it runs no Spark job
+    (spark.createDataFrame([]) runs a Python RDD job)."""
+    return spark.range(1).where(F.lit(False)).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name)
+          for f in T.StructType.fromDDL(schema).fields])
+
+
+def _score_group(pdf: pd.DataFrame, norm_blob: bytes, weights: dict,
+                 cfg: IndexConfig, avgdl: float,
                  length_table: np.ndarray, min_match: int,
                  groups: dict | None = None, gweights: dict | None = None,
                  sim=None, params: dict | None = None,
@@ -180,6 +234,9 @@ def _score_group(pdf: pd.Series, weights: dict, cfg: IndexConfig, avgdl: float,
                  filtered: bool = False,
                  combine: str = "sum", tie: float = 0.0):
     """Score one range group; returns (docids, scores) numpy arrays.
+
+    pdf holds the range's posting rows (term, range_id, doc_gaps, tfs, and
+    filter_bits when `filtered`); norm_blob is the range's norms blob.
 
     min_match is the edismax `mm` contract (ExtendedDismaxQParser.java:66):
     1 = pure disjunction, len(query terms) = conjunction, anything between =
@@ -218,7 +275,6 @@ def _score_group(pdf: pd.Series, weights: dict, cfg: IndexConfig, avgdl: float,
         sim = _DEFAULT_SIM
     params = params or {}
     base = int(pdf["range_id"].iloc[0]) << cfg.range_shift
-    norm_blob = pdf["norm_bytes"].iloc[0]
     if cfg.lucene_norms:
         norms = np.frombuffer(norm_blob, dtype=np.uint8)
         dls = length_table[norms].astype(np.float64)
@@ -240,7 +296,7 @@ def _score_group(pdf: pd.Series, weights: dict, cfg: IndexConfig, avgdl: float,
     if filtered:
         from solr_spark.query.docsets import unpack_bits
 
-        allow = unpack_bits(bytes(pdf["filter_bits"].iloc[0]), width)
+        allow = unpack_bits(pdf["filter_bits"].iloc[0], width)
 
     def _finish():
         if acc_max is not None:
@@ -325,12 +381,25 @@ def _score_group(pdf: pd.Series, weights: dict, cfg: IndexConfig, avgdl: float,
     return _finish()
 
 
-def _local_topk(docids: np.ndarray, scores: np.ndarray, k: int):
+def _merge_topk(docids: np.ndarray, scores: np.ndarray, d: np.ndarray,
+                s: np.ndarray, k: int):
+    """The best k of two candidate sets by (score desc, docid asc)."""
+    docids, scores = np.concatenate((docids, d)), np.concatenate((scores, s))
     if len(docids) > k:
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        keep = scores >= kth  # keep boundary ties; global sort resolves by docid
-        docids, scores = docids[keep], scores[keep]
+        best = np.lexsort((docids, -scores))[:k]
+        docids, scores = docids[best], scores[best]
     return docids, scores
+
+
+def _range_norms(index_dir: str, range_ids: list[int]) -> dict[int, bytes]:
+    """range_id -> norms blob for the given ranges: one pyarrow read of the
+    index's norms parquet, filtered to those ranges."""
+    import pyarrow.dataset as ds
+
+    tbl = ds.dataset(os.path.join(index_dir, "norms")).to_table(
+        columns=["range_id", "norm_bytes"],
+        filter=ds.field("range_id").isin(range_ids))
+    return dict(zip(tbl["range_id"].to_pylist(), tbl["norm_bytes"].to_pylist()))
 
 
 def terms_postings(spark: SparkSession, reader: IndexReader,
@@ -428,25 +497,18 @@ def graph_terms_docs(spark: SparkSession, reader: IndexReader,
     through hub nodes). maxDocFreq=None (the reference's Integer.MAX_VALUE
     default, :100) degrades to a plain set query.
 
-    Spark shape: the df cap is resolved against the DICTIONARY (tiny,
-    term-bucket pruned) before any posting is decoded — a capped-out term
-    costs one dictionary row, never a posting scan. Surviving terms ride the
-    same partition-pruned decode kernel as term_docs. Output: docid, distinct.
+    Spark shape: the df cap is resolved against the DICTIONARY on the driver
+    (IndexReader.term_stats, term-bucket pruned) before any posting is
+    decoded — a capped-out term costs one dictionary row, never a posting
+    scan. Surviving terms ride the same partition-pruned decode kernel as
+    term_docs. Output: docid, distinct.
     """
     terms = sorted(set(terms))
-    if not terms:
-        return spark.createDataFrame([], "docid long")
     if max_doc_freq is not None:
-        cfg = reader.config
-        buckets = sorted(set(_term_buckets(terms, cfg.num_term_buckets)))
-        rows = (reader.dictionary(spark)
-                .where(F.col("term_bucket").isin(buckets)
-                       & F.col("term").isin(terms)
-                       & (F.col("df") <= max_doc_freq))
-                .select("term").collect())
-        terms = sorted(r["term"] for r in rows)
-        if not terms:
-            return spark.createDataFrame([], "docid long")
+        terms = sorted(t for t, (df, _cf) in reader.term_stats(terms).items()
+                       if df <= max_doc_freq)
+    if not terms:
+        return _empty_df(spark, "docid long")
     docs = terms_postings(spark, reader, terms).select("docid").distinct()
     if apply_deletes:
         from solr_spark.indexing.deletes import deletes_df
@@ -527,13 +589,14 @@ def bm25_topk(
     cfg = reader.config
     sim = _resolve_sim(similarity)
     total_tokens = reader.n_docs * reader.avgdl
-    out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     qterms = Counter(analyze_text(query_text, cfg))
     if not qterms:
-        return spark.createDataFrame([], out_schema)
-    # a result can never exceed the doc count; un-capped k would make Spark's
-    # TakeOrdered allocate an O(k) buffer (k=10^9 OOMs a 1 GiB driver)
+        return _empty_df(spark, _OUT_SCHEMA)
+    # a result can never exceed the doc count; cap k so no top-k buffer is
+    # sized by a caller's k (k=10^9 once OOMed a 1 GiB driver)
     k = min(k, reader.n_docs)
+    if k < 1:
+        return _empty_df(spark, _OUT_SCHEMA)
 
     canon = sorted(qterms)
     # boolean-operator clauses (grammar parser/QueryParser.jj `+`/`-`):
@@ -575,17 +638,13 @@ def bm25_topk(
 
         min_match = calculate_min_should_match(len(canon), min_match)
     min_match = max(1, min(min_match or 1, len(canon)))
-    buckets = sorted(set(_term_buckets(terms, cfg.num_term_buckets)))
-    dict_df = (
-        reader.dictionary(spark)
-        .where(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
-        .select("term", "df", "cf").collect()
-    )
-    dfs = {r["term"]: r["df"] for r in dict_df}
-    cfs = {r["term"]: r["cf"] for r in dict_df}
-    found = [t for t in terms if t in dfs]
+    # one driver-side dictionary read serves the scoring and MUST_NOT terms
+    stats = reader.term_stats(terms + sorted(prohib_terms))
+    dfs = {t: df for t, (df, _cf) in stats.items()}
+    cfs = {t: cf for t, (_df, cf) in stats.items()}
+    found = [t for t in terms if t in stats]
     if not found:
-        return spark.createDataFrame([], out_schema)
+        return _empty_df(spark, _OUT_SCHEMA)
     gweights: dict[str, float] | None = None
     score_params: dict[str, float]  # keyed like the kernel's weight dict
     if group_of is not None:
@@ -617,7 +676,7 @@ def bm25_topk(
                         for t in found}
         if min_match > len(groups_found):
             # a canonical term whose whole group is absent can never match
-            return spark.createDataFrame([], out_schema)
+            return _empty_df(spark, _OUT_SCHEMA)
     else:
         weights = {t: sim.weight(qterms[t] * (boosts or {}).get(t, 1.0),
                                  reader.n_docs, dfs[t], cfs[t], total_tokens)
@@ -627,33 +686,28 @@ def bm25_topk(
         bound_params = score_params
         if min_match > len(found):
             # absent terms can never match; mm above the found count is unsatisfiable
-            return spark.createDataFrame([], out_schema)
+            return _empty_df(spark, _OUT_SCHEMA)
 
     # MUST check: a required term absent from the index is unsatisfiable
     if req_terms:
         satisfiable = (set(gweights) if group_of is not None else set(found))
         if req_terms - satisfiable:
-            return spark.createDataFrame([], out_schema)
+            return _empty_df(spark, _OUT_SCHEMA)
     # MUST_NOT terms that exist in the dictionary join the posting scan with
     # weight 0 — their postings only flip the kernel's exclusion mask
-    prohib_found: list[str] = []
-    if prohib_terms:
-        pb = sorted(set(_term_buckets(sorted(prohib_terms),
-                                      cfg.num_term_buckets)))
-        prohib_found = [
-            r["term"] for r in reader.dictionary(spark)
-            .where(F.col("term_bucket").isin(pb)
-                   & F.col("term").isin(sorted(prohib_terms)))
-            .select("term").collect()]
+    prohib_found = sorted(t for t in prohib_terms if t in stats)
+    if mode not in ("exact", "wand"):
+        raise ValueError(f"unknown mode: {mode}")
 
     seg = reader.segments_df(spark)
     scan_terms = found + [t for t in prohib_found if t not in found]
-    postings = seg.where(
-        F.col("term_bucket").isin(sorted(set(_term_buckets(scan_terms, cfg.num_term_buckets))))
-        & F.col("term").isin(scan_terms)
-    ).select("term", "range_id", "doc_gaps", "tfs", "max_tf")
-    norms = reader.norms(spark)
-    joined = postings.join(norms.select("range_id", "norm_bytes"), "range_id")
+    scan_buckets = sorted(set(_term_buckets(scan_terms, cfg.num_term_buckets)))
+    # the plan's one exchange: every posting row of a range meets in one
+    # kernel call, which orders its ranges by WAND bound itself
+    rows = (seg.where(F.col("term_bucket").isin(scan_buckets)
+                      & F.col("term").isin(scan_terms))
+            .select("term", "range_id", "doc_gaps", "tfs", "max_tf")
+            .repartition("range_id"))
 
     if isinstance(filters, (list, tuple)) and not filters:
         filters = None  # empty fq list = no filter, skip the bitmap machinery
@@ -667,126 +721,82 @@ def bm25_topk(
         if filters is not None:
             filter_docids = _compile_fq(spark, reader, filters, now=now)
         bitmaps = docid_range_bitmaps(filter_docids, cfg.range_shift)
-        # inner join: a range with no allowed doc never reaches the kernel
-        joined = joined.join(bitmaps, "range_id")
+        # inner join: a range with no allowed doc never reaches the kernel.
+        # A shuffle join reuses the posting repartition (both sides are
+        # hash-partitioned on range_id) and needs no broadcast job.
+        rows = rows.join(bitmaps.hint("shuffle_hash"), "range_id")
 
     length_table = norm_length_table()
     avgdl = reader.avgdl
+    index_dir = reader.index_dir
     # liveDocs mask (indexing/deletes.py): tombstoned docids are dropped
-    # AFTER scoring, BEFORE heap insertion — stats (df/n_docs/avgdl) still
+    # AFTER scoring, BEFORE top-k selection — stats (df/n_docs/avgdl) still
     # include deleted docs until merge, exactly like Lucene's soft deletes.
     from solr_spark.indexing.deletes import deleted_array
 
-    dels = deleted_array(spark, reader.index_dir)
+    dels = deleted_array(spark, index_dir)
     if not len(dels):
         dels = None
 
-    def _live(d, s):
-        if dels is None or not len(d):
-            return d, s
-        keep = ~np.isin(d, dels)
-        return d[keep], s[keep]
-
     kernel_prohib = frozenset(prohib_found) or None
     kernel_req = frozenset(req_terms) or None
+    prune = mode == "wand"
+    # WAND bound inputs per scanned term: prohibited rows carry weight 0 (and
+    # a harmless bound param), so they add nothing to a range's bound — a
+    # skipped range emits no docs, hence nothing to exclude from
+    wand_weights = {t: weights.get(t, 0.0) for t in scan_terms}
+    wand_bparams = {t: bound_params.get(t, 1.0) for t in scan_terms}
 
-    if mode == "exact":
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            d, s = _score_group(pdf, weights, cfg, avgdl, length_table,
+    def topk_iter(batches):
+        """This partition's posting rows (the query terms' rows of its
+        ranges) -> its top-k, scoring ranges by descending WAND bound."""
+        frames = [b for b in batches if len(b)]
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True).sort_values(
+            ["range_id", "term"], ignore_index=True, kind="stable")
+        rid = pdf["range_id"].to_numpy()
+        starts = np.flatnonzero(np.r_[True, rid[1:] != rid[:-1]])
+        ends = np.r_[starts[1:], len(rid)]
+        order = range(len(starts))
+        if prune:
+            term_bound = sim.bound(
+                pdf["max_tf"].to_numpy(np.float64),
+                pdf["term"].map(wand_weights).to_numpy(np.float64),
+                pdf["term"].map(wand_bparams).to_numpy(np.float64),
+                cfg, avgdl)
+            bound = np.add.reduceat(term_bound, starts)
+            order = np.lexsort((rid[starts], -bound))
+        norms = _range_norms(index_dir, rid[starts].tolist())
+        top_d = np.empty(0, dtype=np.int64)
+        top_s = np.empty(0, dtype=np.float64)
+        for g in order:
+            if prune and len(top_d) == k and bound[g] < top_s.min():
+                continue  # block-max skip: provably non-competitive
+            lo, hi = starts[g], ends[g]
+            d, s = _score_group(pdf.iloc[lo:hi], norms[int(rid[lo])],
+                                weights, cfg, avgdl, length_table,
                                 min_match, group_of, gweights,
                                 sim, score_params,
                                 kernel_prohib, kernel_req, use_filter,
                                 combine, tie)
-            d, s = _live(d, s)
-            d, s = _local_topk(d, s, k)
-            return pd.DataFrame({"docid": d, "score": s})
+            if dels is not None and len(d):
+                keep = ~np.isin(d, dels)
+                d, s = d[keep], s[keep]
+            top_d, top_s = _merge_topk(top_d, top_s, d, s, k)
+        if len(top_d):
+            yield pd.DataFrame({"docid": top_d, "score": top_s})
 
-        cand = joined.groupBy("range_id").applyInPandas(kernel, _TOPK_SCHEMA)
-    elif mode == "wand":
-        # prohibited rows carry weight 0 (and a harmless bound param): they
-        # contribute nothing to the range bound, so WAND pruning is unchanged
-        # — a skipped range emits no docs, hence nothing to exclude from
-        wand_weights = dict(weights)
-        wand_bparams = dict(bound_params)
-        for t in prohib_found:
-            if t not in wand_weights:
-                wand_weights[t] = 0.0
-                wand_bparams[t] = 1.0
-        w_map = F.create_map(
-            *[x for t in scan_terms for x in (F.lit(t), F.lit(wand_weights[t]))]
-        )
-        if hasattr(sim, "_bound_avgdl"):
-            # normalization-family similarities (DFR/IB H2) bound tfn with
-            # the corpus avgdl — stamp the query-time stat onto the frozen
-            # instance before asking for bounds
-            object.__setattr__(sim, "_bound_avgdl", float(avgdl))
-        bounded = joined.withColumn(
-            "term_bound", sim.bound_expr(w_map, wand_bparams, cfg))
-        w = Window.partitionBy("range_id")
-        bounded = bounded.withColumn("bound", F.sum("term_bound").over(w))
-        sorted_rows = bounded.sortWithinPartitions(
-            F.desc("bound"), "range_id", "term"
-        )
-
-        def wand_iter(batches):
-            heap: list[tuple[float, int]] = []  # (score, -docid), size <= k
-            carry: list[pd.DataFrame] = []
-            carry_rid = None
-
-            def process(group: pd.DataFrame):
-                if len(heap) == k:
-                    thresh = heap[0][0]
-                    if float(group["bound"].iloc[0]) < thresh:
-                        return  # block-max skip: provably non-competitive
-                d, s = _score_group(group, weights, cfg, avgdl, length_table,
-                                    min_match, group_of, gweights,
-                                    sim, score_params,
-                                    kernel_prohib, kernel_req, use_filter,
-                                    combine, tie)
-                d, s = _live(d, s)
-                for di, si in zip(d.tolist(), s.tolist()):
-                    item = (si, -di)
-                    if len(heap) < k:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                rids = pdf["range_id"].to_numpy()
-                change = np.flatnonzero(rids[1:] != rids[:-1]) + 1
-                bounds_idx = np.concatenate(([0], change, [len(pdf)]))
-                for i in range(len(bounds_idx) - 1):
-                    s_, e_ = bounds_idx[i], bounds_idx[i + 1]
-                    chunk = pdf.iloc[s_:e_]
-                    rid = rids[s_]
-                    if carry_rid is not None and rid != carry_rid:
-                        process(pd.concat(carry, ignore_index=True))
-                        carry.clear()
-                    carry_rid = rid
-                    carry.append(chunk)
-                    if i < len(bounds_idx) - 2:
-                        process(pd.concat(carry, ignore_index=True))
-                        carry.clear()
-                        carry_rid = None
-            if carry:
-                process(pd.concat(carry, ignore_index=True))
-            if heap:
-                yield pd.DataFrame(
-                    {"docid": [-nd for _, nd in heap], "score": [s for s, _ in heap]}
-                )
-
-        cand = sorted_rows.mapInPandas(wand_iter, _TOPK_SCHEMA)
-    else:
-        raise ValueError(f"unknown mode: {mode}")
-
-    topk = cand.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    resolved = (
-        topk.join(reader.doc_map(spark), "docid")
-        .withColumn("rank", F.row_number().over(
-            Window.orderBy(F.desc("score"), F.asc("docid"))))
-        .select("conv_id", "turn_idx", "docid", "score", "rank")
-        .orderBy("rank")
-    )
-    return resolved
+    cand = rows.mapInPandas(topk_iter, _TOPK_SCHEMA)
+    # resolve, then rank: the candidates (<= k per kernel partition) are
+    # broadcast into the doc-map join, and one aggregate sorts the joined
+    # rows by (score desc, docid asc), keeps k and numbers them. Its single
+    # row inlines in rank order, so there is no Window and no global sort.
+    # (SQL expression strings: one py4j call per step.)
+    hits = reader.doc_map(spark).join(F.broadcast(cand), "docid")
+    return (hits.selectExpr(
+        "transform(slice(array_sort(collect_list(struct(-score AS neg_score, "
+        f"docid, conv_id, turn_idx))), 1, {k}), (h, i) -> struct("
+        "h.conv_id AS conv_id, h.turn_idx AS turn_idx, h.docid AS docid, "
+        "-h.neg_score AS score, i + 1 AS rank)) AS top")
+        .selectExpr("inline(top)"))

@@ -148,12 +148,8 @@ def _field_contributions(
     canon = sorted({t for ts in clause_terms for t in ts})
     if not canon:
         return None, {}
-    dict_rows = (
-        reader.dictionary(spark)
-        .where(F.col("term").isin(canon))
-        .select("term", "df").collect()
-    )
-    idfs = {r["term"]: _idf(reader.n_docs, r["df"]) for r in dict_rows}
+    idfs = {t: _idf(reader.n_docs, df)
+            for t, (df, _cf) in reader.term_stats(canon).items()}
     if not idfs:
         return None, {}
     # (term, clause, weight) mapping — tiny (|query words| rows), broadcast.

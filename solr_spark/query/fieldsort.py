@@ -146,7 +146,7 @@ def field_sorted_search(spark: SparkSession, reader: IndexReader,
 
     if isinstance(filters, str):
         filters = [filters]
-    fwd = reader.forward(spark).withColumnRenamed("toks", "text")
+    fwd = reader.forward_text(spark)
     spec = parse_sort_spec(sort, sortable=set(fwd.columns) | {"docid"})
     if any(name == "score" for name, _ in spec):
         raise ValueError(

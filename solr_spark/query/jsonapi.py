@@ -427,7 +427,7 @@ def json_select(spark, reader, request: dict | str) -> dict:
     docs = json_search(spark, reader, req)
     facets: dict[str, DataFrame] = {}
     if facet_block:
-        fwd = reader.forward(spark).withColumnRenamed("toks", "text")
+        fwd = reader.forward_text(spark)
         from solr_spark.indexing.deletes import deletes_df
 
         dels = deletes_df(spark, reader.index_dir)

@@ -13,8 +13,9 @@ Each similarity supplies three pieces the kernel needs:
   * ``contrib``    — the per-document score contribution as a vectorized numpy
                      expression over (tf array, dl array); runs inside the
                      scoring kernel.
-  * ``bound_expr`` — a JVM Column upper bound of ``contrib`` over ANY document
-                     in a posting range, given the range's max_tf — this is
+  * ``bound``      — a vectorized upper bound of ``contrib`` over ANY document
+                     in a posting range, given the range's max_tf; evaluated
+                     inside the WAND kernel, once per posting row — this is
                      what block-max WAND prunes with, so it must dominate every
                      achievable score (each class documents its bound argument).
 
@@ -41,14 +42,6 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def _param_map(params: dict[str, float]) -> Column:
-    return F.create_map(*[x for t, p in sorted(params.items())
-                          for x in (F.lit(t), F.lit(p))])
-
 
 @dataclass(frozen=True)
 class BM25Similarity:
@@ -70,11 +63,10 @@ class BM25Similarity:
         denom = tf + cfg.k1 * (1.0 - cfg.b + cfg.b * dls / avgdl)
         return w * tf / denom
 
-    def bound_expr(self, w_map: Column, params: dict[str, float], cfg) -> Column:
+    def bound(self, max_tf: np.ndarray, w: np.ndarray, p: np.ndarray,
+              cfg, avgdl: float) -> np.ndarray:
         # dl -> 0 bound: tf/(tf + k1(1-b)) is increasing in tf
-        k1b = cfg.k1 * (1.0 - cfg.b)
-        return w_map[F.col("term")] * F.col("max_tf") \
-            / (F.col("max_tf") + F.lit(k1b))
+        return w * max_tf / (max_tf + cfg.k1 * (1.0 - cfg.b))
 
 
 @dataclass(frozen=True)
@@ -94,9 +86,9 @@ class ClassicSimilarity:
     def contrib(self, tf, dls, w, p, cfg, avgdl):
         return w * np.sqrt(tf) / np.sqrt(dls)
 
-    def bound_expr(self, w_map, params, cfg):
+    def bound(self, max_tf, w, p, cfg, avgdl):
         # dl >= 1 => 1/sqrt(dl) <= 1
-        return w_map[F.col("term")] * F.sqrt(F.col("max_tf"))
+        return w * np.sqrt(max_tf)
 
 
 @dataclass(frozen=True)
@@ -115,8 +107,8 @@ class BooleanSimilarity:
     def contrib(self, tf, dls, w, p, cfg, avgdl):
         return np.full(len(tf), w, dtype=np.float64)
 
-    def bound_expr(self, w_map, params, cfg):
-        return w_map[F.col("term")] + F.lit(0.0) * F.col("max_tf")
+    def bound(self, max_tf, w, p, cfg, avgdl):
+        return w
 
 
 @dataclass(frozen=True)
@@ -139,13 +131,11 @@ class LMDirichletSimilarity:
         raw = np.log1p(tf / (self.mu * p)) + np.log(self.mu / (dls + self.mu))
         return w * np.maximum(0.0, raw)
 
-    def bound_expr(self, w_map, params, cfg):
+    def bound(self, max_tf, w, p, cfg, avgdl):
         # sum of per-factor maxima: tf <= max_tf and dl >= 1
-        p_map = _param_map(params)
         mu = self.mu
-        raw = F.log(F.lit(1.0) + F.col("max_tf") / (F.lit(mu) * p_map[F.col("term")])) \
-            + F.lit(math.log(mu / (1.0 + mu)))
-        return w_map[F.col("term")] * F.greatest(raw, F.lit(0.0))
+        raw = np.log(1.0 + max_tf / (mu * p)) + math.log(mu / (1.0 + mu))
+        return w * np.maximum(raw, 0.0)
 
 
 @dataclass(frozen=True)
@@ -167,13 +157,10 @@ class LMJelinekMercerSimilarity:
         raw = np.log1p(((1.0 - self.lam) * tf / dls) / (self.lam * p))
         return w * np.maximum(0.0, raw)
 
-    def bound_expr(self, w_map, params, cfg):
+    def bound(self, max_tf, w, p, cfg, avgdl):
         # tf/dl <= 1 always (a term occurs at most dl times in a dl-token doc)
-        p_map = _param_map(params)
-        raw = F.log(F.lit(1.0)
-                    + F.lit((1.0 - self.lam) / self.lam) / p_map[F.col("term")])
-        return w_map[F.col("term")] * F.greatest(raw, F.lit(0.0)) \
-            + F.lit(0.0) * F.col("max_tf")
+        raw = np.log(1.0 + ((1.0 - self.lam) / self.lam) / p)
+        return w * np.maximum(raw, 0.0)
 
 
 @dataclass(frozen=True)
@@ -218,19 +205,13 @@ class DFISimilarity:
         m = self._measure(tf.astype(np.float64), e)
         return np.where(tf > e, w * np.log2(np.maximum(m, 0.0) + 1.0), 0.0)
 
-    def bound_expr(self, w_map, params, cfg):
-        p_map = _param_map(params)
-        p = p_map[F.col("term")]
-        tf = F.col("max_tf").cast("double")
-        e = p * tf
-        if self.measure == "standardized":
-            m = (tf - e) / F.sqrt(e)
-        elif self.measure == "saturated":
-            m = (F.lit(1.0) - p) / p
-        else:  # chisquared
-            m = (tf - e) * (tf - e) / e
-        return w_map[F.col("term")] \
-            * F.log2(F.greatest(m, F.lit(0.0)) + F.lit(1.0))
+    def bound(self, max_tf, w, p, cfg, avgdl):
+        e = p * max_tf
+        if self.measure == "saturated":
+            m = (1.0 - p) / p
+        else:
+            m = self._measure(max_tf, e)
+        return w * np.log2(np.maximum(m, 0.0) + 1.0)
 
 
 @dataclass(frozen=True)
@@ -251,8 +232,8 @@ class RawTFSimilarity:
     def contrib(self, tf, dls, w, p, cfg, avgdl):
         return w * tf.astype(np.float64)
 
-    def bound_expr(self, w_map, params, cfg):
-        return w_map[F.col("term")] * F.col("max_tf").cast("double")
+    def bound(self, max_tf, w, p, cfg, avgdl):
+        return w * max_tf
 
 
 @dataclass(frozen=True)
@@ -296,14 +277,8 @@ class SweetSpotSimilarity:
         norm = 1.0 / np.sqrt(self.steepness * dev + 1.0)
         return w * self._baseline_tf(tf.astype(np.float64)) * norm
 
-    def bound_expr(self, w_map, params, cfg):
-        tf = F.col("max_tf").cast("double")
-        base = F.lit(self.tf_base) + F.sqrt(
-            tf + F.lit(self.tf_min * self.tf_min - self.tf_min))
-        if self.tf_base == 0.0 and self.tf_min > 0.0:
-            base = F.when(tf <= F.lit(self.tf_min), F.lit(0.0)) \
-                    .otherwise(base)
-        return w_map[F.col("term")] * base  # lengthNorm <= 1
+    def bound(self, max_tf, w, p, cfg, avgdl):
+        return w * self._baseline_tf(max_tf)  # lengthNorm <= 1
 
 
 @dataclass(frozen=True)
@@ -335,19 +310,11 @@ class DFRGL2Similarity:
               + tfn * np.log2((1.0 + p) / p)) / (tfn + 1.0)
         return w * gl
 
-    def bound_expr(self, w_map, params, cfg):
-        p_map = _param_map(params)
-        lam = p_map[F.col("term")]
-        # tfn <= max_tf * log2(1 + c*avgdl) at dl >= 1; avgdl is a query-time
-        # corpus stat the kernel stamps onto the instance (_bound_avgdl)
-        # right before asking for bounds — see bm25_topk's bound wiring
-        tfn = F.col("max_tf").cast("double") \
-            * F.lit(math.log2(1.0 + self.c * self._bound_avgdl))
-        gl = (F.log2(F.lit(1.0) + lam)
-              + tfn * F.log2((F.lit(1.0) + lam) / lam)) / (tfn + F.lit(1.0))
-        return w_map[F.col("term")] * gl
-
-    _bound_avgdl = 1.0  # overwritten per query via object.__setattr__
+    def bound(self, max_tf, w, p, cfg, avgdl):
+        # tfn <= max_tf * log2(1 + c*avgdl) at dl >= 1
+        tfn = max_tf * math.log2(1.0 + self.c * avgdl)
+        gl = (np.log2(1.0 + p) + tfn * np.log2((1.0 + p) / p)) / (tfn + 1.0)
+        return w * gl
 
 
 @dataclass(frozen=True)
@@ -372,14 +339,9 @@ class IBLLSimilarity:
         tfn = tf * np.log2(1.0 + self.c * avgdl / dls)
         return w * np.log((tfn + p) / p)
 
-    def bound_expr(self, w_map, params, cfg):
-        p_map = _param_map(params)
-        lam = p_map[F.col("term")]
-        tfn = F.col("max_tf").cast("double") \
-            * F.lit(math.log2(1.0 + self.c * self._bound_avgdl))
-        return w_map[F.col("term")] * F.log((tfn + lam) / lam)
-
-    _bound_avgdl = 1.0
+    def bound(self, max_tf, w, p, cfg, avgdl):
+        tfn = max_tf * math.log2(1.0 + self.c * avgdl)
+        return w * np.log((tfn + p) / p)
 
 
 _REGISTRY = {

@@ -336,13 +336,6 @@ def _compile_filter(node, spark, reader, config):
     raise TypeError(f"not an XML query node: {node!r}")
 
 
-def _fwd(spark: SparkSession, reader: IndexReader) -> DataFrame:
-    """Forward table with `toks` exposed as `text` — the same spelling
-    query/docsets.py::filter_docids pins, so classic fq strings and XML
-    queries address the analyzed tokens by one name."""
-    return reader.forward(spark).withColumnRenamed("toks", "text")
-
-
 def _ids_of(kind, val, fwd: DataFrame) -> DataFrame:
     return val if kind == "ids" else fwd.where(val).select("docid")
 
@@ -368,7 +361,7 @@ def _combine_bool(clauses, spark, reader, config):
             col = col & ~F.coalesce(c, F.lit(False))
         return "col", col
     # mixed: lower everything to docid sets and run DocSet algebra
-    fwd = _fwd(spark, reader)
+    fwd = reader.forward_text(spark)
     base = None
     for occ, kind, val in compiled:
         if occ in ("must", "filter"):
@@ -397,7 +390,7 @@ def xml_query_docids(spark: SparkSession, reader: IndexReader,
     kind, val = _compile_filter(node, spark, reader, reader.config)
     if kind == "ids":
         return val
-    return _fwd(spark, reader).where(val).select("docid")
+    return reader.forward_text(spark).where(val).select("docid")
 
 
 # ------------------------------------------------------------- scored compile
@@ -414,7 +407,7 @@ def _analyzed(n, config) -> list[str]:
 
 def _const_score_df(spark, reader, ids: DataFrame, boost: float,
                     k: int) -> DataFrame:
-    fwd = reader.forward(spark).select("docid", "conv_id", "turn_idx")
+    fwd = reader.forward_text(spark).select("docid", "conv_id", "turn_idx")
     hits = (fwd.join(ids, "docid", "left_semi")
             .orderBy("docid").limit(min(k, reader.n_docs))
             .withColumn("score", F.lit(float(boost)))
@@ -452,7 +445,7 @@ def _scored(node, spark: SparkSession, reader: IndexReader,
     if isinstance(node, XMatchAll):
         return _const_score_df(
             spark, reader,
-            reader.forward(spark).select("docid"), node.boost, k)
+            reader.forward_text(spark).select("docid"), node.boost, k)
     if isinstance(node, XConst):
         ids = xml_ids_of_node(node.inner, spark, reader)
         return _const_score_df(spark, reader, ids, node.boost, k)
@@ -504,7 +497,7 @@ def _scored(node, spark: SparkSession, reader: IndexReader,
                 [(o if o != "should" else "must", n)  # non-term shoulds are
                  for o, n in filter_parts],           # rare; pin to matching
                 spark, reader, cfg)
-            fids = _ids_of(kind, val, reader.forward(spark))
+            fids = _ids_of(kind, val, reader.forward_text(spark))
         return bm25_topk(spark, reader, " ".join(scored_terms), k=k,
                          required=required or None,
                          prohibited=prohibited or None,
@@ -520,7 +513,7 @@ def xml_ids_of_node(node, spark: SparkSession,
     """Docid set of an already-parsed AST node (internal + test hook)."""
     kind, val = _compile_filter(node, spark, reader, reader.config)
     return val if kind == "ids" \
-        else _fwd(spark, reader).where(val).select("docid")
+        else reader.forward_text(spark).where(val).select("docid")
 
 
 # ---------------------------------------------------------- serving-tier twin

@@ -71,3 +71,33 @@ def built_index(spark, small_corpus, tmp_path_factory):
     cfg = IndexConfig(range_shift=8, num_term_buckets=16)
     stats = build_index(spark, small_corpus, index_dir, cfg, input_token="synth-1k-s42")
     return index_dir, cfg, stats
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(fn) -> (fn(), number of Spark jobs fn launched).
+
+    Jobs are counted in a job group of their own, after draining the
+    listener bus, with AQE off as the benchmark runs: under AQE every query
+    stage is submitted as a job of its own, so the count would be of stages
+    rather than of the plan's actions and broadcasts."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+
+    def run(fn):
+        bus.waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup("count_jobs"))
+        out = fn()
+        bus.waitUntilEmpty()
+        after = set(sc.statusTracker().getJobIdsForGroup("count_jobs"))
+        return out, len(after - before)
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("count_jobs", "job count")
+    try:
+        yield run
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)

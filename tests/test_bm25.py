@@ -329,3 +329,35 @@ def test_graph_terms_df_cap(spark, built_index):
     # cap below every df -> empty; empty terms -> empty
     assert graph_terms_docs(spark, reader, terms, max_doc_freq=0).count() == 0
     assert graph_terms_docs(spark, reader, [], max_doc_freq=10).count() == 0
+
+
+def test_wand_query_job_budget(spark, built_index, count_jobs):
+    """A WAND query builds its plan with no Spark job and runs in at most 2:
+    the broadcast of the k winners, then the collect. The first query on a
+    reader resolves its forward-table handle (a schema-inference job), so
+    the budget is pinned on the second."""
+    index_dir, cfg, _ = built_index
+    reader = IndexReader.open(index_dir, cfg)
+    q = "error timeout connect"
+    want = [tuple(r) for r in bm25_topk(spark, reader, q, k=10).collect()]
+
+    df, plan_jobs = count_jobs(lambda: bm25_topk(spark, reader, q, k=10))
+    rows, run_jobs = count_jobs(df.collect)
+    assert plan_jobs == 0
+    assert plan_jobs + run_jobs <= 2
+    assert [tuple(r) for r in rows] == want
+
+
+def test_all_absent_terms_run_no_job(spark, built_index, count_jobs):
+    """A query none of whose terms is in the dictionary returns the result
+    schema with no rows, and neither planning nor collecting it launches a
+    Spark job (no Python worker either)."""
+    index_dir, cfg, _ = built_index
+    reader = IndexReader.open(index_dir, cfg)
+    df, plan_jobs = count_jobs(
+        lambda: bm25_topk(spark, reader, "zzqxv qqzzv", k=10))
+    rows, run_jobs = count_jobs(df.collect)
+    assert rows == [] and plan_jobs == 0 and run_jobs == 0
+    assert df.columns == ["conv_id", "turn_idx", "docid", "score", "rank"]
+    assert [f.dataType.simpleString() for f in df.schema.fields] == \
+        ["string", "int", "bigint", "double", "int"]

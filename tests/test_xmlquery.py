@@ -270,6 +270,27 @@ def test_scored_filter_clause(spark, xml_reader):
         assert s == pytest.approx(base[cid], abs=1e-12)
 
 
+def test_scored_text_field_filter_clause(spark, xml_reader):
+    """A filter-occurs clause on the text field narrows the scored result
+    by analyzed tokens without touching scores: the clause compiles against
+    the forward table's `text` column."""
+    xml_nofilter = ("<BooleanQuery>"
+                    "<Clause><TermQuery>fast</TermQuery></Clause>"
+                    "</BooleanQuery>")
+    xml = ("<BooleanQuery>"
+           "<Clause><TermQuery>fast</TermQuery></Clause>"
+           '<Clause occurs="filter"><TermQuery>merge</TermQuery></Clause>'
+           "</BooleanQuery>")
+    base = {r.conv_id: r.score
+            for r in xml_query_topk(spark, xml_reader, xml_nofilter,
+                                    k=10).collect()}
+    got = {r.conv_id: r.score
+           for r in xml_query_topk(spark, xml_reader, xml, k=10).collect()}
+    assert set(got) == {"d1", "d6"}
+    for cid, s in got.items():
+        assert s == pytest.approx(base[cid], abs=1e-12)
+
+
 def test_scored_dismax_and_constant(spark, xml_reader):
     from solr_spark.query.bm25 import bm25_topk
 

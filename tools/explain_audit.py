@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -24,6 +25,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+
+PYTHON_NODES = {"MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+                "ArrowEvalPython", "BatchEvalPython"}
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -161,6 +166,22 @@ def main() -> None:
             plan_of(ftk),
             ["PushedFilters: [IsNotNull(role), EqualTo(role,assistant)]",
              "filter_bits"], []))
+
+        # 6d. WAND plan shape: ONE exchange on range_id feeds the scoring
+        # kernel, the query's only Python node; the per-range bound and the
+        # norms are the kernel's own work, so no Window and no norms
+        # broadcast
+        nodes = re.findall(r"^\(\d+\) (\w+)", p4, re.M)
+        n_range_exchanges = p4.count("hashpartitioning(range_id")
+        n_python = sum(n in PYTHON_NODES for n in nodes)
+        checks.append((
+            "WAND plan: one range_id exchange, one Python node, no Window, "
+            "no norms broadcast",
+            p4, ["hashpartitioning(range_id", "MapInPandas"],
+            ["Window", "norm_bytes"]))
+        assert n_range_exchanges == 1, \
+            f"expected 1 range_id exchange, found {n_range_exchanges}"
+        assert n_python == 1, f"expected 1 Python node, found {n_python}"
 
         # 40. field sort on the scored path (round 5): the match set comes
         # from the term_bucket-pruned postings, fq pushes into the forward
