@@ -7,6 +7,10 @@ own equivalent *as data*: each posting row stores varint-compressed docID gaps a
 frequencies plus per-block max-tf metadata for block-max WAND pruning. All kernels are
 array-at-a-time numpy — no per-value Python in the hot path.
 
+Decoding is batched: `decode_postings` turns many posting rows into flat arrays
+in one pass per column, for every reader of posting rows (the segment merger,
+the Spark scoring kernel and term lookups, the serving tier's postings misses).
+
 Wire format (ours, little-endian 7-bit groups, continuation bit 0x80):
     doc_gaps: varint[n]   gaps[0] = docids[0] - range_base; gaps[i] = docids[i]-docids[i-1]
     tfs:      varint[n]   raw term frequencies (>= 1)
@@ -154,11 +158,19 @@ def encode_posting_groups(
 
 
 def decode_postings(
-    doc_gaps: bytes, tfs: bytes, range_base: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one posting-range row back to (docids int64, tfs int64)."""
-    gaps = varint_decode(doc_gaps).astype(np.int64)
-    if len(gaps) == 0:
-        return gaps, gaps
-    docids = np.cumsum(gaps) + range_base
-    return docids, varint_decode(tfs).astype(np.int64)
+    doc_gaps, tfs, range_ids, n_docs, range_shift: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode MANY posting rows: row i holds n_docs[i] postings of range
+    range_ids[i]. The codec is self-delimiting, so each column decodes in ONE
+    `varint_decode` over the concatenated blobs, and one segment-wise cumsum
+    rebuilds the docids. Returns (docids int64, tfs int64, bounds): row i's
+    postings are docids[bounds[i]:bounds[i+1]], tfs alongside."""
+    n = np.asarray(n_docs, dtype=np.int64)
+    bounds = np.concatenate(([0], np.cumsum(n)))
+    gaps = varint_decode(b"".join(doc_gaps)).astype(np.int64)
+    cs = np.zeros(len(gaps) + 1, dtype=np.int64)  # no extra copy on big merges
+    np.cumsum(gaps, out=cs[1:])
+    # docid = range base + the row's running gap sum
+    base = np.asarray(range_ids, dtype=np.int64) << np.int64(range_shift)
+    docids = cs[1:] + np.repeat(base - cs[bounds[:-1]], n)
+    return docids, varint_decode(b"".join(tfs)).astype(np.int64), bounds

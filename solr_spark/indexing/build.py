@@ -52,7 +52,6 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis import make_tokenize_joined_udf
 from solr_spark.codec.smallfloat import int_to_byte4
-from solr_spark.codec.varint import encode_postings
 from solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from solr_spark.indexing.docids import assign_doc_ids_deferred
 from solr_spark.indexing.manifest import stage_complete, write_manifest
@@ -216,14 +215,13 @@ def _partial_merger(config: IndexConfig, deleted: "np.ndarray | None" = None):
     postings of deleted docs are purged during the merge, the LSM analog of
     Lucene dropping liveDocs-masked docs at segment merge.
     """
-    from solr_spark.codec.varint import varint_decode
+    from solr_spark.codec.varint import decode_postings
 
     shift, block = config.range_shift, config.block_size
 
     def merge_iter(batches):
-        # Fully-vectorized merge: concatenate ALL partial blobs of the task,
-        # varint-decode them in one pass (the codec is self-delimiting),
-        # reconstruct absolute docids with a segment-wise cumsum, sort the
+        # Fully-vectorized merge: batch-decode ALL partial rows of the task
+        # (one varint pass per column + a segment-wise cumsum), sort the
         # posting stream by (term, range, docid) as pure ints, and batch-encode
         # the merged groups. Per-row Python is one bytes-object per PARTIAL
         # (thousands), never per posting (millions).
@@ -244,17 +242,9 @@ def _partial_merger(config: IndexConfig, deleted: "np.ndarray | None" = None):
         tfs_blobs = tbl.column("tfs").chunk(0).to_pylist()
         del tbl, denc
 
-        all_gaps = varint_decode(b"".join(gaps_blobs)).astype(np.int64)
-        all_tfs = varint_decode(b"".join(tfs_blobs)).astype(np.int64)
+        docids, all_tfs, _ = decode_postings(gaps_blobs, tfs_blobs, rids,
+                                             n_docs, shift)
         del gaps_blobs, tfs_blobs
-        ends = np.cumsum(n_docs)
-        starts = ends - n_docs
-        # docid[i] = range_base(partial) + cumsum(gaps) within the partial
-        cs = np.cumsum(all_gaps)
-        prior = np.where(starts == 0, 0, cs[starts - 1])
-        base = rids.astype(np.int64) << np.int64(shift)
-        docids = cs + np.repeat(base - prior, n_docs)
-
         code_occ = np.repeat(codes, n_docs)
         rid_occ = np.repeat(rids, n_docs)
         if deleted is not None and len(deleted):
@@ -266,7 +256,7 @@ def _partial_merger(config: IndexConfig, deleted: "np.ndarray | None" = None):
         order = np.lexsort((docids, rid_occ, code_occ))
         d, t = docids[order], all_tfs[order]
         c, r = code_occ[order], rid_occ[order]
-        del docids, all_tfs, code_occ, rid_occ, order, cs, prior
+        del docids, all_tfs, code_occ, rid_occ, order
 
         gchange = np.flatnonzero((c[1:] != c[:-1]) | (r[1:] != r[:-1])) + 1
         bounds = np.concatenate(([0], gchange, [len(c)]))

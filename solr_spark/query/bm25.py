@@ -235,8 +235,10 @@ def _score_group(pdf: pd.DataFrame, norm_blob: bytes, weights: dict,
                  combine: str = "sum", tie: float = 0.0):
     """Score one range group; returns (docids, scores) numpy arrays.
 
-    pdf holds the range's posting rows (term, range_id, doc_gaps, tfs, and
-    filter_bits when `filtered`); norm_blob is the range's norms blob.
+    pdf holds the range's encoded posting rows (term, range_id, n_docs,
+    doc_gaps, tfs, and filter_bits when `filtered`), decoded here in one
+    batched `decode_postings` call — so a range the WAND loop skips is never
+    decoded; norm_blob is the range's norms blob.
 
     min_match is the edismax `mm` contract (ExtendedDismaxQParser.java:66):
     1 = pure disjunction, len(query terms) = conjunction, anything between =
@@ -275,6 +277,10 @@ def _score_group(pdf: pd.DataFrame, norm_blob: bytes, weights: dict,
         sim = _DEFAULT_SIM
     params = params or {}
     base = int(pdf["range_id"].iloc[0]) << cfg.range_shift
+    docids, tfs, bounds = decode_postings(
+        pdf["doc_gaps"], pdf["tfs"], pdf["range_id"], pdf["n_docs"],
+        cfg.range_shift)
+    terms = pdf["term"].to_numpy()
     if cfg.lucene_norms:
         norms = np.frombuffer(norm_blob, dtype=np.uint8)
         dls = length_table[norms].astype(np.float64)
@@ -319,13 +325,12 @@ def _score_group(pdf: pd.DataFrame, norm_blob: bytes, weights: dict,
         return nz + base, final[nz]
 
     # fixed term order => deterministic float summation (matches the oracle)
-    order = np.argsort(pdf["term"].to_numpy(), kind="stable")
+    order = np.argsort(terms, kind="stable")
     if groups is None:
         for i in order:
-            row = pdf.iloc[i]
-            term = row["term"]
-            d, t = decode_postings(bytes(row["doc_gaps"]), bytes(row["tfs"]), base)
-            off = d - base
+            term = terms[i]
+            off = docids[bounds[i]:bounds[i + 1]] - base
+            t = tfs[bounds[i]:bounds[i + 1]]
             if prohibited and term in prohibited:
                 if excl is None:
                     excl = np.zeros(width, dtype=bool)
@@ -355,9 +360,8 @@ def _score_group(pdf: pd.DataFrame, norm_blob: bytes, weights: dict,
     # the user's terms, never a collapsed overlap).
     pooled: dict = {}
     for i in order:
-        row = pdf.iloc[i]
-        term = row["term"]
-        d, t = decode_postings(bytes(row["doc_gaps"]), bytes(row["tfs"]), base)
+        term = terms[i]
+        d, t = docids[bounds[i]:bounds[i + 1]], tfs[bounds[i]:bounds[i + 1]]
         if prohibited and term in prohibited:
             if excl is None:
                 excl = np.zeros(width, dtype=bool)
@@ -386,6 +390,10 @@ def _merge_topk(docids: np.ndarray, scores: np.ndarray, d: np.ndarray,
     """The best k of two candidate sets by (score desc, docid asc)."""
     docids, scores = np.concatenate((docids, d)), np.concatenate((scores, s))
     if len(docids) > k:
+        # keep the scores >= the k-th best (ties included), then order those
+        if k:
+            keep = scores >= np.partition(scores, len(scores) - k)[-k]
+            docids, scores = docids[keep], scores[keep]
         best = np.lexsort((docids, -scores))[:k]
         docids, scores = docids[best], scores[best]
     return docids, scores
@@ -403,14 +411,16 @@ def _range_norms(index_dir: str, range_ids: list[int]) -> dict[int, bytes]:
 
 
 def terms_postings(spark: SparkSession, reader: IndexReader,
-                   terms: list[str]) -> DataFrame:
+                   terms: list[str], apply_deletes: bool = True) -> DataFrame:
     """Decoded postings for a set of query terms: DataFrame(term, docid, tf).
 
-    Partition-pruned by term_bucket exactly like term_docs; the decode kernel
-    touches only the query terms' posting-range rows (a handful per term), so
-    the per-row Python is bounded by #terms x #ranges, never by corpus size.
+    Partition-pruned by term_bucket; the decode kernel touches only the query
+    terms' posting-range rows (a handful per term), so the per-row Python is
+    bounded by #terms x #ranges, never by corpus size.
     The relational shape feeds multi-field scoring (edismax) where the
     per-(term, docid) contribution must stay a DataFrame column.
+    Tombstoned docids (indexing/deletes.py) are anti-joined away unless
+    apply_deletes=False (the delete path itself needs the raw postings).
     """
     cfg = reader.config
     terms = sorted(set(terms))
@@ -420,70 +430,38 @@ def terms_postings(spark: SparkSession, reader: IndexReader,
     seg = reader.segments_df(spark)
     rows = seg.where(F.col("term_bucket").isin(buckets)
                      & F.col("term").isin(terms)) \
-              .select("term", "range_id", "doc_gaps", "tfs")
+              .select("term", "range_id", "n_docs", "doc_gaps", "tfs")
     shift = cfg.range_shift
 
     def decode_iter(batches):
         for pdf in batches:
-            ts, ds, fs = [], [], []
-            for row in pdf.itertuples(index=False):
-                base = int(row.range_id) << shift
-                d, t = decode_postings(bytes(row.doc_gaps), bytes(row.tfs), base)
-                ds.append(d)
-                fs.append(t)
-                ts.append(np.repeat(np.array([row.term], dtype=object), len(d)))
-            if ds:
+            if len(pdf):
+                d, t, _ = decode_postings(pdf["doc_gaps"], pdf["tfs"],
+                                          pdf["range_id"], pdf["n_docs"], shift)
                 yield pd.DataFrame({
-                    "term": np.concatenate(ts),
-                    "docid": np.concatenate(ds),
-                    "tf": np.concatenate(fs).astype(np.int32),
-                })
+                    "term": np.repeat(pdf["term"].to_numpy(), pdf["n_docs"]),
+                    "docid": d, "tf": t.astype(np.int32)})
 
     post = rows.mapInPandas(decode_iter, "term string, docid long, tf int")
-    from solr_spark.indexing.deletes import deletes_df
-
-    dels = deletes_df(spark, reader.index_dir)
-    if dels is not None:
-        post = post.join(dels, "docid", "left_anti")
-    return post
-
-
-def term_docs(spark: SparkSession, reader: IndexReader, term: str,
-              apply_deletes: bool = True) -> DataFrame:
-    """All documents containing `term`: partition-pruned posting lookup.
-
-    The analog of a single-term `{!term}` filter query resolved from the inverted
-    index (reference: search/TermQParserPlugin.java): prune segment files by
-    term_bucket, decode only that term's posting ranges in an Arrow kernel.
-    Returns DataFrame(docid long) — join doc_map for display fields.
-    Tombstoned docids (indexing/deletes.py) are anti-joined away unless
-    apply_deletes=False (the delete path itself needs the raw postings).
-    """
-    cfg = reader.config
-    bucket = _term_buckets([term], cfg.num_term_buckets)[0]
-    seg = reader.segments_df(spark)
-    rows = seg.where((F.col("term_bucket") == bucket) & (F.col("term") == term)) \
-              .select("range_id", "doc_gaps", "tfs")
-    shift = cfg.range_shift
-
-    def decode_iter(batches):
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                base = int(row["range_id"]) << shift
-                d, _t = decode_postings(bytes(row["doc_gaps"]), bytes(row["tfs"]), base)
-                out.append(d)
-            if out:
-                yield pd.DataFrame({"docid": np.concatenate(out)})
-
-    docs = rows.mapInPandas(decode_iter, "docid long")
     if apply_deletes:
         from solr_spark.indexing.deletes import deletes_df
 
         dels = deletes_df(spark, reader.index_dir)
         if dels is not None:
-            docs = docs.join(dels, "docid", "left_anti")
-    return docs
+            post = post.join(dels, "docid", "left_anti")
+    return post
+
+
+def term_docs(spark: SparkSession, reader: IndexReader, term: str,
+              apply_deletes: bool = True) -> DataFrame:
+    """All documents containing `term`: DataFrame(docid long), the postings
+    of `terms_postings` for one term.
+
+    The analog of a single-term `{!term}` filter query resolved from the inverted
+    index (reference: search/TermQParserPlugin.java). Join doc_map for display
+    fields.
+    """
+    return terms_postings(spark, reader, [term], apply_deletes).select("docid")
 
 
 def graph_terms_docs(spark: SparkSession, reader: IndexReader,
@@ -500,8 +478,8 @@ def graph_terms_docs(spark: SparkSession, reader: IndexReader,
     Spark shape: the df cap is resolved against the DICTIONARY on the driver
     (IndexReader.term_stats, term-bucket pruned) before any posting is
     decoded — a capped-out term costs one dictionary row, never a posting
-    scan. Surviving terms ride the same partition-pruned decode kernel as
-    term_docs. Output: docid, distinct.
+    scan. Surviving terms ride the partition-pruned decode kernel of
+    terms_postings. Output: docid, distinct.
     """
     terms = sorted(set(terms))
     if max_doc_freq is not None:
@@ -509,14 +487,8 @@ def graph_terms_docs(spark: SparkSession, reader: IndexReader,
                        if df <= max_doc_freq)
     if not terms:
         return _empty_df(spark, "docid long")
-    docs = terms_postings(spark, reader, terms).select("docid").distinct()
-    if apply_deletes:
-        from solr_spark.indexing.deletes import deletes_df
-
-        dels = deletes_df(spark, reader.index_dir)
-        if dels is not None:
-            docs = docs.join(dels, "docid", "left_anti")
-    return docs
+    return terms_postings(spark, reader, terms,
+                          apply_deletes).select("docid").distinct()
 
 
 def bm25_topk(
@@ -706,7 +678,7 @@ def bm25_topk(
     # kernel call, which orders its ranges by WAND bound itself
     rows = (seg.where(F.col("term_bucket").isin(scan_buckets)
                       & F.col("term").isin(scan_terms))
-            .select("term", "range_id", "doc_gaps", "tfs", "max_tf")
+            .select("term", "range_id", "n_docs", "doc_gaps", "tfs", "max_tf")
             .repartition("range_id"))
 
     if isinstance(filters, (list, tuple)) and not filters:

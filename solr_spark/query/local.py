@@ -6,12 +6,13 @@ analytics, wrong for interactive search. The reference serves queries from a
 per-shard in-process searcher (SolrIndexSearcher over memory-mapped segment
 files); `LocalSearcher` is that role restated over THIS engine's artifacts:
 it memory-loads the small structures (norms, doc map, term dictionary — bytes
-per doc / per term), reads only the query's posting row groups via pyarrow
-(hive partition pruning on `term_bucket` + a `term` predicate, exactly the
-pruning the Spark path gets from Catalyst), and scores with the SAME
-vectorized numpy kernel contract (codec.decode_postings + the pluggable
-Similarity registry). Results are rank- and score-identical to `bm25_topk`
-(asserted in tests/test_local.py).
+per doc / per term), opens the segment files once and reads only the query
+terms' `term_bucket` files on a postings miss (the pruning the Spark path gets
+from Catalyst), and scores with the SAME numpy kernel contract as the Spark
+path: one batched `codec.decode_postings` call per miss, the pluggable
+Similarity registry, and top-k selection by the kernel's `_merge_topk`.
+Results are rank- and score-identical to `bm25_topk` (asserted in
+tests/test_local.py).
 
 At 100-TB scale this object is one SHARD's searcher: a serving tier holds one
 LocalSearcher per index shard (the index layout is already hive-partitioned
@@ -23,6 +24,7 @@ the Spark scheduler.
 
 from __future__ import annotations
 
+import glob
 import heapq
 import os
 from collections import Counter
@@ -34,7 +36,7 @@ from solr_spark.codec.smallfloat import norm_length_table
 from solr_spark.codec.varint import decode_postings
 from solr_spark.indexing.build import live_segments
 from solr_spark.indexing.deletes import deleted_array
-from solr_spark.query.bm25 import IndexReader, _term_buckets
+from solr_spark.query.bm25 import IndexReader, _merge_topk, _term_buckets
 from solr_spark.query.parser import LuceneQueryParser
 from solr_spark.query.similarity import resolve as _resolve_sim
 
@@ -126,7 +128,7 @@ class _PandasFilterEvaluator(LuceneQueryParser):
             return s.astype(str).str.contains(rx, regex=True,
                                               na=False).to_numpy()
         if fld in self.text_fields:
-            rx = rf"(^|\W){_re.escape(val)}(\W|$)"
+            rx = rf"(?:^|\W){_re.escape(val)}(?:\W|$)"
             return s.astype(str).str.contains(rx, regex=True,
                                               na=False).to_numpy()
         return (s == self._pyval(val)).to_numpy()
@@ -244,18 +246,17 @@ class LocalSearcher:
         self._df = dict(zip(dt["term"].to_pylist(), dt["df"].to_numpy()))
         self._cf = dict(zip(dt["term"].to_pylist(), dt["cf"].to_numpy()))
 
-        import pyarrow.dataset as ds
-
-        self._seg_paths = [os.path.join(idx, "segments", s)
-                           for s in live_segments(idx)]
-        # discover segment files ONCE; per-query scans reuse the dataset
-        # (file listing + schema unification is the constant cost here)
-        self._seg_ds = ds.dataset([ds.dataset(p, partitioning="hive")
-                                   for p in self._seg_paths])
-        # a shard that owns no docid range has an EMPTY segment dir (only
-        # _SUCCESS): its dataset lacks the hive partition field entirely —
-        # every query over it legitimately matches nothing
-        self._has_postings = "term_bucket" in self._seg_ds.schema.names
+        # open every live segment's parquet files ONCE, keyed by term_bucket:
+        # each footer is parsed here, so a postings miss only reads row data.
+        # A shard that owns no docid range has an EMPTY segment dir (only
+        # _SUCCESS), hence no files: every query over it matches nothing.
+        self._seg_files: dict[int, list] = {}
+        for s in live_segments(idx):
+            for f in sorted(glob.glob(os.path.join(
+                    idx, "segments", s, "term_bucket=*", "*.parquet"))):
+                bucket = int(os.path.dirname(f).rsplit("=", 1)[1])
+                self._seg_files.setdefault(bucket, []).append(
+                    pq.ParquetFile(f))
         self._deleted = deleted_array(None, idx)
         # per-term postings cache (the SolrIndexSearcher filter/queryResult
         # cache role): term -> [(range_id, offsets, tfs)]. LRU, bounded by
@@ -330,37 +331,40 @@ class LocalSearcher:
             self._fwd = pdf.rename(columns={"toks": "text"})
 
     def _postings(self, terms: list[str]) -> dict[str, list]:
-        """term -> [(range_id, doc_gaps, tfs)] for the query's terms. Cache
-        misses are fetched in ONE pyarrow dataset scan pruned to the terms'
-        term_bucket partitions and filtered by term (row-group statistics
-        skip non-matching groups); hits cost a dict lookup."""
-        import pyarrow.dataset as ds
+        """term -> [(range_id, offsets, tfs)] for the query's terms. Cache
+        misses read the pre-opened segment files of the missing terms'
+        term_buckets, keep the missing terms' rows and decode them all in ONE
+        batched `decode_postings` call; hits cost a dict lookup."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         cache = self._postings_cache
         missing = [t for t in terms if t not in cache]
-        if missing and not self._has_postings:
-            for t in missing:
-                cache[t] = []
-            missing = []
         if missing:
-            buckets = sorted(set(_term_buckets(missing,
-                                               self.cfg.num_term_buckets)))
-            filt = (ds.field("term_bucket").isin(buckets)
-                    & ds.field("term").isin(missing))
-            tbl = self._seg_ds.to_table(
-                columns=["term", "range_id", "doc_gaps", "tfs"], filter=filt)
+            tbls = [pf.read(columns=["term", "range_id", "n_docs", "doc_gaps",
+                                     "tfs"], use_threads=False)
+                    for b in set(_term_buckets(missing,
+                                               self.cfg.num_term_buckets))
+                    for pf in self._seg_files.get(b, ())]
             got: dict[str, list] = {t: [] for t in missing}
-            shift = self.cfg.range_shift
-            for term, rid, gaps, tfs in zip(
-                    tbl["term"].to_pylist(), tbl["range_id"].to_numpy(),
-                    tbl["doc_gaps"].to_pylist(), tbl["tfs"].to_pylist()):
-                rid = int(rid)
-                base = rid << shift
-                d, t = decode_postings(bytes(gaps), bytes(tfs), base)
-                # cache DECODED, not blobs: the varint decode of a hot term
-                # dominates warm latency; offsets+tf as ready numpy arrays
-                # turn a repeat query into pure accumulate
-                got[term].append((rid, d - base, t.astype(np.float64)))
+            if tbls:
+                tbl = pa.concat_tables(tbls)
+                tbl = tbl.filter(pc.is_in(tbl["term"],
+                                          value_set=pa.array(missing)))
+                rids = tbl["range_id"].to_numpy()
+                # range base 0: the decoded docids are offsets in the range
+                off, tf, bounds = decode_postings(
+                    tbl["doc_gaps"].to_pylist(), tbl["tfs"].to_pylist(),
+                    np.zeros_like(rids), tbl["n_docs"].to_numpy(), 0)
+                tf = tf.astype(np.float64)
+                # cache DECODED, not blobs: offsets+tf as ready numpy arrays
+                # turn a repeat query into pure accumulate. Copies, so every
+                # entry owns its memory and cache_bytes is the resident cost.
+                for term, rid, lo, hi in zip(
+                        tbl["term"].to_pylist(), rids.tolist(),
+                        bounds[:-1].tolist(), bounds[1:].tolist()):
+                    got[term].append((rid, off[lo:hi].copy(),
+                                      tf[lo:hi].copy()))
             for t, rows in got.items():
                 cache[t] = rows
                 self._cache_bytes += sum(
@@ -433,7 +437,7 @@ class LocalSearcher:
 
         filters / filter_mask: q+fq — classic filter strings (compiled via
         filter_mask()) or a precomputed dense bool DocSet; masked after
-        scoring, before heap collection, exactly like the distributed kernel.
+        scoring, before top-k selection, exactly like the distributed kernel.
         `now` anchors date-math filter endpoints (`ts:[NOW-7DAYS TO *]`).
         offset pages by rank (ranks offset+1 .. offset+k are returned).
 
@@ -695,7 +699,8 @@ class LocalSearcher:
             ((rid, term, off, tf)
              for term, lst in by_term.items() for rid, off, tf in lst),
             key=lambda r: (r[0], r[1]))
-        heap: list[tuple[float, int]] = []
+        top_d = np.empty(0, dtype=np.int64)
+        top_s = np.empty(0, dtype=np.float64)
         i = 0
         while i < len(rows):
             rid = rows[i][0]
@@ -725,18 +730,14 @@ class LocalSearcher:
             if len(self._deleted):
                 live = ~np.isin(docids, self._deleted)
                 hit, docids = hit[live], docids[live]
-            for s, d in zip(acc[hit].tolist(), docids.tolist()):
-                item = (s, -d)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-        out = sorted(heap, key=lambda x: (-x[0], -x[1]))
-        rows = np.searchsorted(self._docids, [-neg for _, neg in out])
+            top_d, top_s = _merge_topk(top_d, top_s, docids, acc[hit], k)
+        order = np.lexsort((top_d, -top_s))
+        top_d, top_s = top_d[order].tolist(), top_s[order].tolist()
+        rows = np.searchsorted(self._docids, top_d)
         return [
             {"conv_id": str(self._conv[i]), "turn_idx": int(self._turn[i]),
-             "docid": -neg, "score": s, "rank": r + 1}
-            for r, ((s, neg), i) in enumerate(zip(out, rows))
+             "docid": d, "score": s, "rank": r + 1}
+            for r, (d, s, i) in enumerate(zip(top_d, top_s, rows))
         ]
 
     # ------------------------------------------------------- serving suggest

@@ -477,7 +477,11 @@ def _scored(node, spark: SparkSession, reader: IndexReader,
             if occ in ("should", "must") and _is_termlike(c, cfg):
                 ts = _analyzed(c, cfg)
                 scored_terms.extend(ts)
-                if occ == "must":
+                # a must TermsQuery is a disjunction: its terms score, and
+                # the at-least-one-of constraint rides the filter docid set
+                if occ == "must" and isinstance(c, XTerms):
+                    filter_parts.append(("must", c))
+                elif occ == "must":
                     required.extend(ts)
                 if c.boost != 1.0:
                     for t in ts:

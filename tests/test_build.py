@@ -61,8 +61,9 @@ def test_postings_decode_matches_oracle(spark, built_index, oracle):
         rows = seg.where(F.col("term") == term).orderBy("range_id").collect()
         docids, tfs = [], []
         for r in rows:
-            d, t = decode_postings(bytes(r["doc_gaps"]), bytes(r["tfs"]),
-                                   r["range_id"] << cfg.range_shift)
+            d, t, _ = decode_postings([bytes(r["doc_gaps"])], [bytes(r["tfs"])],
+                                      [r["range_id"]], [r["n_docs"]],
+                                      cfg.range_shift)
             docids.extend(d.tolist())
             tfs.extend(t.tolist())
         expected = sorted(oracle.postings[term].items())

@@ -33,12 +33,46 @@ def test_postings_roundtrip(pairs, block):
     tfs = np.array([p[1] for p in pairs], dtype=np.int64)
     base = int(docids[0]) - (int(docids[0]) % 7)
     gaps, tf_b, bf, bmt, mx = encode_postings(docids, tfs, base, block)
-    d2, t2 = decode_postings(gaps, tf_b, base)
+    d2, t2, _ = decode_postings([gaps], [tf_b], [base], [len(docids)], 0)
     assert d2.tolist() == docids.tolist()
     assert t2.tolist() == tfs.tolist()
     assert mx == tfs.max()
     assert bf[0] == docids[0]
     assert max(bmt) == mx
+
+
+_ROW = st.tuples(
+    st.integers(0, 2**24),                       # range_id
+    st.integers(0, 2**16),                       # first docid's offset
+    st.integers(1, 2**20),                       # first tf
+    st.lists(st.tuples(st.integers(1, 2**20),    # gap to the previous docid
+                       st.integers(1, 2**20)),   # tf
+             max_size=40),
+)
+
+
+@given(st.lists(_ROW, min_size=1, max_size=30), st.integers(0, 16))
+@settings(max_examples=150, deadline=None)
+def test_batched_decode_postings_returns_every_row(rows, shift):
+    """One decode_postings call over many rows gives back each row's docids
+    and tfs, with bounds delimiting the rows (single-posting rows, gaps and
+    tfs wider than one and two varint bytes, arbitrary range_ids)."""
+    gaps_b, tfs_b, rids, n_docs, want = [], [], [], [], []
+    for rid, first, tf0, rest in rows:
+        base = rid << shift
+        docids = np.cumsum([base + first] + [g for g, _ in rest])
+        tfs = np.array([tf0] + [t for _, t in rest], dtype=np.int64)
+        g, t, _, _, _ = encode_postings(docids, tfs, base, 128)
+        gaps_b.append(g)
+        tfs_b.append(t)
+        rids.append(rid)
+        n_docs.append(len(docids))
+        want.append((docids.tolist(), tfs.tolist()))
+    d, t, bounds = decode_postings(gaps_b, tfs_b, rids, n_docs, shift)
+    assert bounds.tolist() == np.concatenate(([0], np.cumsum(n_docs))).tolist()
+    for i, (docids, tfs) in enumerate(want):
+        assert d[bounds[i]:bounds[i + 1]].tolist() == docids
+        assert t[bounds[i]:bounds[i + 1]].tolist() == tfs
 
 
 @given(st.integers(0, 2**31 - 1))

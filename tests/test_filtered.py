@@ -247,6 +247,9 @@ def test_postings_lru_byte_bound(spark, built):
     assert ls._cache_bytes <= sum(
         d.nbytes + t.nbytes for rows in ls._postings_cache.values()
         for _, d, t in rows) + 1
+    # every cached array owns its memory: cache_bytes is the resident cost
+    assert all(a.base is None for rows in ls._postings_cache.values()
+               for _, d, t in rows for a in (d, t))
     # results identical to an unbounded searcher despite eviction
     big = LocalSearcher(reader)
     assert ls.search(Q, k=10) == big.search(Q, k=10)

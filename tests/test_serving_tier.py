@@ -1,0 +1,130 @@
+"""Serving-tier edge shapes: exact score ties cut by k, an index of more than
+one live segment, and a shard that owns no docid range. LocalSearcher and
+ShardedSearcher must agree with bm25_topk on all of them."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from solr_spark.analysis import analyze_text
+from solr_spark.config import IndexConfig
+from solr_spark.data import synth_transcripts_spark
+from solr_spark.indexing import build_index
+from solr_spark.indexing.build import live_segments
+from solr_spark.indexing.merge import add_documents
+from solr_spark.query import (
+    IndexReader,
+    LocalSearcher,
+    ShardedSearcher,
+    bm25_topk,
+    shard_index,
+)
+
+TIE_CFG = IndexConfig(range_shift=2, num_term_buckets=4, stopwords="none")
+# one short doc scores highest; six identical turns tie for the next places
+TIE_TEXTS = (["alpha"] + ["alpha beta gamma"] * 6
+             + ["delta epsilon zeta"] * 9)
+
+
+@pytest.fixture(scope="module")
+def tie_index(spark, tmp_path_factory):
+    rows = [(f"c{i:02d}", 0, "user", t, None, None)
+            for i, t in enumerate(TIE_TEXTS)]
+    src = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    idx = str(tmp_path_factory.mktemp("tie_idx"))
+    build_index(spark, src, idx, TIE_CFG, input_token="tie-16")
+    return idx
+
+
+def _hits(rows):
+    return [(r["docid"], round(r["score"], 10)) for r in rows]
+
+
+def test_ties_straddling_k_keep_lowest_docids(spark, tie_index,
+                                              tmp_path_factory):
+    reader = IndexReader.open(tie_index, TIE_CFG)
+    fwd = {r.conv_id: r.docid
+           for r in reader.forward(spark).select("conv_id", "docid").collect()}
+    best = fwd["c00"]
+    dups = sorted(fwd[f"c{i:02d}"] for i in range(1, 7))
+    # the tie group spans more than one docid range
+    assert len({d >> TIE_CFG.range_shift for d in dups}) >= 2
+    local = LocalSearcher(reader)
+    sharded = ShardedSearcher(shard_index(
+        spark, reader, str(tmp_path_factory.mktemp("tie_shards")), 4))
+    for k in (2, 4, 6):
+        want = [best] + dups[:k - 1]
+        got = {
+            "local": _hits(local.search("alpha", k=k)),
+            "sharded": _hits(sharded.search("alpha", k=k)),
+            **{mode: _hits(r.asDict() for r in bm25_topk(
+                spark, reader, "alpha", k=k, mode=mode).collect())
+               for mode in ("exact", "wand")},
+        }
+        for name, hits in got.items():
+            assert [d for d, _ in hits] == want, (name, k)
+            assert hits == got["exact"], (name, k)
+        # the cut really falls inside the tie group
+        assert len({s for _, s in got["exact"][1:]}) == 1
+
+
+def test_empty_shard_answers(spark, tie_index, tmp_path_factory):
+    """Five shards over four docid ranges: one shard owns no range, so its
+    segment directory holds no parquet file."""
+    reader = IndexReader.open(tie_index, TIE_CFG)
+    dirs = shard_index(spark, reader,
+                       str(tmp_path_factory.mktemp("tie_shards5")), 5)
+    empty = [d for d in dirs if not any(
+        f.endswith(".parquet")
+        for _, _, fs in os.walk(os.path.join(d, "segments")) for f in fs)]
+    assert len(empty) == 1
+    assert LocalSearcher(IndexReader.open(empty[0])).search("alpha") == []
+    local = LocalSearcher(reader)
+    sharded = ShardedSearcher(dirs)
+    for q in ("alpha", "beta zeta", "omega"):
+        want = _hits(r.asDict() for r in bm25_topk(
+            spark, reader, q, k=10, mode="exact").collect())
+        assert _hits(sharded.search(q, k=10)) == want, q
+        assert sharded.search(q, k=10) == local.search(q, k=10), q
+
+
+MULTI_CFG = IndexConfig(range_shift=7, num_term_buckets=8)
+MULTI_QUERIES = ["error timeout", "failed retry server", "shard merge",
+                 "error"]
+
+
+@pytest.fixture(scope="module")
+def two_segments(spark, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("twoseg_idx"))
+    build_index(spark, synth_transcripts_spark(spark, 400, seed=5), idx,
+                MULTI_CFG, input_token="twoseg-400")
+    batch = synth_transcripts_spark(spark, 120, seed=6).withColumn(
+        "conv_id", F.concat_ws("-", F.lit("nrt"), "conv_id"))
+    add_documents(spark, batch, idx, MULTI_CFG)
+    return idx
+
+
+def test_local_over_two_segments_matches_exact(spark, two_segments):
+    idx = two_segments
+    segs = live_segments(idx)
+    assert len(segs) >= 2
+    seg_terms = [set(pq.read_table(os.path.join(idx, "segments", s),
+                                   columns=["term"])["term"].to_pylist())
+                 for s in segs]
+    reader = IndexReader.open(idx, MULTI_CFG)
+    ls = LocalSearcher(reader)
+    for q in MULTI_QUERIES:
+        # every query term has postings in every segment
+        qterms = set(analyze_text(q, MULTI_CFG))
+        assert all(qterms <= terms for terms in seg_terms), q
+        want = [(r.docid, round(r.score, 10), r.rank) for r in bm25_topk(
+            spark, reader, q, k=20, mode="exact").collect()]
+        got = [(r["docid"], round(r["score"], 10), r["rank"])
+               for r in ls.search(q, k=20)]
+        assert got == want and got, q

@@ -291,6 +291,26 @@ def test_scored_text_field_filter_clause(spark, xml_reader):
         assert s == pytest.approx(base[cid], abs=1e-12)
 
 
+def test_scored_must_terms_query_is_a_disjunction(spark, xml_reader):
+    """A must TermsQuery requires ANY of its analyzed terms, not all of
+    them: the scored match set equals the filter compiler's docid set, and
+    every term still scores."""
+    from solr_spark.query.bm25 import bm25_topk
+
+    xml = ("<BooleanQuery>"
+           '<Clause occurs="must"><TermsQuery>slow join</TermsQuery></Clause>'
+           "<Clause><TermQuery>fast</TermQuery></Clause>"
+           "</BooleanQuery>")
+    got = {r.conv_id: r.score
+           for r in xml_query_topk(spark, xml_reader, xml, k=10).collect()}
+    assert set(got) == _ids(spark, xml_reader, xml) == {"d2", "d5"}
+    base = {r.conv_id: r.score
+            for r in bm25_topk(spark, xml_reader, "slow join fast",
+                               k=10).collect()}
+    for cid, s in got.items():
+        assert s == pytest.approx(base[cid], abs=1e-12)
+
+
 def test_scored_dismax_and_constant(spark, xml_reader):
     from solr_spark.query.bm25 import bm25_topk
 
