@@ -70,6 +70,23 @@ def epoch_probe() -> dict:
             "membw_gbs": round(0.4 / bw_sec, 2)}
 
 
+def latency(series: list[float]) -> dict:
+    """{"p50", "p95"} of one timing series (nearest rank, no interpolation)."""
+    s = sorted(series)
+    return {"p50": s[len(s) // 2],
+            "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))]}
+
+
+def timed_series(call, n: int) -> list[float]:
+    """Wall seconds (4 decimals) of n back-to-back calls."""
+    series = []
+    for _ in range(n):
+        t0 = time.time()
+        call()
+        series.append(round(time.time() - t0, 4))
+    return series
+
+
 def make_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -200,7 +217,7 @@ def main() -> None:
         # times (default 5); timings[name] keeps the median (headline), and
         # the full series feeds the p50/p95 block BENCH/BASELINE.md records.
         reps = int(os.environ.get("SPARK_GRAFT_QUERY_REPS", "5"))
-        latency: dict[str, dict] = {}
+        latencies: dict[str, dict] = {}
         extra_rep_secs = 0.0  # repeats exist only for the p50/p95 series;
         # excluded from the e2e headline so `value` stays comparable
         # across rounds regardless of the reps setting
@@ -213,15 +230,13 @@ def main() -> None:
                 t0 = time.time()
                 fn()
                 series.append(round(time.time() - t0, 3))
-            s = sorted(series)
-            p50 = s[len(s) // 2]
-            p95 = s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))]
-            timings[name] = p50  # median IS the headline, as documented
+            lat = latency(series)
+            timings[name] = lat["p50"]  # median IS the headline, as documented
             # e2e headline charges each query its median once; everything
             # else the rep loop spent is excluded so `value` stays
             # comparable across rounds regardless of the reps setting
-            extra_rep_secs += sum(series) - p50
-            latency[name] = {"p50": p50, "p95": p95, "reps": series}
+            extra_rep_secs += sum(series) - lat["p50"]
+            latencies[name] = {**lat, "reps": series}
 
         for name, q in FT_QUERIES.items():
             run_query(name, lambda q=q: bm25_topk(
@@ -263,11 +278,7 @@ def main() -> None:
                 t0 = time.time()
                 searcher.search(q, k=10)
                 cached.append(round(time.time() - t0, 4))
-            s = sorted(series)
-            local_latency[name] = {
-                "p50": s[len(s) // 2],
-                "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-            }
+            local_latency[name] = latency(series)
             c = sorted(cached)
             local_latency[name + "_cached"] = {"p50": c[len(c) // 2],
                                                "p95": c[-1]}
@@ -282,27 +293,16 @@ def main() -> None:
             t0 = time.time()
             searcher.search("error timeout", k=10, filters=fq)
             series.append(round(time.time() - t0, 4))
-        s = sorted(series)
-        local_latency["ft_filtered"] = {
-            "p50": s[len(s) // 2],
-            "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-        }
+        local_latency["ft_filtered"] = latency(series)
 
         # field-sorted serving (q + sort=field + fq, round 5): warm p50 of
         # the serving TopFieldCollector twin, page scored
         searcher.search("error timeout", k=10, sort="conv_id desc",
                         filters=fq, with_score=True)  # warm
-        series = []
-        for _ in range(max(reps, 5)):
-            t0 = time.time()
-            searcher.search("error timeout", k=10, sort="conv_id desc",
-                            filters=fq, with_score=True)
-            series.append(round(time.time() - t0, 4))
-        s = sorted(series)
-        local_latency["ft_sorted"] = {
-            "p50": s[len(s) // 2],
-            "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-        }
+        local_latency["ft_sorted"] = latency(timed_series(
+            lambda: searcher.search("error timeout", k=10,
+                                    sort="conv_id desc", filters=fq,
+                                    with_score=True), max(reps, 5)))
 
         # serving /select (round 5): ONE JSON body -> ranked docs + facet
         # block from the component pipeline, all from resident structures
@@ -311,16 +311,8 @@ def main() -> None:
                        "facet": {"by_role": {"type": "terms",
                                              "field": "role"}}}
         searcher.select(select_body)  # warm
-        series = []
-        for _ in range(max(reps, 5)):
-            t0 = time.time()
-            searcher.select(select_body)
-            series.append(round(time.time() - t0, 4))
-        s = sorted(series)
-        local_latency["serving_select"] = {
-            "p50": s[len(s) // 2],
-            "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-        }
+        local_latency["serving_select"] = latency(timed_series(
+            lambda: searcher.select(select_body), max(reps, 5)))
 
         # serving-path suggesters (same tier): warm per-call p50 in ms-range
         for sname, call in (
@@ -330,16 +322,7 @@ def main() -> None:
                 ("suggest_fuzzy",
                  lambda: searcher.suggest_fuzzy("tymeout", k=5))):
             call()  # warm (sorted-vocab build on first prefix call)
-            series = []
-            for _ in range(max(reps, 5)):
-                t0 = time.time()
-                call()
-                series.append(round(time.time() - t0, 4))
-            s = sorted(series)
-            local_latency[sname] = {
-                "p50": s[len(s) // 2],
-                "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-            }
+            local_latency[sname] = latency(timed_series(call, max(reps, 5)))
 
         # ---- sharded serving: split the index 4 ways (layout-only), merge
         # per-shard top-k (query/shards.py — the distributed-search
@@ -365,11 +348,7 @@ def main() -> None:
                 t0 = time.time()
                 merged.search(q, k=10)
                 series.append(round(time.time() - t0, 4))
-            s = sorted(series)
-            local_latency[f"sharded{n_shards}_{name}"] = {
-                "p50": s[len(s) // 2],
-                "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-            }
+            local_latency[f"sharded{n_shards}_{name}"] = latency(series)
 
         # serving-tier facets (round 5): the /select piggyback role —
         # numpy aggregation over the resident forward columns; plus the
@@ -385,32 +364,15 @@ def main() -> None:
                 (f"sharded{n_shards}_select", lambda: merged.select(
                     select_body))):
             call()  # warm (forward-table load on first facet call)
-            series = []
-            for _ in range(max(reps, 5)):
-                t0 = time.time()
-                call()
-                series.append(round(time.time() - t0, 4))
-            s = sorted(series)
-            local_latency[fname] = {
-                "p50": s[len(s) // 2],
-                "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-            }
+            local_latency[fname] = latency(timed_series(call, max(reps, 5)))
 
         # distributed /get: hash-fan-out point read, latest version wins
         rtg_keys = [(r["conv_id"], r["turn_idx"]) for r in
                     reader.forward(spark).select("conv_id", "turn_idx")
                     .limit(5).collect()]
         merged.realtime_get(rtg_keys)  # warm
-        series = []
-        for _ in range(max(reps, 5)):
-            t0 = time.time()
-            merged.realtime_get(rtg_keys)
-            series.append(round(time.time() - t0, 4))
-        s = sorted(series)
-        local_latency[f"sharded{n_shards}_rtg"] = {
-            "p50": s[len(s) // 2],
-            "p95": s[min(len(s) - 1, int(round(0.95 * (len(s) - 1))))],
-        }
+        local_latency[f"sharded{n_shards}_rtg"] = latency(timed_series(
+            lambda: merged.realtime_get(rtg_keys), max(reps, 5)))
 
         # ---- operator headliners over the sf tables
         def t(name: str, fn) -> None:
@@ -464,7 +426,7 @@ def main() -> None:
             "value": round(total, 3),
             "unit": "sec",
             "queries": timings,
-            "latency": latency,
+            "latency": latencies,
             "latency_local_serving": local_latency,
             "sf": sf,
             "cpus": cpus,

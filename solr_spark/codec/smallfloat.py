@@ -55,6 +55,18 @@ def norm_length_table() -> np.ndarray:
     return int4_to_long(np.arange(256, dtype=np.int64))
 
 
+_LENGTH_TABLE = norm_length_table().astype(np.float64)
+
+
+def decode_norms(blob: bytes, lucene_norms: bool) -> np.ndarray:
+    """One range's norms blob -> its float64 doc lengths, indexed by offset in
+    the range: one SmallFloat byte per doc through the length table when the
+    index was built with lucene_norms, else the exact uint32 lengths."""
+    if lucene_norms:
+        return _LENGTH_TABLE[np.frombuffer(blob, dtype=np.uint8)]
+    return np.frombuffer(blob, dtype=np.uint32).astype(np.float64)
+
+
 def quantize_doc_length(lengths: np.ndarray) -> np.ndarray:
     """Exact doc length -> the length BM25 actually scores with (encode+decode)."""
     return int4_to_long(int_to_byte4(np.asarray(lengths, dtype=np.int64)))

@@ -12,10 +12,12 @@ length and avgdl = sumTotalTermFreq/docCount. Ties break by docid ascending.
 
 Distributed two-phase top-k (the reference's GET_TOP_IDS / GET_FIELDS split,
 handler/component/QueryComponent.java:789,971,1402):
-  plan:    on the driver, with no Spark action — query analysis, dictionary
-           df/cf from one term_bucket-pruned pyarrow read, per-term weights.
+  plan:    on the driver, with no Spark action — `plan_query`: query analysis,
+           dictionary df/cf from one term_bucket-pruned pyarrow read, per-term
+           weights, as one picklable QueryPlan.
   phase 1: term-bucket-pruned posting scan -> ONE repartition(range_id) -> the
-           scoring kernel (the query's only Python stage) -> per-partition top-k.
+           ranges' kernel driver (the query's only Python stage) -> per-partition
+           top-k.
   phase 2: the candidates are broadcast into a join with the cached doc map for
            (conv_id, turn_idx); one global aggregate sorts them by (score desc,
            docid), keeps k and ranks them by position.
@@ -23,6 +25,8 @@ A plain query runs 2 Spark jobs: the candidates' broadcast, then the collect.
 
 Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
+The serving tier (query/local.py) builds the same QueryPlan through
+`plan_query` and scores every range with the same kernel, `_score_group`.
 
 WAND mode (reference exposure: QueryComponent.java:448-452, RankQParserPlugin.java:32):
 posting-range rows carry max_tf. The kernel receives every posting row of its
@@ -50,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from solr_spark.analysis import analyze_text
-from solr_spark.codec.smallfloat import norm_length_table
+from solr_spark.codec.smallfloat import decode_norms
 from solr_spark.codec.varint import decode_postings
 from solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from solr_spark.indexing.build import live_segments
@@ -58,10 +62,7 @@ from solr_spark.indexing.build import live_segments
 _TOPK_SCHEMA = "docid long, score double"
 _OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
 
-from solr_spark.query.similarity import BM25Similarity as _BM25Sim  # noqa: E402
 from solr_spark.query.similarity import resolve as _resolve_sim  # noqa: E402
-
-_DEFAULT_SIM = _BM25Sim()
 
 
 @dataclass
@@ -225,164 +226,283 @@ def _empty_df(spark: SparkSession, schema: str) -> DataFrame:
           for f in T.StructType.fromDDL(schema).fields])
 
 
-def _score_group(pdf: pd.DataFrame, norm_blob: bytes, weights: dict,
-                 cfg: IndexConfig, avgdl: float,
-                 length_table: np.ndarray, min_match: int,
-                 groups: dict | None = None, gweights: dict | None = None,
-                 sim=None, params: dict | None = None,
-                 prohibited: set | None = None, required: set | None = None,
-                 filtered: bool = False,
-                 combine: str = "sum", tie: float = 0.0):
-    """Score one range group; returns (docids, scores) numpy arrays.
+@dataclass(frozen=True)
+class QueryPlan:
+    """One analyzed, weighted query — everything the range kernel needs, as
+    one picklable value (the role of Lucene's Weight: built once per query
+    from global stats, then applied to every docid range).
 
-    pdf holds the range's encoded posting rows (term, range_id, n_docs,
-    doc_gaps, tfs, and filter_bits when `filtered`), decoded here in one
-    batched `decode_postings` call — so a range the WAND loop skips is never
-    decoded; norm_blob is the range's norms blob.
+    terms are the scoring terms found in the dictionary, prohibited the
+    MUST_NOT terms found there (their postings only mask docs), required the
+    MUST canonical terms (or synonym group ids). weights/score_params are
+    keyed like the kernel's clauses: by term, or by group id when `groups`
+    (member term -> canonical group ids) is set. bound_weights/bound_params
+    are keyed by scan term and feed the similarity's WAND range bound.
+    """
 
-    min_match is the edismax `mm` contract (ExtendedDismaxQParser.java:66):
-    1 = pure disjunction, len(query terms) = conjunction, anything between =
-    min-should-match (over synonym GROUPS when groups is set).
+    sim: object
+    cfg: IndexConfig
+    avgdl: float
+    k: int
+    min_match: int
+    terms: tuple
+    prohibited: frozenset
+    required: frozenset
+    weights: dict
+    score_params: dict
+    bound_weights: dict
+    bound_params: dict
+    groups: dict | None
+    combine: str
+    tie: float
 
-    groups/gweights enable Lucene SynonymQuery semantics (query-time
-    SynonymGraphFilter, managed-schema.xml:309): every member term of a group
-    contributes to ONE pooled tf per document, saturated once, weighted by the
-    group's idf (computed from the max member df, as SynonymQuery does).
+    @property
+    def scan_terms(self) -> list[str]:
+        """Every term whose postings the query reads: scoring, then MUST_NOT."""
+        return list(self.terms) + sorted(self.prohibited - set(self.terms))
 
-    sim/params plug the per-field Similarity (query/similarity.py; default
-    BM25): params maps term (or group id) -> the similarity's per-term scalar
-    (e.g. the LM collection probability).
 
-    prohibited: terms whose postings ride the same range group but only mark
-    documents for exclusion (BooleanClause.MUST_NOT — Lucene's ReqExclScorer
-    skipping excluded docs before collection; they contribute no score and no
-    mm count). required: canonical terms/groups that must ALL be present in a
-    doc for it to match (BooleanClause.MUST over an otherwise-SHOULD query).
+def plan_query(reader: IndexReader, term_stats, query_text: str,
+               k: int = 10, require_all: bool = False,
+               min_match: int | str | None = None,
+               synonyms: dict[str, list[str]] | None = None,
+               boosts: dict[str, float] | None = None,
+               similarity: str | object = "bm25",
+               prohibited: list[str] | None = None,
+               required: list[str] | None = None,
+               combine: str = "sum", tie: float = 0.0) -> QueryPlan | None:
+    """The query plan both tiers score with; None when no doc can match.
 
-    combine/tie: the `{!maxscore}` qparser's clause combiner (reference:
-    search/MaxScoreQParser.java:53 — SHOULD clauses are wrapped in a
-    DisjunctionMaxQuery with `tie` as the tiebreaker, MUST clauses pass
-    through as ordinary summed BooleanClauses). combine="dismax" scores a
-    doc as sum(MUST contribs) + max(SHOULD contribs) + tie * (sum(SHOULD
-    contribs) - max); combine="sum" (default) is the ordinary BooleanQuery
-    sum. Synonym groups are not combinable with dismax (the reference parses
-    `{!maxscore}` through the plain Lucene grammar, which has no graph
-    expansion at that point).
+    reader supplies the index config (analysis, k1/b, norms) and the GLOBAL
+    n_docs/avgdl; term_stats(terms) -> {term: (df, cf)} for the dictionary
+    terms among `terms` (absent terms omitted) — `IndexReader.term_stats` on
+    the Spark tier, the resident dictionary on the serving tier. The
+    arguments are bm25_topk's (see there). Validation (combine, tie,
+    required terms) raises here, once, before any posting is read; k is
+    capped at n_docs so no top-k buffer is sized by a caller's k.
     """
     if combine not in ("sum", "dismax"):
         raise ValueError(f"combine must be 'sum' or 'dismax', got {combine!r}")
-    if combine == "dismax" and groups is not None:
-        raise ValueError("combine='dismax' does not support synonym groups")
-    if sim is None:
-        sim = _DEFAULT_SIM
-    params = params or {}
-    base = int(pdf["range_id"].iloc[0]) << cfg.range_shift
-    docids, tfs, bounds = decode_postings(
-        pdf["doc_gaps"], pdf["tfs"], pdf["range_id"], pdf["n_docs"],
-        cfg.range_shift)
-    terms = pdf["term"].to_numpy()
-    if cfg.lucene_norms:
-        norms = np.frombuffer(norm_blob, dtype=np.uint8)
-        dls = length_table[norms].astype(np.float64)
+    if combine == "dismax" and synonyms:
+        raise ValueError("combine='dismax' does not support synonyms")
+    if combine == "dismax" and not (0.0 <= tie <= 1.0):
+        raise ValueError(f"tie must be in [0, 1], got {tie}")
+    cfg = reader.config
+    sim = _resolve_sim(similarity)
+    n_docs = reader.n_docs
+    total_tokens = n_docs * reader.avgdl
+    qterms = Counter(analyze_text(query_text, cfg))
+    if not qterms:
+        return None
+    # a result can never exceed the doc count (k=10^9 once OOMed a 1 GiB
+    # driver)
+    k = min(k, n_docs)
+    if k < 1:
+        return None
+
+    canon = sorted(qterms)
+    # boolean-operator clauses (grammar parser/QueryParser.jj `+`/`-`):
+    # prohibited = MUST_NOT (postings ride the scan, kernel excludes matching
+    # docs before collection — ReqExclScorer); required = MUST (each analyzed
+    # required term must also be a scoring clause and present in every hit)
+    prohib_terms: set[str] = set()
+    for p in prohibited or []:
+        prohib_terms.update(analyze_text(p, cfg))
+    req_terms: set[str] = set()
+    for r in required or []:
+        req_terms.update(analyze_text(r, cfg))
+    if req_terms - set(canon):
+        raise ValueError(
+            f"required terms must also appear in query_text: "
+            f"{sorted(req_terms - set(canon))}")
+    group_of: dict[str, tuple[str, ...]] | None = None
+    if synonyms:
+        # member term -> tuple of canonical group ids. Every canonical query
+        # term owns a group; overlapping expansions mean one member can feed
+        # several groups' pooled tf (Lucene analog: duplicate SynonymQuery
+        # clauses both match the shared term).
+        member_groups: dict[str, list[str]] = {}
+        for t in canon:
+            members = [t] + [m for phrase in synonyms.get(t, [])
+                             for m in analyze_text(phrase, cfg)]
+            for m in dict.fromkeys(members):
+                member_groups.setdefault(m, []).append(t)
+        group_of = {m: tuple(gs) for m, gs in member_groups.items()}
+        terms = sorted(group_of)
     else:
-        dls = np.frombuffer(norm_blob, dtype=np.uint32).astype(np.float64)
+        terms = canon
+    if require_all:
+        min_match = len(canon)
+    if isinstance(min_match, str):
+        # the full Solr mm spec grammar ("75%", "2<-25%", conditionals) —
+        # util/SolrPluginUtils.java::calculateMinShouldMatch
+        from solr_spark.query.edismax import calculate_min_should_match
+
+        min_match = calculate_min_should_match(len(canon), min_match)
+    min_match = max(1, min(min_match or 1, len(canon)))
+    # one dictionary read serves the scoring and MUST_NOT terms
+    stats = term_stats(terms + sorted(prohib_terms))
+    dfs = {t: df for t, (df, _cf) in stats.items()}
+    cfs = {t: cf for t, (_df, cf) in stats.items()}
+    found = [t for t in terms if t in stats]
+    if not found:
+        return None
+    boosts = boosts or {}
+    if group_of is not None:
+        groups_found: dict[str, list[str]] = {}
+        for t in found:
+            for g in group_of[t]:
+                groups_found.setdefault(g, []).append(t)
+        # SynonymQuery pooled stats: a group scores with its max member df/cf
+        weights = {
+            g: sim.weight(qterms[g] * boosts.get(g, 1.0), n_docs,
+                          max(dfs[t] for t in ms), max(cfs[t] for t in ms),
+                          total_tokens)
+            for g, ms in groups_found.items()
+        }
+        score_params = {
+            g: sim.term_param(max(dfs[t] for t in ms), max(cfs[t] for t in ms),
+                              n_docs, total_tokens)
+            for g, ms in groups_found.items()
+        }
+        # per-member WAND bound inputs: the sum of the weights of every group
+        # the member feeds (per-term saturated bounds dominate each group's
+        # pooled score, so the sum is a valid upper bound); the bound param
+        # takes the MIN over those groups' params (LM bounds grow as the
+        # collection probability shrinks, so min keeps the bound dominant)
+        bound_weights = {t: sum(weights[g] for g in group_of[t] if g in weights)
+                         for t in found}
+        bound_params = {t: min(score_params[g] for g in group_of[t]
+                               if g in score_params)
+                        for t in found}
+        # a canonical term whose whole group is absent can never match
+        n_clauses = len(groups_found)
+    else:
+        weights = {t: sim.weight(qterms[t] * boosts.get(t, 1.0), n_docs,
+                                 dfs[t], cfs[t], total_tokens)
+                   for t in found}
+        score_params = {t: sim.term_param(dfs[t], cfs[t], n_docs,
+                                          total_tokens) for t in found}
+        bound_weights, bound_params = dict(weights), dict(score_params)
+        n_clauses = len(found)
+    # absent terms can never match: mm above the found clauses, or a MUST
+    # clause absent from the index, is unsatisfiable
+    if min_match > n_clauses or req_terms - set(weights):
+        return None
+    # MUST_NOT terms in the dictionary ride the posting scan with weight 0,
+    # so they add nothing to a range's bound (a skipped range emits no docs,
+    # hence nothing to exclude from)
+    prohib_found = frozenset(t for t in prohib_terms if t in stats)
+    for t in prohib_found - set(found):
+        bound_weights[t], bound_params[t] = 0.0, 1.0
+    return QueryPlan(sim, cfg, reader.avgdl, k, min_match, tuple(found),
+                     prohib_found, frozenset(req_terms), weights,
+                     score_params, bound_weights, bound_params, group_of,
+                     combine, tie)
+
+
+def _score_group(plan: QueryPlan, postings, dls: np.ndarray,
+                 allow: np.ndarray | None = None):
+    """The range-scoring kernel of both tiers: score one docid range under
+    `plan`; returns (offsets, scores) of the range's matching docs, offsets
+    relative to the range's first docid.
+
+    postings: the range's decoded posting lists as (term, offsets, tfs)
+    triples — offsets relative to the range base, tfs float64 — for any of
+    plan.scan_terms (a term may have several lists: one per segment holding
+    docs of the range). dls: the range's float64 doc lengths
+    (codec.smallfloat.decode_norms). allow: the fq DocSet over the range
+    (bool per offset) or None; ANDed after scoring, before collection — the
+    getProcessedFilter intersection.
+
+    plan.min_match is the edismax `mm` contract (ExtendedDismaxQParser.java
+    :66): 1 = pure disjunction (a doc matches on a positive score), more =
+    min-should-match by matched clause count (clauses are synonym GROUPS when
+    plan.groups is set).
+
+    plan.groups enables Lucene SynonymQuery semantics (query-time
+    SynonymGraphFilter, managed-schema.xml:309): every member term of a group
+    contributes to ONE pooled tf per document, saturated once, weighted by the
+    group's weight (from the max member df, as SynonymQuery does).
+
+    plan.prohibited: terms whose lists only mark documents for exclusion
+    (BooleanClause.MUST_NOT — Lucene's ReqExclScorer skipping excluded docs
+    before collection; no score, no mm count). plan.required: canonical
+    terms/groups that must ALL be present in a doc (BooleanClause.MUST over
+    an otherwise-SHOULD query).
+
+    plan.combine/tie: the `{!maxscore}` clause combiner (reference:
+    search/MaxScoreQParser.java:53 — SHOULD clauses are wrapped in a
+    DisjunctionMaxQuery with `tie` as the tiebreaker, MUST clauses pass
+    through as ordinary summed BooleanClauses). "dismax" scores a doc as
+    sum(MUST contribs) + max(SHOULD contribs) + tie * (sum(SHOULD contribs)
+    - max); "sum" is the ordinary BooleanQuery sum.
+    """
+    sim, cfg, avgdl = plan.sim, plan.cfg, plan.avgdl
+    min_match, required = plan.min_match, plan.required
     width = len(dls)
     acc = np.zeros(width, dtype=np.float64)
     # dismax combiner state: max SHOULD contribution per doc, plus the
     # pass-through sum of MUST contributions (MaxScoreQParser.java:63-78)
-    acc_max = np.zeros(width, dtype=np.float64) if combine == "dismax" else None
-    acc_must = np.zeros(width, dtype=np.float64) if combine == "dismax" else None
+    dismax = plan.combine == "dismax"
+    acc_max = np.zeros(width, dtype=np.float64) if dismax else None
+    acc_must = np.zeros(width, dtype=np.float64) if dismax else None
     present = np.zeros(width, dtype=np.int32) if min_match > 1 else None
     excl = None
     req_hit = np.zeros(width, dtype=np.int32) if required else None
-    # fq DocSet mask (query/docsets.py): the range's filter bitmap rides the
-    # posting rows via the range_id join; ANDed after scoring, before
-    # collection — the getProcessedFilter intersection
-    allow = None
-    if filtered:
-        from solr_spark.query.docsets import unpack_bits
-
-        allow = unpack_bits(pdf["filter_bits"].iloc[0], width)
-
-    def _finish():
-        if acc_max is not None:
-            final = acc_must + acc_max + tie * (acc - acc_max)
-        else:
-            final = acc
-        if present is not None:
-            keep = present >= min_match
-        elif acc_max is not None:
-            keep = final > 0.0
-        else:
-            keep = acc > 0.0
-        if req_hit is not None:
-            keep &= req_hit >= len(required)
-        if excl is not None:
-            keep &= ~excl
-        if allow is not None:
-            keep &= allow
-        nz = np.flatnonzero(keep)
-        return nz + base, final[nz]
-
     # fixed term order => deterministic float summation (matches the oracle)
-    order = np.argsort(terms, kind="stable")
-    if groups is None:
-        for i in order:
-            term = terms[i]
-            off = docids[bounds[i]:bounds[i + 1]] - base
-            t = tfs[bounds[i]:bounds[i + 1]]
-            if prohibited and term in prohibited:
-                if excl is None:
-                    excl = np.zeros(width, dtype=bool)
-                excl[off] = True
-                continue
-            tf = t.astype(np.float64)
-            contrib = sim.contrib(tf, dls[off], weights[term],
-                                  params.get(term, 0.0), cfg, avgdl)
-            if acc_max is not None and required and term in required:
-                # MUST clauses bypass the dismax: ordinary summed clauses
-                acc_must[off] += contrib
-            else:
-                acc[off] += contrib
-                if acc_max is not None:
-                    # off is unique within one posting list: plain fancy-index max
-                    acc_max[off] = np.maximum(acc_max[off], contrib)
-            if present is not None:
-                present[off] += 1
-            if req_hit is not None and term in required:
-                req_hit[off] += 1
-        return _finish()
-
-    # synonym path: pool tf per group first, saturate once per group.
-    # groups maps member term -> tuple of canonical group ids (a member may
-    # belong to several groups when query terms' expansions overlap — each
-    # canonical query term always owns its own group, so min_match counts
-    # the user's terms, never a collapsed overlap).
+    postings = sorted(postings, key=lambda p: p[0])
     pooled: dict = {}
-    for i in order:
-        term = terms[i]
-        d, t = docids[bounds[i]:bounds[i + 1]], tfs[bounds[i]:bounds[i + 1]]
-        if prohibited and term in prohibited:
+    for term, off, tf in postings:
+        if term in plan.prohibited:
             if excl is None:
                 excl = np.zeros(width, dtype=bool)
-            excl[d - base] = True
+            excl[off] = True
             continue
-        for gid in groups[term]:
-            tfg = pooled.get(gid)
-            if tfg is None:
-                tfg = pooled[gid] = np.zeros(width, dtype=np.float64)
-            tfg[d - base] += t
+        if plan.groups is not None:
+            # synonym path: pool tf per group first, saturate once per group.
+            # A member may feed several groups when query terms' expansions
+            # overlap — each canonical query term owns its own group, so
+            # min_match counts the user's terms, never a collapsed overlap.
+            for gid in plan.groups[term]:
+                tfg = pooled.get(gid)
+                if tfg is None:
+                    tfg = pooled[gid] = np.zeros(width, dtype=np.float64)
+                tfg[off] += tf
+            continue
+        contrib = sim.contrib(tf, dls[off], plan.weights[term],
+                              plan.score_params.get(term, 0.0), cfg, avgdl)
+        if dismax and term in required:
+            # MUST clauses bypass the dismax: ordinary summed clauses
+            acc_must[off] += contrib
+        else:
+            acc[off] += contrib
+            if dismax:
+                # off is unique within one posting list: plain fancy-index max
+                acc_max[off] = np.maximum(acc_max[off], contrib)
+        if present is not None:
+            present[off] += 1
+        if req_hit is not None and term in required:
+            req_hit[off] += 1
     for gid in sorted(pooled):  # deterministic group order
         tfg = pooled[gid]
         hit = np.flatnonzero(tfg)
-        tf = tfg[hit]
-        acc[hit] += sim.contrib(tf, dls[hit], gweights[gid],
-                                params.get(gid, 0.0), cfg, avgdl)
+        acc[hit] += sim.contrib(tfg[hit], dls[hit], plan.weights[gid],
+                                plan.score_params.get(gid, 0.0), cfg, avgdl)
         if present is not None:
             present[hit] += 1
         if req_hit is not None and gid in required:
             req_hit[hit] += 1
-    return _finish()
+    final = acc_must + acc_max + plan.tie * (acc - acc_max) if dismax else acc
+    keep = present >= min_match if present is not None else final > 0.0
+    if req_hit is not None:
+        keep &= req_hit >= len(required)
+    if excl is not None:
+        keep &= ~excl
+    if allow is not None:
+        keep &= allow
+    nz = np.flatnonzero(keep)
+    return nz, final[nz]
 
 
 def _merge_topk(docids: np.ndarray, scores: np.ndarray, d: np.ndarray,
@@ -552,127 +672,19 @@ def bm25_topk(
     valid upper bound for the dismax score because tie <= 1 implies
     max + tie * (sum - max) <= sum.
     """
-    if combine not in ("sum", "dismax"):
-        raise ValueError(f"combine must be 'sum' or 'dismax', got {combine!r}")
-    if combine == "dismax" and synonyms:
-        raise ValueError("combine='dismax' does not support synonyms")
-    if combine == "dismax" and not (0.0 <= tie <= 1.0):
-        raise ValueError(f"tie must be in [0, 1], got {tie}")
-    cfg = reader.config
-    sim = _resolve_sim(similarity)
-    total_tokens = reader.n_docs * reader.avgdl
-    qterms = Counter(analyze_text(query_text, cfg))
-    if not qterms:
+    plan = plan_query(reader, reader.term_stats, query_text, k=k,
+                      require_all=require_all, min_match=min_match,
+                      synonyms=synonyms, boosts=boosts, similarity=similarity,
+                      prohibited=prohibited, required=required,
+                      combine=combine, tie=tie)
+    if plan is None:
         return _empty_df(spark, _OUT_SCHEMA)
-    # a result can never exceed the doc count; cap k so no top-k buffer is
-    # sized by a caller's k (k=10^9 once OOMed a 1 GiB driver)
-    k = min(k, reader.n_docs)
-    if k < 1:
-        return _empty_df(spark, _OUT_SCHEMA)
-
-    canon = sorted(qterms)
-    # boolean-operator clauses (grammar parser/QueryParser.jj `+`/`-`):
-    # prohibited = MUST_NOT (postings ride the scan, kernel excludes matching
-    # docs before collection — ReqExclScorer); required = MUST (each analyzed
-    # required term must also be a scoring clause and present in every hit)
-    prohib_terms: set[str] = set()
-    for p in prohibited or []:
-        prohib_terms.update(analyze_text(p, cfg))
-    req_terms: set[str] = set()
-    for r in required or []:
-        req_terms.update(analyze_text(r, cfg))
-    if req_terms - set(canon):
-        raise ValueError(
-            f"required terms must also appear in query_text: "
-            f"{sorted(req_terms - set(canon))}")
-    group_of: dict[str, tuple[str, ...]] | None = None
-    if synonyms:
-        # member term -> tuple of canonical group ids. Every canonical query
-        # term owns a group; overlapping expansions mean one member can feed
-        # several groups' pooled tf (Lucene analog: duplicate SynonymQuery
-        # clauses both match the shared term).
-        member_groups: dict[str, list[str]] = {}
-        for t in canon:
-            members = [t] + [m for phrase in synonyms.get(t, [])
-                             for m in analyze_text(phrase, cfg)]
-            for m in dict.fromkeys(members):
-                member_groups.setdefault(m, []).append(t)
-        group_of = {m: tuple(gs) for m, gs in member_groups.items()}
-        terms = sorted(group_of)
-    else:
-        terms = canon
-    if require_all:
-        min_match = len(canon)
-    if isinstance(min_match, str):
-        # the full Solr mm spec grammar ("75%", "2<-25%", conditionals) —
-        # util/SolrPluginUtils.java::calculateMinShouldMatch
-        from solr_spark.query.edismax import calculate_min_should_match
-
-        min_match = calculate_min_should_match(len(canon), min_match)
-    min_match = max(1, min(min_match or 1, len(canon)))
-    # one driver-side dictionary read serves the scoring and MUST_NOT terms
-    stats = reader.term_stats(terms + sorted(prohib_terms))
-    dfs = {t: df for t, (df, _cf) in stats.items()}
-    cfs = {t: cf for t, (_df, cf) in stats.items()}
-    found = [t for t in terms if t in stats]
-    if not found:
-        return _empty_df(spark, _OUT_SCHEMA)
-    gweights: dict[str, float] | None = None
-    score_params: dict[str, float]  # keyed like the kernel's weight dict
-    if group_of is not None:
-        groups_found: dict[str, list[str]] = {}
-        for t in found:
-            for g in group_of[t]:
-                groups_found.setdefault(g, []).append(t)
-        # SynonymQuery pooled stats: a group scores with its max member df/cf
-        gweights = {
-            g: sim.weight(qterms[g] * (boosts or {}).get(g, 1.0), reader.n_docs,
-                          max(dfs[t] for t in ms), max(cfs[t] for t in ms),
-                          total_tokens)
-            for g, ms in groups_found.items()
-        }
-        score_params = {
-            g: sim.term_param(max(dfs[t] for t in ms), max(cfs[t] for t in ms),
-                              reader.n_docs, total_tokens)
-            for g, ms in groups_found.items()
-        }
-        # per-member weight for the WAND range bound: the sum of the weights of
-        # every group the member feeds (per-term saturated bounds dominate each
-        # group's pooled score, so the sum is a valid upper bound); the bound
-        # param takes the MIN over those groups' params (LM bounds grow as the
-        # collection probability shrinks, so min keeps the bound dominant)
-        weights = {t: sum(gweights[g] for g in group_of[t] if g in gweights)
-                   for t in found}
-        bound_params = {t: min(score_params[g] for g in group_of[t]
-                               if g in score_params)
-                        for t in found}
-        if min_match > len(groups_found):
-            # a canonical term whose whole group is absent can never match
-            return _empty_df(spark, _OUT_SCHEMA)
-    else:
-        weights = {t: sim.weight(qterms[t] * (boosts or {}).get(t, 1.0),
-                                 reader.n_docs, dfs[t], cfs[t], total_tokens)
-                   for t in found}
-        score_params = {t: sim.term_param(dfs[t], cfs[t], reader.n_docs,
-                                          total_tokens) for t in found}
-        bound_params = score_params
-        if min_match > len(found):
-            # absent terms can never match; mm above the found count is unsatisfiable
-            return _empty_df(spark, _OUT_SCHEMA)
-
-    # MUST check: a required term absent from the index is unsatisfiable
-    if req_terms:
-        satisfiable = (set(gweights) if group_of is not None else set(found))
-        if req_terms - satisfiable:
-            return _empty_df(spark, _OUT_SCHEMA)
-    # MUST_NOT terms that exist in the dictionary join the posting scan with
-    # weight 0 — their postings only flip the kernel's exclusion mask
-    prohib_found = sorted(t for t in prohib_terms if t in stats)
     if mode not in ("exact", "wand"):
         raise ValueError(f"unknown mode: {mode}")
 
+    cfg = reader.config
     seg = reader.segments_df(spark)
-    scan_terms = found + [t for t in prohib_found if t not in found]
+    scan_terms = plan.scan_terms
     scan_buckets = sorted(set(_term_buckets(scan_terms, cfg.num_term_buckets)))
     # the plan's one exchange: every posting row of a range meets in one
     # kernel call, which orders its ranges by WAND bound itself
@@ -698,8 +710,6 @@ def bm25_topk(
         # hash-partitioned on range_id) and needs no broadcast job.
         rows = rows.join(bitmaps.hint("shuffle_hash"), "range_id")
 
-    length_table = norm_length_table()
-    avgdl = reader.avgdl
     index_dir = reader.index_dir
     # liveDocs mask (indexing/deletes.py): tombstoned docids are dropped
     # AFTER scoring, BEFORE top-k selection — stats (df/n_docs/avgdl) still
@@ -709,53 +719,55 @@ def bm25_topk(
     dels = deleted_array(spark, index_dir)
     if not len(dels):
         dels = None
-
-    kernel_prohib = frozenset(prohib_found) or None
-    kernel_req = frozenset(req_terms) or None
     prune = mode == "wand"
-    # WAND bound inputs per scanned term: prohibited rows carry weight 0 (and
-    # a harmless bound param), so they add nothing to a range's bound — a
-    # skipped range emits no docs, hence nothing to exclude from
-    wand_weights = {t: weights.get(t, 0.0) for t in scan_terms}
-    wand_bparams = {t: bound_params.get(t, 1.0) for t in scan_terms}
 
     def topk_iter(batches):
         """This partition's posting rows (the query terms' rows of its
         ranges) -> its top-k, scoring ranges by descending WAND bound."""
+        from solr_spark.query.docsets import unpack_bits
+
         frames = [b for b in batches if len(b)]
         if not frames:
             return
         pdf = pd.concat(frames, ignore_index=True).sort_values(
             ["range_id", "term"], ignore_index=True, kind="stable")
         rid = pdf["range_id"].to_numpy()
+        terms = pdf["term"].tolist()
         starts = np.flatnonzero(np.r_[True, rid[1:] != rid[:-1]])
         ends = np.r_[starts[1:], len(rid)]
         order = range(len(starts))
         if prune:
-            term_bound = sim.bound(
+            term_bound = plan.sim.bound(
                 pdf["max_tf"].to_numpy(np.float64),
-                pdf["term"].map(wand_weights).to_numpy(np.float64),
-                pdf["term"].map(wand_bparams).to_numpy(np.float64),
-                cfg, avgdl)
+                pdf["term"].map(plan.bound_weights).to_numpy(np.float64),
+                pdf["term"].map(plan.bound_params).to_numpy(np.float64),
+                cfg, plan.avgdl)
             bound = np.add.reduceat(term_bound, starts)
             order = np.lexsort((rid[starts], -bound))
         norms = _range_norms(index_dir, rid[starts].tolist())
         top_d = np.empty(0, dtype=np.int64)
         top_s = np.empty(0, dtype=np.float64)
         for g in order:
-            if prune and len(top_d) == k and bound[g] < top_s.min():
+            if prune and len(top_d) == plan.k and bound[g] < top_s.min():
                 continue  # block-max skip: provably non-competitive
+            # decode only the ranges that survive the skip
+            # (range base 0: the decoded docids are offsets in the range)
             lo, hi = starts[g], ends[g]
-            d, s = _score_group(pdf.iloc[lo:hi], norms[int(rid[lo])],
-                                weights, cfg, avgdl, length_table,
-                                min_match, group_of, gweights,
-                                sim, score_params,
-                                kernel_prohib, kernel_req, use_filter,
-                                combine, tie)
+            off, tf, b = decode_postings(
+                pdf["doc_gaps"].iloc[lo:hi], pdf["tfs"].iloc[lo:hi],
+                np.zeros(hi - lo, dtype=np.int64), pdf["n_docs"].iloc[lo:hi], 0)
+            tf = tf.astype(np.float64)
+            dls = decode_norms(norms[int(rid[lo])], cfg.lucene_norms)
+            allow = unpack_bits(pdf["filter_bits"].iat[lo], len(dls)) \
+                if use_filter else None
+            off, s = _score_group(
+                plan, [(terms[lo + i], off[b[i]:b[i + 1]], tf[b[i]:b[i + 1]])
+                       for i in range(hi - lo)], dls, allow)
+            d = off + (int(rid[lo]) << cfg.range_shift)
             if dels is not None and len(d):
                 keep = ~np.isin(d, dels)
                 d, s = d[keep], s[keep]
-            top_d, top_s = _merge_topk(top_d, top_s, d, s, k)
+            top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
         if len(top_d):
             yield pd.DataFrame({"docid": top_d, "score": top_s})
 
@@ -768,7 +780,7 @@ def bm25_topk(
     hits = reader.doc_map(spark).join(F.broadcast(cand), "docid")
     return (hits.selectExpr(
         "transform(slice(array_sort(collect_list(struct(-score AS neg_score, "
-        f"docid, conv_id, turn_idx))), 1, {k}), (h, i) -> struct("
+        f"docid, conv_id, turn_idx))), 1, {plan.k}), (h, i) -> struct("
         "h.conv_id AS conv_id, h.turn_idx AS turn_idx, h.docid AS docid, "
         "-h.neg_score AS score, i + 1 AS rank)) AS top")
         .selectExpr("inline(top)"))

@@ -105,20 +105,15 @@ def doc_lengths(spark: SparkSession, reader: IndexReader) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from solr_spark.codec.smallfloat import norm_length_table
+    from solr_spark.codec.smallfloat import decode_norms
 
     lucene = reader.config.lucene_norms
-    table = norm_length_table()
 
     def decode(batches):
         for pdf in batches:
             ds, ls = [], []
             for row in pdf.itertuples(index=False):
-                blob = bytes(row.norm_bytes)
-                if lucene:
-                    dls = table[np.frombuffer(blob, dtype=np.uint8)]
-                else:
-                    dls = np.frombuffer(blob, dtype=np.uint32).astype(np.float64)
+                dls = decode_norms(bytes(row.norm_bytes), lucene)
                 ds.append(np.arange(len(dls), dtype=np.int64) + int(row.base_docid))
                 ls.append(dls)
             if ds:

@@ -1,17 +1,22 @@
 """Driver-local serving mode: millisecond warm top-k over the same index.
 
 Role in the architecture: the distributed `bm25_topk` path is the BATCH
-posture — a Spark job whose ~0.7s floor is job-scheduling overhead, fine for
-analytics, wrong for interactive search. The reference serves queries from a
-per-shard in-process searcher (SolrIndexSearcher over memory-mapped segment
-files); `LocalSearcher` is that role restated over THIS engine's artifacts:
-it memory-loads the small structures (norms, doc map, term dictionary — bytes
-per doc / per term), opens the segment files once and reads only the query
-terms' `term_bucket` files on a postings miss (the pruning the Spark path gets
-from Catalyst), and scores with the SAME numpy kernel contract as the Spark
-path: one batched `codec.decode_postings` call per miss, the pluggable
-Similarity registry, and top-k selection by the kernel's `_merge_topk`.
-Results are rank- and score-identical to `bm25_topk` (asserted in
+posture — 2 Spark jobs per query (p50 ~0.5 s, nearly all of it scheduling and
+the Python stage's fixed cost), fine for analytics, wrong for interactive
+search. The reference serves queries from a per-shard in-process searcher
+(SolrIndexSearcher over memory-mapped segment files); `LocalSearcher` is that
+role restated over THIS engine's artifacts: it memory-loads the small
+structures (norms, doc map, term dictionary — bytes per doc / per term),
+opens the segment files once and reads only the query terms' `term_bucket`
+files on a postings miss (the pruning the Spark path gets from Catalyst),
+decoding each miss in one batched `codec.decode_postings` call.
+
+Scoring is the Spark path's own core, not a copy of it: the query plan is
+`bm25.plan_query` (its dictionary lookup served by the resident dictionary)
+and every docid range is scored by `bm25._score_group` (fed from the
+postings cache), with top-k selection by `bm25._merge_topk`. Only the
+driving differs: this tier scores every range the query touches (no WAND
+skipping). Results are rank- and score-identical to `bm25_topk` (asserted in
 tests/test_local.py).
 
 At 100-TB scale this object is one SHARD's searcher: a serving tier holds one
@@ -27,18 +32,17 @@ from __future__ import annotations
 import glob
 import heapq
 import os
-from collections import Counter
 
 import numpy as np
 
 from solr_spark.analysis import analyze_text
-from solr_spark.codec.smallfloat import norm_length_table
+from solr_spark.codec.smallfloat import decode_norms
 from solr_spark.codec.varint import decode_postings
 from solr_spark.indexing.build import live_segments
 from solr_spark.indexing.deletes import deleted_array
-from solr_spark.query.bm25 import IndexReader, _merge_topk, _term_buckets
+from solr_spark.query.bm25 import (IndexReader, _merge_topk, _score_group,
+                                   _term_buckets, plan_query)
 from solr_spark.query.parser import LuceneQueryParser
-from solr_spark.query.similarity import resolve as _resolve_sim
 
 
 class _PandasFilterEvaluator(LuceneQueryParser):
@@ -215,16 +219,11 @@ class LocalSearcher:
         idx = reader.index_dir
 
         # norms: range_id -> float64 doc-length array (1-4 bytes/doc on disk)
-        table = norm_length_table()
-        self._dls: dict[int, np.ndarray] = {}
         nt = pq.read_table(os.path.join(idx, "norms"))
-        for rid, blob in zip(nt["range_id"].to_numpy(),
-                             nt["norm_bytes"].to_pylist()):
-            if self.cfg.lucene_norms:
-                self._dls[int(rid)] = table[np.frombuffer(blob, np.uint8)]
-            else:
-                self._dls[int(rid)] = np.frombuffer(blob, np.uint32) \
-                                        .astype(np.float64)
+        self._dls: dict[int, np.ndarray] = {
+            int(rid): decode_norms(blob, self.cfg.lucene_norms)
+            for rid, blob in zip(nt["range_id"].to_numpy(),
+                                 nt["norm_bytes"].to_pylist())}
 
         # doc map sorted by docid. A full index has dense docids 0..N-1; a
         # SHARD of one (query/shards.py) holds an interleaved subset, so
@@ -456,8 +455,8 @@ class LocalSearcher:
             if flist:
                 filter_mask = self.filter_mask(flist, now=now)
             return self._field_sorted(query_text, sort, k, offset,
-                                      filter_mask, now, with_score,
-                                      similarity)
+                                      filter_mask, with_score, similarity,
+                                      require_all, min_match)
         need = offset + k
         cacheable = (filter_mask is None and isinstance(similarity, str)
                      and (now is not None
@@ -529,8 +528,6 @@ class LocalSearcher:
         if p["fields"] is not None:
             docs = self._project_fields(docs, p["fields"])
         if p["hl"]:
-            from solr_spark.analysis import analyze_text
-
             terms = analyze_text(p["query"], self.cfg)
             for h in docs:
                 h["snippet"] = self.snippet(h["docid"], terms,
@@ -596,33 +593,55 @@ class LocalSearcher:
             out.append(row)
         return out
 
-    def _match_rows(self, query_text: str) -> np.ndarray:
-        """The scored query's match set as a ROW mask over the resident
-        forward table (terms OR together, resolved from the postings — the
-        serving twin of query/fieldsort.py::scored_match_docids)."""
+    def _term_stats(self, terms) -> dict[str, tuple[int, int]]:
+        """plan_query's dictionary lookup: the resident dictionary."""
+        return {t: (int(self._df[t]), int(self._cf[t]))
+                for t in terms if t in self._df}
+
+    def _match_rows(self, query_text: str | None,
+                    filter_mask: "np.ndarray | None" = None,
+                    require_all: bool = False,
+                    min_match: int | None = None) -> np.ndarray:
+        """The q (+fq) DocSet minus tombstones as a ROW mask over the
+        resident forward table. q matches the docs holding at least the
+        plan's min_match query terms, resolved from the postings (the
+        serving twin of query/fieldsort.py::scored_match_docids); a None or
+        `*:*` query matches every doc."""
         self._load_forward()
         docids = self._fwd["docid"].to_numpy()
-        qterms = sorted(set(analyze_text(query_text, self.cfg)))
-        found = [t for t in qterms if t in self._df]
-        width = int(docids.max()) + 1 if len(docids) else 0
-        match = np.zeros(width, dtype=bool)
-        shift = self.cfg.range_shift
-        for term, lst in self._postings(found).items():
-            for rid, off, _tf in lst:
-                match[(int(rid) << shift) + off] = True
-        in_r = docids < width
-        rows = np.zeros(len(self._fwd), dtype=bool)
-        rows[in_r] = match[docids[in_r]]
+        rows = np.ones(len(docids), dtype=bool)
+        if query_text and query_text != "*:*":
+            plan = plan_query(self.reader, self._term_stats, query_text,
+                              k=self.reader.n_docs, require_all=require_all,
+                              min_match=min_match)
+            if plan is None:
+                return np.zeros(len(docids), dtype=bool)
+            hits = np.zeros(int(docids.max()) + 1 if len(docids) else 0,
+                            dtype=np.int32)
+            shift = self.cfg.range_shift
+            for lst in self._postings(list(plan.terms)).values():
+                for rid, off, _tf in lst:
+                    hits[(rid << shift) + off] += 1
+            rows = hits[docids] >= plan.min_match
+        if filter_mask is not None:
+            m = np.zeros(len(docids), dtype=bool)
+            in_r = docids < len(filter_mask)
+            m[in_r] = filter_mask[docids[in_r]]
+            rows &= m
+        if len(self._deleted):
+            rows &= ~np.isin(docids, self._deleted)
         return rows
 
     def _field_sorted(self, query_text: str, sort: str, k: int, offset: int,
-                      filter_mask: "np.ndarray | None", now,
-                      with_score: bool, similarity):
+                      filter_mask: "np.ndarray | None", with_score: bool,
+                      similarity, require_all: bool,
+                      min_match: int | None):
         """Serving twin of query/fieldsort.py::field_sorted_search: the q
         (+fq) match rows of the resident forward table, stable-sorted by the
         field spec with docid tiebreak; only the returned page is scored.
-        Match semantics are the scored collector's (terms OR together) —
-        the match mask comes from the POSTINGS, like the batch twin."""
+        Match semantics are the scored collector's (query terms under
+        min_match / require_all) — the match mask comes from the POSTINGS,
+        like the batch twin."""
         from solr_spark.query.fieldsort import parse_sort_spec
 
         self._load_forward()
@@ -633,14 +652,8 @@ class LocalSearcher:
                 "ordering by score is the default collector (call search "
                 "without sort); sort takes field clauses only")
         docids = tbl["docid"].to_numpy()
-        rows = self._match_rows(query_text)
-        if filter_mask is not None:
-            m = np.zeros(len(tbl), dtype=bool)
-            in_range = docids < len(filter_mask)
-            m[in_range] = filter_mask[docids[in_range]]
-            rows = rows & m
-        if len(self._deleted):
-            rows = rows & ~np.isin(docids, self._deleted)
+        rows = self._match_rows(query_text, filter_mask, require_all,
+                                min_match)
         sub = tbl.iloc[np.flatnonzero(rows)]
         by = [n for n, _ in spec] + ["docid"]
         asc = [a for _, a in spec] + [True]
@@ -672,65 +685,36 @@ class LocalSearcher:
                      similarity: str | object = "bm25",
                      require_all: bool = False, min_match: int | None = None,
                      filter_mask: np.ndarray | None = None):
-        cfg = self.cfg
-        sim = _resolve_sim(similarity)
-        qterms = Counter(analyze_text(query_text, cfg))
-        if not qterms:
+        """The serving adapter of the shared scoring core: bm25_topk's plan
+        (plan_query over the resident dictionary), the query's cached
+        postings grouped by docid range, every range scored by the same
+        kernel (_score_group) — exhaustively, no WAND skipping — then the
+        top-k resolved to (conv_id, turn_idx)."""
+        plan = plan_query(self.reader, self._term_stats, query_text, k=k,
+                          require_all=require_all, min_match=min_match,
+                          similarity=similarity)
+        if plan is None:
             return []
-        terms = sorted(qterms)
-        if require_all:
-            min_match = len(terms)
-        min_match = max(1, min(min_match or 1, len(terms)))
-        n, avgdl = self.reader.n_docs, self.reader.avgdl
-        total_tokens = n * avgdl
-        found = [t for t in terms if t in self._df]
-        if not found or min_match > len(found):
-            return []
-        weights = {t: sim.weight(qterms[t], n, self._df[t], self._cf[t],
-                                 total_tokens) for t in found}
-        params = {t: sim.term_param(self._df[t], self._cf[t], n, total_tokens)
-                  for t in found}
-
-        by_term = self._postings(found)
-        shift = cfg.range_shift
-        # group rows by range_id; fixed sorted-term order inside each group
-        # keeps float summation deterministic (matches the Spark kernel)
-        rows = sorted(
-            ((rid, term, off, tf)
-             for term, lst in by_term.items() for rid, off, tf in lst),
-            key=lambda r: (r[0], r[1]))
+        ranges: dict[int, list] = {}
+        for term, lst in self._postings(plan.scan_terms).items():
+            for rid, off, tf in lst:
+                ranges.setdefault(rid, []).append((term, off, tf))
         top_d = np.empty(0, dtype=np.int64)
         top_s = np.empty(0, dtype=np.float64)
-        i = 0
-        while i < len(rows):
-            rid = rows[i][0]
-            dls = self._dls[int(rid)]
-            base = int(rid) << shift
-            acc = np.zeros(len(dls))
-            present = np.zeros(len(dls), np.int32) if min_match > 1 else None
-            while i < len(rows) and rows[i][0] == rid:
-                _, term, off, tf = rows[i]
-                acc[off] += sim.contrib(tf, dls[off],
-                                        weights[term], params.get(term, 0.0),
-                                        cfg, avgdl)
-                if present is not None:
-                    present[off] += 1
-                i += 1
-            # same keep rule as the distributed kernel (_score_group):
-            # min_match>1 keeps by match count alone, else by positive score
-            keep = (acc > 0.0) if present is None else (present >= min_match)
+        for rid, postings in ranges.items():
+            dls = self._dls[rid]
+            base = rid << self.cfg.range_shift
+            allow = None
             if filter_mask is not None:
-                n_dl = len(dls)
-                seg = filter_mask[base:base + n_dl]
-                if len(seg) < n_dl:  # filter table shorter than docid space
-                    seg = np.pad(seg, (0, n_dl - len(seg)))
-                keep &= seg
-            hit = np.flatnonzero(keep)
-            docids = hit + base
+                allow = filter_mask[base:base + len(dls)]
+                if len(allow) < len(dls):  # filter table shorter than range
+                    allow = np.pad(allow, (0, len(dls) - len(allow)))
+            off, s = _score_group(plan, postings, dls, allow)
+            d = off + base
             if len(self._deleted):
-                live = ~np.isin(docids, self._deleted)
-                hit, docids = hit[live], docids[live]
-            top_d, top_s = _merge_topk(top_d, top_s, docids, acc[hit], k)
+                live = ~np.isin(d, self._deleted)
+                d, s = d[live], s[live]
+            top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
         order = np.lexsort((top_d, -top_s))
         top_d, top_s = top_d[order].tolist(), top_s[order].tolist()
         rows = np.searchsorted(self._docids, top_d)
@@ -802,26 +786,11 @@ class LocalSearcher:
         and ordering as the batch twins (terms_facet / range_facet /
         query_facet), so results merge across tiers.
         """
-        rows = self._facet_domain(query, filters, now)
+        mask = self.filter_mask(filters, now=now) if filters else None
+        rows = self._match_rows(query, mask)
         sub = self._fwd.iloc[np.flatnonzero(rows)]
         return {name: self._one_facet(sub, spec, now)
                 for name, spec in facet.items()}
-
-    def _facet_domain(self, query, filters, now) -> np.ndarray:
-        self._load_forward()
-        rows = np.ones(len(self._fwd), dtype=bool)
-        if query and query != "*:*":
-            rows &= self._match_rows(query)
-        if filters:
-            mask = self.filter_mask(filters, now=now)
-            docids = self._fwd["docid"].to_numpy()
-            m = np.zeros(len(self._fwd), dtype=bool)
-            in_r = docids < len(mask)
-            m[in_r] = mask[docids[in_r]]
-            rows &= m
-        if len(self._deleted):
-            rows &= ~np.isin(self._fwd["docid"].to_numpy(), self._deleted)
-        return rows
 
     _FACET_STATS = ("sum", "avg", "min", "max", "count", "unique", "sumsq")
 

@@ -514,6 +514,13 @@ def test_local_searcher_sort_parity(spark, built):
     assert [r["docid"] for r in p2] == [r["docid"] for r in serv[5:]]
     with pytest.raises(ValueError, match="default collector"):
         ls.search(Q, k=5, sort="score desc")
+    # the match set honours require_all / min_match on both tiers; compared
+    # as a whole page, since the first rows agree even when the sets differ
+    for kw in ({"require_all": True}, {"min_match": 2}):
+        batch = field_sorted_search(spark, reader, Q, "ts desc", k=5000,
+                                    **kw).collect()
+        serv = ls.search(Q, k=5000, sort="ts desc", **kw)
+        assert [r["docid"] for r in serv] == [r["docid"] for r in batch], kw
 
 
 def test_json_search_sort_routing(spark, built):

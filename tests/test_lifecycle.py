@@ -4,6 +4,8 @@ commit-point flips."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from solr_spark.config import IndexConfig
@@ -57,11 +59,11 @@ def test_plan_tiered_merges_policy():
 
 # --------------------------------------------------------------- end-to-end
 
-@pytest.fixture()
-def multiseg(spark, tmp_path):
+@pytest.fixture(scope="module")
+def multiseg_built(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
-    idx = str(tmp_path / "life_idx")
+    idx = str(tmp_path_factory.mktemp("life") / "life_idx")
     base = synth_transcripts_spark(spark, 600, seed=3)
     build_index(spark, base, idx, CFG, input_token="life-600")
     for b in range(3):
@@ -69,6 +71,14 @@ def multiseg(spark, tmp_path):
             .withColumn("conv_id",
                         F.concat_ws("-", F.lit(f"b{b}"), "conv_id"))
         add_documents(spark, batch, idx, CFG)
+    return idx
+
+
+@pytest.fixture()
+def multiseg(multiseg_built, tmp_path):
+    """A private copy of the 4-segment index: each test mutates its own."""
+    idx = str(tmp_path / "life_idx")
+    shutil.copytree(multiseg_built, idx)
     return idx
 
 

@@ -36,12 +36,17 @@ def _spark_rows(spark, reader, q, **kw):
 def test_local_matches_distributed(spark, built):
     reader = IndexReader.open(built, CFG)
     ls = LocalSearcher(reader)
-    for q in QUERIES:
-        for sim in ("bm25", "classic", "lmdirichlet"):
-            want = _spark_rows(spark, reader, q, similarity=sim)
-            got = [(r["docid"], round(r["score"], 10))
-                   for r in ls.search(q, k=10, similarity=sim)]
-            assert got == want, (q, sim)
+    cases = [(q, sim) for q in QUERIES
+             for sim in ("bm25", "classic", "lmdirichlet")]
+    # every other registered similarity, on two queries
+    cases += [(q, sim) for q in QUERIES[:2]
+              for sim in ("boolean", "lmjelinekmercer", "dfi", "rawtf",
+                          "sweetspot", "dfr_gl2", "ib_ll")]
+    for q, sim in cases:
+        want = _spark_rows(spark, reader, q, similarity=sim)
+        got = [(r["docid"], round(r["score"], 10))
+               for r in ls.search(q, k=10, similarity=sim)]
+        assert got == want, (q, sim)
 
 
 def test_local_min_match(spark, built):
