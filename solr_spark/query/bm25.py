@@ -16,12 +16,21 @@ handler/component/QueryComponent.java:789,971,1402):
            dictionary df/cf from one term_bucket-pruned pyarrow read, per-term
            weights, as one picklable QueryPlan.
   phase 1: term-bucket-pruned posting scan -> ONE repartition(range_id) -> the
-           ranges' kernel driver (the query's only Python stage) -> per-partition
+           ranges' kernel driver (the query's only Python stage) -> per-task
            top-k.
-  phase 2: the candidates are broadcast into a join with the cached doc map for
-           (conv_id, turn_idx); one global aggregate sorts them by (score desc,
-           docid), keeps k and ranks them by position.
-A plain query runs 2 Spark jobs: the candidates' broadcast, then the collect.
+  phase 2: each kernel task reads (conv_id, turn_idx) of its <= k winners only
+           (one pyarrow read of the forward table's key columns, filtered to
+           their docids) and emits keyed candidates; one global aggregate sorts
+           them by (score desc, docid), keeps k and ranks them by position.
+A plain query runs 1 Spark job, and so does an fq query (its bitmaps are
+exchanged into the kernel's partitions, so the join adds no exchange).
+
+The exchange is sized by the plan's postings (the sum of df over the scan
+terms): ceil(postings / POSTINGS_PER_TASK) kernel tasks, at least 1, at most
+the shuffle partitions and the index's docid ranges. A Python task costs
+~0.1-0.2 s to schedule whatever it scores, so a query whose postings one task
+decodes in about that time runs on one task, and its rank aggregate runs in
+that task too.
 
 Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
@@ -35,8 +44,9 @@ ranges, sums per range the similarity's bound over the range's terms, e.g. BM25'
 and scores ranges in (bound desc, range_id) order against a running top-k; a range
 whose bound is strictly below the partition's current k-th score is skipped without
 decoding. Skipping against the partition-local k-th is safe: the global top-k is a
-subset of the union of partition top-k's. The kernel reads the norms (one byte per
-doc) of only the ranges it receives, straight from the index's norms parquet.
+subset of the union of partition top-k's (on one task it is the global k-th). The
+kernel reads the norms (one byte per doc) of only the ranges it receives, straight
+from the index's norms parquet.
 """
 
 from __future__ import annotations
@@ -51,15 +61,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from solr_spark.analysis import analyze_text
 from solr_spark.codec.smallfloat import decode_norms
 from solr_spark.codec.varint import decode_postings
 from solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from solr_spark.indexing.build import live_segments
+from solr_spark.query.empty import empty_df
 
-_TOPK_SCHEMA = "docid long, score double"
+_KEYED_SCHEMA = "conv_id string, turn_idx int, docid long, score double"
 _OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
 
 from solr_spark.query.similarity import resolve as _resolve_sim  # noqa: E402
@@ -217,15 +227,6 @@ def _idf(n_docs: int, df: int) -> float:
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
-def _empty_df(spark: SparkSession, schema: str) -> DataFrame:
-    """A zero-row DataFrame of `schema` that the optimizer folds to an empty
-    local relation, so collecting it runs no Spark job
-    (spark.createDataFrame([]) runs a Python RDD job)."""
-    return spark.range(1).where(F.lit(False)).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name)
-          for f in T.StructType.fromDDL(schema).fields])
-
-
 @dataclass(frozen=True)
 class QueryPlan:
     """One analyzed, weighted query — everything the range kernel needs, as
@@ -238,6 +239,8 @@ class QueryPlan:
     keyed like the kernel's clauses: by term, or by group id when `groups`
     (member term -> canonical group ids) is set. bound_weights/bound_params
     are keyed by scan term and feed the similarity's WAND range bound.
+    postings is the scan's posting count (the sum of df over scan_terms),
+    which sizes the Spark kernel's exchange.
     """
 
     sim: object
@@ -255,6 +258,7 @@ class QueryPlan:
     groups: dict | None
     combine: str
     tie: float
+    postings: int
 
     @property
     def scan_terms(self) -> list[str]:
@@ -398,7 +402,8 @@ def plan_query(reader: IndexReader, term_stats, query_text: str,
     return QueryPlan(sim, cfg, reader.avgdl, k, min_match, tuple(found),
                      prohib_found, frozenset(req_terms), weights,
                      score_params, bound_weights, bound_params, group_of,
-                     combine, tie)
+                     combine, tie,
+                     sum(dfs[t] for t in set(found) | prohib_found))
 
 
 def _score_group(plan: QueryPlan, postings, dls: np.ndarray,
@@ -519,6 +524,42 @@ def _merge_topk(docids: np.ndarray, scores: np.ndarray, d: np.ndarray,
     return docids, scores
 
 
+# Postings one kernel task decodes and scores before a query spreads over
+# another: ~0.1 s of kernel work at ~9 M postings/s, about what a Python
+# task costs to schedule, so a smaller query gains nothing from a second task
+POSTINGS_PER_TASK = 1 << 20
+
+
+def _kernel_tasks(postings: int, reader: IndexReader, max_tasks: int) -> int:
+    """The kernel's partition count for a scan of `postings` postings: one
+    task per POSTINGS_PER_TASK, at least 1, at most `max_tasks` (the
+    session's shuffle partitions) and the index's docid range count."""
+    n_ranges = -(-reader.n_docs >> reader.config.range_shift)
+    return max(1, min(-(-postings // POSTINGS_PER_TASK), max_tasks, n_ranges))
+
+
+def _doc_keys(index_dir: str, docids: np.ndarray) -> pd.DataFrame:
+    """DataFrame(conv_id, turn_idx) of `docids`, row-aligned: one pyarrow
+    read of the forward table's key columns, filtered to those docids. A
+    docid with no forward row raises — a winner is never dropped silently.
+    (The build hash-partitions analyzed files by conv_id, so every file
+    spans the whole docid space and row-group statistics cannot prune this
+    read: it decodes the key columns of every analyzed file.)"""
+    import pyarrow.dataset as ds
+
+    tbl = ds.dataset(os.path.join(index_dir, "analyzed"),
+                     format="parquet").to_table(
+        columns=["docid", "conv_id", "turn_idx"],
+        filter=ds.field("docid").isin(docids)).to_pandas()
+    keys = tbl.drop_duplicates("docid").set_index("docid").reindex(docids)
+    missing = docids[keys["conv_id"].isna().to_numpy()]
+    if len(missing):
+        raise RuntimeError(
+            f"docids {missing[:10].tolist()} scored but have no forward row "
+            f"in {index_dir}/analyzed")
+    return keys.reset_index(drop=True).astype({"turn_idx": "int32"})
+
+
 def _range_norms(index_dir: str, range_ids: list[int]) -> dict[int, bytes]:
     """range_id -> norms blob for the given ranges: one pyarrow read of the
     index's norms parquet, filtered to those ranges."""
@@ -545,7 +586,7 @@ def terms_postings(spark: SparkSession, reader: IndexReader,
     cfg = reader.config
     terms = sorted(set(terms))
     if not terms:
-        return spark.createDataFrame([], "term string, docid long, tf int")
+        return empty_df(spark, "term string, docid long, tf int")
     buckets = sorted(set(_term_buckets(terms, cfg.num_term_buckets)))
     seg = reader.segments_df(spark)
     rows = seg.where(F.col("term_bucket").isin(buckets)
@@ -606,7 +647,7 @@ def graph_terms_docs(spark: SparkSession, reader: IndexReader,
         terms = sorted(t for t, (df, _cf) in reader.term_stats(terms).items()
                        if df <= max_doc_freq)
     if not terms:
-        return _empty_df(spark, "docid long")
+        return empty_df(spark, "docid long")
     return terms_postings(spark, reader, terms,
                           apply_deletes).select("docid").distinct()
 
@@ -678,7 +719,7 @@ def bm25_topk(
                       prohibited=prohibited, required=required,
                       combine=combine, tie=tie)
     if plan is None:
-        return _empty_df(spark, _OUT_SCHEMA)
+        return empty_df(spark, _OUT_SCHEMA)
     if mode not in ("exact", "wand"):
         raise ValueError(f"unknown mode: {mode}")
 
@@ -686,12 +727,19 @@ def bm25_topk(
     seg = reader.segments_df(spark)
     scan_terms = plan.scan_terms
     scan_buckets = sorted(set(_term_buckets(scan_terms, cfg.num_term_buckets)))
+    n_tasks = _kernel_tasks(plan.postings, reader, int(
+        spark.conf.get("spark.sql.shuffle.partitions")))
+    # the scan as SQL text: one py4j call per step, where Column isin and
+    # select cost ~1 ms per value (analyzed terms never hold `"` or `\`)
+    terms_sql = ", ".join('"%s"' % t for t in scan_terms)
+    scan = (f"term_bucket IN ({', '.join(map(str, scan_buckets))}) "
+            f"AND term IN ({terms_sql})")
     # the plan's one exchange: every posting row of a range meets in one
     # kernel call, which orders its ranges by WAND bound itself
-    rows = (seg.where(F.col("term_bucket").isin(scan_buckets)
-                      & F.col("term").isin(scan_terms))
-            .select("term", "range_id", "n_docs", "doc_gaps", "tfs", "max_tf")
-            .repartition("range_id"))
+    rows = (seg.where(scan)
+            .selectExpr("term", "range_id", "n_docs", "doc_gaps", "tfs",
+                        "max_tf")
+            .repartition(n_tasks, "range_id"))
 
     if isinstance(filters, (list, tuple)) and not filters:
         filters = None  # empty fq list = no filter, skip the bitmap machinery
@@ -704,10 +752,10 @@ def bm25_topk(
             raise ValueError("pass filters OR filter_docids, not both")
         if filters is not None:
             filter_docids = _compile_fq(spark, reader, filters, now=now)
-        bitmaps = docid_range_bitmaps(filter_docids, cfg.range_shift)
+        bitmaps = docid_range_bitmaps(filter_docids, cfg.range_shift, n_tasks)
         # inner join: a range with no allowed doc never reaches the kernel.
-        # A shuffle join reuses the posting repartition (both sides are
-        # hash-partitioned on range_id) and needs no broadcast job.
+        # Both sides are hash-partitioned on range_id into n_tasks, so the
+        # shuffle join adds no exchange and needs no broadcast job.
         rows = rows.join(bitmaps.hint("shuffle_hash"), "range_id")
 
     index_dir = reader.index_dir
@@ -723,7 +771,7 @@ def bm25_topk(
 
     def topk_iter(batches):
         """This partition's posting rows (the query terms' rows of its
-        ranges) -> its top-k, scoring ranges by descending WAND bound."""
+        ranges) -> its keyed top-k, scoring ranges by descending WAND bound."""
         from solr_spark.query.docsets import unpack_bits
 
         frames = [b for b in batches if len(b)]
@@ -769,16 +817,16 @@ def bm25_topk(
                 d, s = d[keep], s[keep]
             top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
         if len(top_d):
-            yield pd.DataFrame({"docid": top_d, "score": top_s})
+            yield _doc_keys(index_dir, top_d).assign(docid=top_d,
+                                                     score=top_s)
 
-    cand = rows.mapInPandas(topk_iter, _TOPK_SCHEMA)
-    # resolve, then rank: the candidates (<= k per kernel partition) are
-    # broadcast into the doc-map join, and one aggregate sorts the joined
-    # rows by (score desc, docid asc), keeps k and numbers them. Its single
-    # row inlines in rank order, so there is no Window and no global sort.
+    cand = rows.mapInPandas(topk_iter, _KEYED_SCHEMA)
+    # rank: one aggregate sorts the keyed candidates (<= k per kernel task)
+    # by (score desc, docid asc), keeps k and numbers them. Its single row
+    # inlines in rank order, so there is no Window and no global sort; on one
+    # kernel task the aggregate runs in that task, with no exchange.
     # (SQL expression strings: one py4j call per step.)
-    hits = reader.doc_map(spark).join(F.broadcast(cand), "docid")
-    return (hits.selectExpr(
+    return (cand.selectExpr(
         "transform(slice(array_sort(collect_list(struct(-score AS neg_score, "
         f"docid, conv_id, turn_idx))), 1, {plan.k}), (h, i) -> struct("
         "h.conv_id AS conv_id, h.turn_idx AS turn_idx, h.docid AS docid, "

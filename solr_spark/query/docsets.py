@@ -16,7 +16,9 @@ is that flow restated for the range-partitioned posting layout:
      shuffle moves at most one 8-byte word per 64 allowed docs, never raw
      docid rows, and a 50%-selective filter over 10^12 docs exchanges
      ~n_ranges * 8 KB; a second aggregate lays each range's words out dense.
-  3. The scoring kernel inner-joins posting rows to the bitmaps on range_id —
+  3. The scoring kernel inner-joins posting rows to the bitmaps on range_id
+     (both sides hash-partitioned into the kernel's task count, so the join
+     adds no exchange) —
      a range with NO allowed docs drops out BEFORE postings are decoded
      (filter-driven skipping, composing with block-max WAND's bound-driven
      skipping) — and ANDs the unpacked bits into the keep mask after scoring.
@@ -67,13 +69,17 @@ def filter_docids(spark: SparkSession, reader, filters, now=None) -> DataFrame:
     return fwd.select("docid")
 
 
-def docid_range_bitmaps(docids: DataFrame, range_shift: int) -> DataFrame:
+def docid_range_bitmaps(docids: DataFrame, range_shift: int,
+                        num_partitions: int) -> DataFrame:
     """DataFrame(docid) -> DataFrame(range_id, filter_bits).
 
     filter_bits is an array of max(1, 2**range_shift / 64) longs: bit o % 64
     of word o // 64 is set iff docid (range_id << shift) + o is allowed.
     Both aggregates are plain Catalyst (bit_or, then a dense array per
-    range), so the fq path adds no Python stage.
+    range), so the fq path adds no Python stage. The words are exchanged on
+    range_id into `num_partitions`, so the result is co-partitioned with a
+    posting scan repartitioned the same way and a join of the two adds no
+    exchange.
     """
     nwords = max(1, (1 << range_shift) >> 6)
     mask = (1 << range_shift) - 1
@@ -81,7 +87,8 @@ def docid_range_bitmaps(docids: DataFrame, range_shift: int) -> DataFrame:
         f"shiftright(docid, {range_shift}) AS range_id",
         f"CAST(shiftright(docid & {mask}, 6) AS INT) AS word",
         "shiftleft(1L, CAST(docid & 63 AS INT)) AS bit")
-        .groupBy("range_id", "word").agg(F.expr("bit_or(bit) AS bits")))
+        .groupBy("range_id", "word").agg(F.expr("bit_or(bit) AS bits"))
+        .repartition(num_partitions, "range_id"))
     return (words.groupBy("range_id")
             .agg(F.expr("map_from_entries(collect_list(struct(word, bits))) "
                         "AS present"))

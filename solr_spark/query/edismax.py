@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
 from solr_spark.query.bm25 import IndexReader, _idf, terms_postings
+from solr_spark.query.empty import empty_df
 
 _OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
 
@@ -328,7 +329,7 @@ def edismax_topk(
     keep = [i for i in range(len(words))
             if any(raw_clauses[f][i] for f in raw_clauses)]
     if not keep:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return empty_df(spark, _OUT_SCHEMA)
     clause_by_field = {f: [cl[i] for i in keep] for f, cl in raw_clauses.items()}
     # mm accepts the full Solr spec grammar ("75%", "2<-25%", negatives) —
     # util/SolrPluginUtils.java::calculateMinShouldMatch over SURVIVING clauses
@@ -343,7 +344,7 @@ def edismax_topk(
         if c is not None:
             contribs.append(c)
     if not contribs:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return empty_df(spark, _OUT_SCHEMA)
     allc = contribs[0]
     for c in contribs[1:]:
         allc = allc.unionByName(c)

@@ -1,8 +1,8 @@
 """Driver-local serving mode: millisecond warm top-k over the same index.
 
 Role in the architecture: the distributed `bm25_topk` path is the BATCH
-posture — 2 Spark jobs per query (p50 ~0.5 s, nearly all of it scheduling and
-the Python stage's fixed cost), fine for analytics, wrong for interactive
+posture — 1 Spark job per query (p50 ~0.48 s, nearly all of it scheduling and
+the Python task's fixed cost), fine for analytics, wrong for interactive
 search. The reference serves queries from a per-shard in-process searcher
 (SolrIndexSearcher over memory-mapped segment files); `LocalSearcher` is that
 role restated over THIS engine's artifacts: it memory-loads the small

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.query.bm25 import IndexReader, bm25_topk
+from solr_spark.query.empty import empty_df
 
 
 def _top_expansions(matches: DataFrame, max_expansions: int) -> list[str]:
@@ -142,7 +143,7 @@ def _blended_topk(spark: SparkSession, reader: IndexReader,
     resolves regardless of what raw pattern produced the expansion."""
     out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     if not members:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     canon = members[0]
     return bm25_topk(spark, reader, canon, k=k, mode="wand",
                      synonyms={canon: members})
@@ -230,11 +231,11 @@ def complex_phrase_topk(spark: SparkSession, reader: IndexReader,
             clauses.append(span_term(word, reader.config))
             continue
         if not members:
-            return spark.createDataFrame([], out_schema)
+            return empty_df(spark, out_schema)
         clauses.append(SpanTerm(members[0]) if len(members) == 1
                        else SpanOr(*[SpanTerm(m) for m in members]))
     if not clauses:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     node = clauses[0] if len(clauses) == 1 \
         else SpanNear(clauses, slop=slop, ordered=ordered)
     return span_topk(spark, reader, node, k=k)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
 from solr_spark.query.bm25 import IndexReader, _idf
+from solr_spark.query.empty import empty_df
 
 
 def phrase_count_expr(toks_col, terms: list[str]):
@@ -280,7 +281,7 @@ def phrase_topk(
     out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     terms = analyze_text(phrase_text, cfg)
     if not terms:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     if k is not None:
         k = min(k, reader.n_docs)  # uncapped k OOMs Spark's TakeOrdered
 
@@ -319,7 +320,7 @@ def phrase_topk(
     stats = matched.agg(F.count(F.lit(1)).alias("df_phrase")).collect()[0]
     df_phrase = int(stats["df_phrase"])
     if df_phrase == 0:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     w = _idf(reader.n_docs, df_phrase)
     k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
 
@@ -371,7 +372,7 @@ def near_topk(
     out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     terms = sorted(set(analyze_text(query_text, cfg)))
     if not terms:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
 
     analyzed = spark.read.parquet(
         os.path.join(reader.index_dir, "analyzed", "batch-*")
@@ -441,7 +442,7 @@ def near_topk(
     # the second pass over them is cheap), scoring/top-k stay on the cluster
     df_near = matched.count()
     if df_near == 0:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     w = _idf(reader.n_docs, df_near)
     k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
     scored = matched.withColumn(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
 from solr_spark.query.bm25 import IndexReader, bm25_topk
+from solr_spark.query.empty import empty_df
 
 _CLAUSE_RE = re.compile(
     r"""\s*(?P<occur>[+-])?(?:
@@ -139,7 +140,7 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         members = expand_fuzzy(spark, reader, body.lower(), max_edits=fuzz)
         if not members:
             if body in required_set:  # an unmatchable MUST clause
-                return spark.createDataFrame([], out_schema)
+                return empty_df(spark, out_schema)
             continue
         canon = members[0]
         synonyms.setdefault(canon, []).extend(members)
@@ -152,7 +153,7 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         members = expand_wildcard(spark, reader, body.lower())
         if not members:
             if body in required_set:
-                return spark.createDataFrame([], out_schema)
+                return empty_df(spark, out_schema)
             continue
         canon = members[0]
         synonyms.setdefault(canon, []).extend(members)
@@ -207,7 +208,7 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
                 .drop("pboost"))
 
     if main is None:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     topk = main.orderBy(F.desc("score"), F.asc("docid")).limit(k)
     return (topk.join(reader.doc_map(spark), "docid")
             .withColumn("rank", F.row_number().over(

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
 from solr_spark.query.bm25 import IndexReader, _idf
+from solr_spark.query.empty import empty_df
 
 
 # ------------------------------------------------------------------------ AST
@@ -293,7 +294,7 @@ def span_topk(spark: SparkSession, reader: IndexReader, node,
     matched, analyzed = span_matches(spark, reader, node)
     df_span = matched.count()
     if df_span == 0:
-        return spark.createDataFrame([], out_schema)
+        return empty_df(spark, out_schema)
     w = _idf(reader.n_docs, df_span)
     k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
     scored = matched.withColumn(

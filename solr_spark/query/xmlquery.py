@@ -33,6 +33,11 @@ existing executors instead of duplicating any matching logic:
 Semantics pinned to Lucene's BooleanQuery contract: SHOULD clauses are
 optional when a MUST/FILTER clause exists (they then only contribute score);
 a should-only boolean requires at least one match; `filter` scores nothing.
+The scored lowering scores only term clauses on the text field: a non-term
+SHOULD clause (a range, an attribute term, a span) beside a MUST/FILTER
+clause leaves the match set alone and its constant score is not modelled,
+and a should-only boolean mixing term and non-term SHOULD clauses raises
+(its match set is `xml_query_docids`'s).
 A pure-negative boolean (mustNot clauses only) matches everything MINUS the
 exclusions — Solr's top-level pure-negative rewrite (the `*:* AND -x` idiom
 SolrQueryParserBase applies), not raw Lucene's empty match; pinned by the
@@ -495,12 +500,19 @@ def _scored(node, spark: SparkSession, reader: IndexReader,
             # no scoring clause: constant-score over the match set
             ids = xml_ids_of_node(node, spark, reader)
             return _const_score_df(spark, reader, ids, node.boost, k)
+        if any(o == "should" for o, _ in filter_parts):
+            if not any(o in ("must", "filter") for o, _ in node.clauses):
+                raise ValueError(
+                    "a should-only BooleanQuery mixing term and non-term "
+                    "SHOULD clauses has no scored lowering (its match set is "
+                    "the union of both kinds); use xml_query_docids for its "
+                    "match set")
+            # optional once a MUST/FILTER clause exists: they would only
+            # add their constant score, which is not modelled
+            filter_parts = [(o, n) for o, n in filter_parts if o != "should"]
         fids = None
         if filter_parts:
-            kind, val = _combine_bool(
-                [(o if o != "should" else "must", n)  # non-term shoulds are
-                 for o, n in filter_parts],           # rare; pin to matching
-                spark, reader, cfg)
+            kind, val = _combine_bool(filter_parts, spark, reader, cfg)
             fids = _ids_of(kind, val, reader.forward_text(spark))
         return bm25_topk(spark, reader, " ".join(scored_terms), k=k,
                          required=required or None,

@@ -101,3 +101,23 @@ def count_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.fixture
+def kernel_tasks():
+    """kernel_tasks(df) -> the task count of each scoring-kernel node (the
+    plan's MapInPandas) in df's physical plan."""
+    def run(df):
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName().startswith("AdaptiveSparkPlan"):
+            plan = plan.initialPlan()
+        return [n.outputPartitioning().numPartitions()
+                for n in _plan_nodes(plan) if n.nodeName() == "MapInPandas"]
+    return run

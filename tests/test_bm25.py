@@ -17,6 +17,7 @@ QUERIES = [
     "error timeout connect",    # three terms
     "café",                     # unicode, rarer
     "v2.1.0",                   # punctuation token
+    "it's error",               # apostrophe inside a token
     "zzz-not-in-corpus",        # absent -> empty
     "the and of",               # all stopwords -> empty
     "ERROR",                    # case variant of "error" -> identical results
@@ -331,11 +332,12 @@ def test_graph_terms_df_cap(spark, built_index):
     assert graph_terms_docs(spark, reader, [], max_doc_freq=10).count() == 0
 
 
-def test_wand_query_job_budget(spark, built_index, count_jobs):
-    """A WAND query builds its plan with no Spark job and runs in at most 2:
-    the broadcast of the k winners, then the collect. The first query on a
-    reader resolves its forward-table handle (a schema-inference job), so
-    the budget is pinned on the second."""
+def test_wand_query_job_budget(spark, built_index, count_jobs, kernel_tasks):
+    """A WAND query builds its plan with no Spark job and runs in exactly
+    one: the kernel resolves its winners' keys itself, so no broadcast job
+    precedes the collect. The small index's postings fit one kernel task.
+    The first query on a reader resolves its forward-table handle (a
+    schema-inference job), so the budget is pinned on the second."""
     index_dir, cfg, _ = built_index
     reader = IndexReader.open(index_dir, cfg)
     q = "error timeout connect"
@@ -344,8 +346,69 @@ def test_wand_query_job_budget(spark, built_index, count_jobs):
     df, plan_jobs = count_jobs(lambda: bm25_topk(spark, reader, q, k=10))
     rows, run_jobs = count_jobs(df.collect)
     assert plan_jobs == 0
-    assert plan_jobs + run_jobs <= 2
+    assert run_jobs == 1
+    assert kernel_tasks(df) == [1]
     assert [tuple(r) for r in rows] == want
+
+
+@pytest.mark.parametrize("mode", ["exact", "wand"])
+@pytest.mark.parametrize("fq", [None, "turn_idx:[2 TO *]"])
+def test_kernel_spreads_over_tasks_by_postings(spark, built_index, oracle,
+                                               kernel_tasks, monkeypatch,
+                                               mode, fq):
+    """A scan above POSTINGS_PER_TASK spreads over one kernel task per
+    budget (capped by the shuffle partitions and the index's ranges), and
+    its rows equal the one-task rows and the oracle's, plain and with fq."""
+    from solr_spark.query import bm25
+
+    index_dir, cfg, _ = built_index
+    reader = IndexReader.open(index_dir, cfg)
+    q, k = "error timeout connect", 25
+    filters = [fq] if fq else None
+
+    def rows(df):
+        return [(r.conv_id, r.turn_idx, r.docid, r.score, r.rank)
+                for r in df.collect()]
+
+    one = bm25_topk(spark, reader, q, k=k, mode=mode, filters=filters)
+    assert kernel_tasks(one) == [1]
+    want = rows(one)
+
+    monkeypatch.setattr(bm25, "POSTINGS_PER_TASK", 64)
+    plan = bm25.plan_query(reader, reader.term_stats, q, k=k)
+    n_ranges = -(-reader.n_docs >> cfg.range_shift)
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = min(-(-plan.postings // 64), shuffle, n_ranges)
+    assert n > 1
+    many = bm25_topk(spark, reader, q, k=k, mode=mode, filters=filters)
+    assert kernel_tasks(many) == [n]
+    got = rows(many)
+    assert got == want
+
+    exp = [h for h in oracle.topk(q, k=reader.n_docs)
+           if fq is None or h[1] >= 2][:k]
+    assert [(c, t, d) for c, t, d, _s, _r in got] == \
+        [(c, t, d) for c, t, d, _s in exp]
+    assert [r for *_, r in got] == list(range(1, len(exp) + 1))
+    for (*_, gs, _r), (*_, es) in zip(got, exp):
+        assert gs == pytest.approx(es, abs=1e-9)
+
+
+def test_winner_keys_fail_loudly_when_missing(built_index, oracle):
+    """The kernel resolves its winners' (conv_id, turn_idx) from the forward
+    table row-aligned, and a winner without a forward row raises rather
+    than dropping out of the result."""
+    import numpy as np
+
+    from solr_spark.query.bm25 import _doc_keys
+
+    index_dir, _, _ = built_index
+    keys = _doc_keys(index_dir, np.array([7, 3], dtype=np.int64))
+    assert list(keys.itertuples(index=False, name=None)) == \
+        [oracle.docs[7], oracle.docs[3]]
+    assert keys.turn_idx.dtype == np.int32
+    with pytest.raises(RuntimeError, match="no forward row"):
+        _doc_keys(index_dir, np.array([3, 10**9], dtype=np.int64))
 
 
 def test_all_absent_terms_run_no_job(spark, built_index, count_jobs):

@@ -70,18 +70,20 @@ def test_filtered_matches_bruteforce_and_exact_mode(spark, built):
     assert wand == brute
 
 
-def test_filtered_query_job_budget(spark, built, count_jobs):
-    """A role-fq WAND query builds its plan with no Spark job and runs in at
-    most 3 (the fq bitmaps are built in the JVM, joined to the posting
-    repartition). The first query on a reader resolves its forward-table
-    handle, so the budget is pinned on the second."""
+def test_filtered_query_job_budget(spark, built, count_jobs, kernel_tasks):
+    """A role-fq WAND query builds its plan with no Spark job and runs in
+    exactly one (the fq bitmaps are built in the JVM, co-partitioned with
+    the posting repartition, and the kernel resolves its winners' keys).
+    The first query on a reader resolves its forward-table handle, so the
+    budget is pinned on the second."""
     reader = IndexReader.open(built, CFG)
     want = _rows(bm25_topk(spark, reader, Q, k=10, filters=FQ))
     df, plan_jobs = count_jobs(
         lambda: bm25_topk(spark, reader, Q, k=10, filters=FQ))
     rows, run_jobs = count_jobs(lambda: _rows(df))
     assert plan_jobs == 0
-    assert plan_jobs + run_jobs <= 3
+    assert run_jobs == 1
+    assert kernel_tasks(df) == [1]
     assert rows == want and rows
 
 

@@ -311,6 +311,39 @@ def test_scored_must_terms_query_is_a_disjunction(spark, xml_reader):
         assert s == pytest.approx(base[cid], abs=1e-12)
 
 
+def test_scored_non_term_should_is_optional(spark, xml_reader):
+    """A non-term SHOULD clause beside a MUST clause is optional: the scored
+    match set equals the filter compiler's, and the term clause's scores
+    are untouched."""
+    xml = ("<BooleanQuery>"
+           '<Clause occurs="must"><TermQuery>fast</TermQuery></Clause>'
+           '<Clause occurs="should"><PointRangeQuery fieldName="size" '
+           'type="long" lowerTerm="35" upperTerm="70"/></Clause>'
+           "</BooleanQuery>")
+    got = {r.conv_id: r.score
+           for r in xml_query_topk(spark, xml_reader, xml, k=10).collect()}
+    assert set(got) == _ids(spark, xml_reader, xml) == {"d1", "d3", "d4", "d6"}
+    base = {r.conv_id: r.score
+            for r in xml_query_topk(spark, xml_reader,
+                                    "<TermQuery>fast</TermQuery>",
+                                    k=10).collect()}
+    assert got == pytest.approx(base, abs=1e-12)
+
+
+def test_scored_should_only_mixed_clauses_raise(spark, xml_reader):
+    """A should-only boolean mixing a term and a non-term SHOULD clause
+    matches their union; the scored path cannot lower that and says so
+    rather than intersecting."""
+    xml = ("<BooleanQuery>"
+           "<Clause><TermQuery>slow</TermQuery></Clause>"
+           '<Clause><PointRangeQuery fieldName="size" type="long" '
+           'lowerTerm="55" upperTerm="70"/></Clause>'
+           "</BooleanQuery>")
+    with pytest.raises(ValueError, match="xml_query_docids"):
+        xml_query_topk(spark, xml_reader, xml, k=10)
+    assert _ids(spark, xml_reader, xml) == {"d2", "d6"}
+
+
 def test_scored_dismax_and_constant(spark, xml_reader):
     from solr_spark.query.bm25 import bm25_topk
 

@@ -167,21 +167,51 @@ def main() -> None:
             ["PushedFilters: [IsNotNull(role), EqualTo(role,assistant)]",
              "filter_bits"], []))
 
-        # 6d. WAND plan shape: ONE exchange on range_id feeds the scoring
-        # kernel, the query's only Python node; the per-range bound and the
-        # norms are the kernel's own work, so no Window and no norms
-        # broadcast
+        # 6d. WAND plan shape: ONE exchange feeds the scoring kernel, the
+        # query's only Python node, sized by the scan's postings (one task
+        # on this index, so the rank aggregate runs in the kernel's task
+        # with no second exchange); the per-range bound, the norms and the
+        # winners' (conv_id, turn_idx) are the kernel's own work, so no
+        # Window, no norms broadcast, no doc-map join, no broadcast at all
         nodes = re.findall(r"^\(\d+\) (\w+)", p4, re.M)
-        n_range_exchanges = p4.count("hashpartitioning(range_id")
+        n_exchanges = nodes.count("Exchange")
         n_python = sum(n in PYTHON_NODES for n in nodes)
         checks.append((
-            "WAND plan: one range_id exchange, one Python node, no Window, "
-            "no norms broadcast",
-            p4, ["hashpartitioning(range_id", "MapInPandas"],
-            ["Window", "norm_bytes"]))
-        assert n_range_exchanges == 1, \
-            f"expected 1 range_id exchange, found {n_range_exchanges}"
+            "WAND plan: one exchange into the kernel, one Python node, no "
+            "Window, no norms broadcast, no doc-map join or broadcast",
+            p4, ["REPARTITION_BY_NUM", "MapInPandas"],
+            ["Window", "norm_bytes", "BroadcastExchange", "Join",
+             "analyzed"]))
+        assert n_exchanges == 1, f"expected 1 exchange, found {n_exchanges}"
         assert n_python == 1, f"expected 1 Python node, found {n_python}"
+
+        # 6e. fq WAND plan over several kernel tasks (the per-task postings
+        # budget lowered so this small index spreads): the posting scan
+        # reaches the kernel through exactly one range_id exchange, the fq
+        # bitmaps are exchanged into the same partitions, so the join adds
+        # no exchange and nothing re-shuffles to the default count
+        from solr_spark.query import bm25 as _bm25
+
+        budget = _bm25.POSTINGS_PER_TASK
+        _bm25.POSTINGS_PER_TASK = 1
+        try:
+            p6 = plan_of(bm25_topk(spark, reader, "error timeout", k=5,
+                                   filters=["role:assistant"]))
+        finally:
+            _bm25.POSTINGS_PER_TASK = budget
+        range_exchanges = re.findall(
+            r"Arguments: hashpartitioning\(range_id#\d+L?, (\d+)\), (\w+)", p6)
+        checks.append((
+            "fq WAND plan: one range_id exchange into the kernel, bitmaps "
+            "co-partitioned, no join exchange, no broadcast",
+            p6, ["ShuffledHashJoin", "REPARTITION_BY_NUM", "filter_bits"],
+            ["BroadcastExchange"]))
+        assert len(range_exchanges) == 2 and len(
+            {n for n, _ in range_exchanges}) == 1 and all(
+            kind == "REPARTITION_BY_NUM" for _, kind in range_exchanges) \
+            and int(range_exchanges[0][0]) > 1, \
+            f"expected the posting scan and the bitmaps each exchanged once " \
+            f"into the kernel's >1 partitions, found {range_exchanges}"
 
         # 40. field sort on the scored path (round 5): the match set comes
         # from the term_bucket-pruned postings, fq pushes into the forward
