@@ -10,27 +10,34 @@ defaults k1=1.2 b=0.75 per BM25SimilarityFactory.java:48-49):
 (no (k1+1) factor, as in Lucene 9+), where dl_q is the SmallFloat-quantized document
 length and avgdl = sumTotalTermFreq/docCount. Ties break by docid ascending.
 
-Distributed two-phase top-k (the reference's GET_TOP_IDS / GET_FIELDS split,
+Two-phase top-k (the reference's GET_TOP_IDS / GET_FIELDS split,
 handler/component/QueryComponent.java:789,971,1402):
   plan:    on the driver, with no Spark action — `plan_query`: query analysis,
            dictionary df/cf from one term_bucket-pruned pyarrow read, per-term
            weights, as one picklable QueryPlan.
-  phase 1: term-bucket-pruned posting scan -> ONE repartition(range_id) -> the
-           ranges' kernel driver (the query's only Python stage) -> per-task
-           top-k.
-  phase 2: each kernel task reads (conv_id, turn_idx) of its <= k winners only
+  phase 1: term-bucket-pruned posting scan -> the range driver `_kernel_topk`
+           -> top-k.
+  phase 2: the range driver reads (conv_id, turn_idx) of its <= k winners only
            (one pyarrow read of the forward table's key columns, filtered to
-           their docids) and emits keyed candidates; one global aggregate sorts
-           them by (score desc, docid), keeps k and ranks them by position.
-A plain query runs 1 Spark job, and so does an fq query (its bitmaps are
-exchanged into the kernel's partitions, so the join adds no exchange).
+           their docids); the keyed winners are ordered by (score desc, docid)
+           and ranked by position.
 
-The exchange is sized by the plan's postings (the sum of df over the scan
-terms): ceil(postings / POSTINGS_PER_TASK) kernel tasks, at least 1, at most
-the shuffle partitions and the index's docid ranges. A Python task costs
-~0.1-0.2 s to schedule whatever it scores, so a query whose postings one task
-decodes in about that time runs on one task, and its rank aggregate runs in
-that task too.
+The kernel runs on ceil(postings / POSTINGS_PER_TASK) tasks (the sum of df
+over the scan terms), at least 1, at most the shuffle partitions and the
+index's docid ranges. A Python task costs ~0.1-0.2 s to schedule whatever it
+scores, so a query whose postings one task decodes in about that time runs
+on one task. Where that task runs follows from the count:
+  one task (eager): the scan (joined to the fq bitmaps, both exchanged into
+           one range_id partition) is collected as Arrow by a JVM-only job
+           inside `bm25_topk`; the range driver scores it on the driver, and
+           the ranked winners come back as a local relation. The call runs
+           the query's one Spark job; collecting the result runs none, and no
+           Python worker starts.
+  n tasks (lazy): ONE repartition(n, range_id) feeds a `mapInPandas` that runs
+           the range driver per partition and emits keyed candidates; one
+           global aggregate sorts them, keeps k and ranks them. The returned
+           DataFrame runs as 1 Spark job on collect. fq bitmaps are exchanged
+           into the kernel's partitions, so the join adds no exchange.
 
 Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
@@ -42,9 +49,9 @@ posting-range rows carry max_tf. The kernel receives every posting row of its
 ranges, sums per range the similarity's bound over the range's terms, e.g. BM25's
   sum_t weight_t * max_tf/(max_tf + k1*(1-b))          (dl -> 0 bound)
 and scores ranges in (bound desc, range_id) order against a running top-k; a range
-whose bound is strictly below the partition's current k-th score is skipped without
-decoding. Skipping against the partition-local k-th is safe: the global top-k is a
-subset of the union of partition top-k's (on one task it is the global k-th). The
+whose bound is strictly below the task's current k-th score is skipped without
+decoding. Skipping against the task-local k-th is safe: the global top-k is a
+subset of the union of task top-k's (on one task it is the global k-th). The
 kernel reads the norms (one byte per doc) of only the ranges it receives, straight
 from the index's norms parquet.
 """
@@ -59,6 +66,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,7 +75,7 @@ from solr_spark.codec.smallfloat import decode_norms
 from solr_spark.codec.varint import decode_postings
 from solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from solr_spark.indexing.build import live_segments
-from solr_spark.query.empty import empty_df
+from solr_spark.query.empty import empty_df, local_df
 
 _KEYED_SCHEMA = "conv_id string, turn_idx int, docid long, score double"
 _OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
@@ -79,18 +87,19 @@ from solr_spark.query.similarity import resolve as _resolve_sim  # noqa: E402
 class IndexReader:
     """Handle on an on-disk index (paths + corpus stats).
 
-    `warm(spark)` persists the per-query hot structures — norms and the
-    docid -> (conv_id, turn_idx) map — the way a serving searcher keeps its
-    norms/stored-field readers open across requests (reference analog:
-    SolrIndexSearcher's caches, search/SolrIndexSearcher.java:164). Cuts
-    steady-state query latency; `close(spark)` releases.
+    `warm(spark)` pins the per-query hot structures — norms, the
+    docid -> (conv_id, turn_idx) map, the dictionary, optionally the
+    postings — the way a serving searcher keeps its norms/stored-field
+    readers open across requests (reference analog: SolrIndexSearcher's
+    caches, search/SolrIndexSearcher.java:164). Cuts steady-state query
+    latency; `close(spark)` releases.
     """
 
     index_dir: str
     n_docs: int
     avgdl: float
     config: IndexConfig
-    _cached: dict = None  # populated by warm()
+    _cached: dict = None  # {} once warm(); filled on first use
     _forward_text: DataFrame = None  # memoized by forward_text()
 
     @classmethod
@@ -112,10 +121,18 @@ class IndexReader:
         return [os.path.join(self.index_dir, "segments", n)
                 for n in live_segments(self.index_dir)]
 
+    def _pinned(self, name: str, read) -> DataFrame:
+        """read() on a cold reader; on a warm one, persisted on first use
+        and reused."""
+        if self._cached is None:
+            return read()
+        if name not in self._cached:
+            self._cached[name] = read().persist()
+        return self._cached[name]
+
     def doc_map(self, spark: SparkSession) -> DataFrame:
-        if self._cached and "doc_map" in self._cached:
-            return self._cached["doc_map"]
-        return self.forward_text(spark).select("docid", "conv_id", "turn_idx")
+        return self._pinned("doc_map", lambda: self.forward_text(spark).select(
+            "docid", "conv_id", "turn_idx"))
 
     def forward(self, spark: SparkSession) -> DataFrame:
         """The FULL forward table: docid, conv_id, turn_idx, dl, toks, plus
@@ -138,14 +155,12 @@ class IndexReader:
         return fwd
 
     def norms(self, spark: SparkSession) -> DataFrame:
-        if self._cached and "norms" in self._cached:
-            return self._cached["norms"]
-        return spark.read.parquet(os.path.join(self.index_dir, "norms"))
+        return self._pinned("norms", lambda: spark.read.parquet(
+            os.path.join(self.index_dir, "norms")))
 
     def dictionary(self, spark: SparkSession) -> DataFrame:
-        if self._cached and "dictionary" in self._cached:
-            return self._cached["dictionary"]
-        return spark.read.parquet(os.path.join(self.index_dir, "dictionary"))
+        return self._pinned("dictionary", lambda: spark.read.parquet(
+            os.path.join(self.index_dir, "dictionary")))
 
     def term_stats(self, terms) -> dict[str, tuple[int, int]]:
         """term -> (df, cf) for the dictionary terms among `terms` (absent
@@ -180,33 +195,25 @@ class IndexReader:
                        for p in self.segment_paths()])
 
     def warm(self, spark: SparkSession, segments: bool = False) -> "IndexReader":
-        """Persist + materialize the hot query-side structures (idempotent).
+        """Pin the hot query-side structures (idempotent).
 
-        Always pins norms, the doc map, and the term dictionary (small: bytes
-        per doc / per term). `segments=True` additionally pins the posting
-        table itself — the serving posture when the working set fits executor
-        memory (the reference equivalently depends on the OS page cache keeping
-        hot postings resident); leave False when the index dwarfs the cluster's
-        memory and rely on term_bucket partition pruning instead.
+        Norms, the doc map and the term dictionary (small: bytes per doc /
+        per term) are persisted on their first use, so warming them runs no
+        Spark job: `bm25_topk` reads none of them (its kernel reads norms
+        and winner keys with pyarrow); the scored, edismax, shard and
+        multiterm front-ends do. `segments=True` additionally pins the
+        posting table and materializes it now (one job), since every query
+        scans it — the serving posture when the working set fits executor
+        memory (the reference equivalently depends on the OS page cache
+        keeping hot postings resident); leave False when the index dwarfs
+        the cluster's memory and rely on term_bucket partition pruning
+        instead.
         """
-        if self._cached:
+        if self._cached is not None:
             return self
-        norms = spark.read.parquet(
-            os.path.join(self.index_dir, "norms")).persist()
-        doc_map = (spark.read.parquet(
-            os.path.join(self.index_dir, "analyzed", "batch-*"))
-            .select("docid", "conv_id", "turn_idx").persist())
-        dictionary = spark.read.parquet(
-            os.path.join(self.index_dir, "dictionary")).persist()
-        norms.count()
-        doc_map.count()
-        dictionary.count()
-        self._cached = {"norms": norms, "doc_map": doc_map,
-                        "dictionary": dictionary}
+        self._cached = {}
         if segments:
-            from solr_spark.indexing.build import read_segments
-
-            seg = read_segments(spark, self.segment_paths()).persist()
+            seg = self.segments_df(spark).persist()
             seg.count()
             self._cached["segments"] = seg
         return self
@@ -540,13 +547,17 @@ def _kernel_tasks(postings: int, reader: IndexReader, max_tasks: int) -> int:
 
 def _doc_keys(index_dir: str, docids: np.ndarray) -> pd.DataFrame:
     """DataFrame(conv_id, turn_idx) of `docids`, row-aligned: one pyarrow
-    read of the forward table's key columns, filtered to those docids. A
-    docid with no forward row raises — a winner is never dropped silently.
-    (The build hash-partitions analyzed files by conv_id, so every file
-    spans the whole docid space and row-group statistics cannot prune this
-    read: it decodes the key columns of every analyzed file.)"""
+    read of the forward table's key columns, filtered to those docids (none
+    when there are no docids). A docid with no forward row raises — a
+    winner is never dropped silently. (The build hash-partitions analyzed
+    files by conv_id, so every file spans the whole docid space and
+    row-group statistics cannot prune this read: it decodes the key columns
+    of every analyzed file.)"""
     import pyarrow.dataset as ds
 
+    if not len(docids):
+        return pd.DataFrame({"conv_id": pd.Series([], dtype=object),
+                             "turn_idx": pd.Series([], dtype=np.int32)})
     tbl = ds.dataset(os.path.join(index_dir, "analyzed"),
                      format="parquet").to_table(
         columns=["docid", "conv_id", "turn_idx"],
@@ -569,6 +580,65 @@ def _range_norms(index_dir: str, range_ids: list[int]) -> dict[int, bytes]:
         columns=["range_id", "norm_bytes"],
         filter=ds.field("range_id").isin(range_ids))
     return dict(zip(tbl["range_id"].to_pylist(), tbl["norm_bytes"].to_pylist()))
+
+
+def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
+                 dels: np.ndarray | None, prune: bool) -> pd.DataFrame:
+    """The Spark tier's range driver, wherever its one call runs: the
+    posting rows of some docid ranges (the scan terms' rows of each, with
+    `filter_bits` under fq) -> their keyed top-k, DataFrame(conv_id,
+    turn_idx, docid, score), at most plan.k rows in no set order.
+
+    Ranges are scored in (WAND bound desc, range_id) order; with `prune` a
+    range whose bound is strictly below the running k-th score is skipped
+    without decoding. Tombstoned docids (`dels`, sorted) are dropped after
+    scoring, before top-k selection."""
+    from solr_spark.query.docsets import unpack_bits
+
+    top_d = np.empty(0, dtype=np.int64)
+    top_s = np.empty(0, dtype=np.float64)
+    if not len(pdf):
+        return _doc_keys(index_dir, top_d).assign(docid=top_d, score=top_s)
+    cfg = plan.cfg
+    use_filter = "filter_bits" in pdf.columns
+    pdf = pdf.sort_values(["range_id", "term"], ignore_index=True,
+                          kind="stable")
+    rid = pdf["range_id"].to_numpy()
+    terms = pdf["term"].tolist()
+    starts = np.flatnonzero(np.r_[True, rid[1:] != rid[:-1]])
+    ends = np.r_[starts[1:], len(rid)]
+    order = range(len(starts))
+    if prune:
+        term_bound = plan.sim.bound(
+            pdf["max_tf"].to_numpy(np.float64),
+            pdf["term"].map(plan.bound_weights).to_numpy(np.float64),
+            pdf["term"].map(plan.bound_params).to_numpy(np.float64),
+            cfg, plan.avgdl)
+        bound = np.add.reduceat(term_bound, starts)
+        order = np.lexsort((rid[starts], -bound))
+    norms = _range_norms(index_dir, rid[starts].tolist())
+    for g in order:
+        if prune and len(top_d) == plan.k and bound[g] < top_s.min():
+            continue  # block-max skip: provably non-competitive
+        # decode only the ranges that survive the skip
+        # (range base 0: the decoded docids are offsets in the range)
+        lo, hi = starts[g], ends[g]
+        off, tf, b = decode_postings(
+            pdf["doc_gaps"].iloc[lo:hi], pdf["tfs"].iloc[lo:hi],
+            np.zeros(hi - lo, dtype=np.int64), pdf["n_docs"].iloc[lo:hi], 0)
+        tf = tf.astype(np.float64)
+        dls = decode_norms(norms[int(rid[lo])], cfg.lucene_norms)
+        allow = unpack_bits(pdf["filter_bits"].iat[lo], len(dls)) \
+            if use_filter else None
+        off, s = _score_group(
+            plan, [(terms[lo + i], off[b[i]:b[i + 1]], tf[b[i]:b[i + 1]])
+                   for i in range(hi - lo)], dls, allow)
+        d = off + (int(rid[lo]) << cfg.range_shift)
+        if dels is not None and len(d):
+            keep = ~np.isin(d, dels)
+            d, s = d[keep], s[keep]
+        top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
+    return _doc_keys(index_dir, top_d).assign(docid=top_d, score=top_s)
 
 
 def terms_postings(spark: SparkSession, reader: IndexReader,
@@ -734,16 +804,17 @@ def bm25_topk(
     terms_sql = ", ".join('"%s"' % t for t in scan_terms)
     scan = (f"term_bucket IN ({', '.join(map(str, scan_buckets))}) "
             f"AND term IN ({terms_sql})")
-    # the plan's one exchange: every posting row of a range meets in one
-    # kernel call, which orders its ranges by WAND bound itself
     rows = (seg.where(scan)
             .selectExpr("term", "range_id", "n_docs", "doc_gaps", "tfs",
-                        "max_tf")
-            .repartition(n_tasks, "range_id"))
+                        "max_tf"))
 
     if isinstance(filters, (list, tuple)) and not filters:
         filters = None  # empty fq list = no filter, skip the bitmap machinery
     use_filter = filters is not None or filter_docids is not None
+    if use_filter or n_tasks > 1:
+        # the plan's one exchange: every posting row of a range meets in one
+        # kernel call, which orders its ranges by WAND bound itself
+        rows = rows.repartition(n_tasks, "range_id")
     if use_filter:
         from solr_spark.query.docsets import docid_range_bitmaps
         from solr_spark.query.docsets import filter_docids as _compile_fq
@@ -769,62 +840,32 @@ def bm25_topk(
         dels = None
     prune = mode == "wand"
 
+    if n_tasks == 1:
+        # the one kernel task runs where its <= k winners land: the scan is
+        # collected as Arrow by a JVM-only job, scored here, and ranked into
+        # a local relation (collecting it runs no job and no Python worker)
+        top = _kernel_topk(plan, rows.toArrow().to_pandas(), index_dir,
+                           dels, prune)
+        top = top.iloc[np.lexsort((top["docid"].to_numpy(),
+                                   -top["score"].to_numpy()))]
+        top = top.assign(rank=np.arange(1, len(top) + 1, dtype=np.int32))
+        return local_df(spark, pa.Table.from_pandas(top, preserve_index=False),
+                        _OUT_SCHEMA)
+
     def topk_iter(batches):
         """This partition's posting rows (the query terms' rows of its
-        ranges) -> its keyed top-k, scoring ranges by descending WAND bound."""
-        from solr_spark.query.docsets import unpack_bits
-
+        ranges) -> its keyed top-k."""
         frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True).sort_values(
-            ["range_id", "term"], ignore_index=True, kind="stable")
-        rid = pdf["range_id"].to_numpy()
-        terms = pdf["term"].tolist()
-        starts = np.flatnonzero(np.r_[True, rid[1:] != rid[:-1]])
-        ends = np.r_[starts[1:], len(rid)]
-        order = range(len(starts))
-        if prune:
-            term_bound = plan.sim.bound(
-                pdf["max_tf"].to_numpy(np.float64),
-                pdf["term"].map(plan.bound_weights).to_numpy(np.float64),
-                pdf["term"].map(plan.bound_params).to_numpy(np.float64),
-                cfg, plan.avgdl)
-            bound = np.add.reduceat(term_bound, starts)
-            order = np.lexsort((rid[starts], -bound))
-        norms = _range_norms(index_dir, rid[starts].tolist())
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
-        for g in order:
-            if prune and len(top_d) == plan.k and bound[g] < top_s.min():
-                continue  # block-max skip: provably non-competitive
-            # decode only the ranges that survive the skip
-            # (range base 0: the decoded docids are offsets in the range)
-            lo, hi = starts[g], ends[g]
-            off, tf, b = decode_postings(
-                pdf["doc_gaps"].iloc[lo:hi], pdf["tfs"].iloc[lo:hi],
-                np.zeros(hi - lo, dtype=np.int64), pdf["n_docs"].iloc[lo:hi], 0)
-            tf = tf.astype(np.float64)
-            dls = decode_norms(norms[int(rid[lo])], cfg.lucene_norms)
-            allow = unpack_bits(pdf["filter_bits"].iat[lo], len(dls)) \
-                if use_filter else None
-            off, s = _score_group(
-                plan, [(terms[lo + i], off[b[i]:b[i + 1]], tf[b[i]:b[i + 1]])
-                       for i in range(hi - lo)], dls, allow)
-            d = off + (int(rid[lo]) << cfg.range_shift)
-            if dels is not None and len(d):
-                keep = ~np.isin(d, dels)
-                d, s = d[keep], s[keep]
-            top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
-        if len(top_d):
-            yield _doc_keys(index_dir, top_d).assign(docid=top_d,
-                                                     score=top_s)
+        if frames:
+            top = _kernel_topk(plan, pd.concat(frames, ignore_index=True),
+                               index_dir, dels, prune)
+            if len(top):
+                yield top
 
     cand = rows.mapInPandas(topk_iter, _KEYED_SCHEMA)
     # rank: one aggregate sorts the keyed candidates (<= k per kernel task)
     # by (score desc, docid asc), keeps k and numbers them. Its single row
-    # inlines in rank order, so there is no Window and no global sort; on one
-    # kernel task the aggregate runs in that task, with no exchange.
+    # inlines in rank order, so there is no Window and no global sort.
     # (SQL expression strings: one py4j call per step.)
     return (cand.selectExpr(
         "transform(slice(array_sort(collect_list(struct(-score AS neg_score, "

@@ -28,12 +28,13 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
 from solr_spark.query.bm25 import IndexReader, _idf, terms_postings
-from solr_spark.query.empty import empty_df
+from solr_spark.query.empty import empty_df, local_df
 
 _OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
 
@@ -152,7 +153,9 @@ def _field_contributions(
     mapping = [(t, ci, float(field_weight * cnt * idfs[t]))
                for ci, ts in enumerate(clause_terms)
                for t, cnt in sorted(Counter(ts).items()) if t in idfs]
-    map_df = spark.createDataFrame(mapping, "term string, clause int, w double")
+    map_df = local_df(spark, pa.table(list(zip(*mapping)),
+                                      names=["term", "clause", "w"]),
+                      "term string, clause int, w double")
     k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
     post = terms_postings(spark, reader, [t for t in canon if t in idfs])
     contrib = (

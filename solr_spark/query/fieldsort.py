@@ -33,11 +33,13 @@ and left-join back; 0.0 for a match with no scoring-clause contribution.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
 from solr_spark.query.bm25 import IndexReader, terms_postings
+from solr_spark.query.empty import local_df
 
 
 def parse_sort_spec(sort: str, sortable: "set[str] | None" = None
@@ -106,7 +108,9 @@ def scored_match_docids(spark: SparkSession, reader: IndexReader,
     pairs = [(i, t) for i, c in enumerate(clause_terms) for t in c]
     all_terms = sorted({t for _, t in pairs})
     post = terms_postings(spark, reader, all_terms).select("term", "docid")
-    cmap = spark.createDataFrame(pairs, "clause int, term string")
+    cmap = local_df(spark, pa.table(list(zip(*pairs)),
+                                    names=["clause", "term"]),
+                    "clause int, term string")
     matched = (post.join(F.broadcast(cmap), "term")
                .groupBy("docid")
                .agg(F.count_distinct("clause").alias("__nc"))
@@ -190,7 +194,7 @@ def field_sorted_search(spark: SparkSession, reader: IndexReader,
         # reference the page; Spark reuses exchanges, not arbitrary
         # subtrees, so without this the match+TakeOrdered job runs three
         # times.
-        page = spark.createDataFrame(page.collect(), page.schema)
+        page = local_df(spark, page.toArrow(), page.schema)
         # score EXACTLY the page: its docids are the filter DocSet, so the
         # kernels decode only the page's posting ranges
         scores = scored_topk(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -110,14 +111,46 @@ def _plan_nodes(node):
         yield from _plan_nodes(kids.apply(i))
 
 
+def _physical_plan(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName().startswith("AdaptiveSparkPlan"):
+        plan = plan.initialPlan()
+    return plan
+
+
 @pytest.fixture
 def kernel_tasks():
     """kernel_tasks(df) -> the task count of each scoring-kernel node (the
     plan's MapInPandas) in df's physical plan."""
     def run(df):
-        plan = df._jdf.queryExecution().executedPlan()
-        if plan.nodeName().startswith("AdaptiveSparkPlan"):
-            plan = plan.initialPlan()
         return [n.outputPartitioning().numPartitions()
-                for n in _plan_nodes(plan) if n.nodeName() == "MapInPandas"]
+                for n in _plan_nodes(_physical_plan(df))
+                if n.nodeName() == "MapInPandas"]
     return run
+
+
+@pytest.fixture
+def python_nodes():
+    """python_nodes(df) -> the nodes of df's physical plan that run in a
+    Python worker (pandas/Arrow/Python UDFs, mapInPandas/mapInArrow)."""
+    def run(df):
+        return [n.nodeName() for n in _plan_nodes(_physical_plan(df))
+                if re.search(r"Pandas|Python|InArrow", n.nodeName())]
+    return run
+
+
+@pytest.fixture
+def collected_arrow(monkeypatch):
+    """The DataFrames collected through DataFrame.toArrow while the test
+    runs, in call order."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen = []
+    to_arrow = DataFrame.toArrow
+
+    def record(self):
+        seen.append(self)
+        return to_arrow(self)
+
+    monkeypatch.setattr(DataFrame, "toArrow", record)
+    return seen

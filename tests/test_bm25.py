@@ -332,23 +332,71 @@ def test_graph_terms_df_cap(spark, built_index):
     assert graph_terms_docs(spark, reader, [], max_doc_freq=10).count() == 0
 
 
-def test_wand_query_job_budget(spark, built_index, count_jobs, kernel_tasks):
-    """A WAND query builds its plan with no Spark job and runs in exactly
-    one: the kernel resolves its winners' keys itself, so no broadcast job
-    precedes the collect. The small index's postings fit one kernel task.
-    The first query on a reader resolves its forward-table handle (a
-    schema-inference job), so the budget is pinned on the second."""
+def test_wand_query_job_budget(spark, built_index, count_jobs, kernel_tasks,
+                               python_nodes, collected_arrow):
+    """A WAND query whose postings fit one kernel task runs exactly one
+    Spark job in all, inside the call: the posting scan is collected as
+    Arrow by a JVM-only job, the range driver scores it on the driver and
+    the ranked winners come back as a local relation. Collecting the result
+    runs no job, and neither plan holds a Python node, so no Python worker
+    task runs."""
     index_dir, cfg, _ = built_index
     reader = IndexReader.open(index_dir, cfg)
     q = "error timeout connect"
     want = [tuple(r) for r in bm25_topk(spark, reader, q, k=10).collect()]
 
-    df, plan_jobs = count_jobs(lambda: bm25_topk(spark, reader, q, k=10))
+    del collected_arrow[:]
+    df, call_jobs = count_jobs(lambda: bm25_topk(spark, reader, q, k=10))
     rows, run_jobs = count_jobs(df.collect)
-    assert plan_jobs == 0
-    assert run_jobs == 1
-    assert kernel_tasks(df) == [1]
+    assert (call_jobs, run_jobs) == (1, 0)
     assert [tuple(r) for r in rows] == want
+    assert _is_local(df) and kernel_tasks(df) == []
+    assert len(collected_arrow) == 1
+    scan = collected_arrow[0]
+    assert python_nodes(scan) == [] and python_nodes(df) == []
+    assert "Exchange" not in _plan_text(scan)
+
+
+def _is_local(df) -> bool:
+    return df._jdf.queryExecution().optimizedPlan().nodeName() == \
+        "LocalRelation"
+
+
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _oracle_rows(oracle, q, k, n_docs, keep=lambda hit: True):
+    return [h for h in oracle.topk(q, k=n_docs) if keep(h)][:k]
+
+
+def _assert_oracle(got, exp):
+    """got: (conv_id, turn_idx, docid, score, rank) rows; exp: the oracle's
+    (conv_id, turn_idx, docid, score) hits."""
+    assert [(c, t, d) for c, t, d, _s, _r in got] == \
+        [(c, t, d) for c, t, d, _s in exp]
+    assert [r for *_, r in got] == list(range(1, len(exp) + 1))
+    for (*_, gs, _r), (*_, es) in zip(got, exp):
+        assert gs == pytest.approx(es, abs=1e-9)
+
+
+def _rows(df):
+    return [(r.conv_id, r.turn_idx, r.docid, r.score, r.rank)
+            for r in df.collect()]
+
+
+def _spread(monkeypatch, reader, spark, q, k):
+    """Lower the per-task postings budget so `q` spreads over > 1 kernel
+    tasks; returns that task count."""
+    from solr_spark.query import bm25
+
+    monkeypatch.setattr(bm25, "POSTINGS_PER_TASK", 64)
+    plan = bm25.plan_query(reader, reader.term_stats, q, k=k)
+    n_ranges = -(-reader.n_docs >> reader.config.range_shift)
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = min(-(-plan.postings // 64), shuffle, n_ranges)
+    assert n > 1
+    return n
 
 
 @pytest.mark.parametrize("mode", ["exact", "wand"])
@@ -357,41 +405,82 @@ def test_kernel_spreads_over_tasks_by_postings(spark, built_index, oracle,
                                                kernel_tasks, monkeypatch,
                                                mode, fq):
     """A scan above POSTINGS_PER_TASK spreads over one kernel task per
-    budget (capped by the shuffle partitions and the index's ranges), and
-    its rows equal the one-task rows and the oracle's, plain and with fq."""
-    from solr_spark.query import bm25
-
+    budget (capped by the shuffle partitions and the index's ranges); a scan
+    within it runs its one kernel task on the driver and returns a local
+    relation. Both placements return the oracle's rows, plain and with
+    fq."""
     index_dir, cfg, _ = built_index
     reader = IndexReader.open(index_dir, cfg)
     q, k = "error timeout connect", 25
     filters = [fq] if fq else None
 
-    def rows(df):
-        return [(r.conv_id, r.turn_idx, r.docid, r.score, r.rank)
-                for r in df.collect()]
-
     one = bm25_topk(spark, reader, q, k=k, mode=mode, filters=filters)
-    assert kernel_tasks(one) == [1]
-    want = rows(one)
+    assert _is_local(one) and kernel_tasks(one) == []
+    want = _rows(one)
 
-    monkeypatch.setattr(bm25, "POSTINGS_PER_TASK", 64)
-    plan = bm25.plan_query(reader, reader.term_stats, q, k=k)
-    n_ranges = -(-reader.n_docs >> cfg.range_shift)
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = min(-(-plan.postings // 64), shuffle, n_ranges)
-    assert n > 1
+    n = _spread(monkeypatch, reader, spark, q, k)
     many = bm25_topk(spark, reader, q, k=k, mode=mode, filters=filters)
     assert kernel_tasks(many) == [n]
-    got = rows(many)
-    assert got == want
+    assert _rows(many) == want
+    _assert_oracle(want, _oracle_rows(
+        oracle, q, k, reader.n_docs, lambda h: fq is None or h[1] >= 2))
 
-    exp = [h for h in oracle.topk(q, k=reader.n_docs)
-           if fq is None or h[1] >= 2][:k]
-    assert [(c, t, d) for c, t, d, _s, _r in got] == \
-        [(c, t, d) for c, t, d, _s in exp]
-    assert [r for *_, r in got] == list(range(1, len(exp) + 1))
-    for (*_, gs, _r), (*_, es) in zip(got, exp):
-        assert gs == pytest.approx(es, abs=1e-9)
+
+@pytest.mark.parametrize("mode", ["exact", "wand"])
+def test_tombstoned_winner_dropped_by_both_placements(spark, built_index,
+                                                      oracle, monkeypatch,
+                                                      tmp_path, mode):
+    """A tombstoned doc that would win is dropped by the driver-side kernel,
+    by the distributed one and by the oracle alike (stats keep counting it
+    until merge, as Lucene's soft deletes do)."""
+    import shutil
+
+    from solr_spark.indexing.deletes import delete_docids
+
+    index_dir, cfg, _ = built_index
+    idx = str(tmp_path / "idx")
+    shutil.copytree(index_dir, idx)
+    q, k = "error timeout connect", 10
+    victim = oracle.topk(q, k=1)[0][2]
+    delete_docids(spark, idx, spark.createDataFrame([(victim,)], "docid long"))
+    reader = IndexReader.open(idx, cfg)
+
+    one = _rows(bm25_topk(spark, reader, q, k=k, mode=mode))
+    _spread(monkeypatch, reader, spark, q, k)
+    many = _rows(bm25_topk(spark, reader, q, k=k, mode=mode))
+    assert victim not in [d for _c, _t, d, _s, _r in one]
+    assert one == many
+    _assert_oracle(one, _oracle_rows(oracle, q, k, reader.n_docs,
+                                     lambda h: h[2] != victim))
+
+
+@pytest.mark.parametrize("mode", ["exact", "wand"])
+def test_full_page_identical_on_both_placements(spark, built_index, oracle,
+                                                monkeypatch, mode):
+    """k = n_docs: the driver-side kernel and the distributed one return the
+    same full ranked page, and it is the oracle's."""
+    index_dir, cfg, _ = built_index
+    reader = IndexReader.open(index_dir, cfg)
+    q, k = "error timeout connect", reader.n_docs
+
+    one = _rows(bm25_topk(spark, reader, q, k=k, mode=mode))
+    _spread(monkeypatch, reader, spark, q, k)
+    many = _rows(bm25_topk(spark, reader, q, k=k, mode=mode))
+    assert len(one) > 100 and one == many
+    _assert_oracle(one, _oracle_rows(oracle, q, k, reader.n_docs))
+
+
+def test_warm_runs_only_the_segment_job(spark, built_index, count_jobs):
+    """warm() pins norms, the doc map and the dictionary on first use (no
+    job: bm25_topk reads none of them); warm(segments=True) materializes
+    the posting table every query scans, one job."""
+    index_dir, cfg, _ = built_index
+    for segments, jobs in ((False, 0), (True, 1)):
+        reader = IndexReader.open(index_dir, cfg)
+        try:
+            assert count_jobs(lambda: reader.warm(spark, segments))[1] == jobs
+        finally:
+            reader.close(spark)
 
 
 def test_winner_keys_fail_loudly_when_missing(built_index, oracle):

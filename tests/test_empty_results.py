@@ -1,6 +1,7 @@
 """An empty result from any query front-end is an empty local relation:
 collecting it runs no Spark job (no Python RDD job either) and it keeps the
-front-end's schema."""
+front-end's schema. The relations front-ends build on the driver are local
+relations too."""
 
 from __future__ import annotations
 
@@ -99,3 +100,36 @@ def test_empty_result_runs_no_job(spark, built_index, count_jobs, front_end,
     rows, run_jobs = count_jobs(df.collect)
     assert rows == [] and run_jobs == 0
     assert df.columns == columns
+
+
+def _field_sort_match(spark, reader):
+    from solr_spark.query.fieldsort import field_sorted_search
+    return field_sorted_search(spark, reader, "error timeout", "conv_id desc",
+                               k=5)
+
+
+def _field_sort_scored(spark, reader):
+    from solr_spark.query.fieldsort import field_sorted_search
+    return field_sorted_search(spark, reader, "error timeout", "conv_id desc",
+                               k=5, with_score=True)
+
+
+def _edismax_hit(spark, reader):
+    from solr_spark.query.edismax import edismax_topk
+    return edismax_topk(spark, {"text": reader}, "error timeout",
+                        {"text": 1.0})
+
+
+@pytest.mark.parametrize("front_end", [_field_sort_match, _field_sort_scored,
+                                       _edismax_hit],
+                         ids=["field_sort_clause_map", "field_sort_page",
+                              "edismax_clause_map"])
+def test_driver_built_relations_are_local(spark, built_index, front_end):
+    """Relations a front-end builds on the driver (the clause maps, the
+    materialized field-sort page) are local relations, not scans of a
+    Python RDD."""
+    index_dir, cfg, _ = built_index
+    df = front_end(spark, IndexReader.open(index_dir, cfg))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert df.collect()

@@ -70,21 +70,26 @@ def test_filtered_matches_bruteforce_and_exact_mode(spark, built):
     assert wand == brute
 
 
-def test_filtered_query_job_budget(spark, built, count_jobs, kernel_tasks):
-    """A role-fq WAND query builds its plan with no Spark job and runs in
-    exactly one (the fq bitmaps are built in the JVM, co-partitioned with
-    the posting repartition, and the kernel resolves its winners' keys).
-    The first query on a reader resolves its forward-table handle, so the
-    budget is pinned on the second."""
+def test_filtered_query_job_budget(spark, built, count_jobs, kernel_tasks,
+                                   python_nodes, collected_arrow):
+    """A role-fq WAND query whose postings fit one kernel task runs exactly
+    one Spark job in all, inside the call: the posting scan joined to the fq
+    bitmaps (built in the JVM, both sides exchanged once into one range_id
+    partition) is collected as Arrow, scored on the driver and returned as
+    a local relation. Collecting the result runs no job, and no plan holds
+    a Python node. The first query on a reader resolves its forward-table
+    handle, so the budget is pinned on the second."""
     reader = IndexReader.open(built, CFG)
     want = _rows(bm25_topk(spark, reader, Q, k=10, filters=FQ))
-    df, plan_jobs = count_jobs(
+    del collected_arrow[:]
+    df, call_jobs = count_jobs(
         lambda: bm25_topk(spark, reader, Q, k=10, filters=FQ))
     rows, run_jobs = count_jobs(lambda: _rows(df))
-    assert plan_jobs == 0
-    assert run_jobs == 1
-    assert kernel_tasks(df) == [1]
+    assert (call_jobs, run_jobs) == (1, 0)
     assert rows == want and rows
+    assert kernel_tasks(df) == [] and python_nodes(df) == []
+    assert len(collected_arrow) == 1
+    assert python_nodes(collected_arrow[0]) == []
 
 
 def test_filter_docids_precomputed_handle(spark, built):

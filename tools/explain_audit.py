@@ -38,6 +38,42 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def collected_scans(fn):
+    """(fn(), the formatted plan of each DataFrame fn collected through
+    DataFrame.toArrow, taken before it ran) — the posting scans a one-task
+    bm25_topk collects to score on the driver."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen, to_arrow = [], DataFrame.toArrow
+
+    def record(self):
+        seen.append(plan_of(self))
+        return to_arrow(self)
+
+    DataFrame.toArrow = record
+    try:
+        return fn(), seen
+    finally:
+        DataFrame.toArrow = to_arrow
+
+
+def exchanges(plan: str) -> list[tuple[str, str]]:
+    """(partitioning, shuffle origin) of every hash or single-partition
+    exchange in a formatted plan."""
+    return re.findall(r"Arguments: (SinglePartition|hashpartitioning\([^)]*\)),"
+                      r" (\w+)", plan)
+
+
+def range_parts(partitioning: str) -> int | None:
+    """The partition count of an exchange on range_id alone (1 for a single
+    partition, as repartition(1, range_id) plans), else None."""
+    if partitioning == "SinglePartition":
+        return 1
+    m = re.fullmatch(r"hashpartitioning\(range_id#\d+L?, (\d+)\)",
+                     partitioning)
+    return int(m.group(1)) if m else None
+
+
 def main() -> None:
     from bench import make_spark
     from pyspark.sql import functions as F
@@ -101,8 +137,10 @@ def main() -> None:
         build_index(spark, corpus, idx, cfg, input_token="plan-audit",
                     stored_cols=("role",))
         reader = IndexReader.open(idx, cfg)
-        topk = bm25_topk(spark, reader, "error timeout", k=5)
-        p4 = plan_of(topk)
+        # a one-task query collects its posting scan (p4) inside the call
+        topk, scans = collected_scans(
+            lambda: bm25_topk(spark, reader, "error timeout", k=5))
+        p4 = scans[0]
         import zlib
 
         from solr_spark.analysis import analyze_text
@@ -158,60 +196,88 @@ def main() -> None:
         # 6c. filtered ranked search (q+fq): the fq predicate pushes into
         # the FORWARD-table scan (stored column `role`), and the DocSet
         # reaches the posting scan as a per-range bitmap join — never a
-        # post-join of the top-k
-        ftk = bm25_topk(spark, reader, "error timeout", k=5,
-                        filters=["role:assistant"])
+        # post-join of the top-k. On one kernel task the joined scan is what
+        # the call collects: the posting scan and the bitmaps are each
+        # exchanged once into the same single range_id partition, and
+        # nothing in it runs Python
+        ftk, fscans = collected_scans(lambda: bm25_topk(
+            spark, reader, "error timeout", k=5, filters=["role:assistant"]))
+        pf = fscans[0]
         checks.append((
-            "filtered topk: fq pushed to forward scan, bitmap range join",
-            plan_of(ftk),
+            "filtered topk: fq pushed to forward scan, bitmap range join, "
+            "one range_id exchange per input, no Python",
+            pf,
             ["PushedFilters: [IsNotNull(role), EqualTo(role,assistant)]",
-             "filter_bits"], []))
+             "filter_bits", "ShuffledHashJoin", "REPARTITION_BY_NUM"],
+            ["BroadcastExchange", *PYTHON_NODES]))
+        fx = [(range_parts(p), o) for p, o in exchanges(pf)
+              if range_parts(p)]
+        assert fx == [(1, "REPARTITION_BY_NUM")] * 2, \
+            f"expected the posting scan and the bitmaps each exchanged once " \
+            f"into one range_id partition, found {fx}"
 
-        # 6d. WAND plan shape: ONE exchange feeds the scoring kernel, the
-        # query's only Python node, sized by the scan's postings (one task
-        # on this index, so the rank aggregate runs in the kernel's task
-        # with no second exchange); the per-range bound, the norms and the
-        # winners' (conv_id, turn_idx) are the kernel's own work, so no
-        # Window, no norms broadcast, no doc-map join, no broadcast at all
-        nodes = re.findall(r"^\(\d+\) (\w+)", p4, re.M)
-        n_exchanges = nodes.count("Exchange")
-        n_python = sum(n in PYTHON_NODES for n in nodes)
+        # 6d. one-task placement: the returned plan is a local relation of
+        # the ranked winners (collecting it runs no job), and the plain scan
+        # the call collected has no exchange and no Python node — the
+        # kernel ran on the driver
         checks.append((
-            "WAND plan: one exchange into the kernel, one Python node, no "
-            "Window, no norms broadcast, no doc-map join or broadcast",
-            p4, ["REPARTITION_BY_NUM", "MapInPandas"],
-            ["Window", "norm_bytes", "BroadcastExchange", "Join",
-             "analyzed"]))
-        assert n_exchanges == 1, f"expected 1 exchange, found {n_exchanges}"
-        assert n_python == 1, f"expected 1 Python node, found {n_python}"
+            "one-task topk: result is a local relation", plan_of(
+                topk, "extended"),
+            ["LocalRelation", "LocalTableScan"],
+            ["Scan parquet", "Exchange", *PYTHON_NODES]))
+        checks.append((
+            "one-task topk: collected posting scan has no exchange, no "
+            "Python", p4, ["PartitionFilters: [term_bucket"],
+            ["Exchange", *PYTHON_NODES]))
 
-        # 6e. fq WAND plan over several kernel tasks (the per-task postings
-        # budget lowered so this small index spreads): the posting scan
-        # reaches the kernel through exactly one range_id exchange, the fq
-        # bitmaps are exchanged into the same partitions, so the join adds
-        # no exchange and nothing re-shuffles to the default count
+        # 6e. distributed WAND plan (the per-task postings budget lowered so
+        # this small index spreads over several kernel tasks): ONE exchange
+        # on range_id feeds the scoring kernel, the query's only Python
+        # node; the per-range bound, the norms and the winners' (conv_id,
+        # turn_idx) are the kernel's own work, so no Window, no norms
+        # broadcast, no doc-map join, no broadcast at all. The keyed
+        # candidates reach the rank aggregate through one single-partition
+        # exchange. Then the fq variant: the fq bitmaps are exchanged into
+        # the same partitions, so the join adds no exchange and nothing
+        # re-shuffles to the default count
         from solr_spark.query import bm25 as _bm25
 
         budget = _bm25.POSTINGS_PER_TASK
         _bm25.POSTINGS_PER_TASK = 1
         try:
+            pw = plan_of(bm25_topk(spark, reader, "error timeout", k=5))
             p6 = plan_of(bm25_topk(spark, reader, "error timeout", k=5,
                                    filters=["role:assistant"]))
         finally:
             _bm25.POSTINGS_PER_TASK = budget
-        range_exchanges = re.findall(
-            r"Arguments: hashpartitioning\(range_id#\d+L?, (\d+)\), (\w+)", p6)
+        n_python = sum(n in PYTHON_NODES
+                       for n in re.findall(r"^\(\d+\) (\w+)", pw, re.M))
+        checks.append((
+            "distributed WAND plan: one range_id exchange into the kernel, "
+            "one Python node, no Window, no norms broadcast, no doc-map "
+            "join or broadcast",
+            pw, ["REPARTITION_BY_NUM", "MapInPandas", "SinglePartition"],
+            ["Window", "norm_bytes", "BroadcastExchange", "Join",
+             "analyzed"]))
+        dx = [(range_parts(p), o) for p, o in exchanges(pw)]
+        assert len(dx) == 2 and dx[0][1] == "REPARTITION_BY_NUM" \
+            and (dx[0][0] or 0) > 1 \
+            and dx[1] == (1, "ENSURE_REQUIREMENTS"), \
+            f"expected one range_id exchange into >1 kernel tasks and the " \
+            f"rank exchange, found {dx}"
+        assert n_python == 1, f"expected 1 Python node, found {n_python}"
+
+        fx = [(range_parts(p), o) for p, o in exchanges(p6)
+              if (range_parts(p) or 0) > 1]
         checks.append((
             "fq WAND plan: one range_id exchange into the kernel, bitmaps "
             "co-partitioned, no join exchange, no broadcast",
             p6, ["ShuffledHashJoin", "REPARTITION_BY_NUM", "filter_bits"],
             ["BroadcastExchange"]))
-        assert len(range_exchanges) == 2 and len(
-            {n for n, _ in range_exchanges}) == 1 and all(
-            kind == "REPARTITION_BY_NUM" for _, kind in range_exchanges) \
-            and int(range_exchanges[0][0]) > 1, \
+        assert len(fx) == 2 and len(set(fx)) == 1 \
+            and fx[0][1] == "REPARTITION_BY_NUM", \
             f"expected the posting scan and the bitmaps each exchanged once " \
-            f"into the kernel's >1 partitions, found {range_exchanges}"
+            f"into the kernel's >1 partitions, found {fx}"
 
         # 40. field sort on the scored path (round 5): the match set comes
         # from the term_bucket-pruned postings, fq pushes into the forward
