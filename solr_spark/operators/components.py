@@ -665,9 +665,8 @@ def explain_scores(spark: SparkSession, reader, query_text: str, k: int = 10,
                                              "score")), "docid")
                .join(F.broadcast(stats_df), "term"))
 
-    analyzed = spark.read.parquet(
-        os.path.join(reader.index_dir, "analyzed", "batch-*")
-    ).select("docid", F.col("dl").cast("long").alias("__dl"))
+    analyzed = reader.forward(spark).select(
+        "docid", F.col("dl").cast("long").alias("__dl"))
     ex = analyzed.join(F.broadcast(clauses), "docid")
 
     dl = F.col("__dl").cast("double")
@@ -785,9 +784,7 @@ def term_vectors_component(spark: SparkSession, reader, docids,
     from pyspark.sql import functions as F
 
     ids = list(docids)
-    fwd = (spark.read.parquet(os.path.join(reader.index_dir, "analyzed",
-                                           "batch-*"))
-           .where(F.col("docid").isin(ids))
+    fwd = (reader.forward(spark).where(F.col("docid").isin(ids))
            .select("docid", F.split("toks", " ").alias("arr")))
     tv = (fwd.select("docid", F.posexplode("arr").alias("pos", "term"))
              .where(F.col("term") != "")

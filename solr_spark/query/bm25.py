@@ -16,28 +16,30 @@ handler/component/QueryComponent.java:789,971,1402):
            dictionary df/cf from one term_bucket-pruned pyarrow read, per-term
            weights, as one picklable QueryPlan.
   phase 1: term-bucket-pruned posting scan -> the range driver `_kernel_topk`
-           -> top-k.
-  phase 2: the range driver reads (conv_id, turn_idx) of its <= k winners only
-           (one pyarrow read of the forward table's key columns, filtered to
-           their docids); the keyed winners are ordered by (score desc, docid)
-           and ranked by position.
+           -> (docid, score) top-k.
+  phase 2: `rank_topk`, the ranking tail of every scored Spark front-end:
+           the <= k winners ordered by (score desc, docid asc), their
+           (conv_id, turn_idx) read once on the driver (one pyarrow read of
+           the forward table's key columns, filtered to their docids), ranks
+           numbered by position, returned as a local relation.
 
 The kernel runs on ceil(postings / POSTINGS_PER_TASK) tasks (the sum of df
 over the scan terms), at least 1, at most the shuffle partitions and the
 index's docid ranges. A Python task costs ~0.1-0.2 s to schedule whatever it
 scores, so a query whose postings one task decodes in about that time runs
-on one task. Where that task runs follows from the count:
-  one task (eager): the scan (joined to the fq bitmaps, both exchanged into
-           one range_id partition) is collected as Arrow by a JVM-only job
+on one task. Both placements are eager: the call runs the query's Spark
+job(s), and collecting the result runs none. Where the kernel runs follows
+from the count:
+  one task: the scan (joined to the fq bitmaps, both exchanged into one
+           range_id partition) is collected as Arrow by a JVM-only job
            inside `bm25_topk`; the range driver scores it on the driver, and
-           the ranked winners come back as a local relation. The call runs
-           the query's one Spark job; collecting the result runs none, and no
-           Python worker starts.
-  n tasks (lazy): ONE repartition(n, range_id) feeds a `mapInPandas` that runs
-           the range driver per partition and emits keyed candidates; one
-           global aggregate sorts them, keeps k and ranks them. The returned
-           DataFrame runs as 1 Spark job on collect. fq bitmaps are exchanged
-           into the kernel's partitions, so the join adds no exchange.
+           `rank_topk`'s driver half ranks the winners with no further job.
+           No Python worker starts.
+  n tasks: ONE repartition(n, range_id) feeds a `mapInPandas` that runs the
+           range driver per partition and emits (docid, score) candidates;
+           `rank_topk` collects their top k in one TakeOrdered job. fq
+           bitmaps are exchanged into the kernel's partitions, so the join
+           adds no exchange.
 
 Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
@@ -58,10 +60,11 @@ from the index's norms parquet.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 from collections import Counter
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
@@ -77,8 +80,8 @@ from solr_spark.config import DEFAULT_CONFIG, IndexConfig
 from solr_spark.indexing.build import live_segments
 from solr_spark.query.empty import empty_df, local_df
 
-_KEYED_SCHEMA = "conv_id string, turn_idx int, docid long, score double"
-_OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
+# the one result schema of every scored front-end (see rank_topk)
+RANKED_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
 
 from solr_spark.query.similarity import resolve as _resolve_sim  # noqa: E402
 
@@ -100,7 +103,7 @@ class IndexReader:
     avgdl: float
     config: IndexConfig
     _cached: dict = None  # {} once warm(); filled on first use
-    _forward_text: DataFrame = None  # memoized by forward_text()
+    _handles: dict = field(default_factory=dict, repr=False)  # _handle()
 
     @classmethod
     def open(cls, index_dir: str, config: IndexConfig | None = None) -> "IndexReader":
@@ -130,29 +133,45 @@ class IndexReader:
             self._cached[name] = read().persist()
         return self._cached[name]
 
+    def _handle(self, name: str, spark: SparkSession, paths: list[str],
+                read) -> DataFrame:
+        """read() once per session and path list. Resolving a parquet handle
+        lists its files (a Spark job above 32 partition directories, as a
+        64-bucket segment has) and may infer its schema (another job), so
+        the reader reuses it until a new analyzed batch or live segment
+        changes the path list."""
+        key = (spark, tuple(paths))
+        hit = self._handles.get(name)
+        if hit is None or hit[0] != key:
+            hit = self._handles[name] = (key, read())
+        return hit[1]
+
     def doc_map(self, spark: SparkSession) -> DataFrame:
         return self._pinned("doc_map", lambda: self.forward_text(spark).select(
             "docid", "conv_id", "turn_idx"))
+
+    def _batches(self) -> list[str]:
+        return sorted(glob.glob(os.path.join(self.index_dir, "analyzed",
+                                             "batch-*")))
 
     def forward(self, spark: SparkSession) -> DataFrame:
         """The FULL forward table: docid, conv_id, turn_idx, dl, toks, plus
         any stored attribute columns (build_index stored_cols — the
         stored-field/docValues role). Filter predicates over it push down to
-        the parquet scan; column pruning drops toks when unused."""
-        return spark.read.parquet(
-            os.path.join(self.index_dir, "analyzed", "batch-*"))
+        the parquet scan; column pruning drops toks when unused. The batch
+        directories are listed here, not by a Spark glob, and the handle is
+        resolved once per reader (see _handle)."""
+        batches = self._batches()
+        return self._handle("forward", spark, batches,
+                            lambda: spark.read.parquet(*batches))
 
     def forward_text(self, spark: SparkSession) -> DataFrame:
         """The forward table with the analyzed tokens `toks` exposed as
         `text` — the field name every filter compiler (fq strings, JSON
-        facet domains, field sort, XML queries) addresses. The handle is
-        resolved once per reader: resolving it infers the parquet schema,
-        which is a Spark job."""
-        fwd = self._forward_text
-        if fwd is None or fwd.sparkSession is not spark:
-            fwd = self._forward_text = self.forward(spark).withColumnRenamed(
-                "toks", "text")
-        return fwd
+        facet domains, field sort, XML queries) addresses."""
+        return self._handle(
+            "forward_text", spark, self._batches(),
+            lambda: self.forward(spark).withColumnRenamed("toks", "text"))
 
     def norms(self, spark: SparkSession) -> DataFrame:
         return self._pinned("norms", lambda: spark.read.parquet(
@@ -190,17 +209,18 @@ class IndexReader:
         # the segment schema is fixed: naming it skips parquet schema
         # inference, a Spark job per segment root on every query
         schema = f"{SEGMENT_SCHEMA}, term_bucket int"
-        return reduce(DataFrame.unionByName,
-                      [spark.read.schema(schema).parquet(p)
-                       for p in self.segment_paths()])
+        paths = self.segment_paths()
+        return self._handle("segments", spark, paths, lambda: reduce(
+            DataFrame.unionByName,
+            [spark.read.schema(schema).parquet(p) for p in paths]))
 
     def warm(self, spark: SparkSession, segments: bool = False) -> "IndexReader":
         """Pin the hot query-side structures (idempotent).
 
         Norms, the doc map and the term dictionary (small: bytes per doc /
         per term) are persisted on their first use, so warming them runs no
-        Spark job: `bm25_topk` reads none of them (its kernel reads norms
-        and winner keys with pyarrow); the scored, edismax, shard and
+        Spark job: `bm25_topk` reads none of them (its kernel reads norms,
+        and `rank_topk` winner keys, with pyarrow); the edismax, shard and
         multiterm front-ends do. `segments=True` additionally pins the
         posting table and materializes it now (one job), since every query
         scans it — the serving posture when the working set fits executor
@@ -571,6 +591,38 @@ def _doc_keys(index_dir: str, docids: np.ndarray) -> pd.DataFrame:
     return keys.reset_index(drop=True).astype({"turn_idx": "int32"})
 
 
+def _ranked(spark: SparkSession, index_dir: str, docids: np.ndarray,
+            scores: np.ndarray, k: int) -> DataFrame:
+    """rank_topk's driver half, which runs no Spark job: the best k of
+    (docids, scores) by (score desc, docid asc), keyed with their (conv_id,
+    turn_idx) and numbered 1..k, as a local relation of RANKED_SCHEMA."""
+    best = np.lexsort((docids, -scores))[:k]
+    docids, scores = docids[best], scores[best]
+    top = _doc_keys(index_dir, docids).assign(
+        docid=docids, score=scores,
+        rank=np.arange(1, len(docids) + 1, dtype=np.int32))
+    return local_df(spark, pa.Table.from_pandas(top, preserve_index=False),
+                    RANKED_SCHEMA)
+
+
+def rank_topk(spark: SparkSession, reader: IndexReader, cand: DataFrame,
+              k: int) -> DataFrame:
+    """The ranking tail of every scored Spark front-end (the reference's one
+    collector, then GET_FIELDS for the winning page only): the top k of
+    `cand` (docid, score; one row per docid) by (score desc, docid asc),
+    collected in one TakeOrdered job, keyed with (conv_id, turn_idx) by one
+    driver-side forward read and ranked 1..k. k is capped at n_docs, so no
+    TakeOrdered buffer is sized by a caller's k.
+
+    Returns a local relation of RANKED_SCHEMA: the job runs inside the call,
+    and collecting the result runs none."""
+    k = min(k, reader.n_docs)
+    top = (cand.select("docid", "score")
+           .orderBy(F.desc("score"), F.asc("docid")).limit(k).toArrow())
+    return _ranked(spark, reader.index_dir, top["docid"].to_numpy(),
+                   top["score"].to_numpy(), k)
+
+
 def _range_norms(index_dir: str, range_ids: list[int]) -> dict[int, bytes]:
     """range_id -> norms blob for the given ranges: one pyarrow read of the
     index's norms parquet, filtered to those ranges."""
@@ -586,8 +638,8 @@ def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
                  dels: np.ndarray | None, prune: bool) -> pd.DataFrame:
     """The Spark tier's range driver, wherever its one call runs: the
     posting rows of some docid ranges (the scan terms' rows of each, with
-    `filter_bits` under fq) -> their keyed top-k, DataFrame(conv_id,
-    turn_idx, docid, score), at most plan.k rows in no set order.
+    `filter_bits` under fq) -> their top-k, DataFrame(docid, score), at most
+    plan.k rows in no set order.
 
     Ranges are scored in (WAND bound desc, range_id) order; with `prune` a
     range whose bound is strictly below the running k-th score is skipped
@@ -598,7 +650,7 @@ def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
     top_d = np.empty(0, dtype=np.int64)
     top_s = np.empty(0, dtype=np.float64)
     if not len(pdf):
-        return _doc_keys(index_dir, top_d).assign(docid=top_d, score=top_s)
+        return pd.DataFrame({"docid": top_d, "score": top_s})
     cfg = plan.cfg
     use_filter = "filter_bits" in pdf.columns
     pdf = pdf.sort_values(["range_id", "term"], ignore_index=True,
@@ -638,7 +690,7 @@ def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
             keep = ~np.isin(d, dels)
             d, s = d[keep], s[keep]
         top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
-    return _doc_keys(index_dir, top_d).assign(docid=top_d, score=top_s)
+    return pd.DataFrame({"docid": top_d, "score": top_s})
 
 
 def terms_postings(spark: SparkSession, reader: IndexReader,
@@ -789,7 +841,7 @@ def bm25_topk(
                       prohibited=prohibited, required=required,
                       combine=combine, tie=tie)
     if plan is None:
-        return empty_df(spark, _OUT_SCHEMA)
+        return empty_df(spark, RANKED_SCHEMA)
     if mode not in ("exact", "wand"):
         raise ValueError(f"unknown mode: {mode}")
 
@@ -842,19 +894,16 @@ def bm25_topk(
 
     if n_tasks == 1:
         # the one kernel task runs where its <= k winners land: the scan is
-        # collected as Arrow by a JVM-only job, scored here, and ranked into
-        # a local relation (collecting it runs no job and no Python worker)
+        # collected as Arrow by a JVM-only job and scored here (no Python
+        # worker starts)
         top = _kernel_topk(plan, rows.toArrow().to_pandas(), index_dir,
                            dels, prune)
-        top = top.iloc[np.lexsort((top["docid"].to_numpy(),
-                                   -top["score"].to_numpy()))]
-        top = top.assign(rank=np.arange(1, len(top) + 1, dtype=np.int32))
-        return local_df(spark, pa.Table.from_pandas(top, preserve_index=False),
-                        _OUT_SCHEMA)
+        return _ranked(spark, index_dir, top["docid"].to_numpy(),
+                       top["score"].to_numpy(), plan.k)
 
     def topk_iter(batches):
         """This partition's posting rows (the query terms' rows of its
-        ranges) -> its keyed top-k."""
+        ranges) -> its top-k."""
         frames = [b for b in batches if len(b)]
         if frames:
             top = _kernel_topk(plan, pd.concat(frames, ignore_index=True),
@@ -862,14 +911,5 @@ def bm25_topk(
             if len(top):
                 yield top
 
-    cand = rows.mapInPandas(topk_iter, _KEYED_SCHEMA)
-    # rank: one aggregate sorts the keyed candidates (<= k per kernel task)
-    # by (score desc, docid asc), keeps k and numbers them. Its single row
-    # inlines in rank order, so there is no Window and no global sort.
-    # (SQL expression strings: one py4j call per step.)
-    return (cand.selectExpr(
-        "transform(slice(array_sort(collect_list(struct(-score AS neg_score, "
-        f"docid, conv_id, turn_idx))), 1, {plan.k}), (h, i) -> struct("
-        "h.conv_id AS conv_id, h.turn_idx AS turn_idx, h.docid AS docid, "
-        "-h.neg_score AS score, i + 1 AS rank)) AS top")
-        .selectExpr("inline(top)"))
+    return rank_topk(spark, reader, rows.mapInPandas(
+        topk_iter, "docid long, score double"), plan.k)

@@ -18,8 +18,9 @@ core/src/test/org/apache/solr/search/TestExtendedDismaxParser.java):
 Spark shape (scale-first): per-field posting decode is partition-pruned to the
 query's terms (solr_spark.query.bm25.terms_postings); everything downstream —
 per-field BM25 contribution, the dismax max/sum combine, the mm filter, the
-phrase-boost join, the global top-k — is plain Catalyst (groupBy/agg/join/
-TakeOrdered) with map-side partial aggregation, no Python in the scoring path.
+phrase-boost join — is plain Catalyst (groupBy/agg/join) with map-side partial
+aggregation, no Python in the scoring path; the top k is bm25.rank_topk's one
+TakeOrdered job, keyed and ranked on the driver into a local relation.
 Fields live in separate index directories, mirroring Lucene's (field, term)
 posting keying.
 """
@@ -29,14 +30,13 @@ from __future__ import annotations
 from collections import Counter
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
-from solr_spark.query.bm25 import IndexReader, _idf, terms_postings
+from solr_spark.query.bm25 import (RANKED_SCHEMA, IndexReader, _idf,
+                                   rank_topk, terms_postings)
 from solr_spark.query.empty import empty_df, local_df
-
-_OUT_SCHEMA = "conv_id string, turn_idx int, docid long, score double, rank int"
 
 
 def calculate_min_should_match(n_optional: int, spec: str) -> int:
@@ -198,8 +198,6 @@ def _phrase_boosts(
     slop into each PhraseQuery): phrase frequency comes from the ordered
     sloppy kernel (1/(1+matchLength) chains, query/phrase.py) instead of the
     exact-adjacency count, same BM25 combination above it."""
-    import os
-
     from solr_spark.query.phrase import (_sloppy_phrase_kernel,
                                          phrase_count_expr)
 
@@ -229,9 +227,7 @@ def _phrase_boosts(
             # phrase_topk: only docs containing ALL phrase terms reach Python
             from solr_spark.query.bm25 import term_docs
 
-            src = spark.read.parquet(
-                os.path.join(reader.index_dir, "analyzed", "batch-*")
-            ).select("docid", "dl", "toks")
+            src = reader.forward(spark).select("docid", "dl", "toks")
             cand = term_docs(spark, reader, terms[0])
             for t in sorted(set(terms[1:])):
                 cand = cand.join(term_docs(spark, reader, t),
@@ -242,9 +238,7 @@ def _phrase_boosts(
             ).withColumnRenamed("tf", "pfreq")
         else:
             matched = (
-                spark.read.parquet(
-                    os.path.join(reader.index_dir, "analyzed", "batch-*"))
-                .select("docid", "toks")
+                reader.forward(spark).select("docid", "toks")
                 .withColumn("pfreq", phrase_count_expr(F.col("toks"), terms))
                 .where(F.col("pfreq") > 0)
                 .join(doc_lengths(spark, reader), "docid"))
@@ -284,7 +278,8 @@ def edismax_topk(
     filter_docids: DataFrame | None = None,
     now: str | None = None,
 ) -> DataFrame:
-    """Top-k edismax. Returns DataFrame(conv_id, turn_idx, docid, score, rank).
+    """Top-k edismax. Returns DataFrame(conv_id, turn_idx, docid, score, rank),
+    ranked by bm25.rank_topk into a local relation.
 
     readers: field name -> IndexReader (one index per field — the Spark
     restatement of Lucene's per-(field, term) posting keying). qf: per-field
@@ -319,7 +314,6 @@ def edismax_topk(
     date-math fq endpoints.
     """
     primary = readers[next(iter(sorted(qf)))]
-    k = min(k, max(r.n_docs for r in readers.values()))  # O(k) TakeOrdered
     # One clause per whitespace-separated query word, each analyzed with the
     # OWN analyzer config of every qf field (the reference analyzes per field:
     # ExtendedDismaxQParser builds one DisjunctionMaxQuery per word whose arms
@@ -332,7 +326,7 @@ def edismax_topk(
     keep = [i for i in range(len(words))
             if any(raw_clauses[f][i] for f in raw_clauses)]
     if not keep:
-        return empty_df(spark, _OUT_SCHEMA)
+        return empty_df(spark, RANKED_SCHEMA)
     clause_by_field = {f: [cl[i] for i in keep] for f, cl in raw_clauses.items()}
     # mm accepts the full Solr spec grammar ("75%", "2<-25%", negatives) —
     # util/SolrPluginUtils.java::calculateMinShouldMatch over SURVIVING clauses
@@ -347,7 +341,7 @@ def edismax_topk(
         if c is not None:
             contribs.append(c)
     if not contribs:
-        return empty_df(spark, _OUT_SCHEMA)
+        return empty_df(spark, RANKED_SCHEMA)
     allc = contribs[0]
     for c in contribs[1:]:
         allc = allc.unionByName(c)
@@ -412,12 +406,4 @@ def edismax_topk(
                             * F.coalesce(F.col("_boost_mul"), F.lit(1.0)))
                 .drop("_boost_mul"))
 
-    topk = main.select("docid", "score") \
-               .orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    return (
-        topk.join(primary.doc_map(spark), "docid")
-        .withColumn("rank", F.row_number().over(
-            Window.orderBy(F.desc("score"), F.asc("docid"))))
-        .select("conv_id", "turn_idx", "docid", "score", "rank")
-        .orderBy("rank")
-    )
+    return rank_topk(spark, primary, main, k)

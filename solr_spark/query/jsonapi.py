@@ -382,13 +382,10 @@ def json_search(spark, reader, request: dict | str) -> DataFrame:
         # result — the start/rows contract of the reference's paging
         topk = topk.where(F.col("rank") > offset)
     if "fields" in req:
-        import os
-
         want = list(req["fields"])
         extra = [f for f in want if f not in topk.columns]
         if extra:
-            fwd = spark.read.parquet(
-                os.path.join(reader.index_dir, "analyzed", "batch-*"))
+            fwd = reader.forward(spark)
             unknown = [f for f in extra if f not in fwd.columns]
             if unknown:
                 raise ValueError(

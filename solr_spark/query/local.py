@@ -1,9 +1,11 @@
 """Driver-local serving mode: millisecond warm top-k over the same index.
 
-Role in the architecture: the distributed `bm25_topk` path is the BATCH
-posture — 1 Spark job per query (a small query's scan collected by a JVM-only
-job and scored on the driver: p50 ~0.13 s, and an fq adds ~0.2 s for its
-bitmap build), fine for analytics, wrong for interactive search. The
+Role in the architecture: the Spark path is the BATCH posture — every
+scored front-end ranks through `bm25.rank_topk` into a local relation, and
+`bm25_topk` runs 1 Spark job per query (a small query's scan collected by a
+JVM-only job and scored and ranked on the driver: p50 ~0.13 s, and an fq
+adds ~0.2 s for its bitmap build), fine for analytics, wrong for
+interactive search. The
 reference serves queries from a per-shard in-process searcher
 (SolrIndexSearcher over memory-mapped segment files); `LocalSearcher` is that
 role restated over THIS engine's artifacts: it memory-loads the small

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from solr_spark.query.bm25 import IndexReader, bm25_topk
+from solr_spark.query.bm25 import RANKED_SCHEMA, IndexReader, bm25_topk
 from solr_spark.query.empty import empty_df
 
 
@@ -141,9 +141,8 @@ def _blended_topk(spark: SparkSession, reader: IndexReader,
     path. The canonical term is the first (highest-df) member — a real
     dictionary term, so re-analysis is the identity and the group always
     resolves regardless of what raw pattern produced the expansion."""
-    out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     if not members:
-        return empty_df(spark, out_schema)
+        return empty_df(spark, RANKED_SCHEMA)
     canon = members[0]
     return bm25_topk(spark, reader, canon, k=k, mode="wand",
                      synonyms={canon: members})
@@ -214,8 +213,6 @@ def complex_phrase_topk(spark: SparkSession, reader: IndexReader,
     from solr_spark.query.spans import (SpanNear, SpanOr, SpanTerm, span_term,
                                         span_topk)
 
-    out_schema = ("conv_id string, turn_idx int, docid long, "
-                  "score double, rank int")
     clauses = []
     for word in phrase.split():
         if "*" in word or "?" in word:
@@ -231,11 +228,11 @@ def complex_phrase_topk(spark: SparkSession, reader: IndexReader,
             clauses.append(span_term(word, reader.config))
             continue
         if not members:
-            return empty_df(spark, out_schema)
+            return empty_df(spark, RANKED_SCHEMA)
         clauses.append(SpanTerm(members[0]) if len(members) == 1
                        else SpanOr(*[SpanTerm(m) for m in members]))
     if not clauses:
-        return empty_df(spark, out_schema)
+        return empty_df(spark, RANKED_SCHEMA)
     node = clauses[0] if len(clauses) == 1 \
         else SpanNear(clauses, slop=slop, ordered=ordered)
     return span_topk(spark, reader, node, k=k)

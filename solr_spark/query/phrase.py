@@ -25,13 +25,11 @@ computes on the fly (it has no per-phrase statistics either).
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
-from solr_spark.query.bm25 import IndexReader, _idf
+from solr_spark.query.bm25 import RANKED_SCHEMA, IndexReader, _idf, rank_topk
 from solr_spark.query.empty import empty_df
 
 
@@ -272,22 +270,17 @@ def phrase_topk(
     see lucene_sloppy_freq; repeated-term phrases route to the ordered
     kernel with a documented deviation, see _lucene_sloppy_kernel).
 
-    Returns DataFrame(conv_id, turn_idx, docid, score, rank) like bm25_topk.
-    k=None returns the FULL unranked match set as (docid, score) — for boost
-    clauses that join scores onto another query's candidates (no global
-    sort/limit funnel).
+    Returns DataFrame(conv_id, turn_idx, docid, score, rank) like bm25_topk,
+    ranked by bm25.rank_topk into a local relation. k=None returns the FULL
+    unranked match set as (docid, score) — for boost clauses that join
+    scores onto another query's candidates (no global sort/limit funnel).
     """
     cfg = reader.config
-    out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     terms = analyze_text(phrase_text, cfg)
     if not terms:
-        return empty_df(spark, out_schema)
-    if k is not None:
-        k = min(k, reader.n_docs)  # uncapped k OOMs Spark's TakeOrdered
+        return empty_df(spark, RANKED_SCHEMA)
 
-    analyzed = spark.read.parquet(
-        os.path.join(reader.index_dir, "analyzed", "batch-*")
-    ).select("docid", "conv_id", "turn_idx", "dl", "toks")
+    analyzed = reader.forward(spark).select("docid", "dl", "toks")
 
     from solr_spark.indexing.deletes import deletes_df
 
@@ -307,11 +300,8 @@ def phrase_topk(
     if slop > 0:
         kern = (_lucene_sloppy_kernel(terms, slop) if lucene_parity
                 else _sloppy_phrase_kernel(terms, slop))
-        freq = analyzed.select("docid", "dl", "toks").mapInArrow(
-            kern, "docid long, tf double, dl long")
-        matched = (freq.withColumnRenamed("tf", "pf")
-                   .join(analyzed.select("docid", "conv_id", "turn_idx"),
-                         "docid"))
+        matched = analyzed.mapInArrow(kern, "docid long, tf double, dl long") \
+            .withColumnRenamed("tf", "pf")
     else:
         matched = (analyzed
                    .withColumn("pf", phrase_count_expr(F.col("toks"), terms))
@@ -320,7 +310,7 @@ def phrase_topk(
     stats = matched.agg(F.count(F.lit(1)).alias("df_phrase")).collect()[0]
     df_phrase = int(stats["df_phrase"])
     if df_phrase == 0:
-        return empty_df(spark, out_schema)
+        return empty_df(spark, RANKED_SCHEMA)
     w = _idf(reader.n_docs, df_phrase)
     k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
 
@@ -333,12 +323,7 @@ def phrase_topk(
         # unranked full match set (docid, score) — the boost-clause feed; no
         # global sort/limit funnel
         return scored.select("docid", "score")
-    topk = scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    return (topk.withColumn(
-                "rank",
-                F.row_number().over(Window.orderBy(F.desc("score"), F.asc("docid"))))
-            .select("conv_id", "turn_idx", "docid", "score", "rank")
-            .orderBy("rank"))
+    return rank_topk(spark, reader, scored, k)
 
 
 def near_topk(
@@ -362,21 +347,19 @@ def near_topk(
     (max_t suffix-min-position-of-t at i) - pos_i, computed with one
     suffix-minimum scan per query term over the whole batch's occurrence
     stream. Scoring: BM25 over the pooled tf of the query terms (the span-near
-    scoring shape), exact dl; ties by docid.
+    scoring shape), exact dl; ranked by bm25.rank_topk (ties by docid) into
+    a local relation.
     """
     import numpy as np
 
     from solr_spark.query.bm25 import _idf, term_docs
 
     cfg = reader.config
-    out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     terms = sorted(set(analyze_text(query_text, cfg)))
     if not terms:
-        return empty_df(spark, out_schema)
+        return empty_df(spark, RANKED_SCHEMA)
 
-    analyzed = spark.read.parquet(
-        os.path.join(reader.index_dir, "analyzed", "batch-*")
-    ).select("docid", "dl", "toks")
+    analyzed = reader.forward(spark).select("docid", "dl", "toks")
     cand = term_docs(spark, reader, terms[0])
     for t in terms[1:]:
         cand = cand.join(term_docs(spark, reader, t), "docid", "left_semi")
@@ -442,17 +425,10 @@ def near_topk(
     # the second pass over them is cheap), scoring/top-k stay on the cluster
     df_near = matched.count()
     if df_near == 0:
-        return empty_df(spark, out_schema)
+        return empty_df(spark, RANKED_SCHEMA)
     w = _idf(reader.n_docs, df_near)
     k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
     scored = matched.withColumn(
         "score", F.lit(w) * F.col("tf")
         / (F.col("tf") + F.lit(k1) * (1.0 - b + b * F.col("dl") / F.lit(avgdl))))
-    topk = scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    return (topk.join(spark.read.parquet(
-                os.path.join(reader.index_dir, "analyzed", "batch-*"))
-                .select("docid", "conv_id", "turn_idx"), "docid")
-            .withColumn("rank", F.row_number().over(
-                Window.orderBy(F.desc("score"), F.asc("docid"))))
-            .select("conv_id", "turn_idx", "docid", "score", "rank")
-            .orderBy("rank"))
+    return rank_topk(spark, reader, scored, k)

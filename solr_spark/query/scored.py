@@ -26,11 +26,12 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
-from solr_spark.query.bm25 import IndexReader, bm25_topk
+from solr_spark.query.bm25 import (RANKED_SCHEMA, IndexReader, bm25_topk,
+                                   rank_topk)
 from solr_spark.query.empty import empty_df
 
 _CLAUSE_RE = re.compile(
@@ -96,7 +97,9 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
                 filter_docids: DataFrame | None = None,
                 now: str | None = None) -> DataFrame:
     """Parse + score a classic `q` string; returns the bm25_topk shape
-    (conv_id, turn_idx, docid, score, rank).
+    (conv_id, turn_idx, docid, score, rank) as a local relation: a term
+    query is bm25_topk's own result, a phrase-scored one is ranked by
+    bm25.rank_topk.
 
     Phrase boosts rescore the term query's top max(4k, 100) candidates (the
     ReRank-window approximation — a doc outside that window cannot be promoted
@@ -110,7 +113,6 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
     from solr_spark.query.multiterm import expand_fuzzy, expand_wildcard
     from solr_spark.query.phrase import phrase_topk
 
-    out_schema = "conv_id string, turn_idx int, docid long, score double, rank int"
     cfg = reader.config
     if isinstance(filters, (list, tuple)) and not filters:
         filters = None  # empty fq list = no filter, skip the bitmap machinery
@@ -120,7 +122,6 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         from solr_spark.query.docsets import filter_docids as _compile_fq
 
         filter_docids = _compile_fq(spark, reader, filters, now=now)
-    k = min(k, reader.n_docs)  # uncapped k OOMs Spark's TakeOrdered
     sq = parse_scored_query(q)
     required_set = set(sq.required)
 
@@ -140,7 +141,7 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         members = expand_fuzzy(spark, reader, body.lower(), max_edits=fuzz)
         if not members:
             if body in required_set:  # an unmatchable MUST clause
-                return empty_df(spark, out_schema)
+                return empty_df(spark, RANKED_SCHEMA)
             continue
         canon = members[0]
         synonyms.setdefault(canon, []).extend(members)
@@ -153,7 +154,7 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         members = expand_wildcard(spark, reader, body.lower())
         if not members:
             if body in required_set:
-                return empty_df(spark, out_schema)
+                return empty_df(spark, RANKED_SCHEMA)
             continue
         canon = members[0]
         synonyms.setdefault(canon, []).extend(members)
@@ -169,12 +170,15 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
 
     main: DataFrame | None = None
     if terms_text:
+        # a term query with no phrase to rescore is bm25_topk's own top k
         main = bm25_topk(spark, reader, " ".join(terms_text),
-                         k=max(k * 4, 100), mode="wand",
+                         k=max(k * 4, 100) if sq.phrases else k, mode="wand",
                          synonyms=synonyms or None, boosts=boosts or None,
                          prohibited=sq.prohibited or None,
                          required=required_canon or None,
                          filter_docids=filter_docids)
+        if not sq.phrases:
+            return main
         main = main.select("docid", "score")
 
     if (sq.phrases and main is None and len(sq.phrases) == 1
@@ -208,10 +212,5 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
                 .drop("pboost"))
 
     if main is None:
-        return empty_df(spark, out_schema)
-    topk = main.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    return (topk.join(reader.doc_map(spark), "docid")
-            .withColumn("rank", F.row_number().over(
-                Window.orderBy(F.desc("score"), F.asc("docid"))))
-            .select("conv_id", "turn_idx", "docid", "score", "rank")
-            .orderBy("rank"))
+        return empty_df(spark, RANKED_SCHEMA)
+    return rank_topk(spark, reader, main, k)

@@ -34,14 +34,13 @@ per-document and sequential); docs are bounded by the candidate prefilter.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
-from solr_spark.query.bm25 import IndexReader, _idf
+from solr_spark.query.bm25 import RANKED_SCHEMA, IndexReader, _idf, rank_topk
 from solr_spark.query.empty import empty_df
 
 
@@ -249,19 +248,17 @@ def _span_kernel(node, terms: list[str]):
     return it
 
 
-def span_matches(spark: SparkSession, reader: IndexReader, node):
-    """Evaluate a span AST over the index: (matched, analyzed) where
-    `matched` is DataFrame(docid, tf, dl) — tf = |distinct span set| — and
-    `analyzed` is the live (delete-filtered) forward table the candidates
-    came from. Candidates are index-prefiltered per _required_groups before
-    the forward-index evaluator runs. Shared by span_topk (scored path) and
-    the XML query parser's filter path (query/xmlquery.py)."""
+def span_matches(spark: SparkSession, reader: IndexReader,
+                 node) -> DataFrame:
+    """Evaluate a span AST over the live (delete-filtered) forward table:
+    DataFrame(docid, tf, dl), tf = |distinct span set|. Candidates are
+    index-prefiltered per _required_groups before the forward-index
+    evaluator runs. Shared by span_topk (scored path) and the XML query
+    parser's filter path (query/xmlquery.py)."""
     from solr_spark.query.bm25 import term_docs
 
     terms = sorted(_all_terms(node))
-    analyzed = spark.read.parquet(
-        os.path.join(reader.index_dir, "analyzed", "batch-*")
-    ).select("docid", "conv_id", "turn_idx", "dl", "toks")
+    analyzed = reader.forward(spark).select("docid", "dl", "toks")
 
     from solr_spark.indexing.deletes import deletes_df
 
@@ -277,34 +274,24 @@ def span_matches(spark: SparkSession, reader: IndexReader, node):
         if cand is not None:
             analyzed = analyzed.join(cand, "docid", "left_semi")
 
-    matched = analyzed.select("docid", "dl", "toks").mapInArrow(
-        _span_kernel(node, terms), "docid long, tf long, dl long")
-    return matched, analyzed
+    return analyzed.mapInArrow(_span_kernel(node, terms),
+                               "docid long, tf long, dl long")
 
 
 def span_topk(spark: SparkSession, reader: IndexReader, node,
               k: int = 10) -> DataFrame:
     """Top-k documents matching a span AST, BM25-scored with tf = |span set|
     and query-time df = number of matching docs (the phrase path's scoring
-    contract)."""
+    contract), ranked by bm25.rank_topk into a local relation."""
     cfg = reader.config
-    out_schema = ("conv_id string, turn_idx int, docid long, "
-                  "score double, rank int")
-    k = min(k, reader.n_docs)  # uncapped k OOMs Spark's TakeOrdered
-    matched, analyzed = span_matches(spark, reader, node)
+    matched = span_matches(spark, reader, node)
     df_span = matched.count()
     if df_span == 0:
-        return empty_df(spark, out_schema)
+        return empty_df(spark, RANKED_SCHEMA)
     w = _idf(reader.n_docs, df_span)
     k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
     scored = matched.withColumn(
         "score", F.lit(w) * F.col("tf")
         / (F.col("tf")
            + F.lit(k1) * (1.0 - b + b * F.col("dl") / F.lit(avgdl))))
-    topk = scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-    return (topk.join(analyzed.select("docid", "conv_id", "turn_idx"),
-                      "docid")
-            .withColumn("rank", F.row_number().over(
-                Window.orderBy(F.desc("score"), F.asc("docid"))))
-            .select("conv_id", "turn_idx", "docid", "score", "rank")
-            .orderBy("rank"))
+    return rank_topk(spark, reader, scored, k)

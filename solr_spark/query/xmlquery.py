@@ -54,12 +54,12 @@ import re
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
 from solr_spark.query import spans as S
-from solr_spark.query.bm25 import IndexReader, bm25_topk
+from solr_spark.query.bm25 import IndexReader, bm25_topk, rank_topk
 
 DEFAULT_FIELD = "text"
 
@@ -336,8 +336,7 @@ def _compile_filter(node, spark, reader, config):
     if isinstance(node, XBool):
         return _combine_bool(list(node.clauses), spark, reader, config)
     if isinstance(node, XSpan):
-        matched, _ = S.span_matches(spark, reader, node.node)
-        return "ids", matched.select("docid")
+        return "ids", S.span_matches(spark, reader, node.node).select("docid")
     raise TypeError(f"not an XML query node: {node!r}")
 
 
@@ -412,19 +411,16 @@ def _analyzed(n, config) -> list[str]:
 
 def _const_score_df(spark, reader, ids: DataFrame, boost: float,
                     k: int) -> DataFrame:
-    fwd = reader.forward_text(spark).select("docid", "conv_id", "turn_idx")
-    hits = (fwd.join(ids, "docid", "left_semi")
-            .orderBy("docid").limit(min(k, reader.n_docs))
-            .withColumn("score", F.lit(float(boost)))
-            .withColumn("rank", F.row_number().over(
-                Window.orderBy(F.asc("docid")))))
-    return hits.select("conv_id", "turn_idx", "docid", "score", "rank")
+    """Every doc of `ids` scores `boost`, so the ranking is by docid."""
+    return rank_topk(spark, reader, ids.select("docid").distinct()
+                     .withColumn("score", F.lit(float(boost))), k)
 
 
 def xml_query_topk(spark: SparkSession, reader: IndexReader, xml: str,
                    k: int = 10) -> DataFrame:
     """Scored retrieval for the XML dialect. Returns the engine's standard
-    (conv_id, turn_idx, docid, score, rank) top-k contract.
+    (conv_id, turn_idx, docid, score, rank) top-k contract, a local relation
+    ranked by bm25.rank_topk.
 
     Dispatch: UserQuery → classic scored parser; span trees → span_topk;
     term/boolean trees → the BM25/WAND kernel with occurs lowered to

@@ -402,13 +402,12 @@ def _spread(monkeypatch, reader, spark, q, k):
 @pytest.mark.parametrize("mode", ["exact", "wand"])
 @pytest.mark.parametrize("fq", [None, "turn_idx:[2 TO *]"])
 def test_kernel_spreads_over_tasks_by_postings(spark, built_index, oracle,
-                                               kernel_tasks, monkeypatch,
-                                               mode, fq):
+                                               kernel_tasks, collected_arrow,
+                                               monkeypatch, mode, fq):
     """A scan above POSTINGS_PER_TASK spreads over one kernel task per
     budget (capped by the shuffle partitions and the index's ranges); a scan
-    within it runs its one kernel task on the driver and returns a local
-    relation. Both placements return the oracle's rows, plain and with
-    fq."""
+    within it runs its one kernel task on the driver. Both placements
+    return a local relation, and the oracle's rows, plain and with fq."""
     index_dir, cfg, _ = built_index
     reader = IndexReader.open(index_dir, cfg)
     q, k = "error timeout connect", 25
@@ -416,11 +415,14 @@ def test_kernel_spreads_over_tasks_by_postings(spark, built_index, oracle,
 
     one = bm25_topk(spark, reader, q, k=k, mode=mode, filters=filters)
     assert _is_local(one) and kernel_tasks(one) == []
+    assert [kernel_tasks(df) for df in collected_arrow] == [[]]
     want = _rows(one)
 
     n = _spread(monkeypatch, reader, spark, q, k)
+    del collected_arrow[:]
     many = bm25_topk(spark, reader, q, k=k, mode=mode, filters=filters)
-    assert kernel_tasks(many) == [n]
+    assert _is_local(many) and kernel_tasks(many) == []
+    assert [kernel_tasks(df) for df in collected_arrow] == [[n]]
     assert _rows(many) == want
     _assert_oracle(want, _oracle_rows(
         oracle, q, k, reader.n_docs, lambda h: fq is None or h[1] >= 2))
@@ -483,10 +485,31 @@ def test_warm_runs_only_the_segment_job(spark, built_index, count_jobs):
             reader.close(spark)
 
 
+def test_cold_reader_lists_segments_once(spark, small_corpus, count_jobs,
+                                         tmp_path):
+    """On an index with more term_bucket partitions than Spark lists on the
+    driver (the default 64 buckets; above 32 a listing is a Spark job), a
+    reader lists its segments once: after its first query, every
+    bm25_topk runs one Spark job over call + collect."""
+    from solr_spark.config import IndexConfig
+    from solr_spark.indexing import build_index
+
+    idx = str(tmp_path / "idx64")
+    build_index(spark, small_corpus.limit(200), idx,
+                IndexConfig(range_shift=8, num_term_buckets=64),
+                input_token="synth-200-b64")
+    reader = IndexReader.open(idx)
+    bm25_topk(spark, reader, "error", k=5).collect()
+    for q in ("error timeout", "connect retry", "timeout"):
+        df, call_jobs = count_jobs(lambda: bm25_topk(spark, reader, q, k=5))
+        rows, run_jobs = count_jobs(df.collect)
+        assert rows and call_jobs + run_jobs == 1
+
+
 def test_winner_keys_fail_loudly_when_missing(built_index, oracle):
-    """The kernel resolves its winners' (conv_id, turn_idx) from the forward
-    table row-aligned, and a winner without a forward row raises rather
-    than dropping out of the result."""
+    """The ranking tail resolves its winners' (conv_id, turn_idx) from the
+    forward table row-aligned, and a winner without a forward row raises
+    rather than dropping out of the result."""
     import numpy as np
 
     from solr_spark.query.bm25 import _doc_keys

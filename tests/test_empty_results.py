@@ -1,7 +1,7 @@
 """An empty result from any query front-end is an empty local relation:
 collecting it runs no Spark job (no Python RDD job either) and it keeps the
 front-end's schema. The relations front-ends build on the driver are local
-relations too."""
+relations too, and so is every scored front-end's ranked result."""
 
 from __future__ import annotations
 
@@ -133,3 +133,84 @@ def test_driver_built_relations_are_local(spark, built_index, front_end):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
     assert df.collect()
+
+
+def _scored_terms(spark, reader):
+    from solr_spark.query.scored import scored_topk
+    return scored_topk(spark, reader, "+error timeout -retry")
+
+
+def _scored_terms_phrase(spark, reader):
+    from solr_spark.query.scored import scored_topk
+    return scored_topk(spark, reader, 'error "error timeout"')
+
+
+def _edismax_mm(spark, reader):
+    from solr_spark.query.edismax import edismax_topk
+    return edismax_topk(spark, {"text": reader}, "error timeout retry",
+                        {"text": 1.0}, min_match=2)
+
+
+def _phrase_hit(spark, reader):
+    from solr_spark.query.phrase import phrase_topk
+    return phrase_topk(spark, reader, "error timeout")
+
+
+def _near_hit(spark, reader):
+    from solr_spark.query.phrase import near_topk
+    return near_topk(spark, reader, "error timeout", 4)
+
+
+def _span_hit(spark, reader):
+    from solr_spark.query.spans import SpanNear, SpanTerm, span_topk
+    return span_topk(spark, reader, SpanNear(
+        [SpanTerm("error"), SpanTerm("timeout")], 3, False))
+
+
+def _xml_constant_score(spark, reader):
+    from solr_spark.query.xmlquery import xml_query_topk
+    return xml_query_topk(
+        spark, reader, '<ConstantScoreQuery boost="2"><TermQuery '
+        'fieldName="text">timeout</TermQuery></ConstantScoreQuery>')
+
+
+def _bm25(spark, reader):
+    from solr_spark.query.bm25 import bm25_topk
+    return bm25_topk(spark, reader, "error timeout connect")
+
+
+def _bm25_tasks(spark, reader):
+    """bm25_topk spread over several kernel tasks (budget lowered for the
+    call, which runs the query)."""
+    from solr_spark.query import bm25
+    budget, bm25.POSTINGS_PER_TASK = bm25.POSTINGS_PER_TASK, 64
+    try:
+        return bm25.bm25_topk(spark, reader, "error timeout connect")
+    finally:
+        bm25.POSTINGS_PER_TASK = budget
+
+
+# the Spark jobs each call runs on the test index, its reader's parquet
+# handles already resolved
+RANKED = [(_scored_terms, 1), (_scored_terms_phrase, 8), (_edismax_mm, 4),
+          (_phrase_hit, 6), (_near_hit, 6), (_span_hit, 6),
+          (_xml_constant_score, 1), (_bm25, 1), (_bm25_tasks, 1)]
+
+
+@pytest.mark.parametrize("front_end, jobs", RANKED,
+                         ids=[f.__name__.lstrip("_") for f, _ in RANKED])
+def test_ranked_result_is_local(spark, built_index, count_jobs, front_end,
+                                jobs):
+    """A scored front-end ranks through bm25.rank_topk: its jobs run inside
+    the call, its result is a local relation of the ranked schema, and
+    collecting it runs no job."""
+    index_dir, cfg, _ = built_index
+    reader = IndexReader.open(index_dir, cfg)
+    front_end(spark, reader)
+    df, call_jobs = count_jobs(lambda: front_end(spark, reader))
+    rows, run_jobs = count_jobs(df.collect)
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == \
+        "LocalRelation"
+    assert rows and df.columns == TOPK
+    assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
+    assert (call_jobs, run_jobs) == (jobs, 0)

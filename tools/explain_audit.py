@@ -172,14 +172,16 @@ def main() -> None:
         assert n_exchanges == 1, f"expected 1 wide exchange, found {n_exchanges}"
 
         # 6. edismax: dismax/mm combine is hash aggregation (map-side partial),
-        # never a cartesian product; phrase boost joins by docid
+        # never a cartesian product; phrase boost joins by docid. The plan
+        # is the top-k scan the call collects (rank_topk's TakeOrdered job)
         from solr_spark.query.edismax import edismax_topk
 
-        ed = edismax_topk(spark, {"text": reader}, "error timeout",
-                          {"text": 1.0}, k=5, tie=0.2, pf={"text": 1.0})
+        _, escans = collected_scans(lambda: edismax_topk(
+            spark, {"text": reader}, "error timeout", {"text": 1.0}, k=5,
+            tie=0.2, pf={"text": 1.0}))
         checks.append((
-            "edismax hash-aggregated dismax", plan_of(ed),
-            ["HashAggregate"], ["CartesianProduct"]))
+            "edismax hash-aggregated dismax", escans[-1],
+            ["HashAggregate", "TakeOrderedAndProject"], ["CartesianProduct"]))
 
         # 6b. fuzzy expansion: the length band is a pushed plain-column
         # filter on the (length-clustered) dictionary scan — no full
@@ -231,40 +233,41 @@ def main() -> None:
             ["Exchange", *PYTHON_NODES]))
 
         # 6e. distributed WAND plan (the per-task postings budget lowered so
-        # this small index spreads over several kernel tasks): ONE exchange
-        # on range_id feeds the scoring kernel, the query's only Python
-        # node; the per-range bound, the norms and the winners' (conv_id,
-        # turn_idx) are the kernel's own work, so no Window, no norms
-        # broadcast, no doc-map join, no broadcast at all. The keyed
-        # candidates reach the rank aggregate through one single-partition
-        # exchange. Then the fq variant: the fq bitmaps are exchanged into
-        # the same partitions, so the join adds no exchange and nothing
-        # re-shuffles to the default count
+        # this small index spreads over several kernel tasks), read from the
+        # scan the call collects: ONE exchange on range_id feeds the scoring
+        # kernel, the query's only Python node; the per-range bound and the
+        # norms are the kernel's own work, and the winners' (conv_id,
+        # turn_idx) are read on the driver after the collect, so no Window,
+        # no norms broadcast, no doc-map join, no broadcast at all. The
+        # (docid, score) candidates reach the driver through one
+        # TakeOrderedAndProject. Then the fq variant: the fq bitmaps are
+        # exchanged into the same partitions, so the join adds no exchange
+        # and nothing re-shuffles to the default count
         from solr_spark.query import bm25 as _bm25
 
         budget = _bm25.POSTINGS_PER_TASK
         _bm25.POSTINGS_PER_TASK = 1
         try:
-            pw = plan_of(bm25_topk(spark, reader, "error timeout", k=5))
-            p6 = plan_of(bm25_topk(spark, reader, "error timeout", k=5,
-                                   filters=["role:assistant"]))
+            _, (pw,) = collected_scans(
+                lambda: bm25_topk(spark, reader, "error timeout", k=5))
+            _, (p6,) = collected_scans(lambda: bm25_topk(
+                spark, reader, "error timeout", k=5,
+                filters=["role:assistant"]))
         finally:
             _bm25.POSTINGS_PER_TASK = budget
         n_python = sum(n in PYTHON_NODES
                        for n in re.findall(r"^\(\d+\) (\w+)", pw, re.M))
         checks.append((
             "distributed WAND plan: one range_id exchange into the kernel, "
-            "one Python node, no Window, no norms broadcast, no doc-map "
-            "join or broadcast",
-            pw, ["REPARTITION_BY_NUM", "MapInPandas", "SinglePartition"],
+            "one Python node, top-k by TakeOrderedAndProject, no Window, no "
+            "norms broadcast, no doc-map join or broadcast",
+            pw, ["REPARTITION_BY_NUM", "MapInPandas", "TakeOrderedAndProject"],
             ["Window", "norm_bytes", "BroadcastExchange", "Join",
              "analyzed"]))
         dx = [(range_parts(p), o) for p, o in exchanges(pw)]
-        assert len(dx) == 2 and dx[0][1] == "REPARTITION_BY_NUM" \
-            and (dx[0][0] or 0) > 1 \
-            and dx[1] == (1, "ENSURE_REQUIREMENTS"), \
-            f"expected one range_id exchange into >1 kernel tasks and the " \
-            f"rank exchange, found {dx}"
+        assert len(dx) == 1 and dx[0][1] == "REPARTITION_BY_NUM" \
+            and (dx[0][0] or 0) > 1, \
+            f"expected one range_id exchange into >1 kernel tasks, found {dx}"
         assert n_python == 1, f"expected 1 Python node, found {n_python}"
 
         fx = [(range_parts(p), o) for p, o in exchanges(p6)
@@ -272,7 +275,8 @@ def main() -> None:
         checks.append((
             "fq WAND plan: one range_id exchange into the kernel, bitmaps "
             "co-partitioned, no join exchange, no broadcast",
-            p6, ["ShuffledHashJoin", "REPARTITION_BY_NUM", "filter_bits"],
+            p6, ["ShuffledHashJoin", "REPARTITION_BY_NUM", "filter_bits",
+                 "TakeOrderedAndProject"],
             ["BroadcastExchange"]))
         assert len(fx) == 2 and len(set(fx)) == 1 \
             and fx[0][1] == "REPARTITION_BY_NUM", \
