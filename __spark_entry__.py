@@ -1764,7 +1764,7 @@ def _ft07_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from solr_spark.query.phrase import phrase_topk
 
     reader = _ft_index(spark, sf_dir)
-    topk = phrase_topk(spark, reader, _FT_PHRASE, k=20, prefilter=True)
+    topk = phrase_topk(spark, reader, _FT_PHRASE, k=20)
     return topk.select(_doc_id(), _dround("score", 4).alias("score"))
 
 
@@ -5972,7 +5972,7 @@ def _ft40_edismax_ps(spark: SparkSession, sf_dir: str) -> DataFrame:
     PhraseQuery): same qf/tie/pf request as ft11 but the pf boost counts
     ordered sloppy chains weighted 1/(1+matchLength) within slop=2 instead
     of exact adjacency, so near-miss phrase docs pick up a (smaller) boost
-    too. Kernel: query/phrase.py::_sloppy_phrase_kernel via
+    too. Matcher: query/phrase.py::_ordered_chains via
     edismax._phrase_boosts(slop=)."""
     from solr_spark.query.edismax import edismax_topk
 

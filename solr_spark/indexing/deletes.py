@@ -51,16 +51,13 @@ def delete_by_terms(spark: SparkSession, reader, terms: list[str]) -> int:
     """deleteByQuery for a term conjunction: tombstone every doc containing
     ALL `terms` (analyzed), resolved through the inverted index."""
     from solr_spark.analysis import analyze_text
-    from solr_spark.query.bm25 import term_docs
+    from solr_spark.query.bm25 import clause_docids
 
-    analyzed = [t for raw in terms for t in analyze_text(raw, reader.config)]
+    analyzed = {t for raw in terms for t in analyze_text(raw, reader.config)}
     if not analyzed:
         return 0
-    cand = term_docs(spark, reader, analyzed[0], apply_deletes=False)
-    for t in sorted(set(analyzed[1:])):
-        cand = cand.join(term_docs(spark, reader, t, apply_deletes=False),
-                         "docid", "left_semi")
-    return delete_docids(spark, reader.index_dir, cand)
+    return delete_docids(spark, reader.index_dir, clause_docids(
+        spark, reader, [[t] for t in sorted(analyzed)], apply_deletes=False))
 
 
 def deletes_df(spark: SparkSession, index_dir: str) -> DataFrame | None:

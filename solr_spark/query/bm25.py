@@ -138,8 +138,8 @@ class IndexReader:
         """read() once per session and path list. Resolving a parquet handle
         lists its files (a Spark job above 32 partition directories, as a
         64-bucket segment has) and may infer its schema (another job), so
-        the reader reuses it until a new analyzed batch or live segment
-        changes the path list."""
+        the reader reuses it until a new analyzed batch, live segment or
+        dictionary rewrite changes the path list."""
         key = (spark, tuple(paths))
         hit = self._handles.get(name)
         if hit is None or hit[0] != key:
@@ -178,8 +178,19 @@ class IndexReader:
             os.path.join(self.index_dir, "norms")))
 
     def dictionary(self, spark: SparkSession) -> DataFrame:
-        return self._pinned("dictionary", lambda: spark.read.parquet(
-            os.path.join(self.index_dir, "dictionary")))
+        """DataFrame(term, df, cf, max_tf, tlen, term_bucket). The handle is
+        keyed by the dictionary's part files: a rewrite (add_documents,
+        merge) writes new part names, so it resolves a new handle. The
+        fixed schema skips schema inference, and basePath keeps
+        term_bucket a column."""
+        root = os.path.join(self.index_dir, "dictionary")
+        parts = sorted(glob.glob(os.path.join(root, "term_bucket=*",
+                                              "*.parquet")))
+        return self._pinned("dictionary", lambda: self._handle(
+            "dictionary", spark, parts, lambda: spark.read.schema(
+                "term string, df long, cf long, max_tf int, tlen int, "
+                "term_bucket int").option("basePath", root)
+            .parquet(*(parts or [root]))))
 
     def term_stats(self, terms) -> dict[str, tuple[int, int]]:
         """term -> (df, cf) for the dictionary terms among `terms` (absent
@@ -733,6 +744,35 @@ def terms_postings(spark: SparkSession, reader: IndexReader,
         if dels is not None:
             post = post.join(dels, "docid", "left_anti")
     return post
+
+
+def clause_docids(spark: SparkSession, reader: IndexReader,
+                  groups: list[list[str]], min_match: int | None = None,
+                  apply_deletes: bool = True) -> DataFrame:
+    """The docs that hold a term of at least `min_match` of `groups`
+    (default: of every group) as DataFrame(docid), one row per doc — the
+    candidate DocSet of the positional queries, the term match set of the
+    field-sorted path and the delete-by-terms set, resolved from the
+    postings alone.
+
+    A group is a clause whose member terms OR together (a word's
+    expansions, a span OR). One term_bucket-pruned posting scan reads every
+    group's terms; its rows join a small (clause, term) local relation, and
+    one aggregate counts distinct clauses per doc. Tombstoned docs are
+    dropped unless apply_deletes=False (see terms_postings)."""
+    pairs = [(i, t) for i, g in enumerate(groups) for t in sorted(set(g))]
+    if not pairs:
+        return empty_df(spark, "docid long")
+    post = terms_postings(spark, reader, [t for _, t in pairs], apply_deletes)
+    cmap = local_df(spark, pa.table(list(zip(*pairs)),
+                                    names=["clause", "term"]),
+                    "clause int, term string")
+    need = len(groups) if min_match is None else min_match
+    return (post.join(F.broadcast(cmap), "term")
+            .groupBy("docid")
+            .agg(F.count_distinct("clause").alias("__nc"))
+            .where(F.col("__nc") >= need)
+            .select("docid"))
 
 
 def term_docs(spark: SparkSession, reader: IndexReader, term: str,

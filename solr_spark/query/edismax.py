@@ -196,10 +196,10 @@ def _phrase_boosts(
     slop > 0 is the edismax `ps` family (ps/ps2/ps3 — phrase slop on the
     boost phrases, ExtendedDismaxQParser.addShingledPhraseQueries wiring the
     slop into each PhraseQuery): phrase frequency comes from the ordered
-    sloppy kernel (1/(1+matchLength) chains, query/phrase.py) instead of the
-    exact-adjacency count, same BM25 combination above it."""
-    from solr_spark.query.phrase import (_sloppy_phrase_kernel,
-                                         phrase_count_expr)
+    sloppy matcher (1/(1+matchLength) chains, query/phrase.py) instead of
+    the exact-adjacency count, same BM25 combination above it. Both paths
+    score with the norms dl (doc_lengths), as the term clauses do."""
+    from solr_spark.query.phrase import phrase_count_expr, phrase_matches
 
     words = [w for w in query_text.split() if w]
     if ngram is None:
@@ -223,25 +223,16 @@ def _phrase_boosts(
         idf_sum = sum(idfs[t] for t in terms)
         k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
         if slop > 0:
-            # inverted-index prefilter ahead of the Arrow kernel, as
-            # phrase_topk: only docs containing ALL phrase terms reach Python
-            from solr_spark.query.bm25 import term_docs
-
-            src = reader.forward(spark).select("docid", "dl", "toks")
-            cand = term_docs(spark, reader, terms[0])
-            for t in sorted(set(terms[1:])):
-                cand = cand.join(term_docs(spark, reader, t),
-                                 "docid", "left_semi")
-            matched = src.join(cand, "docid", "left_semi").mapInArrow(
-                _sloppy_phrase_kernel(terms, slop),
-                "docid long, tf double, dl long"
-            ).withColumnRenamed("tf", "pfreq")
+            # the positional pipeline's candidates and ordered matcher
+            matched = (phrase_matches(spark, reader, terms, slop)
+                       .select("docid", F.col("tf").alias("pfreq")))
         else:
             matched = (
                 reader.forward(spark).select("docid", "toks")
                 .withColumn("pfreq", phrase_count_expr(F.col("toks"), terms))
-                .where(F.col("pfreq") > 0)
-                .join(doc_lengths(spark, reader), "docid"))
+                .where(F.col("pfreq") > 0))
+        # the norms dl, as the term clauses take
+        matched = matched.join(doc_lengths(spark, reader), "docid")
         scored = matched.select(
             "docid",
             (F.lit(weight * idf_sum) * F.col("pfreq")

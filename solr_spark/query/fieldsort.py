@@ -12,8 +12,9 @@ Spark-first restatement in two pruned scans and one join:
 
   1. The MATCH set comes from the POSTINGS (the same term_bucket-pruned,
      term-pushed scan the scoring kernels read — never a full text scan):
-     union the query terms' docids, count distinct matched terms per doc
-     for mm, anti-join prohibited (`-term`), semi-join required (`+term`).
+     union the query terms' docids, count distinct matched clauses per doc
+     for mm (bm25.clause_docids), anti-join prohibited (`-term`),
+     semi-join required (`+term`).
      Match semantics are the scored parser's (OR / min_match over term
      clauses), NOT the fq parser's conjunctive chain.
   2. fq strings compile to pushed predicates on the forward scan (the same
@@ -33,13 +34,18 @@ and left-join back; 0.0 for a match with no scoring-clause contribution.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
-from solr_spark.query.bm25 import IndexReader, terms_postings
+from solr_spark.query.bm25 import IndexReader, clause_docids, terms_postings
 from solr_spark.query.empty import local_df
+
+
+# The deepest page (offset + k rows) field_sorted_search collects to the
+# driver; deeper pages are keyset-paged (the role of Elasticsearch's
+# index.max_result_window, also 10,000 from + size)
+MAX_DEPTH = 10_000
 
 
 def parse_sort_spec(sort: str, sortable: "set[str] | None" = None
@@ -79,6 +85,10 @@ def scored_match_docids(spark: SparkSession, reader: IndexReader,
     MUST_NOT. Phrase clauses are boost-only on the scored path and do not
     change the match set there; a query of ONLY phrase clauses has no term
     match set and raises (rank it on the scored path instead).
+
+    Each clause is a bm25.clause_docids group (its analyzed terms or its
+    dictionary expansion), counted under min_match; the MUST terms'
+    postings semi-join it and the MUST_NOT terms' postings anti-join it.
     """
     from solr_spark.query.multiterm import expand_fuzzy, expand_wildcard
     from solr_spark.query.scored import parse_scored_query
@@ -103,24 +113,18 @@ def scored_match_docids(spark: SparkSession, reader: IndexReader,
         min_match = len(clause_terms)
     min_match = max(1, min(min_match or 1, len(clause_terms)))
 
-    # clause id -> member terms; a doc matches a clause if ANY member term
-    # hits (fuzzy/wildcard expansions, multi-token analyses)
-    pairs = [(i, t) for i, c in enumerate(clause_terms) for t in c]
-    all_terms = sorted({t for _, t in pairs})
-    post = terms_postings(spark, reader, all_terms).select("term", "docid")
-    cmap = local_df(spark, pa.table(list(zip(*pairs)),
-                                    names=["clause", "term"]),
-                    "clause int, term string")
-    matched = (post.join(F.broadcast(cmap), "term")
-               .groupBy("docid")
-               .agg(F.count_distinct("clause").alias("__nc"))
-               .where(F.col("__nc") >= min_match)
-               .select("docid"))
-    req = [t for b in sq.required for t in analyze_text(b, cfg)]
-    for t in req:
-        matched = matched.join(
-            post.where(F.col("term") == t).select("docid").distinct(),
-            "docid", "left_semi")
+    # a doc matches a clause if ANY member term hits (fuzzy/wildcard
+    # expansions, multi-token analyses)
+    matched = clause_docids(spark, reader, clause_terms, min_match)
+    # MUST / MUST_NOT terms filter it from a posting scan of their own (a
+    # clause_docids of them would add its clause-map broadcast job)
+    req = sorted({t for b in sq.required for t in analyze_text(b, cfg)})
+    if req:
+        post = terms_postings(spark, reader, req).select("term", "docid")
+        for t in req:
+            matched = matched.join(
+                post.where(F.col("term") == t).select("docid").distinct(),
+                "docid", "left_semi")
     prohib = sorted({t for b in sq.prohibited
                      for t in analyze_text(b, cfg)})
     if prohib:
@@ -144,10 +148,17 @@ def field_sorted_search(spark: SparkSession, reader: IndexReader,
     `filters` are classic-parser fq strings over the analyzed text + stored
     columns (the same compiler the bitmap path uses). `sort` must be field
     clauses; ordering by score IS the ranked path (bm25_topk /
-    scored_topk), not this one.
+    scored_topk), not this one. offset + k above MAX_DEPTH raises; deeper
+    pages go through operators.windows.cursor_page.
     """
     from solr_spark.query.parser import LuceneQueryParser
 
+    need = offset + k
+    if need > MAX_DEPTH:
+        raise ValueError(
+            f"offset + k = {need} exceeds fieldsort.MAX_DEPTH ({MAX_DEPTH}): "
+            "the page is collected to the driver; page deeper with a sort-key "
+            "cursor, solr_spark.operators.windows.cursor_page")
     if isinstance(filters, str):
         filters = [filters]
     fwd = reader.forward_text(spark)
@@ -170,7 +181,6 @@ def field_sorted_search(spark: SparkSession, reader: IndexReader,
 
     sort_cols = [F.col(n).asc() if asc else F.col(n).desc()
                  for n, asc in spec] + [F.col("docid").asc()]
-    need = offset + k
     sort_fields = [n for n, _ in spec if n not in
                    ("conv_id", "turn_idx", "docid")]
     keep = ["conv_id", "turn_idx", "docid"] + sort_fields

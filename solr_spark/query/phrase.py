@@ -1,35 +1,49 @@
-"""Exact phrase queries over the analyzed forward index.
+"""Positional queries over the analyzed forward index: exact and sloppy
+phrases, near, and the one pipeline every positional query runs through
+(the span family, query/spans.py, included).
 
-Reference semantics: Lucene PhraseQuery (slop=0) via the classic parser's quoted
-syntax (solr/core/src/java/org/apache/solr/parser/QueryParser.jj — `"a b"`),
-scored like a term whose tf is the PHRASE frequency (number of exact occurrences
-of the analyzed token sequence) and whose df is the count of documents containing
-the phrase.
+Reference semantics: Lucene PhraseQuery via the classic parser's quoted
+syntax (solr/core/src/java/org/apache/solr/parser/QueryParser.jj — `"a b"`,
+`"a b"~n`), scored like a term whose tf is the PHRASE frequency and whose df
+is the count of documents containing the phrase; the surround/complexphrase
+parsers lower to span queries that Lucene runs through the same
+positions-over-candidates matcher (SpanWeight).
 
-Index shape trade-off (deliberate): the reference stores per-term positions in
-the postings and intersects position lists. Our posting rows omit positions —
-instead the analyzed forward index (`toks`: space-joined analyzed tokens) makes a
-phrase a token-position slice comparison, evaluated JVM-side by
-split/sequence/filter/slice expressions (codegen, no Python), counting EVERY
-start position — overlapping and adjacent occurrences included, exactly like
-Lucene's ExactPhraseMatcher ('a a a' contains "a a" twice). The phrase scan is
-column-pruned to (docid, dl, toks) and is embarrassingly parallel; at 100 TB,
-candidate pre-filtering via the inverted index (AND of the phrase's terms over
-postings, then the positional verify on the survivors) bounds the scan —
-`prefilter=True` wires that path.
+Index shape trade-off (deliberate): the reference stores per-term positions
+in the postings and intersects position lists. Our posting rows omit
+positions — instead the analyzed forward index (`toks`: space-joined analyzed
+tokens) gives every candidate doc's positions. A positional query is one
+pipeline in three parts:
 
-Scoring: BM25 with tf = phrase_freq, df = phrase document frequency, exact
-(un-quantized) dl — the phrase df is a query-time quantity the reference also
-computes on the fly (it has no per-phrase statistics either).
+  1. Candidate DocSet — `bm25.clause_docids`: one term_bucket-pruned posting
+     scan over all of the query's terms keeps the live docs that hold a term
+     of every clause group (each phrase word; a span query's CNF groups,
+     spans._required_groups). Only those docs' forward rows
+     (docid, dl, toks) reach the matcher. A query of one group skips it:
+     its matcher's own occurrence test is the group test.
+  2. Occurrence extractor — `occurrence_matches`: one mapInArrow driver
+     splits each batch's token strings once in Arrow (split_pattern /
+     index_in) into flat (code, row, pos) occurrence arrays and hands them
+     to the query's matcher: ordered sloppy chains, Lucene's
+     SloppyPhraseMatcher, the minimal covering window, or span_eval. The
+     exact phrase (slop 0) needs no matcher: a JVM slice comparison counts
+     it (`phrase_count_expr`), so no Python runs.
+  3. Scoring tail — `score_matches`: query-time df = the number of matching
+     docs (the reference has no per-phrase statistics either), BM25 with
+     tf = the matcher's frequency and exact (un-quantized) dl, ranked by
+     bm25.rank_topk. The match set is persisted for its count and its
+     ranking, so the forward scan and the matcher run once per query.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
-from solr_spark.query.bm25 import RANKED_SCHEMA, IndexReader, _idf, rank_topk
+from solr_spark.query.bm25 import (RANKED_SCHEMA, IndexReader, _idf,
+                                   clause_docids, rank_topk)
 from solr_spark.query.empty import empty_df
 
 
@@ -52,85 +66,168 @@ def phrase_count_expr(toks_col, terms: list[str]):
     return F.when(F.size(arr) >= n, cnt).otherwise(F.lit(0))
 
 
-def _sloppy_phrase_kernel(terms: list[str], slop: int):
-    """Vectorized sloppy-phrase-frequency kernel (mapInArrow over
-    (docid, dl, toks)).
+# ------------------------------------------------------------------ pipeline
 
-    Semantics: ORDERED matches only. For each occurrence p1 of terms[0], the
-    greedy chain takes the first occurrence of each subsequent term strictly
-    after the previous one; matchLength = p_n - p_1 - (n-1); a chain with
-    matchLength <= slop contributes 1/(1 + matchLength) to the doc's sloppy
-    frequency — Lucene's SloppyPhraseMatcher weight formula
-    (parser/QueryParser.jj `"a b"~2`). Documented deviation: Lucene also
-    admits REVERSED alignments once slop >= 2 ('b a' for "a b"); this kernel
-    is ordered-only (the surround/W-operator reading), asserted by the pytest
-    conformance vectors.
+def candidate_rows(spark: SparkSession, reader: IndexReader,
+                   groups: list[list[str]]) -> DataFrame:
+    """The forward rows (docid, dl, toks) of the live docs holding a term of
+    every group — the candidates a positional matcher verifies.
 
-    Everything is numpy: occurrences located via Arrow index_in, chains
-    advanced with one searchsorted per phrase position, per-doc sums via
-    reduceat. Per-row stride isolation makes cross-doc chains fail slop.
-    """
-    import numpy as np
+    Only an intersection earns its posting scan and broadcast: the forward
+    scan is not pruned by docid either way, and with one group the
+    matcher's own occurrence test is the group test, so one group reads the
+    live forward rows."""
+    fwd = reader.forward(spark).select("docid", "dl", "toks")
+    if len(groups) > 1:
+        return fwd.join(clause_docids(spark, reader, groups), "docid",
+                        "left_semi")
+    from solr_spark.indexing.deletes import deletes_df
 
-    n_terms = len(terms)
-    uniq_terms = list(dict.fromkeys(terms))  # repeated terms share one code
-    tcode = [uniq_terms.index(t) for t in terms]
+    dels = deletes_df(spark, reader.index_dir)
+    return fwd if dels is None else fwd.join(dels, "docid", "left_anti")
 
-    def sloppy_iter(batches):
+
+def occurrence_matches(cand: DataFrame, terms: list[str],
+                       match) -> DataFrame:
+    """The one occurrence extractor of the positional kernels: candidate
+    rows (docid, dl, toks) -> DataFrame(docid, tf, dl) of the docs `match`
+    accepts.
+
+    Each Arrow batch is split once (split_pattern / index_in over the whole
+    batch) into the occurrences of `terms`: flat arrays of code (index into
+    `terms`), row and pos, ordered by (row, pos). `match(code, row, pos,
+    width)` — width the batch's longest row in tokens — returns the matching
+    rows (ascending) and their tf."""
+    def occurrences_iter(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
         out = pa.schema([("docid", pa.int64()), ("tf", pa.float64()),
                          ("dl", pa.int64())])
-        term_arr = pa.array(uniq_terms)
-        inf = np.iinfo(np.int64).max // 4
+        term_arr = pa.array(terms)
         for b in batches:
             if not b.num_rows:
                 continue
-            docid = b.column("docid").to_numpy()
-            dls = b.column("dl").to_numpy()
             tok_lists = pc.split_pattern(b.column("toks"), " ")
             lens = pc.list_value_length(tok_lists).to_numpy()
-            codes = pc.fill_null(
+            code = pc.fill_null(
                 pc.index_in(pc.list_flatten(tok_lists), value_set=term_arr), -1
             ).to_numpy().astype(np.int64, copy=False)
-            row_of = np.repeat(np.arange(len(docid), dtype=np.int64), lens)
-            pos = np.arange(len(codes), dtype=np.int64) \
+            row = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
+            pos = np.arange(len(code), dtype=np.int64) \
                 - np.repeat(np.cumsum(lens) - lens, lens)
-            stride = np.int64(int(lens.max()) + slop + n_terms + 2)
-            gp = pos + row_of * stride
-            starts_mask = codes == tcode[0]
-            if not starts_mask.any():
+            occ = code >= 0
+            if not occ.any():
                 continue
-            p1 = gp[starts_mask]
-            srow = row_of[starts_mask]
-            cur = p1
-            for t in range(1, n_terms):
-                pt = gp[codes == tcode[t]]
-                if not len(pt):
-                    cur = np.full(len(p1), inf, dtype=np.int64)
-                    break
-                idx = np.searchsorted(pt, cur, side="right")
-                cur = np.where(idx < len(pt),
-                               pt[np.minimum(idx, len(pt) - 1)], inf)
-            ml = cur - p1 - (n_terms - 1)
-            ok = ml <= slop
-            if not ok.any():
-                continue
-            w = np.zeros(len(p1), dtype=np.float64)
-            w[ok] = 1.0 / (1.0 + ml[ok])
-            gstart = np.concatenate(
-                ([0], np.flatnonzero(srow[1:] != srow[:-1]) + 1))
-            sfreq = np.add.reduceat(w, gstart)
-            rows = srow[gstart]
-            hit = sfreq > 0
-            if hit.any():
-                hr = rows[hit]
+            rows, tf = match(code[occ], row[occ], pos[occ], int(lens.max()))
+            if len(rows):
+                rows = np.asarray(rows, dtype=np.int64)
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(docid[hr]), pa.array(sfreq[hit]),
-                     pa.array(dls[hr].astype(np.int64))], schema=out)
+                    [pa.array(b.column("docid").to_numpy()[rows]),
+                     pa.array(np.asarray(tf, dtype=np.float64)),
+                     pa.array(b.column("dl").to_numpy()[rows]
+                              .astype(np.int64))], schema=out)
 
-    return sloppy_iter
+    return cand.mapInArrow(occurrences_iter, "docid long, tf double, dl long")
+
+
+def per_doc(freq):
+    """A matcher from a per-document frequency `freq(code, pos)` over one
+    doc's occurrences (0 = no match) — for the matchers that are sequential
+    per document in the reference too (Lucene's sloppy matcher, span_eval).
+    """
+    def match(code, row, pos, width):
+        starts = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
+        ends = np.r_[starts[1:], len(row)]
+        rows, tfs = [], []
+        for lo, hi in zip(starts, ends):
+            f = freq(code[lo:hi], pos[lo:hi])
+            if f:
+                rows.append(row[lo])
+                tfs.append(f)
+        return rows, tfs
+
+    return match
+
+
+def score_matches(spark: SparkSession, reader: IndexReader,
+                  matched: DataFrame, k: int | None) -> DataFrame:
+    """The scoring tail of every positional query: matches (docid, tf, dl)
+    -> BM25 with query-time df = the number of matching docs, tf as given
+    and exact dl, ranked by bm25.rank_topk into a local relation.
+
+    The match set is persisted for its count and its ranking and released
+    once the eager rank_topk returns, so the forward scan and the matcher
+    run once. k=None returns the FULL unranked match set as a lazy
+    (docid, score) DataFrame — the boost-clause feed that joins scores onto
+    another query's candidates (no global sort/limit funnel); only its count
+    runs here."""
+    if k is not None:
+        matched = matched.persist()
+    try:
+        df = matched.count()
+        if df == 0:
+            return empty_df(spark, RANKED_SCHEMA)
+        cfg, tf = reader.config, F.col("tf")
+        norm = 1.0 - cfg.b + cfg.b * F.col("dl") / F.lit(reader.avgdl)
+        scored = matched.select("docid", (
+            F.lit(_idf(reader.n_docs, df)) * tf
+            / (tf + F.lit(cfg.k1) * norm)).alias("score"))
+        if k is None:
+            return scored
+        return rank_topk(spark, reader, scored, k)
+    finally:
+        if k is not None:
+            matched.unpersist()
+
+
+# ------------------------------------------------------------------ matchers
+
+def _ordered_chains(tcode: list[int], slop: int):
+    """Ordered sloppy-phrase frequency (tcode: each phrase position's code).
+
+    For each occurrence p1 of the first term, the greedy chain takes the
+    first occurrence of each subsequent term strictly after the previous
+    one; matchLength = p_n - p_1 - (n-1); a chain with matchLength <= slop
+    contributes 1/(1 + matchLength) to the doc's sloppy frequency — Lucene's
+    SloppyPhraseMatcher weight formula. Documented deviation: Lucene also
+    admits REVERSED alignments once slop >= 2 ('b a' for "a b"); this
+    matcher is ordered-only (the surround/W-operator reading), asserted by
+    the pytest conformance vectors; `lucene_parity` selects the reference
+    matcher.
+
+    All numpy: chains advance with one searchsorted per phrase position,
+    per-doc sums via reduceat. Positions are offset per row by a stride
+    longer than any row plus the slop, so cross-doc chains fail the slop."""
+    n_terms = len(tcode)
+
+    def match(code, row, pos, width):
+        inf = np.iinfo(np.int64).max // 4
+        gp = pos + row * np.int64(width + slop + n_terms + 2)
+        first = code == tcode[0]
+        p1, srow = gp[first], row[first]
+        if not len(p1):
+            return (), ()
+        cur = p1
+        for t in tcode[1:]:
+            pt = gp[code == t]
+            if not len(pt):
+                return (), ()
+            idx = np.searchsorted(pt, cur, side="right")
+            cur = np.where(idx < len(pt),
+                           pt[np.minimum(idx, len(pt) - 1)], inf)
+        ml = cur - p1 - (n_terms - 1)
+        ok = ml <= slop
+        if not ok.any():
+            return (), ()
+        w = np.zeros(len(p1), dtype=np.float64)
+        w[ok] = 1.0 / (1.0 + ml[ok])
+        gstart = np.flatnonzero(np.r_[True, srow[1:] != srow[:-1]])
+        sfreq = np.add.reduceat(w, gstart)
+        hit = sfreq > 0
+        return srow[gstart][hit], sfreq[hit]
+
+    return match
 
 
 def lucene_sloppy_freq(pos_lists: list[list[int]], slop: int) -> float:
@@ -190,68 +287,71 @@ def lucene_sloppy_freq(pos_lists: list[list[int]], slop: int) -> float:
     return freq
 
 
-def _lucene_sloppy_kernel(terms: list[str], slop: int):
-    """mapInArrow kernel for lucene_parity sloppy phrases: Arrow-vectorized
-    occurrence extraction (split_pattern/index_in over the whole batch), then
-    the per-doc sequential matcher (`lucene_sloppy_freq`) — the matcher IS
-    sequential in the reference too; it runs only on index-prefiltered
-    candidates (docs containing ALL phrase terms), so the Python loop is over
-    the phrase's candidate set, not the corpus."""
-    import numpy as np
+def _covering_window(n_terms: int, window: int):
+    """Near: the docs where every term occurs within a span of <= `window`
+    positions, tf = the doc's pooled occurrence count of the query terms.
 
-    if len(set(terms)) != len(terms):
-        # Repeated-term phrases ("a b a"~2): Lucene's repeating-
-        # PhrasePositions machinery (SloppyPhraseMatcher rptGroups /
-        # advanceRpts collision resolution) is NOT reproduced here — a wrong
-        # "parity" kernel would be worse than a documented deviation. Such
-        # queries route to the ordered kernel (each repeated occurrence
-        # chains strictly forward), which is exact for slop 0-1 and diverges
-        # from Lucene only where reversed alignments involving the repeated
-        # term would match at slop >= 2. Pinned by
-        # tests/test_bm25.py-adjacent test_phrase repeated-term vectors.
-        return _sloppy_phrase_kernel(terms, slop)
+    The minimal covering window equals min over occurrences i of
+    (max over terms of the suffix-min position of that term from i) - pos_i,
+    one suffix-minimum scan per query term over the whole batch. Per-doc
+    windows are isolated by a per-row stride > the longest row + window, so
+    the scan needs no per-doc resets."""
+    def match(code, row, pos, width):
+        inf = np.iinfo(np.int64).max // 4
+        gp = pos + row * np.int64(width + window + 2)
+        cover = np.zeros(len(code), dtype=np.int64)
+        for t in range(n_terms):
+            pt = np.where(code == t, gp, inf)
+            np.maximum(cover, np.minimum.accumulate(pt[::-1])[::-1],
+                       out=cover)
+        gstart = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
+        best = np.minimum.reduceat(cover - gp, gstart)
+        counts = np.diff(np.r_[gstart, len(code)])
+        hit = best <= window
+        return row[gstart][hit], counts[hit]
 
-    def sloppy_iter(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    return match
 
-        out = pa.schema([("docid", pa.int64()), ("tf", pa.float64()),
-                         ("dl", pa.int64())])
-        term_arr = pa.array(terms)
-        for b in batches:
-            if not b.num_rows:
-                continue
-            docid = b.column("docid").to_numpy()
-            dls = b.column("dl").to_numpy()
-            tok_lists = pc.split_pattern(b.column("toks"), " ")
-            lens = pc.list_value_length(tok_lists).to_numpy()
-            codes = pc.fill_null(
-                pc.index_in(pc.list_flatten(tok_lists), value_set=term_arr), -1
-            ).to_numpy().astype(np.int64, copy=False)
-            row_of = np.repeat(np.arange(len(docid), dtype=np.int64), lens)
-            pos = np.arange(len(codes), dtype=np.int64) \
-                - np.repeat(np.cumsum(lens) - lens, lens)
-            occ = codes >= 0
-            oc, orow, opos = codes[occ], row_of[occ], pos[occ]
-            ids, tfs, odls = [], [], []
-            for r in np.unique(orow):
-                m = orow == r
-                lists = [opos[m & (oc == t)].tolist()
-                         for t in range(len(terms))]
-                if any(not ps for ps in lists):
-                    continue
-                f = lucene_sloppy_freq(lists, slop)
-                if f > 0:
-                    ids.append(docid[r])
-                    tfs.append(f)
-                    odls.append(int(dls[r]))
-            if ids:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.asarray(ids, dtype=np.int64)),
-                     pa.array(np.asarray(tfs, dtype=np.float64)),
-                     pa.array(np.asarray(odls, dtype=np.int64))], schema=out)
 
-    return sloppy_iter
+# ---------------------------------------------------------------- front-ends
+
+def phrase_matches(spark: SparkSession, reader: IndexReader,
+                   terms: list[str], slop: int = 0,
+                   lucene_parity: bool = False) -> DataFrame:
+    """(docid, tf, dl) of the live docs matching the analyzed phrase
+    `terms`: tf the exact phrase frequency (slop 0), the ordered sloppy
+    frequency, or with lucene_parity Lucene's SloppyPhraseMatcher frequency
+    (reversed alignments included at slop >= 2; see lucene_sloppy_freq)."""
+    cand = candidate_rows(spark, reader, [[t] for t in sorted(set(terms))])
+    if slop <= 0:
+        return cand.select("docid", phrase_count_expr(
+            F.col("toks"), terms).alias("tf"), "dl").where(F.col("tf") > 0)
+    uniq = list(dict.fromkeys(terms))  # repeated terms share one code
+    if lucene_parity and len(uniq) == len(terms):
+        def freq(code, pos):
+            lists = [pos[code == t].tolist() for t in range(len(terms))]
+            return lucene_sloppy_freq(lists, slop) if all(lists) else 0.0
+        match = per_doc(freq)
+    else:
+        # Repeated-term phrases ("a b a"~2) take the ordered matcher under
+        # lucene_parity too: Lucene's repeating-PhrasePositions machinery
+        # (SloppyPhraseMatcher rptGroups / advanceRpts collision resolution)
+        # is NOT reproduced — a wrong "parity" matcher would be worse than a
+        # documented deviation. Each repeated occurrence chains strictly
+        # forward, which is exact for slop 0-1 and diverges from Lucene only
+        # where reversed alignments involving the repeated term would match
+        # at slop >= 2 (pinned by the test_components repeated-term vectors).
+        match = _ordered_chains([uniq.index(t) for t in terms], slop)
+    return occurrence_matches(cand, uniq, match)
+
+
+def near_matches(spark: SparkSession, reader: IndexReader,
+                 terms: list[str], window: int) -> DataFrame:
+    """(docid, tf, dl) of the live docs where every one of the distinct
+    analyzed `terms` occurs within `window` positions (_covering_window)."""
+    cand = candidate_rows(spark, reader, [[t] for t in terms])
+    return occurrence_matches(cand, terms,
+                              _covering_window(len(terms), window))
 
 
 def phrase_topk(
@@ -259,71 +359,26 @@ def phrase_topk(
     reader: IndexReader,
     phrase_text: str,
     k: int | None = 10,
-    prefilter: bool = True,
     slop: int = 0,
     lucene_parity: bool = False,
 ) -> DataFrame:
     """Top-k documents containing the analyzed phrase (slop=0: exact; slop>0:
-    ordered sloppy matches weighted 1/(1+matchLength), see
-    _sloppy_phrase_kernel; slop>0 with lucene_parity=True: the exact Lucene
-    SloppyPhraseMatcher semantics including reversed alignments at slop>=2,
-    see lucene_sloppy_freq; repeated-term phrases route to the ordered
-    kernel with a documented deviation, see _lucene_sloppy_kernel).
+    ordered sloppy matches weighted 1/(1+matchLength), see _ordered_chains;
+    slop>0 with lucene_parity=True: the exact Lucene SloppyPhraseMatcher
+    semantics including reversed alignments at slop>=2, see
+    lucene_sloppy_freq; repeated-term phrases take the ordered matcher with
+    a documented deviation, see phrase_matches).
 
     Returns DataFrame(conv_id, turn_idx, docid, score, rank) like bm25_topk,
     ranked by bm25.rank_topk into a local relation. k=None returns the FULL
     unranked match set as (docid, score) — for boost clauses that join
-    scores onto another query's candidates (no global sort/limit funnel).
+    scores onto another query's candidates (see score_matches).
     """
-    cfg = reader.config
-    terms = analyze_text(phrase_text, cfg)
+    terms = analyze_text(phrase_text, reader.config)
     if not terms:
         return empty_df(spark, RANKED_SCHEMA)
-
-    analyzed = reader.forward(spark).select("docid", "dl", "toks")
-
-    from solr_spark.indexing.deletes import deletes_df
-
-    dels = deletes_df(spark, reader.index_dir)
-    if dels is not None:
-        analyzed = analyzed.join(dels, "docid", "left_anti")
-
-    if prefilter and len(terms) > 1:
-        # inverted-index candidate pruning: docs containing ALL phrase terms
-        from solr_spark.query.bm25 import term_docs
-
-        cand = term_docs(spark, reader, terms[0])
-        for t in sorted(set(terms[1:])):
-            cand = cand.join(term_docs(spark, reader, t), "docid", "left_semi")
-        analyzed = analyzed.join(cand, "docid", "left_semi")
-
-    if slop > 0:
-        kern = (_lucene_sloppy_kernel(terms, slop) if lucene_parity
-                else _sloppy_phrase_kernel(terms, slop))
-        matched = analyzed.mapInArrow(kern, "docid long, tf double, dl long") \
-            .withColumnRenamed("tf", "pf")
-    else:
-        matched = (analyzed
-                   .withColumn("pf", phrase_count_expr(F.col("toks"), terms))
-                   .where(F.col("pf") > 0))
-
-    stats = matched.agg(F.count(F.lit(1)).alias("df_phrase")).collect()[0]
-    df_phrase = int(stats["df_phrase"])
-    if df_phrase == 0:
-        return empty_df(spark, RANKED_SCHEMA)
-    w = _idf(reader.n_docs, df_phrase)
-    k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
-
-    scored = matched.withColumn(
-        "score",
-        F.lit(w) * F.col("pf")
-        / (F.col("pf") + F.lit(k1) * (1.0 - b + b * F.col("dl") / F.lit(avgdl))),
-    )
-    if k is None:
-        # unranked full match set (docid, score) — the boost-clause feed; no
-        # global sort/limit funnel
-        return scored.select("docid", "score")
-    return rank_topk(spark, reader, scored, k)
+    return score_matches(spark, reader, phrase_matches(
+        spark, reader, terms, slop, lucene_parity), k)
 
 
 def near_topk(
@@ -338,97 +393,14 @@ def near_topk(
 
     The surround/complexphrase family analog (reference:
     solr/core/src/java/org/apache/solr/search/SurroundQParserPlugin.java,
-    ComplexPhraseQParserPlugin.java — span queries like `3N(a, b)`). Our
-    postings store no positions; candidates are pre-filtered through the
-    inverted index (docs containing ALL terms — the cheap, selective step) and
-    positions come from the analyzed forward index, checked by a fully
-    vectorized Arrow/numpy kernel (no per-row Python): the minimal covering
-    window equals min over query-term occurrences i of
-    (max_t suffix-min-position-of-t at i) - pos_i, computed with one
-    suffix-minimum scan per query term over the whole batch's occurrence
-    stream. Scoring: BM25 over the pooled tf of the query terms (the span-near
-    scoring shape), exact dl; ranked by bm25.rank_topk (ties by docid) into
-    a local relation.
+    ComplexPhraseQParserPlugin.java — span queries like `3N(a, b)`), run
+    through the positional pipeline with the covering-window matcher
+    (near_matches). Scoring: BM25 over the pooled tf of the query terms
+    (the span-near scoring shape), exact dl; ranked by bm25.rank_topk (ties
+    by docid) into a local relation.
     """
-    import numpy as np
-
-    from solr_spark.query.bm25 import _idf, term_docs
-
-    cfg = reader.config
-    terms = sorted(set(analyze_text(query_text, cfg)))
+    terms = sorted(set(analyze_text(query_text, reader.config)))
     if not terms:
         return empty_df(spark, RANKED_SCHEMA)
-
-    analyzed = reader.forward(spark).select("docid", "dl", "toks")
-    cand = term_docs(spark, reader, terms[0])
-    for t in terms[1:]:
-        cand = cand.join(term_docs(spark, reader, t), "docid", "left_semi")
-    analyzed = analyzed.join(cand, "docid", "left_semi")
-
-    n_terms = len(terms)
-
-    def near_iter(batches):
-        # Batch-at-a-time kernel: tokenize via Arrow C++ (split_pattern /
-        # index_in), then pure numpy. Per-doc windows are isolated by offsetting
-        # positions with a per-row stride > max_dl + window, so the suffix-min
-        # scan needs no per-doc resets and cross-doc "windows" can never pass
-        # the <= window test.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        out = pa.schema([("docid", pa.int64()), ("tf", pa.int64()),
-                         ("dl", pa.int64())])
-        term_arr = pa.array(terms)
-        inf = np.iinfo(np.int64).max // 4
-        for b in batches:
-            if not b.num_rows:
-                continue
-            docid = b.column("docid").to_numpy()
-            dls = b.column("dl").to_numpy()
-            tok_lists = pc.split_pattern(b.column("toks"), " ")
-            lens = pc.list_value_length(tok_lists).to_numpy()
-            codes = pc.fill_null(
-                pc.index_in(pc.list_flatten(tok_lists), value_set=term_arr), -1
-            ).to_numpy().astype(np.int64, copy=False)
-            row_of = np.repeat(np.arange(len(docid), dtype=np.int64), lens)
-            pos = np.arange(len(codes), dtype=np.int64) \
-                - np.repeat(np.cumsum(lens) - lens, lens)
-            occ = codes >= 0
-            oc, orow = codes[occ], row_of[occ]
-            if not len(oc):
-                continue
-            stride = np.int64(int(lens.max()) + window + 2)
-            gp = pos[occ] + orow * stride
-            # covering end at occurrence i = max over terms of the suffix-min
-            # of that term's positions from i onward
-            cover = np.zeros(len(oc), dtype=np.int64)
-            for t in range(n_terms):
-                pt = np.where(oc == t, gp, inf)
-                np.maximum(cover, np.minimum.accumulate(pt[::-1])[::-1],
-                           out=cover)
-            span = cover - gp
-            gstart = np.concatenate(
-                ([0], np.flatnonzero(orow[1:] != orow[:-1]) + 1))
-            best = np.minimum.reduceat(span, gstart)
-            counts = np.diff(np.concatenate((gstart, [len(oc)])))
-            rows = orow[gstart]
-            hit = best <= window
-            if hit.any():
-                hr = rows[hit]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(docid[hr]),
-                     pa.array(counts[hit].astype(np.int64)),
-                     pa.array(dls[hr].astype(np.int64))], schema=out)
-
-    matched = analyzed.mapInArrow(near_iter, "docid long, tf long, dl long")
-    # distributed: df_near via a count (candidates are index-prefiltered, so
-    # the second pass over them is cheap), scoring/top-k stay on the cluster
-    df_near = matched.count()
-    if df_near == 0:
-        return empty_df(spark, RANKED_SCHEMA)
-    w = _idf(reader.n_docs, df_near)
-    k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
-    scored = matched.withColumn(
-        "score", F.lit(w) * F.col("tf")
-        / (F.col("tf") + F.lit(k1) * (1.0 - b + b * F.col("dl") / F.lit(avgdl))))
-    return rank_topk(spark, reader, scored, k)
+    return score_matches(spark, reader,
+                         near_matches(spark, reader, terms, window), k)

@@ -24,12 +24,15 @@ lazily and can skip some same-window alignments; the set semantics above is
 deterministic, order-free, and engine-portable (SQL-twin-checkable), with
 tf = |span set| feeding BM25 exactly like the phrase path.
 
-Scale shape: candidates are pre-filtered through the inverted index (AND of
-clause groups, OR within a group — one partition-pruned posting read per
-term), then a per-doc evaluator runs over the analyzed forward index for the
-candidate set only, batch-at-a-time over Arrow. The evaluator is pure Python
-over one doc's occurrence lists (the reference's span iterators are equally
-per-document and sequential); docs are bounded by the candidate prefilter.
+Scale shape: a span query runs through the positional pipeline of
+query/phrase.py. Its candidate DocSet is bm25.clause_docids over the
+_required_groups (AND of clause groups, OR within a group — one
+partition-pruned posting scan over every term; a one-group query reads the
+live forward rows instead); the shared occurrence
+extractor feeds span_eval, a per-doc matcher in pure Python over one doc's
+occurrence lists (the reference's span iterators are equally per-document
+and sequential), for the candidates only; the shared scoring tail ranks
+the matches, evaluating them once.
 """
 
 from __future__ import annotations
@@ -37,11 +40,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from solr_spark.analysis import analyze_text
-from solr_spark.query.bm25 import RANKED_SCHEMA, IndexReader, _idf, rank_topk
-from solr_spark.query.empty import empty_df
+from solr_spark.query.bm25 import IndexReader
+from solr_spark.query.phrase import (candidate_rows, occurrence_matches,
+                                     per_doc, score_matches)
 
 
 # ------------------------------------------------------------------------ AST
@@ -202,96 +205,27 @@ def _all_terms(node) -> set[str]:
     raise TypeError(f"not a span node: {node!r}")
 
 
-def _span_kernel(node, terms: list[str]):
-    """mapInArrow kernel: Arrow-vectorized occurrence extraction, then the
-    pure span_eval per candidate doc. tf = |span set|."""
-    import numpy as np
-
-    def it(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        out = pa.schema([("docid", pa.int64()), ("tf", pa.int64()),
-                         ("dl", pa.int64())])
-        term_arr = pa.array(terms)
-        for b in batches:
-            if not b.num_rows:
-                continue
-            docid = b.column("docid").to_numpy()
-            dls = b.column("dl").to_numpy()
-            tok_lists = pc.split_pattern(b.column("toks"), " ")
-            lens = pc.list_value_length(tok_lists).to_numpy()
-            codes = pc.fill_null(
-                pc.index_in(pc.list_flatten(tok_lists), value_set=term_arr), -1
-            ).to_numpy().astype(np.int64, copy=False)
-            row_of = np.repeat(np.arange(len(docid), dtype=np.int64), lens)
-            pos = np.arange(len(codes), dtype=np.int64) \
-                - np.repeat(np.cumsum(lens) - lens, lens)
-            occ = codes >= 0
-            oc, orow, opos = codes[occ], row_of[occ], pos[occ]
-            ids, tfs, odls = [], [], []
-            for r in np.unique(orow):
-                m = orow == r
-                positions = {terms[t]: opos[m & (oc == t)].tolist()
-                             for t in range(len(terms))}
-                spans = span_eval(node, positions)
-                if spans:
-                    ids.append(docid[r])
-                    tfs.append(len(spans))
-                    odls.append(int(dls[r]))
-            if ids:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.asarray(ids, dtype=np.int64)),
-                     pa.array(np.asarray(tfs, dtype=np.int64)),
-                     pa.array(np.asarray(odls, dtype=np.int64))], schema=out)
-
-    return it
-
-
 def span_matches(spark: SparkSession, reader: IndexReader,
                  node) -> DataFrame:
-    """Evaluate a span AST over the live (delete-filtered) forward table:
-    DataFrame(docid, tf, dl), tf = |distinct span set|. Candidates are
-    index-prefiltered per _required_groups before the forward-index
-    evaluator runs. Shared by span_topk (scored path) and the XML query
-    parser's filter path (query/xmlquery.py)."""
-    from solr_spark.query.bm25 import term_docs
-
+    """Evaluate a span AST over the live forward table: DataFrame(docid, tf,
+    dl), tf = |distinct span set|. The positional pipeline (query/phrase.py)
+    with span_eval as its per-doc matcher: candidates hold a term of every
+    _required_groups group. Shared by span_topk (scored path) and the XML
+    query parser's filter path (query/xmlquery.py)."""
     terms = sorted(_all_terms(node))
-    analyzed = reader.forward(spark).select("docid", "dl", "toks")
 
-    from solr_spark.indexing.deletes import deletes_df
+    def freq(code, pos):
+        return len(span_eval(node, {terms[t]: pos[code == t].tolist()
+                                    for t in range(len(terms))}))
 
-    dels = deletes_df(spark, reader.index_dir)
-    if dels is not None:
-        analyzed = analyzed.join(dels, "docid", "left_anti")
-
-    for group in _required_groups(node):
-        cand = None
-        for t in sorted(group):
-            td = term_docs(spark, reader, t)
-            cand = td if cand is None else cand.unionByName(td).distinct()
-        if cand is not None:
-            analyzed = analyzed.join(cand, "docid", "left_semi")
-
-    return analyzed.mapInArrow(_span_kernel(node, terms),
-                               "docid long, tf long, dl long")
+    cand = candidate_rows(spark, reader, _required_groups(node))
+    return occurrence_matches(cand, terms, per_doc(freq))
 
 
 def span_topk(spark: SparkSession, reader: IndexReader, node,
               k: int = 10) -> DataFrame:
     """Top-k documents matching a span AST, BM25-scored with tf = |span set|
     and query-time df = number of matching docs (the phrase path's scoring
-    contract), ranked by bm25.rank_topk into a local relation."""
-    cfg = reader.config
-    matched = span_matches(spark, reader, node)
-    df_span = matched.count()
-    if df_span == 0:
-        return empty_df(spark, RANKED_SCHEMA)
-    w = _idf(reader.n_docs, df_span)
-    k1, b, avgdl = cfg.k1, cfg.b, reader.avgdl
-    scored = matched.withColumn(
-        "score", F.lit(w) * F.col("tf")
-        / (F.col("tf")
-           + F.lit(k1) * (1.0 - b + b * F.col("dl") / F.lit(avgdl))))
-    return rank_topk(spark, reader, scored, k)
+    tail, phrase.score_matches), ranked by bm25.rank_topk into a local
+    relation."""
+    return score_matches(spark, reader, span_matches(spark, reader, node), k)

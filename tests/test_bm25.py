@@ -506,6 +506,34 @@ def test_cold_reader_lists_segments_once(spark, small_corpus, count_jobs,
         assert rows and call_jobs + run_jobs == 1
 
 
+def test_cold_reader_resolves_dictionary_once(spark, small_corpus,
+                                              count_jobs, tmp_path):
+    """A reader without warm() resolves its dictionary handle once per
+    dictionary write: on a 64-bucket index (a listing there is a Spark
+    job) a second dictionary() call runs no job, term_bucket stays a
+    column, and an expansion after add_documents sees the new terms."""
+    from solr_spark.config import IndexConfig
+    from solr_spark.indexing import build_index
+    from solr_spark.indexing.merge import add_documents
+    from solr_spark.query.multiterm import expand_wildcard
+
+    cfg = IndexConfig(range_shift=8, num_term_buckets=64)
+    idx = str(tmp_path / "dict64")
+    build_index(spark, small_corpus.limit(100), idx, cfg,
+                input_token="synth-100-b64")
+    reader = IndexReader.open(idx)
+    assert "term_bucket" in reader.dictionary(spark).columns
+    assert count_jobs(lambda: reader.dictionary(spark))[1] == 0
+    assert expand_wildcard(spark, reader, "zebra*") == []
+
+    extra = spark.createDataFrame(
+        [("zz-new", 0, "user", "zebrafish error", None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    add_documents(spark, extra, idx, cfg)
+    assert expand_wildcard(spark, reader, "zebra*") == ["zebrafish"]
+
+
 def test_winner_keys_fail_loudly_when_missing(built_index, oracle):
     """The ranking tail resolves its winners' (conv_id, turn_idx) from the
     forward table row-aligned, and a winner without a forward row raises

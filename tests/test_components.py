@@ -438,7 +438,7 @@ def test_sloppy_phrase_lucene_parity_end_to_end(spark, tmp_path):
         assert got[cid].score == _pytest.approx(want, abs=1e-9), cid
 
     # repeated-term phrases RETURN (routed to the ordered kernel, documented
-    # deviation in _lucene_sloppy_kernel) instead of raising: ordered-kernel
+    # deviation in phrase_matches) instead of raising: ordered-kernel
     # results pinned — "merge join merge"~2 ordered chains exist in doc e
     # ("merge x join merge join": merge0->join2->merge3 ml=1 -> 0.5;
     # merge3->join4->none)

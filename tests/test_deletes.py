@@ -165,3 +165,140 @@ def test_delete_docids_direct(spark, del_index):
                   spark.createDataFrame([(0,)], "docid long"))
     assert 0 not in {r["docid"] for r in
                      term_docs(spark, reader, "error").collect()}
+
+
+# ------------------------------------------------ positional queries + tombstones
+
+def _ordered_freq(pos, terms, slop):
+    """Ordered sloppy phrase frequency: greedy forward chains from each
+    occurrence of the first term, weight 1/(1 + matchLength)."""
+    f = 0.0
+    for p1 in pos.get(terms[0], ()):
+        cur = p1
+        for t in terms[1:]:
+            cur = next((p for p in pos.get(t, ()) if p > cur), None)
+            if cur is None:
+                break
+        else:
+            ml = cur - p1 - (len(terms) - 1)
+            if ml <= slop:
+                f += 1.0 / (1.0 + ml)
+    return f
+
+
+def _near_freq(pos, terms, window):
+    """Pooled occurrence count of a doc whose minimal window covering every
+    term is <= window, else 0."""
+    occ = sorted(p for t in terms for p in pos.get(t, ()))
+    spans = [max(min(q for q in pos[t] if q >= p) for t in terms) - p
+             for p in occ
+             if all(pos.get(t) and pos[t][-1] >= p for t in terms)]
+    return len(occ) if spans and min(spans) <= window else 0
+
+
+def _positional_cases():
+    from solr_spark.query.phrase import lucene_sloppy_freq
+    from solr_spark.query.spans import SpanNear, SpanTerm, span_eval
+
+    span = SpanNear([SpanTerm("error"), SpanTerm("timeout")], 2, False)
+    exact = ["error", "timeout"]
+    return {
+        "phrase": (lambda s, r, k: _phrase(s, r, "error timeout", k),
+                   lambda pos: sum(1 for p in pos.get("error", ())
+                                   if p + 1 in pos.get("timeout", ()))),
+        "sloppy_phrase": (
+            lambda s, r, k: _phrase(s, r, "error timeout", k, slop=2),
+            lambda pos: _ordered_freq(pos, exact, 2)),
+        "lucene_parity_phrase": (
+            lambda s, r, k: _phrase(s, r, "retry error", k, slop=2,
+                                    lucene_parity=True),
+            lambda pos: lucene_sloppy_freq(
+                [pos.get("retry", []), pos.get("error", [])], 2)
+            if pos.get("retry") and pos.get("error") else 0.0),
+        "near": (lambda s, r, k: _near(s, r, "error timeout", 3, k),
+                 lambda pos: _near_freq(pos, exact, 3)),
+        "span": (lambda s, r, k: _span(s, r, span, k),
+                 lambda pos: len(span_eval(span, pos))),
+        "complex_phrase": (
+            lambda s, r, k: _complex(s, r, "serv* error", k),
+            lambda pos: len(span_eval(SpanNear(
+                [SpanTerm("server"), SpanTerm("error")], 1, True), pos))),
+    }
+
+
+def _phrase(spark, reader, text, k, **kw):
+    from solr_spark.query.phrase import phrase_topk
+    return phrase_topk(spark, reader, text, k=k, **kw)
+
+
+def _near(spark, reader, text, window, k):
+    from solr_spark.query.phrase import near_topk
+    return near_topk(spark, reader, text, window, k=k)
+
+
+def _span(spark, reader, node, k):
+    from solr_spark.query.spans import span_topk
+    return span_topk(spark, reader, node, k=k)
+
+
+def _complex(spark, reader, text, k):
+    from solr_spark.query.multiterm import complex_phrase_topk
+    return complex_phrase_topk(spark, reader, text, k=k, slop=1)
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, tmp_path_factory):
+    """A synthetic index with every other doc holding "error timeout"
+    tombstoned, plus each live doc's analyzed positions by docid."""
+    from solr_spark.analysis import analyze_text
+    from solr_spark.data import synth_transcripts_pandas
+
+    pdf = synth_transcripts_pandas(150, seed=9)
+    index_dir = str(tmp_path_factory.mktemp("tombidx"))
+    build_index(spark, spark.createDataFrame(
+        pdf, "conv_id string, turn_idx int, role string, text string, "
+             "tool string, ts timestamp"), index_dir, CFG,
+        input_token="tomb-150")
+    keys = sorted((c, int(t), x) for c, t, x in
+                  zip(pdf.conv_id, pdf.turn_idx, pdf.text))
+    toks = [analyze_text(x, CFG) for _, _, x in keys]
+    both = [d for d, ts in enumerate(toks)
+            if any(ts[i:i + 2] == ["error", "timeout"]
+                   for i in range(len(ts) - 1))]
+    dead = set(both[::2])
+    delete_docids(spark, index_dir, spark.createDataFrame(
+        [(d,) for d in sorted(dead)], "docid long"))
+    live = {}
+    for d, ts in enumerate(toks):
+        if d not in dead:
+            pos: dict[str, list[int]] = {}
+            for p, t in enumerate(ts):
+                pos.setdefault(t, []).append(p)
+            live[d] = (pos, len(ts))
+    return index_dir, dead, live
+
+
+@pytest.mark.parametrize("case", list(_positional_cases()))
+def test_positional_queries_skip_tombstones(spark, tombstoned, case):
+    """Phrase (exact, ordered-sloppy, lucene_parity), near, span and complex
+    phrase after delete_docids: no tombstoned doc surfaces, and every live
+    match scores with the query-time df of the LIVE matches (n_docs and
+    avgdl still count the deleted docs, as for terms) — equal to a Python
+    twin over the live docs."""
+    import math
+
+    run, freq = _positional_cases()[case]
+    index_dir, dead, live = tombstoned
+    reader = IndexReader.open(index_dir)
+    got = [(r.docid, r.score) for r in run(spark, reader, 1000).collect()]
+    assert got and not {d for d, _ in got} & dead
+
+    tfs = {d: (f, dl) for d, (pos, dl) in live.items() if (f := freq(pos))}
+    n, df = reader.n_docs, len(tfs)
+    idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+    want = sorted(((d, idf * tf / (tf + CFG.k1 * (
+        1 - CFG.b + CFG.b * dl / reader.avgdl))) for d, (tf, dl) in
+        tfs.items()), key=lambda x: (-x[1], x[0]))
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, s), (_, w) in zip(got, want):
+        assert s == pytest.approx(w, abs=1e-9)

@@ -299,6 +299,28 @@ def test_ps_sloppy_pf_boost(spark, tmp_path):
     assert via_ps["201"] > base["201"]
 
 
+def test_sloppy_pf_boost_never_below_exact(spark, built_index):
+    """Every doc's ps=1 pf boost is >= its ps=0 boost: each exact occurrence
+    is an ordered chain of matchLength 0, so the sloppy phrase frequency is
+    >= the exact one, and both score with the same (norms) dl. On this
+    lucene_norms index most docs' norms dl differs from their token count,
+    so a path scoring with the other dl breaks the order."""
+    from solr_spark.query.edismax import _phrase_boosts
+
+    index_dir, cfg, _ = built_index
+    reader = IndexReader.open(index_dir, cfg)
+    idfs = {"text": {t: 1.0 for t in analyze_text("error timeout", cfg)}}
+
+    def boosts(slop):
+        return {r.docid: r.boost for r in _phrase_boosts(
+            spark, {"text": reader}, {"text": 1.0}, "error timeout", idfs,
+            slop=slop).collect()}
+
+    exact, sloppy = boosts(0), boosts(1)
+    assert exact and set(exact) <= set(sloppy)
+    assert [d for d, b in exact.items() if sloppy[d] < b - 1e-12] == []
+
+
 def test_facet_percentile_metric(spark):
     """facets.percentile_metric rides inside terms_facet's single agg and
     matches the exact linear-interpolation definition."""

@@ -156,6 +156,16 @@ def _phrase_hit(spark, reader):
     return phrase_topk(spark, reader, "error timeout")
 
 
+def _sloppy_phrase_hit(spark, reader):
+    from solr_spark.query.phrase import phrase_topk
+    return phrase_topk(spark, reader, "error timeout", slop=2)
+
+
+def _complex_phrase_hit(spark, reader):
+    from solr_spark.query.multiterm import complex_phrase_topk
+    return complex_phrase_topk(spark, reader, "serv* error", slop=1)
+
+
 def _near_hit(spark, reader):
     from solr_spark.query.phrase import near_topk
     return near_topk(spark, reader, "error timeout", 4)
@@ -193,7 +203,8 @@ def _bm25_tasks(spark, reader):
 # the Spark jobs each call runs on the test index, its reader's parquet
 # handles already resolved
 RANKED = [(_scored_terms, 1), (_scored_terms_phrase, 8), (_edismax_mm, 4),
-          (_phrase_hit, 6), (_near_hit, 6), (_span_hit, 6),
+          (_phrase_hit, 4), (_sloppy_phrase_hit, 4), (_complex_phrase_hit, 5),
+          (_near_hit, 4), (_span_hit, 4),
           (_xml_constant_score, 1), (_bm25, 1), (_bm25_tasks, 1)]
 
 

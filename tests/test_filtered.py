@@ -489,6 +489,18 @@ def test_field_sort_offset_paging(spark, built):
     assert [r["rank"] for r in page2] == [6, 7, 8, 9, 10]
 
 
+def test_field_sort_deep_page_fails_loudly(spark, built):
+    """A page deeper than fieldsort.MAX_DEPTH (offset + k rows collected to
+    the driver) raises, pointing at keyset paging."""
+    from solr_spark.query.fieldsort import MAX_DEPTH, field_sorted_search
+
+    reader = IndexReader.open(built, CFG)
+    for offset, k in ((MAX_DEPTH - 9, 10), (0, MAX_DEPTH + 1)):
+        with pytest.raises(ValueError, match="cursor_page"):
+            field_sorted_search(spark, reader, Q, "ts asc", k=k,
+                                offset=offset)
+
+
 def test_field_sort_rejects_score_and_unknown_field(spark, built):
     from solr_spark.query.fieldsort import field_sorted_search
 

@@ -298,6 +298,32 @@ def main() -> None:
             plan_of(fs),
             ["TakeOrderedAndProject", "EqualTo(role,assistant)",
              "PartitionFilters: [term_bucket"], []))
+        # 40b. positional queries (phrase, near, span): the candidate DocSet
+        # (bm25.clause_docids) reads the segment postings through ONE
+        # term_bucket-pruned scan and ONE decode node, whatever the term or
+        # group count
+        from solr_spark.query.phrase import near_matches, phrase_matches
+        from solr_spark.query.spans import (SpanNear, SpanOr, SpanTerm,
+                                            span_matches)
+
+        three = ["error", "timeout", "retry"]
+        for label, pm in (
+                ("3-term phrase", phrase_matches(spark, reader, three)),
+                ("near", near_matches(spark, reader, three, 4)),
+                ("2-group span", span_matches(spark, reader, SpanNear(
+                    [SpanOr(SpanTerm("error"), SpanTerm("retry")),
+                     SpanTerm("timeout")], 2, False)))):
+            pp = plan_of(pm)
+            n_seg = len(re.findall(r"^Location: .*/segments/", pp, re.M))
+            n_dec = len(re.findall(r"^\(\d+\) MapInPandas", pp, re.M))
+            checks.append((
+                f"{label}: one segment posting scan and one decode for the "
+                "candidate DocSet", pp,
+                ["PartitionFilters: [term_bucket", "count(distinct clause"],
+                []))
+            assert (n_seg, n_dec) == (1, 1), \
+                f"{label}: expected one segment scan and one decode node, " \
+                f"found {n_seg} scans and {n_dec} decodes"
         # 41. XML query parser ({!xml}) pure-predicate boolean: term + attribute
         # + mustNot clauses FUSE into one Column over the forward scan — the
         # attribute equality pushes to parquet, no join, no exchange, no Python
