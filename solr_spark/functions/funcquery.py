@@ -15,18 +15,20 @@ real operators:
     (DateMathParser-adjacent; function-queries doc).
   * ``ord(field)`` / ``rord(field)`` — the 1-based ordinal of the doc's
     value within the field's sorted unique values (FileFloatSource /
-    OrdFieldSource). Distributed shape: rank the DISTINCT-value table (the
-    same bounded-window-over-distinct-values pattern the KS/Mann-Whitney
-    evaluators use — the window sees |vocabulary| rows, never |corpus|),
-    then join back. For near-continuous fields the distinct table
+    OrdFieldSource). Distributed shape: a running count over the sorted
+    DISTINCT-value table (evaluators.distributed_cumsum, the prefix sum
+    the KS/Mann-Whitney evaluators use: range-partitioned, no single-task
+    window), then join back. For near-continuous fields the distinct table
     approaches corpus size; ord() on those is as meaningless in the
     reference (every doc has its own ordinal) as it is expensive here.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from solr_spark.functions.evaluators import distributed_cumsum
 
 
 def scale_fq(df: DataFrame, col: str, lo: float, hi: float,
@@ -115,13 +117,13 @@ def with_ord(df: DataFrame, col: str, reverse: bool = False,
     rord = n_distinct + 1 - ord). Nulls get ordinal 0, matching the
     reference's missing-value ordinal."""
     out = out or (f"rord_{col}" if reverse else f"ord_{col}")
-    vals = df.select(col).where(F.col(col).isNotNull()).distinct()
-    w = Window.orderBy(F.col(col).asc())  # over DISTINCT values only
-    ranked = vals.withColumn("__fq_ord", F.row_number().over(w))
-    n = F.max("__fq_ord").over(Window.partitionBy())
+    vals = (df.select(col).where(F.col(col).isNotNull()).distinct()
+            .withColumn("__fq_one", F.lit(1)))
+    ordinal = F.col("cum___fq_one")  # the running count of sorted values
     if reverse:
-        ranked = ranked.withColumn("__fq_ord", n + 1 - F.col("__fq_ord"))
-    joined = df.join(ranked, col, "left")
+        ordinal = F.lit(vals.count() + 1) - ordinal
+    joined = df.join(distributed_cumsum(vals, col, ["__fq_one"]).select(
+        col, ordinal.alias("__fq_ord")), col, "left")
     return joined.withColumn(
         out, F.coalesce(F.col("__fq_ord"), F.lit(0)).cast("long")
     ).drop("__fq_ord")

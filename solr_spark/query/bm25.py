@@ -15,8 +15,8 @@ handler/component/QueryComponent.java:789,971,1402):
   plan:    on the driver, with no Spark action — `plan_query`: query analysis,
            dictionary df/cf from one term_bucket-pruned pyarrow read, per-term
            weights, as one picklable QueryPlan.
-  phase 1: term-bucket-pruned posting scan -> the range driver `_kernel_topk`
-           -> (docid, score) top-k.
+  phase 1: term-bucket-pruned posting scan -> `_kernel_topk` -> the range
+           driver `score_ranges` -> (docid, score) top-k.
   phase 2: `rank_topk`, the ranking tail of every scored Spark front-end:
            the <= k winners ordered by (score desc, docid asc), their
            (conv_id, turn_idx) read once on the driver (one pyarrow read of
@@ -44,7 +44,7 @@ from the count:
 Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
 The serving tier (query/local.py) builds the same QueryPlan through
-`plan_query` and scores every range with the same kernel, `_score_group`.
+`plan_query` and scores its ranges through the same driver, `score_ranges`.
 
 WAND mode (reference exposure: QueryComponent.java:448-452, RankQParserPlugin.java:32):
 posting-range rows carry max_tf. The kernel receives every posting row of its
@@ -65,7 +65,7 @@ import json
 import os
 from collections import Counter
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
@@ -562,6 +562,32 @@ def _merge_topk(docids: np.ndarray, scores: np.ndarray, d: np.ndarray,
     return docids, scores
 
 
+def score_ranges(plan: QueryPlan, ranges, dels: np.ndarray | None):
+    """The one range driver of both tiers, the reference's Weight applied
+    range by range into one top-score collector. ranges: (range_id, bound,
+    load) in the order to score them; load() returns `_score_group`'s
+    (postings, dls, allow). A range whose bound is strictly below the
+    running k-th score is skipped before load() runs (block-max WAND;
+    np.inf always scores). Offsets become docids, tombstones (`dels`,
+    sorted; None or empty: none) are dropped, and the top plan.k return as
+    (docids, scores) in rank order: score desc, docid asc."""
+    top_d, top_s = np.empty(0, dtype=np.int64), np.empty(0)
+    kth = -np.inf  # the running k-th score once k docs are held
+    for rid, bound, load in ranges:
+        if bound < kth:
+            continue  # provably non-competitive: never decoded
+        off, s = _score_group(plan, *load())
+        d = off + (int(rid) << plan.cfg.range_shift)
+        if dels is not None and len(dels):
+            keep = ~np.isin(d, dels)
+            d, s = d[keep], s[keep]
+        top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
+        if len(top_d) == plan.k:
+            kth = top_s.min()
+    order = np.lexsort((top_d, -top_s))
+    return top_d[order], top_s[order]
+
+
 # Postings one kernel task decodes and scores before a query spreads over
 # another: ~0.1 s of kernel work at ~9 M postings/s, about what a Python
 # task costs to schedule, so a smaller query gains nothing from a second task
@@ -603,12 +629,10 @@ def _doc_keys(index_dir: str, docids: np.ndarray) -> pd.DataFrame:
 
 
 def _ranked(spark: SparkSession, index_dir: str, docids: np.ndarray,
-            scores: np.ndarray, k: int) -> DataFrame:
-    """rank_topk's driver half, which runs no Spark job: the best k of
-    (docids, scores) by (score desc, docid asc), keyed with their (conv_id,
-    turn_idx) and numbered 1..k, as a local relation of RANKED_SCHEMA."""
-    best = np.lexsort((docids, -scores))[:k]
-    docids, scores = docids[best], scores[best]
+            scores: np.ndarray) -> DataFrame:
+    """rank_topk's driver half, which runs no Spark job: winners already in
+    rank order (score desc, docid asc), keyed with their (conv_id, turn_idx)
+    and numbered 1..n, as a local relation of RANKED_SCHEMA."""
     top = _doc_keys(index_dir, docids).assign(
         docid=docids, score=scores,
         rank=np.arange(1, len(docids) + 1, dtype=np.int32))
@@ -631,61 +655,45 @@ def rank_topk(spark: SparkSession, reader: IndexReader, cand: DataFrame,
     top = (cand.select("docid", "score")
            .orderBy(F.desc("score"), F.asc("docid")).limit(k).toArrow())
     return _ranked(spark, reader.index_dir, top["docid"].to_numpy(),
-                   top["score"].to_numpy(), k)
-
-
-def _range_norms(index_dir: str, range_ids: list[int]) -> dict[int, bytes]:
-    """range_id -> norms blob for the given ranges: one pyarrow read of the
-    index's norms parquet, filtered to those ranges."""
-    import pyarrow.dataset as ds
-
-    tbl = ds.dataset(os.path.join(index_dir, "norms")).to_table(
-        columns=["range_id", "norm_bytes"],
-        filter=ds.field("range_id").isin(range_ids))
-    return dict(zip(tbl["range_id"].to_pylist(), tbl["norm_bytes"].to_pylist()))
+                   top["score"].to_numpy())
 
 
 def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
-                 dels: np.ndarray | None, prune: bool) -> pd.DataFrame:
-    """The Spark tier's range driver, wherever its one call runs: the
-    posting rows of some docid ranges (the scan terms' rows of each, with
-    `filter_bits` under fq) -> their top-k, DataFrame(docid, score), at most
-    plan.k rows in no set order.
+                 dels: np.ndarray | None, prune: bool):
+    """The Spark tier's side of `score_ranges`, wherever its one call runs:
+    the posting rows of some docid ranges (the scan terms' rows of each,
+    with `filter_bits` under fq), grouped by range and bounded by the sum
+    of their terms' WAND bounds with `prune` (np.inf otherwise). A range's
+    rows are decoded and its filter bits unpacked only if it is scored."""
+    import pyarrow.dataset as ds
 
-    Ranges are scored in (WAND bound desc, range_id) order; with `prune` a
-    range whose bound is strictly below the running k-th score is skipped
-    without decoding. Tombstoned docids (`dels`, sorted) are dropped after
-    scoring, before top-k selection."""
     from solr_spark.query.docsets import unpack_bits
 
-    top_d = np.empty(0, dtype=np.int64)
-    top_s = np.empty(0, dtype=np.float64)
     if not len(pdf):
-        return pd.DataFrame({"docid": top_d, "score": top_s})
+        return score_ranges(plan, (), dels)
     cfg = plan.cfg
-    use_filter = "filter_bits" in pdf.columns
     pdf = pdf.sort_values(["range_id", "term"], ignore_index=True,
                           kind="stable")
     rid = pdf["range_id"].to_numpy()
     terms = pdf["term"].tolist()
     starts = np.flatnonzero(np.r_[True, rid[1:] != rid[:-1]])
     ends = np.r_[starts[1:], len(rid)]
-    order = range(len(starts))
+    bound = np.full(len(starts), np.inf)
     if prune:
-        term_bound = plan.sim.bound(
+        bound = np.add.reduceat(plan.sim.bound(
             pdf["max_tf"].to_numpy(np.float64),
             pdf["term"].map(plan.bound_weights).to_numpy(np.float64),
             pdf["term"].map(plan.bound_params).to_numpy(np.float64),
-            cfg, plan.avgdl)
-        bound = np.add.reduceat(term_bound, starts)
-        order = np.lexsort((rid[starts], -bound))
-    norms = _range_norms(index_dir, rid[starts].tolist())
-    for g in order:
-        if prune and len(top_d) == plan.k and bound[g] < top_s.min():
-            continue  # block-max skip: provably non-competitive
-        # decode only the ranges that survive the skip
-        # (range base 0: the decoded docids are offsets in the range)
-        lo, hi = starts[g], ends[g]
+            cfg, plan.avgdl), starts)
+    # the norms blobs of these ranges only, in one pyarrow read
+    nt = ds.dataset(os.path.join(index_dir, "norms")).to_table(
+        columns=["range_id", "norm_bytes"],
+        filter=ds.field("range_id").isin(rid[starts].tolist()))
+    norms = dict(zip(nt["range_id"].to_pylist(), nt["norm_bytes"].to_pylist()))
+    use_filter = "filter_bits" in pdf.columns
+
+    def load(lo: int, hi: int):
+        # range base 0: the decoded docids are offsets in the range
         off, tf, b = decode_postings(
             pdf["doc_gaps"].iloc[lo:hi], pdf["tfs"].iloc[lo:hi],
             np.zeros(hi - lo, dtype=np.int64), pdf["n_docs"].iloc[lo:hi], 0)
@@ -693,15 +701,12 @@ def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
         dls = decode_norms(norms[int(rid[lo])], cfg.lucene_norms)
         allow = unpack_bits(pdf["filter_bits"].iat[lo], len(dls)) \
             if use_filter else None
-        off, s = _score_group(
-            plan, [(terms[lo + i], off[b[i]:b[i + 1]], tf[b[i]:b[i + 1]])
-                   for i in range(hi - lo)], dls, allow)
-        d = off + (int(rid[lo]) << cfg.range_shift)
-        if dels is not None and len(d):
-            keep = ~np.isin(d, dels)
-            d, s = d[keep], s[keep]
-        top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
-    return pd.DataFrame({"docid": top_d, "score": top_s})
+        return ([(terms[lo + i], off[b[i]:b[i + 1]], tf[b[i]:b[i + 1]])
+                 for i in range(hi - lo)], dls, allow)
+
+    return score_ranges(plan, (
+        (rid[starts[g]], bound[g], partial(load, starts[g], ends[g]))
+        for g in np.lexsort((rid[starts], -bound))), dels)
 
 
 def terms_postings(spark: SparkSession, reader: IndexReader,
@@ -928,28 +933,24 @@ def bm25_topk(
     from solr_spark.indexing.deletes import deleted_array
 
     dels = deleted_array(spark, index_dir)
-    if not len(dels):
-        dels = None
     prune = mode == "wand"
 
     if n_tasks == 1:
         # the one kernel task runs where its <= k winners land: the scan is
         # collected as Arrow by a JVM-only job and scored here (no Python
         # worker starts)
-        top = _kernel_topk(plan, rows.toArrow().to_pandas(), index_dir,
-                           dels, prune)
-        return _ranked(spark, index_dir, top["docid"].to_numpy(),
-                       top["score"].to_numpy(), plan.k)
+        return _ranked(spark, index_dir, *_kernel_topk(
+            plan, rows.toArrow().to_pandas(), index_dir, dels, prune))
 
     def topk_iter(batches):
         """This partition's posting rows (the query terms' rows of its
         ranges) -> its top-k."""
         frames = [b for b in batches if len(b)]
         if frames:
-            top = _kernel_topk(plan, pd.concat(frames, ignore_index=True),
-                               index_dir, dels, prune)
-            if len(top):
-                yield top
+            d, s = _kernel_topk(plan, pd.concat(frames, ignore_index=True),
+                                index_dir, dels, prune)
+            if len(d):
+                yield pd.DataFrame({"docid": d, "score": s})
 
     return rank_topk(spark, reader, rows.mapInPandas(
         topk_iter, "docid long, score double"), plan.k)

@@ -16,11 +16,10 @@ decoding each miss in one batched `codec.decode_postings` call.
 
 Scoring is the Spark path's own core, not a copy of it: the query plan is
 `bm25.plan_query` (its dictionary lookup served by the resident dictionary)
-and every docid range is scored by `bm25._score_group` (fed from the
-postings cache), with top-k selection by `bm25._merge_topk`. Only the
-driving differs: this tier scores every range the query touches (no WAND
-skipping). Results are rank- and score-identical to `bm25_topk` (asserted in
-tests/test_local.py).
+and the range driver `bm25.score_ranges` is shared; serving supplies
+resident norms, cached postings and no bounds, so it scores every range the
+query touches (no WAND skipping). Results are rank- and score-identical to
+`bm25_topk` (asserted in tests/test_local.py).
 
 At 100-TB scale this object is one SHARD's searcher: a serving tier holds one
 LocalSearcher per index shard (the index layout is already hive-partitioned
@@ -35,6 +34,7 @@ from __future__ import annotations
 import glob
 import heapq
 import os
+from functools import partial
 
 import numpy as np
 
@@ -43,8 +43,8 @@ from solr_spark.codec.smallfloat import decode_norms
 from solr_spark.codec.varint import decode_postings
 from solr_spark.indexing.build import live_segments
 from solr_spark.indexing.deletes import deleted_array
-from solr_spark.query.bm25 import (IndexReader, _merge_topk, _score_group,
-                                   _term_buckets, plan_query)
+from solr_spark.query.bm25 import (IndexReader, _term_buckets, plan_query,
+                                   score_ranges)
 from solr_spark.query.parser import LuceneQueryParser
 
 
@@ -315,13 +315,21 @@ class LocalSearcher:
     def doc(self, docid: int) -> dict | None:
         """Stored fields for one docid (the documentCache role: served from
         the resident forward table; None for unknown/never-assigned ids)."""
-        self._load_forward()
-        tbl = self._fwd
-        idx = tbl.index[tbl["docid"] == docid]
-        if len(idx) == 0:
+        i = self._fwd_row(docid)
+        if i is None:
             return None
         return {k: (v.item() if hasattr(v, "item") else v)
-                for k, v in tbl.loc[idx[0]].items()}
+                for k, v in self._fwd.iloc[i].items()}
+
+    def _fwd_row(self, docid: int) -> int | None:
+        """The resident forward table's row of `docid` (a binary search of
+        its sorted docids), or None for an unknown id."""
+        self._load_forward()
+        docids = self._fwd["docid"].to_numpy()
+        i = int(np.searchsorted(docids, docid))
+        if i >= len(docids) or int(docids[i]) != int(docid):
+            return None
+        return i
 
     def _load_forward(self) -> None:
         if self._fwd is None:
@@ -409,12 +417,7 @@ class LocalSearcher:
         rows = np.ones(len(self._fwd), dtype=bool)
         for f in filters:
             rows &= ev.parse(f)
-        # docid-indexed dense mask (the BitDocSet): works for full indexes
-        # (docids dense) and shards (interleaved subset) alike
-        docids = self._fwd["docid"].to_numpy()
-        mask = np.zeros(int(docids.max()) + 1 if len(docids) else 0,
-                        dtype=bool)
-        mask[docids[rows]] = True
+        mask = self._docid_mask(self._fwd["docid"].to_numpy()[rows])
         if key is not None:
             self._cache_put("filter", self._filter_cache, key, mask,
                             self._filter_cache_size)
@@ -498,10 +501,15 @@ class LocalSearcher:
 
         self._load_forward()
         rows = xml_match_rows(self._fwd, xml, config=self.cfg)
-        docids = self._fwd["docid"].to_numpy()
-        mask = np.zeros(int(docids.max()) + 1 if len(docids) else 0,
-                        dtype=bool)
-        mask[docids[rows]] = True
+        return self._docid_mask(self._fwd["docid"].to_numpy()[rows])
+
+    def _docid_mask(self, docids: np.ndarray) -> np.ndarray:
+        """`docids` as the docid-indexed dense mask (the BitDocSet) over the
+        resident forward table's docid space: works for full indexes
+        (docids dense) and shards (interleaved subset) alike."""
+        fwd = self._fwd["docid"]
+        mask = np.zeros(int(fwd.max()) + 1 if len(fwd) else 0, dtype=bool)
+        mask[docids] = True
         return mask
 
     def select(self, request) -> dict:
@@ -550,10 +558,8 @@ class LocalSearcher:
         term matches or the docid is unknown."""
         import re as _re
 
-        self._load_forward()
-        docids = self._fwd["docid"].to_numpy()
-        i = int(np.searchsorted(docids, docid))
-        if i >= len(docids) or int(docids[i]) != int(docid):
+        i = self._fwd_row(docid)
+        if i is None:
             return None
         text = str(self._fwd.iloc[i]["text"])
         alts = "|".join(_re.escape(t)
@@ -582,7 +588,6 @@ class LocalSearcher:
                 f"fields {unknown} are neither result columns "
                 f"({sorted(result_keys)}) nor stored fields "
                 f"({sorted(c for c in stored if c != 'text')})")
-        docids = self._fwd["docid"].to_numpy()  # sorted by _load_forward
         out = []
         for h in docs:
             row = {}
@@ -590,8 +595,7 @@ class LocalSearcher:
                 if f in h:
                     row[f] = h[f]
                 else:
-                    i = int(np.searchsorted(docids, h["docid"]))
-                    v = self._fwd.iloc[i][f]
+                    v = self._fwd.iloc[self._fwd_row(h["docid"])][f]
                     row[f] = v.item() if hasattr(v, "item") else v
             out.append(row)
         return out
@@ -654,7 +658,6 @@ class LocalSearcher:
             raise ValueError(
                 "ordering by score is the default collector (call search "
                 "without sort); sort takes field clauses only")
-        docids = tbl["docid"].to_numpy()
         rows = self._match_rows(query_text, filter_mask, require_all,
                                 min_match)
         sub = tbl.iloc[np.flatnonzero(rows)]
@@ -664,8 +667,7 @@ class LocalSearcher:
                   .iloc[offset:offset + k]
         scores: dict[int, float] = {}
         if with_score and len(page):
-            pm = np.zeros(int(docids.max()) + 1, dtype=bool)
-            pm[page["docid"].to_numpy()] = True
+            pm = self._docid_mask(page["docid"].to_numpy())
             for r in self._scored_topk(query_text, len(page), similarity,
                                        filter_mask=pm):
                 scores[r["docid"]] = r["score"]
@@ -688,11 +690,12 @@ class LocalSearcher:
                      similarity: str | object = "bm25",
                      require_all: bool = False, min_match: int | None = None,
                      filter_mask: np.ndarray | None = None):
-        """The serving adapter of the shared scoring core: bm25_topk's plan
+        """The serving side of the shared range driver: bm25_topk's plan
         (plan_query over the resident dictionary), the query's cached
-        postings grouped by docid range, every range scored by the same
-        kernel (_score_group) — exhaustively, no WAND skipping — then the
-        top-k resolved to (conv_id, turn_idx)."""
+        postings grouped by docid range, each range loaded with its resident
+        norms and filter_mask slice and bounded by np.inf (no WAND
+        skipping), then the ranked winners resolved to (conv_id, turn_idx);
+        `search` numbers the ranks of the page it returns."""
         plan = plan_query(self.reader, self._term_stats, query_text, k=k,
                           require_all=require_all, min_match=min_match,
                           similarity=similarity)
@@ -702,29 +705,25 @@ class LocalSearcher:
         for term, lst in self._postings(plan.scan_terms).items():
             for rid, off, tf in lst:
                 ranges.setdefault(rid, []).append((term, off, tf))
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
-        for rid, postings in ranges.items():
+
+        def load(rid: int):
             dls = self._dls[rid]
-            base = rid << self.cfg.range_shift
             allow = None
             if filter_mask is not None:
+                base = rid << self.cfg.range_shift
                 allow = filter_mask[base:base + len(dls)]
                 if len(allow) < len(dls):  # filter table shorter than range
                     allow = np.pad(allow, (0, len(dls) - len(allow)))
-            off, s = _score_group(plan, postings, dls, allow)
-            d = off + base
-            if len(self._deleted):
-                live = ~np.isin(d, self._deleted)
-                d, s = d[live], s[live]
-            top_d, top_s = _merge_topk(top_d, top_s, d, s, plan.k)
-        order = np.lexsort((top_d, -top_s))
-        top_d, top_s = top_d[order].tolist(), top_s[order].tolist()
+            return ranges[rid], dls, allow
+
+        top_d, top_s = score_ranges(
+            plan, ((rid, np.inf, partial(load, rid)) for rid in ranges),
+            self._deleted)
         rows = np.searchsorted(self._docids, top_d)
         return [
             {"conv_id": str(self._conv[i]), "turn_idx": int(self._turn[i]),
-             "docid": d, "score": s, "rank": r + 1}
-            for r, (d, s, i) in enumerate(zip(top_d, top_s, rows))
+             "docid": d, "score": s}
+            for d, s, i in zip(top_d.tolist(), top_s.tolist(), rows)
         ]
 
     # ------------------------------------------------------- serving suggest

@@ -150,35 +150,34 @@ def per_doc(freq):
     return match
 
 
+def match_scores(reader: IndexReader, matched: DataFrame,
+                 df: int) -> DataFrame:
+    """BM25 of matches (docid, tf, dl) as a lazy (docid, score) DataFrame:
+    query-time df = `df`, the number of matching docs, tf as given and
+    exact dl."""
+    cfg, tf = reader.config, F.col("tf")
+    norm = 1.0 - cfg.b + cfg.b * F.col("dl") / F.lit(reader.avgdl)
+    return matched.select("docid", (
+        F.lit(_idf(reader.n_docs, df)) * tf
+        / (tf + F.lit(cfg.k1) * norm)).alias("score"))
+
+
 def score_matches(spark: SparkSession, reader: IndexReader,
-                  matched: DataFrame, k: int | None) -> DataFrame:
+                  matched: DataFrame, k: int) -> DataFrame:
     """The scoring tail of every positional query: matches (docid, tf, dl)
-    -> BM25 with query-time df = the number of matching docs, tf as given
-    and exact dl, ranked by bm25.rank_topk into a local relation.
+    -> match_scores, ranked by bm25.rank_topk into a local relation.
 
     The match set is persisted for its count and its ranking and released
     once the eager rank_topk returns, so the forward scan and the matcher
-    run once. k=None returns the FULL unranked match set as a lazy
-    (docid, score) DataFrame — the boost-clause feed that joins scores onto
-    another query's candidates (no global sort/limit funnel); only its count
-    runs here."""
-    if k is not None:
-        matched = matched.persist()
+    run once."""
+    matched = matched.persist()
     try:
         df = matched.count()
         if df == 0:
             return empty_df(spark, RANKED_SCHEMA)
-        cfg, tf = reader.config, F.col("tf")
-        norm = 1.0 - cfg.b + cfg.b * F.col("dl") / F.lit(reader.avgdl)
-        scored = matched.select("docid", (
-            F.lit(_idf(reader.n_docs, df)) * tf
-            / (tf + F.lit(cfg.k1) * norm)).alias("score"))
-        if k is None:
-            return scored
-        return rank_topk(spark, reader, scored, k)
+        return rank_topk(spark, reader, match_scores(reader, matched, df), k)
     finally:
-        if k is not None:
-            matched.unpersist()
+        matched.unpersist()
 
 
 # ------------------------------------------------------------------ matchers
@@ -358,7 +357,7 @@ def phrase_topk(
     spark: SparkSession,
     reader: IndexReader,
     phrase_text: str,
-    k: int | None = 10,
+    k: int = 10,
     slop: int = 0,
     lucene_parity: bool = False,
 ) -> DataFrame:
@@ -370,9 +369,7 @@ def phrase_topk(
     a documented deviation, see phrase_matches).
 
     Returns DataFrame(conv_id, turn_idx, docid, score, rank) like bm25_topk,
-    ranked by bm25.rank_topk into a local relation. k=None returns the FULL
-    unranked match set as (docid, score) — for boost clauses that join
-    scores onto another query's candidates (see score_matches).
+    ranked by bm25.rank_topk into a local relation.
     """
     terms = analyze_text(phrase_text, reader.config)
     if not terms:

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from itertools import chain
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,10 +109,11 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
 
     filters / filter_docids: q+fq (see bm25_topk) — compiled ONCE here and
     shared by every clause kernel; phrase-only queries score their FULL match
-    set (k=None) and intersect before ranking, so a selective filter still
-    returns k hits."""
+    set and intersect before ranking, so a selective filter still returns k
+    hits."""
     from solr_spark.query.multiterm import expand_fuzzy, expand_wildcard
-    from solr_spark.query.phrase import phrase_topk
+    from solr_spark.query.phrase import (match_scores, phrase_matches,
+                                         phrase_topk)
 
     cfg = reader.config
     if isinstance(filters, (list, tuple)) and not filters:
@@ -137,23 +139,16 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         if boost != 1.0:
             for t in analyze_text(body, cfg):
                 boosts[t] = boost
-    for body, fuzz, boost in sq.fuzzies:
-        members = expand_fuzzy(spark, reader, body.lower(), max_edits=fuzz)
+    # fuzzy then wildcard clauses, each expanded only when its turn comes
+    expanded = chain(
+        ((body, boost, expand_fuzzy(spark, reader, body.lower(),
+                                    max_edits=fuzz))
+         for body, fuzz, boost in sq.fuzzies),
+        ((body, boost, expand_wildcard(spark, reader, body.lower()))
+         for body, boost in sq.wildcards))
+    for body, boost, members in expanded:
         if not members:
             if body in required_set:  # an unmatchable MUST clause
-                return empty_df(spark, RANKED_SCHEMA)
-            continue
-        canon = members[0]
-        synonyms.setdefault(canon, []).extend(members)
-        terms_text.append(canon)
-        if body in required_set:
-            required_canon.append(canon)
-        if boost != 1.0:
-            boosts[canon] = boost
-    for body, boost in sq.wildcards:
-        members = expand_wildcard(spark, reader, body.lower())
-        if not members:
-            if body in required_set:
                 return empty_df(spark, RANKED_SCHEMA)
             continue
         canon = members[0]
@@ -188,29 +183,44 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         return ph if boost == 1.0 else ph.withColumn(
             "score", F.col("score") * F.lit(boost))
 
-    for text, slop, boost in sq.phrases:
-        if main is None:
-            # phrase-only base set. Filtered: score the FULL match set
-            # (k=None) and semi-join the DocSet BEFORE ranking — top-k of
-            # the filtered matches, not a filtered top-k.
-            if filter_docids is not None:
-                main = (phrase_topk(spark, reader, text, k=None, slop=slop)
-                        .join(filter_docids.select("docid").distinct(),
-                              "docid", "left_semi")
-                        .select("docid",
-                                (F.col("score") * F.lit(boost)).alias("score")))
-                continue
-            main = phrase_topk(spark, reader, text, k=max(k * 4, 100),
-                               slop=slop).select(
-                "docid", (F.col("score") * F.lit(boost)).alias("score"))
-            continue
-        ph = phrase_topk(spark, reader, text, k=None, slop=slop) \
-            .select("docid", (F.col("score") * F.lit(boost)).alias("pboost"))
-        main = (main.join(ph, "docid", "left")
-                .withColumn("score", F.col("score")
-                            + F.coalesce(F.col("pboost"), F.lit(0.0)))
-                .drop("pboost"))
+    held: list[DataFrame] = []
 
-    if main is None:
-        return empty_df(spark, RANKED_SCHEMA)
-    return rank_topk(spark, reader, main, k)
+    def phrase_scores(text: str, slop: int, boost: float) -> DataFrame:
+        """The phrase's full match set as lazy (docid, boosted score). The
+        set stays persisted from its count through the final ranking (the
+        forward scan and matcher run once) and is released on return."""
+        terms = analyze_text(text, cfg)
+        if not terms:
+            return empty_df(spark, "docid long, score double")
+        held.append(phrase_matches(spark, reader, terms, slop).persist())
+        return match_scores(reader, held[-1], held[-1].count()).select(
+            "docid", (F.col("score") * F.lit(boost)).alias("score"))
+
+    try:
+        for text, slop, boost in sq.phrases:
+            if main is None:
+                # phrase-only base set. Filtered: score the FULL match set
+                # and semi-join the DocSet BEFORE ranking — top-k of the
+                # filtered matches, not a filtered top-k.
+                if filter_docids is not None:
+                    main = phrase_scores(text, slop, boost).join(
+                        filter_docids.select("docid").distinct(), "docid",
+                        "left_semi")
+                    continue
+                main = phrase_topk(spark, reader, text, k=max(k * 4, 100),
+                                   slop=slop).select(
+                    "docid", (F.col("score") * F.lit(boost)).alias("score"))
+                continue
+            ph = phrase_scores(text, slop, boost) \
+                .withColumnRenamed("score", "pboost")
+            main = (main.join(ph, "docid", "left")
+                    .withColumn("score", F.col("score")
+                                + F.coalesce(F.col("pboost"), F.lit(0.0)))
+                    .drop("pboost"))
+
+        if main is None:
+            return empty_df(spark, RANKED_SCHEMA)
+        return rank_topk(spark, reader, main, k)
+    finally:
+        for matched in held:
+            matched.unpersist()

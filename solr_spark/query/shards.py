@@ -183,32 +183,28 @@ class ShardedSearcher:
 
             terms = analyze_text(p["query"],
                                  self.shards[0].reader.config)
-            n = len(self.shards)
-            shift = self.shards[0].reader.config.range_shift
             for h in docs:
-                owner = self.shards[(h["docid"] >> shift) % n]
-                snip = owner.snippet(h["docid"], terms,
-                                     window_chars=p["hl_fragsize"])
-                if snip is None and owner.doc(h["docid"]) is None:
-                    for s in self.shards:  # caller-reordered shard dirs
-                        snip = s.snippet(h["docid"], terms,
-                                         window_chars=p["hl_fragsize"])
-                        if s.doc(h["docid"]) is not None:
-                            break
-                h["snippet"] = snip
+                owner = self._owner(h["docid"])
+                h["snippet"] = owner and owner.snippet(
+                    h["docid"], terms, window_chars=p["hl_fragsize"])
         facets = {}
         if p["facet"]:
             facets = self.facets(p["facet"], query=p["query"],
                                  filters=p["filters"] or None, now=p["now"])
         return {"docs": docs, "facets": facets}
 
+    def _owner(self, docid: int) -> LocalSearcher | None:
+        """The shard holding `docid`: docids partition by range_id %
+        n_shards (shard_index), so the owner is arithmetic; shard dirs a
+        caller reordered are probed. None when no shard holds it."""
+        shift = self.shards[0].reader.config.range_shift
+        first = self.shards[(docid >> shift) % len(self.shards)]
+        return next((s for s in (first, *self.shards)
+                     if s._fwd_row(docid) is not None), None)
+
     def _project_fields(self, docs: list[dict], want: list[str]):
         """fl across shards: stored fields resolve on the hit's OWNING
-        shard — docids partition by range_id % n_shards (shard_index), so
-        the owner is arithmetic, no probing. One documentCache read per
-        hit at most."""
-        n = len(self.shards)
-        shift = self.shards[0].reader.config.range_shift
+        shard (`_owner`). One documentCache read per hit at most."""
         out = []
         for h in docs:
             stored = None
@@ -218,14 +214,8 @@ class ShardedSearcher:
                     row[f] = h[f]
                     continue
                 if stored is None:
-                    owner = self.shards[(h["docid"] >> shift) % n]
-                    stored = owner.doc(h["docid"])
-                    if stored is None:  # caller-reordered shard dirs
-                        for s in self.shards:
-                            stored = s.doc(h["docid"])
-                            if stored is not None:
-                                break
-                    stored = stored or {}
+                    owner = self._owner(h["docid"])
+                    stored = owner.doc(h["docid"]) if owner else {}
                 if f not in stored:
                     raise ValueError(
                         f"field {f!r} is neither a result column "

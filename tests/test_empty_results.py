@@ -202,7 +202,7 @@ def _bm25_tasks(spark, reader):
 
 # the Spark jobs each call runs on the test index, its reader's parquet
 # handles already resolved
-RANKED = [(_scored_terms, 1), (_scored_terms_phrase, 8), (_edismax_mm, 4),
+RANKED = [(_scored_terms, 1), (_scored_terms_phrase, 6), (_edismax_mm, 4),
           (_phrase_hit, 4), (_sloppy_phrase_hit, 4), (_complex_phrase_hit, 5),
           (_near_hit, 4), (_span_hit, 4),
           (_xml_constant_score, 1), (_bm25, 1), (_bm25_tasks, 1)]
@@ -214,11 +214,14 @@ def test_ranked_result_is_local(spark, built_index, count_jobs, front_end,
                                 jobs):
     """A scored front-end ranks through bm25.rank_topk: its jobs run inside
     the call, its result is a local relation of the ranked schema, and
-    collecting it runs no job."""
+    collecting it runs no job. Whatever the call persists it releases."""
     index_dir, cfg, _ = built_index
     reader = IndexReader.open(index_dir, cfg)
     front_end(spark, reader)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
     df, call_jobs = count_jobs(lambda: front_end(spark, reader))
+    assert set(persisted().keys()) == before
     rows, run_jobs = count_jobs(df.collect)
     assert df._jdf.queryExecution().optimizedPlan().nodeName() == \
         "LocalRelation"

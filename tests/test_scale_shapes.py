@@ -5,7 +5,10 @@
    the pin COVERAGE.md promises. A new global window in functions/ must
    either be bounded (and allowlisted here, with a reason) or rewritten on
    ``distributed_cumsum`` / ``salted_top_n``.
-2. Behavior pins for the round-4 ADVICE fixes: UniMax NULL-language budget,
+2. Source scan: one range loop — ``_score_group`` and ``_merge_topk`` are
+   each called exactly once under ``solr_spark/``, inside
+   ``bm25.score_ranges``, the range driver both tiers feed.
+3. Behavior pins for the round-4 ADVICE fixes: UniMax NULL-language budget,
    CCNet keep-dict order invariance, threshold-variant selection
    equivalence, mlt_content empty-schema typing, luke histogram exact
    power-of-two bucketing, nested bool param refs.
@@ -13,23 +16,20 @@
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-FUNCTIONS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "solr_spark", "functions")
+PACKAGE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "solr_spark")
+FUNCTIONS_DIR = os.path.join(PACKAGE_DIR, "functions")
 
 # file -> allowed count of Window.orderBy call sites whose input is a
 # BOUNDED table (never corpus-sized), each with the bounding argument:
 BOUNDED_SITES = {
-    # ord/rord rank over the DISTINCT values of one indexed field — the
-    # field's vocabulary, the same cardinality the reference's ord() holds
-    # in one FieldCache array
-    "funcquery.py": 1,
     # UniMax waterfilling over the LANGUAGE table (|languages| rows)
     "sampling.py": 1,
 }
@@ -57,6 +57,44 @@ def test_no_unpartitioned_window_in_functions():
             "through one task at corpus scale — rewrite on "
             "distributed_cumsum/salted_top_n, or add it to BOUNDED_SITES "
             "with the argument for why its input is bounded.")
+
+
+def _call_sites(names: set[str]) -> list[tuple[str, str, str]]:
+    """(callee, file, enclosing function) of every call of `names` under
+    solr_spark/ — parsed, so comments, docstrings and the definitions
+    themselves never count."""
+    sites = []
+    for dirpath, _dirs, files in os.walk(PACKAGE_DIR):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+
+            def visit(node, owner):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    owner = node.name
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    callee = fn.id if isinstance(fn, ast.Name) else \
+                        fn.attr if isinstance(fn, ast.Attribute) else None
+                    if callee in names:
+                        sites.append((callee, os.path.relpath(
+                            path, PACKAGE_DIR), owner))
+                for child in ast.iter_child_nodes(node):
+                    visit(child, owner)
+            visit(tree, None)
+    return sorted(sites)
+
+
+def test_one_range_loop():
+    """Both tiers score docid ranges through bm25.score_ranges: a second
+    caller of the range kernel or the top-k merge is a second range loop."""
+    assert _call_sites({"_score_group", "_merge_topk"}) == [
+        ("_merge_topk", os.path.join("query", "bm25.py"), "score_ranges"),
+        ("_score_group", os.path.join("query", "bm25.py"), "score_ranges"),
+    ]
 
 
 def test_unimax_null_lang_budget_not_stranded(spark):

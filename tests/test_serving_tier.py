@@ -128,3 +128,83 @@ def test_local_over_two_segments_matches_exact(spark, two_segments):
         got = [(r["docid"], round(r["score"], 10), r["rank"])
                for r in ls.search(q, k=20)]
         assert got == want and got, q
+
+
+ROLE_FQ = "role:user"
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark, tmp_path_factory):
+    """Two live segments with the role stored, tombstones in both, and an
+    oracle over the arrival-ordered docids (tombstones still count in its
+    stats, as in the engine's until merge)."""
+    from solr_spark.data import synth_transcripts_pandas
+    from solr_spark.indexing.deletes import delete_docids
+    from solr_spark.oracle import OracleIndex
+
+    base = synth_transcripts_pandas(400, seed=5)
+    batch = synth_transcripts_pandas(120, seed=6)
+    batch["conv_id"] = "nrt-" + batch["conv_id"]
+    schema = ("conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp")
+    idx = str(tmp_path_factory.mktemp("tomb_idx"))
+    build_index(spark, spark.createDataFrame(base, schema), idx, MULTI_CFG,
+                input_token="tomb-400", stored_cols=("role",))
+    add_documents(spark, spark.createDataFrame(batch, schema), idx,
+                  MULTI_CFG)
+    oracle = OracleIndex(MULTI_CFG)
+    role = {}
+    for pdf in (base, batch):
+        for c, t, r, x in sorted(zip(pdf["conv_id"], pdf["turn_idx"],
+                                     pdf["role"], pdf["text"])):
+            role[oracle.add(c, t, x)] = r
+    # the best role-filtered hits of each segment die
+    hits = [h[2] for h in oracle.topk(MULTI_QUERIES[0], k=oracle.n_docs)
+            if role[h[2]] == "user"]
+    dead = [d for d in hits if d < len(base)][:2] + \
+        [d for d in hits if d >= len(base)][:2]
+    delete_docids(spark, idx, spark.createDataFrame(
+        [(d,) for d in dead], "docid long"))
+    return idx, oracle, role, set(dead)
+
+
+def test_every_placement_agrees_on_a_tombstoned_index(
+        spark, tombstoned, tmp_path_factory, monkeypatch):
+    """The serving searcher, four shards, and bm25_topk exact and wand on
+    one kernel task and spread over several all score through the one
+    range driver, so under a role fq they return the oracle's rows in its
+    rank order, tombstones dropped."""
+    from solr_spark.query import bm25
+
+    idx, oracle, role, dead = tombstoned
+    reader = IndexReader.open(idx, MULTI_CFG)
+    assert len(live_segments(idx)) == 2
+    local = LocalSearcher(reader)
+    sharded = ShardedSearcher(shard_index(
+        spark, reader, str(tmp_path_factory.mktemp("tomb_shards")), 4))
+    k = 20
+
+    def spark_rows(q, mode):
+        return [r.asDict() for r in bm25_topk(
+            spark, reader, q, k=k, mode=mode, filters=[ROLE_FQ]).collect()]
+
+    for q in MULTI_QUERIES[:2]:
+        got = {"local": local.search(q, k=k, filters=[ROLE_FQ]),
+               "sharded": sharded.search(q, k=k, filters=[ROLE_FQ]),
+               **{mode: spark_rows(q, mode) for mode in ("exact", "wand")}}
+        with monkeypatch.context() as m:
+            m.setattr(bm25, "POSTINGS_PER_TASK", 16)
+            plan = bm25.plan_query(reader, reader.term_stats, q, k=k)
+            assert bm25._kernel_tasks(plan.postings, reader, int(
+                spark.conf.get("spark.sql.shuffle.partitions"))) > 1
+            got.update({f"{mode}_tasks": spark_rows(q, mode)
+                        for mode in ("exact", "wand")})
+        want = [(d, s) for _c, _t, d, s in oracle.topk(q, k=oracle.n_docs)
+                if role[d] == "user" and d not in dead][:k]
+        assert len(want) == k
+        for name, rows in got.items():
+            assert [r["docid"] for r in rows] == [d for d, _ in want], \
+                (q, name)
+            assert [r["rank"] for r in rows] == list(range(1, k + 1))
+            for r, (_d, s) in zip(rows, want):
+                assert r["score"] == pytest.approx(s, abs=1e-9), (q, name)
