@@ -880,27 +880,46 @@ def distributed_cumsum(per: DataFrame, order_col: str, cols: list[str],
     totals to the driver (one row per partition), exclusive offsets broadcast
     back, running sum within each partition. Exact for integer-valued counts
     (the rank-statistics inputs here). Adds `cum_<col>` per requested column.
+
+    One job collects each range partition's min key and totals. The running
+    sums re-derive a row's partition from those mins (a key belongs to the
+    last partition whose min is <= it; nulls sort first): a pure function
+    of the key, so no cache pins the sampled boundaries between the two
+    passes and nothing is left persisted.
     """
     spark = per.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
-    parted = (per.repartitionByRange(n_parts, order_col)
-                 .withColumn("__pid", F.spark_partition_id())
-                 .cache())  # pins boundaries: totals + downstream agree
-    totals = parted.groupBy("__pid").agg(
-        *[F.sum(c).alias(c) for c in cols]).collect()
+    parts = sorted(
+        per.repartitionByRange(n_parts, order_col)
+        .groupBy(F.spark_partition_id().alias("__pid"))
+        .agg(F.min(order_col).alias("__min"),
+             *[F.sum(c).alias(c) for c in cols]).collect(),
+        key=lambda r: r["__pid"])
+    mins = [r["__min"] for r in parts if r["__min"] is not None]
+    # partition j (in key order) holds the keys in [mins[j], mins[j+1]);
+    # nulls and a nulls-only first partition fold into partition 0
+    bucket = sum((F.when(F.col(order_col) >= F.lit(m), 1).otherwise(0)
+                  for m in mins[1:]), F.lit(0))
+    totals = [{c: 0.0 for c in cols} for _ in range(max(1, len(mins)))]
+    j = 0
+    for r in parts:
+        j += r["__min"] is not None
+        for c in cols:
+            totals[max(0, j - 1)][c] += float(r[c] or 0)
     acc = {c: 0.0 for c in cols}
     rows = []
-    for r in sorted(totals, key=lambda r: r["__pid"]):
-        rows.append((r["__pid"], *[float(acc[c]) for c in cols]))
+    for pid, tot in enumerate(totals):
+        rows.append((pid, *[float(acc[c]) for c in cols]))
         for c in cols:
-            acc[c] += float(r[c] or 0)
+            acc[c] += tot[c]
     off_df = spark.createDataFrame(
         rows, "__pid int, " + ", ".join(f"__off_{c} double" for c in cols))
     bound = 0 if inclusive else -1
     from pyspark.sql import Window
     w = Window.partitionBy("__pid").orderBy(order_col) \
         .rowsBetween(Window.unboundedPreceding, bound)
-    out = parted.join(F.broadcast(off_df), "__pid")
+    out = per.withColumn("__pid", bucket.cast("int")) \
+        .join(F.broadcast(off_df), "__pid")
     for c in cols:
         out = out.withColumn(
             f"cum_{c}",

@@ -15,7 +15,7 @@ handler/component/QueryComponent.java:789,971,1402):
   plan:    on the driver, with no Spark action — `plan_query`: query analysis,
            dictionary df/cf from one term_bucket-pruned pyarrow read, per-term
            weights, as one picklable QueryPlan.
-  phase 1: term-bucket-pruned posting scan -> `_kernel_topk` -> the range
+  phase 1: term-bucket-pruned posting fetch -> `_kernel_topk` -> the range
            driver `score_ranges` -> (docid, score) top-k.
   phase 2: `rank_topk`, the ranking tail of every scored Spark front-end:
            the <= k winners ordered by (score desc, docid asc), their
@@ -28,18 +28,22 @@ over the scan terms), at least 1, at most the shuffle partitions and the
 index's docid ranges. A Python task costs ~0.1-0.2 s to schedule whatever it
 scores, so a query whose postings one task decodes in about that time runs
 on one task. Both placements are eager: the call runs the query's Spark
-job(s), and collecting the result runs none. Where the kernel runs follows
-from the count:
-  one task: the scan (joined to the fq bitmaps, both exchanged into one
-           range_id partition) is collected as Arrow by a JVM-only job
-           inside `bm25_topk`; the range driver scores it on the driver, and
-           `rank_topk`'s driver half ranks the winners with no further job.
-           No Python worker starts.
+job(s), if any, and collecting the result runs none. Where the kernel runs
+follows from the count:
+  one task: the kernel runs on the driver. Its posting rows come from
+           `IndexReader.posting_rows`, one pyarrow read of the scan terms'
+           bucket files (the serving tier's fetch), when those files total
+           at most DRIVER_SCAN_BYTES: no Spark job at all. Above that, a
+           JVM-only job collects the Spark scan as Arrow. `rank_topk`'s
+           driver half ranks the winners with no further job.
   n tasks: ONE repartition(n, range_id) feeds a `mapInPandas` that runs the
            range driver per partition and emits (docid, score) candidates;
-           `rank_topk` collects their top k in one TakeOrdered job. fq
-           bitmaps are exchanged into the kernel's partitions, so the join
-           adds no exchange.
+           `rank_topk` collects their top k in one TakeOrdered job.
+An fq reaches both placements as the reader's cached {range_id: filter
+words} (docsets.filter_words: one job on a miss, none on a hit). On one
+task the kernel takes them as they are; on n tasks they ship as a local
+relation unioned into the posting rows ahead of that one exchange, so
+there is no join.
 
 Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
@@ -63,7 +67,7 @@ from __future__ import annotations
 import glob
 import json
 import os
-from collections import Counter
+from collections import Counter, OrderedDict
 from dataclasses import dataclass, field
 from functools import partial, reduce
 
@@ -77,7 +81,7 @@ from solr_spark.analysis import analyze_text
 from solr_spark.codec.smallfloat import decode_norms
 from solr_spark.codec.varint import decode_postings
 from solr_spark.config import DEFAULT_CONFIG, IndexConfig
-from solr_spark.indexing.build import live_segments
+from solr_spark.indexing.build import _segment_arrow_schema, live_segments
 from solr_spark.query.empty import empty_df, local_df
 
 # the one result schema of every scored front-end (see rank_topk)
@@ -104,6 +108,10 @@ class IndexReader:
     config: IndexConfig
     _cached: dict = None  # {} once warm(); filled on first use
     _handles: dict = field(default_factory=dict, repr=False)  # _handle()
+    # the filterCache: fq key -> {range_id: filter words}, LRU by bytes
+    # (query/docsets.py::filter_words)
+    _filter_cache: OrderedDict = field(default_factory=OrderedDict,
+                                       repr=False)
 
     @classmethod
     def open(cls, index_dir: str, config: IndexConfig | None = None) -> "IndexReader":
@@ -133,13 +141,14 @@ class IndexReader:
             self._cached[name] = read().persist()
         return self._cached[name]
 
-    def _handle(self, name: str, spark: SparkSession, paths: list[str],
-                read) -> DataFrame:
-        """read() once per session and path list. Resolving a parquet handle
-        lists its files (a Spark job above 32 partition directories, as a
-        64-bucket segment has) and may infer its schema (another job), so
-        the reader reuses it until a new analyzed batch, live segment or
-        dictionary rewrite changes the path list."""
+    def _handle(self, name: str, spark: SparkSession | None,
+                paths: list[str], read):
+        """read() once per session (None: a driver-side pyarrow handle) and
+        path list. Resolving a parquet handle lists its files (a Spark job
+        above 32 partition directories, as a 64-bucket segment has) and may
+        infer its schema (another job), so the reader reuses it until a new
+        analyzed batch, live segment or dictionary rewrite changes the path
+        list."""
         key = (spark, tuple(paths))
         hit = self._handles.get(name)
         if hit is None or hit[0] != key:
@@ -159,11 +168,16 @@ class IndexReader:
         any stored attribute columns (build_index stored_cols — the
         stored-field/docValues role). Filter predicates over it push down to
         the parquet scan; column pruning drops toks when unused. The batch
-        directories are listed here, not by a Spark glob, and the handle is
-        resolved once per reader (see _handle)."""
+        directories are listed here, not by a Spark glob, the schema is read
+        from a footer on the driver (Spark's schema inference is a job), and
+        the handle is resolved once per reader (see _handle)."""
         batches = self._batches()
-        return self._handle("forward", spark, batches,
-                            lambda: spark.read.parquet(*batches))
+
+        def read():
+            schema = _spark_schema(batches)
+            return (spark.read if schema is None
+                    else spark.read.schema(schema)).parquet(*batches)
+        return self._handle("forward", spark, batches, read)
 
     def forward_text(self, spark: SparkSession) -> DataFrame:
         """The forward table with the analyzed tokens `toks` exposed as
@@ -225,6 +239,48 @@ class IndexReader:
             DataFrame.unionByName,
             [spark.read.schema(schema).parquet(p) for p in paths]))
 
+    def posting_rows(self, terms, columns, segments: list[str] | None = None,
+                     max_bytes: int | None = None) -> pa.Table | None:
+        """The segment rows of `terms` (`columns` of SEGMENT_SCHEMA) as one
+        Arrow table: one driver-side pyarrow read of the terms' term_bucket
+        files in `segments` (default: the live ones), filtered to the terms.
+        No Spark job. The one posting fetch of the driver-side scorers:
+        LocalSearcher's postings misses and a one-task bm25_topk. It reads
+        whole bucket files: None, with nothing read, when they total more
+        than `max_bytes`.
+
+        Each file's footer is parsed once per segment list (see _handle),
+        so a fetch reads only row data. A shard that owns no docid range
+        has an EMPTY segment dir (only _SUCCESS), hence no files: every
+        query over it matches nothing."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        paths = self.segment_paths() if segments is None else [
+            os.path.join(self.index_dir, "segments", n) for n in segments]
+
+        def open_files():  # term_bucket -> [(ParquetFile, file bytes)]
+            files: dict[int, list] = {}
+            for p in paths:
+                for f in sorted(glob.glob(os.path.join(
+                        p, "term_bucket=*", "*.parquet"))):
+                    bucket = int(os.path.dirname(f).rsplit("=", 1)[1])
+                    files.setdefault(bucket, []).append(
+                        (pq.ParquetFile(f), os.path.getsize(f)))
+            return files
+        files = self._handle("posting_files", None, paths, open_files)
+        picked = [f for b in sorted(set(_term_buckets(
+            terms, self.config.num_term_buckets))) for f in files.get(b, ())]
+        if max_bytes is not None and sum(n for _, n in picked) > max_bytes:
+            return None
+        tbls = [pf.read(columns=list(columns), use_threads=False)
+                for pf, _ in picked]
+        if not tbls:
+            return _segment_arrow_schema().empty_table().select(list(columns))
+        tbl = pa.concat_tables(tbls)
+        return tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(
+            list(terms), pa.string())))
+
     def warm(self, spark: SparkSession, segments: bool = False) -> "IndexReader":
         """Pin the hot query-side structures (idempotent).
 
@@ -233,12 +289,15 @@ class IndexReader:
         Spark job: `bm25_topk` reads none of them (its kernel reads norms,
         and `rank_topk` winner keys, with pyarrow); the edismax, shard and
         multiterm front-ends do. `segments=True` additionally pins the
-        posting table and materializes it now (one job), since every query
-        scans it — the serving posture when the working set fits executor
-        memory (the reference equivalently depends on the OS page cache
-        keeping hot postings resident); leave False when the index dwarfs
-        the cluster's memory and rely on term_bucket partition pruning
-        instead.
+        posting table and materializes it now (one job) for the queries
+        that scan it in Spark: the n-task `bm25_topk` placement (or a
+        one-task one over DRIVER_SCAN_BYTES) and the other front-ends. A
+        one-task `bm25_topk` reads its postings with pyarrow
+        (`posting_rows`) and never touches it. Pinning is the serving
+        posture when the working set fits executor memory (the reference
+        equivalently depends on the OS page cache keeping hot postings
+        resident); leave False when the index dwarfs the cluster's memory
+        and rely on term_bucket partition pruning instead.
         """
         if self._cached is not None:
             return self
@@ -253,6 +312,23 @@ class IndexReader:
         for df in (self._cached or {}).values():
             df.unpersist()
         self._cached = None
+        self._filter_cache.clear()
+
+
+def _spark_schema(dirs: list[str]):
+    """The Spark schema a Spark-written parquet directory stores in its
+    files' footer metadata (the first file of the first of `dirs`), or None
+    (then Spark infers it)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = sorted(glob.glob(os.path.join(dirs[0], "*.parquet"))) \
+        if dirs else []
+    if not files:
+        return None
+    row = (pq.read_schema(files[0]).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(row)) if row else None
 
 
 def _term_buckets(terms: list[str], num_buckets: int) -> list[int]:
@@ -592,6 +668,15 @@ def score_ranges(plan: QueryPlan, ranges, dels: np.ndarray | None):
 # another: ~0.1 s of kernel work at ~9 M postings/s, about what a Python
 # task costs to schedule, so a smaller query gains nothing from a second task
 POSTINGS_PER_TASK = 1 << 20
+# Bucket-file bytes a one-task query reads on the driver (posting_rows)
+# rather than through a Spark scan job. On a 4-vCPU box the fetch ran at
+# 115-126 MB/s over 0.8-1.6 MB bucket files (70 MB/s at 0.2 MB; medians of
+# 80 one-term reads) and the same scan as one Spark job took ~63-78 ms, so
+# 8 MiB on the driver costs about one job. The fetch reads whole bucket
+# files, so at scale this bound, not the posting count, keeps it small.
+DRIVER_SCAN_BYTES = 8 << 20
+# the segment columns the kernel reads
+_SCAN_COLUMNS = ("term", "range_id", "n_docs", "doc_gaps", "tfs", "max_tf")
 
 
 def _kernel_tasks(postings: int, reader: IndexReader, max_tasks: int) -> int:
@@ -659,16 +744,22 @@ def rank_topk(spark: SparkSession, reader: IndexReader, cand: DataFrame,
 
 
 def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
-                 dels: np.ndarray | None, prune: bool):
+                 dels: np.ndarray | None, prune: bool,
+                 allow: dict | None = None):
     """The Spark tier's side of `score_ranges`, wherever its one call runs:
-    the posting rows of some docid ranges (the scan terms' rows of each,
-    with `filter_bits` under fq), grouped by range and bounded by the sum
-    of their terms' WAND bounds with `prune` (np.inf otherwise). A range's
-    rows are decoded and its filter bits unpacked only if it is scored."""
+    the posting rows of some docid ranges (the scan terms' rows of each),
+    grouped by range and bounded by the sum of their terms' WAND bounds with
+    `prune` (np.inf otherwise). allow: the fq DocSet as {range_id: filter
+    words} (docsets.filter_words) or None; a range with no entry is dropped
+    before it is grouped. A range's rows are decoded and its filter words
+    unpacked only if it is scored."""
     import pyarrow.dataset as ds
 
     from solr_spark.query.docsets import unpack_bits
 
+    if allow is not None and len(pdf):
+        pdf = pdf[pdf["range_id"].isin(np.fromiter(allow, np.int64,
+                                                    len(allow)))]
     if not len(pdf):
         return score_ranges(plan, (), dels)
     cfg = plan.cfg
@@ -690,7 +781,6 @@ def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
         columns=["range_id", "norm_bytes"],
         filter=ds.field("range_id").isin(rid[starts].tolist()))
     norms = dict(zip(nt["range_id"].to_pylist(), nt["norm_bytes"].to_pylist()))
-    use_filter = "filter_bits" in pdf.columns
 
     def load(lo: int, hi: int):
         # range base 0: the decoded docids are offsets in the range
@@ -699,10 +789,10 @@ def _kernel_topk(plan: QueryPlan, pdf: pd.DataFrame, index_dir: str,
             np.zeros(hi - lo, dtype=np.int64), pdf["n_docs"].iloc[lo:hi], 0)
         tf = tf.astype(np.float64)
         dls = decode_norms(norms[int(rid[lo])], cfg.lucene_norms)
-        allow = unpack_bits(pdf["filter_bits"].iat[lo], len(dls)) \
-            if use_filter else None
+        mask = None if allow is None else \
+            unpack_bits(allow[int(rid[lo])], len(dls))
         return ([(terms[lo + i], off[b[i]:b[i + 1]], tf[b[i]:b[i + 1]])
-                 for i in range(hi - lo)], dls, allow)
+                 for i in range(hi - lo)], dls, mask)
 
     return score_ranges(plan, (
         (rid[starts[g]], bound[g], partial(load, starts[g], ends[g]))
@@ -845,9 +935,9 @@ def bm25_topk(
     against the forward table (query/docsets.py::filter_docids — stored
     attribute columns, conv_id/turn_idx, and `text` = analyzed tokens;
     `now` anchors date-math endpoints like `ts:[NOW-7DAYS TO *]`);
-    `filter_docids` is a precomputed DataFrame(docid) — the filterCache
-    handle, reusable across queries. Either becomes per-range bitmaps
-    inner-joined to the posting scan: ranges with no allowed doc are skipped
+    `filter_docids` is a precomputed DataFrame(docid). Either becomes
+    per-range bitmap words (docsets.filter_words; `filters` are cached per
+    reader, the filterCache): ranges with no allowed doc are skipped
     WITHOUT decoding (composing with WAND's bound skipping), surviving docs
     are masked before heap collection, and a selective filter still returns
     k hits (post-joining the top-k would not). Scoring stats stay GLOBAL —
@@ -890,41 +980,15 @@ def bm25_topk(
     if mode not in ("exact", "wand"):
         raise ValueError(f"unknown mode: {mode}")
 
-    cfg = reader.config
-    seg = reader.segments_df(spark)
-    scan_terms = plan.scan_terms
-    scan_buckets = sorted(set(_term_buckets(scan_terms, cfg.num_term_buckets)))
-    n_tasks = _kernel_tasks(plan.postings, reader, int(
-        spark.conf.get("spark.sql.shuffle.partitions")))
-    # the scan as SQL text: one py4j call per step, where Column isin and
-    # select cost ~1 ms per value (analyzed terms never hold `"` or `\`)
-    terms_sql = ", ".join('"%s"' % t for t in scan_terms)
-    scan = (f"term_bucket IN ({', '.join(map(str, scan_buckets))}) "
-            f"AND term IN ({terms_sql})")
-    rows = (seg.where(scan)
-            .selectExpr("term", "range_id", "n_docs", "doc_gaps", "tfs",
-                        "max_tf"))
-
     if isinstance(filters, (list, tuple)) and not filters:
-        filters = None  # empty fq list = no filter, skip the bitmap machinery
-    use_filter = filters is not None or filter_docids is not None
-    if use_filter or n_tasks > 1:
-        # the plan's one exchange: every posting row of a range meets in one
-        # kernel call, which orders its ranges by WAND bound itself
-        rows = rows.repartition(n_tasks, "range_id")
-    if use_filter:
-        from solr_spark.query.docsets import docid_range_bitmaps
-        from solr_spark.query.docsets import filter_docids as _compile_fq
+        filters = None  # empty fq list = no filter
+    if filters is not None and filter_docids is not None:
+        raise ValueError("pass filters OR filter_docids, not both")
+    allow = None
+    if filters is not None or filter_docids is not None:
+        from solr_spark.query.docsets import filter_words
 
-        if filters is not None and filter_docids is not None:
-            raise ValueError("pass filters OR filter_docids, not both")
-        if filters is not None:
-            filter_docids = _compile_fq(spark, reader, filters, now=now)
-        bitmaps = docid_range_bitmaps(filter_docids, cfg.range_shift, n_tasks)
-        # inner join: a range with no allowed doc never reaches the kernel.
-        # Both sides are hash-partitioned on range_id into n_tasks, so the
-        # shuffle join adds no exchange and needs no broadcast job.
-        rows = rows.join(bitmaps.hint("shuffle_hash"), "range_id")
+        allow = filter_words(spark, reader, filters, filter_docids, now)
 
     index_dir = reader.index_dir
     # liveDocs mask (indexing/deletes.py): tombstoned docids are dropped
@@ -934,23 +998,61 @@ def bm25_topk(
 
     dels = deleted_array(spark, index_dir)
     prune = mode == "wand"
+    scan_terms = plan.scan_terms
+    n_tasks = _kernel_tasks(plan.postings, reader, int(
+        spark.conf.get("spark.sql.shuffle.partitions")))
+
+    def spark_scan() -> DataFrame:
+        # the scan as SQL text: one py4j call per step, where Column isin and
+        # select cost ~1 ms per value (analyzed terms never hold `"` or `\`)
+        buckets = sorted(set(_term_buckets(scan_terms,
+                                           reader.config.num_term_buckets)))
+        terms_sql = ", ".join('"%s"' % t for t in scan_terms)
+        return reader.segments_df(spark).where(
+            f"term_bucket IN ({', '.join(map(str, buckets))}) "
+            f"AND term IN ({terms_sql})").selectExpr(*_SCAN_COLUMNS)
 
     if n_tasks == 1:
-        # the one kernel task runs where its <= k winners land: the scan is
-        # collected as Arrow by a JVM-only job and scored here (no Python
-        # worker starts)
+        # the one kernel task runs on the driver over a pyarrow read of the
+        # scan terms' bucket files (no Spark job, no Python worker); above
+        # the byte budget a JVM-only job collects the Spark scan as Arrow
+        rows = reader.posting_rows(scan_terms, _SCAN_COLUMNS,
+                                   max_bytes=DRIVER_SCAN_BYTES)
+        if rows is None:
+            rows = spark_scan().toArrow()
         return _ranked(spark, index_dir, *_kernel_topk(
-            plan, rows.toArrow().to_pandas(), index_dir, dels, prune))
+            plan, rows.to_pandas(), index_dir, dels, prune, allow))
+
+    rows = spark_scan()
+    if allow is not None:
+        # the cached fq words ride the posting rows as rows of their own
+        # (term null), so one exchange brings a range's words to its kernel
+        rows = rows.unionByName(local_df(spark, pa.table({
+            "range_id": pa.array(list(allow), pa.int64()),
+            "filter_bits": pa.array(list(allow.values()),
+                                    pa.list_(pa.int64()))}),
+            "range_id long, filter_bits array<bigint>"),
+            allowMissingColumns=True)
+    use_filter = allow is not None  # a flag: the closure never ships words
 
     def topk_iter(batches):
-        """This partition's posting rows (the query terms' rows of its
-        ranges) -> its top-k."""
+        """This partition's rows (the query terms' posting rows of its
+        ranges, and under fq their words) -> its top-k."""
         frames = [b for b in batches if len(b)]
         if frames:
-            d, s = _kernel_topk(plan, pd.concat(frames, ignore_index=True),
-                                index_dir, dels, prune)
+            pdf = pd.concat(frames, ignore_index=True)
+            words = None
+            if use_filter:
+                bits = pdf["term"].isna().to_numpy()
+                words = dict(zip(pdf["range_id"][bits],
+                                 pdf["filter_bits"][bits]))
+                pdf = pdf[~bits]
+            d, s = _kernel_topk(plan, pdf, index_dir, dels, prune, words)
             if len(d):
                 yield pd.DataFrame({"docid": d, "score": s})
 
-    return rank_topk(spark, reader, rows.mapInPandas(
-        topk_iter, "docid long, score double"), plan.k)
+    # the plan's one exchange: every row of a range meets in one kernel
+    # call, which orders its ranges by WAND bound itself
+    return rank_topk(spark, reader, rows.repartition(n_tasks, "range_id")
+                     .mapInPandas(topk_iter, "docid long, score double"),
+                     plan.k)

@@ -14,19 +14,17 @@ is that flow restated for the range-partitioned posting layout:
      little-endian 64-bit words. It is built in the JVM with no Python stage:
      a bit_or per (range, word), partially aggregated map-side, so the
      shuffle moves at most one 8-byte word per 64 allowed docs, never raw
-     docid rows, and a 50%-selective filter over 10^12 docs exchanges
-     ~n_ranges * 8 KB; a second aggregate lays each range's words out dense.
-  3. The scoring kernel inner-joins posting rows to the bitmaps on range_id
-     (both sides hash-partitioned into the kernel's task count, so the join
-     adds no exchange) —
-     a range with NO allowed docs drops out BEFORE postings are decoded
-     (filter-driven skipping, composing with block-max WAND's bound-driven
-     skipping) — and ANDs the unpacked bits into the keep mask after scoring.
+     docid rows; a second aggregate lays each range's words out dense.
+  3. `filter_words` is the reader's filterCache: the bitmaps of an fq,
+     collected once as Arrow (the driver receives compact words, not docid
+     rows) into {range_id: words} and kept per IndexReader, LRU by bytes.
+     The scoring kernel (bm25._kernel_topk) drops a range with no entry
+     BEFORE its postings are decoded (filter-driven skipping, composing with
+     block-max WAND's bound-driven skipping) and ANDs the unpacked bits into
+     the keep mask after scoring.
 
 Scoring statistics (df, n_docs, avgdl) stay GLOBAL: fq narrows the result
 set, never the scoring model — exactly the reference's q+fq semantics.
-A precomputed DataFrame(docid) can be persisted and reused across queries;
-that handle IS the filterCache role here.
 """
 
 from __future__ import annotations
@@ -34,6 +32,12 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Bytes of fq words one IndexReader keeps (filter_words). An entry costs
+# n_docs / 8 bytes at most (one bit per doc of each range with an allowed
+# doc), so the default holds ~500 filters over a million docs; an entry
+# above the bound is used once and not kept.
+FILTER_CACHE_BYTES = 64 << 20
 
 
 def filter_docids(spark: SparkSession, reader, filters, now=None) -> DataFrame:
@@ -69,17 +73,13 @@ def filter_docids(spark: SparkSession, reader, filters, now=None) -> DataFrame:
     return fwd.select("docid")
 
 
-def docid_range_bitmaps(docids: DataFrame, range_shift: int,
-                        num_partitions: int) -> DataFrame:
+def docid_range_bitmaps(docids: DataFrame, range_shift: int) -> DataFrame:
     """DataFrame(docid) -> DataFrame(range_id, filter_bits).
 
     filter_bits is an array of max(1, 2**range_shift / 64) longs: bit o % 64
     of word o // 64 is set iff docid (range_id << shift) + o is allowed.
     Both aggregates are plain Catalyst (bit_or, then a dense array per
-    range), so the fq path adds no Python stage. The words are exchanged on
-    range_id into `num_partitions`, so the result is co-partitioned with a
-    posting scan repartitioned the same way and a join of the two adds no
-    exchange.
+    range), so the fq path adds no Python stage.
     """
     nwords = max(1, (1 << range_shift) >> 6)
     mask = (1 << range_shift) - 1
@@ -87,13 +87,51 @@ def docid_range_bitmaps(docids: DataFrame, range_shift: int,
         f"shiftright(docid, {range_shift}) AS range_id",
         f"CAST(shiftright(docid & {mask}, 6) AS INT) AS word",
         "shiftleft(1L, CAST(docid & 63 AS INT)) AS bit")
-        .groupBy("range_id", "word").agg(F.expr("bit_or(bit) AS bits"))
-        .repartition(num_partitions, "range_id"))
+        .groupBy("range_id", "word").agg(F.expr("bit_or(bit) AS bits")))
     return (words.groupBy("range_id")
             .agg(F.expr("map_from_entries(collect_list(struct(word, bits))) "
                         "AS present"))
             .selectExpr("range_id", f"transform(sequence(0, {nwords - 1}), "
                         "w -> coalesce(present[w], 0L)) AS filter_bits"))
+
+
+def filter_words(spark: SparkSession, reader, filters=None,
+                 docids: DataFrame | None = None,
+                 now=None) -> dict[int, np.ndarray]:
+    """The fq DocSet as {range_id: filter words} (docid_range_bitmaps' rows;
+    a range with no allowed doc has no entry) — `reader`'s filterCache.
+
+    `filters` (classic strings, compiled by filter_docids) cache under the
+    sorted strings, `now` and the reader's analyzed batch list, so a new
+    batch (add_documents) misses; a NOW-relative filter with now=None
+    re-anchors to the wall clock on every call and is not cached (as
+    LocalSearcher.filter_mask). A precomputed `docids` DataFrame is never
+    cached. A miss builds the bitmaps in the JVM and collects them as Arrow
+    in one job; a hit runs none. Entries evict least-recently-used above
+    FILTER_CACHE_BYTES."""
+    key = None
+    if filters is not None:
+        filters = [filters] if isinstance(filters, str) else list(filters)
+        if now is not None or not any("NOW" in f for f in filters):
+            key = (tuple(sorted(filters)), now, tuple(reader._batches()))
+    cache = reader._filter_cache
+    if key in cache:
+        cache.move_to_end(key)
+        return cache[key]
+    if docids is None:
+        docids = filter_docids(spark, reader, filters, now=now)
+    shift = reader.config.range_shift
+    tbl = docid_range_bitmaps(docids, shift).toArrow()
+    words = tbl["filter_bits"].combine_chunks().flatten().to_numpy() \
+        .reshape(-1, max(1, (1 << shift) >> 6))
+    out = dict(zip(tbl["range_id"].to_pylist(), words))
+    if key is not None:
+        cache[key] = out
+        used = sum(w.nbytes for v in cache.values() for w in v.values())
+        while used > FILTER_CACHE_BYTES:
+            _, old = cache.popitem(last=False)
+            used -= sum(w.nbytes for w in old.values())
+    return out
 
 
 def unpack_bits(words, width: int) -> np.ndarray:
@@ -102,4 +140,5 @@ def unpack_bits(words, width: int) -> np.ndarray:
                          bitorder="little")[:width].astype(bool)
 
 
-__all__ = ["filter_docids", "docid_range_bitmaps", "unpack_bits"]
+__all__ = ["filter_docids", "docid_range_bitmaps", "filter_words",
+           "unpack_bits"]

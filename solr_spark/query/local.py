@@ -1,18 +1,19 @@
 """Driver-local serving mode: millisecond warm top-k over the same index.
 
 Role in the architecture: the Spark path is the BATCH posture — every
-scored front-end ranks through `bm25.rank_topk` into a local relation, and
-`bm25_topk` runs 1 Spark job per query (a small query's scan collected by a
-JVM-only job and scored and ranked on the driver: p50 ~0.13 s, and an fq
-adds ~0.2 s for its bitmap build), fine for analytics, wrong for
-interactive search. The
+scored front-end ranks through `bm25.rank_topk` into a local relation; a
+small `bm25_topk` runs no Spark job at all (its postings read with pyarrow
+and scored on the driver, an fq's bitmaps cached per reader after one job),
+but every call still pays the Spark session's local-relation build, and a
+larger query its scan and kernel jobs. The
 reference serves queries from a per-shard in-process searcher
 (SolrIndexSearcher over memory-mapped segment files); `LocalSearcher` is that
 role restated over THIS engine's artifacts: it memory-loads the small
 structures (norms, doc map, term dictionary — bytes per doc / per term),
-opens the segment files once and reads only the query terms' `term_bucket`
-files on a postings miss (the pruning the Spark path gets from Catalyst),
-decoding each miss in one batched `codec.decode_postings` call.
+and on a postings miss reads only the query terms' `term_bucket` files of
+the segments live at open (`IndexReader.posting_rows`, the pruning the
+Spark path gets from Catalyst), decoding each miss in one batched
+`codec.decode_postings` call.
 
 Scoring is the Spark path's own core, not a copy of it: the query plan is
 `bm25.plan_query` (its dictionary lookup served by the resident dictionary)
@@ -31,7 +32,6 @@ the Spark scheduler.
 
 from __future__ import annotations
 
-import glob
 import heapq
 import os
 from functools import partial
@@ -43,8 +43,7 @@ from solr_spark.codec.smallfloat import decode_norms
 from solr_spark.codec.varint import decode_postings
 from solr_spark.indexing.build import live_segments
 from solr_spark.indexing.deletes import deleted_array
-from solr_spark.query.bm25 import (IndexReader, _term_buckets, plan_query,
-                                   score_ranges)
+from solr_spark.query.bm25 import IndexReader, plan_query, score_ranges
 from solr_spark.query.parser import LuceneQueryParser
 
 
@@ -248,17 +247,9 @@ class LocalSearcher:
         self._df = dict(zip(dt["term"].to_pylist(), dt["df"].to_numpy()))
         self._cf = dict(zip(dt["term"].to_pylist(), dt["cf"].to_numpy()))
 
-        # open every live segment's parquet files ONCE, keyed by term_bucket:
-        # each footer is parsed here, so a postings miss only reads row data.
-        # A shard that owns no docid range has an EMPTY segment dir (only
-        # _SUCCESS), hence no files: every query over it matches nothing.
-        self._seg_files: dict[int, list] = {}
-        for s in live_segments(idx):
-            for f in sorted(glob.glob(os.path.join(
-                    idx, "segments", s, "term_bucket=*", "*.parquet"))):
-                bucket = int(os.path.dirname(f).rsplit("=", 1)[1])
-                self._seg_files.setdefault(bucket, []).append(
-                    pq.ParquetFile(f))
+        # the live segments at open: postings misses read these, through the
+        # reader's one posting fetch (IndexReader.posting_rows)
+        self._segments = live_segments(idx)
         self._deleted = deleted_array(None, idx)
         # per-term postings cache (the SolrIndexSearcher filter/queryResult
         # cache role): term -> [(range_id, offsets, tfs)]. LRU, bounded by
@@ -342,25 +333,17 @@ class LocalSearcher:
 
     def _postings(self, terms: list[str]) -> dict[str, list]:
         """term -> [(range_id, offsets, tfs)] for the query's terms. Cache
-        misses read the pre-opened segment files of the missing terms'
-        term_buckets, keep the missing terms' rows and decode them all in ONE
-        batched `decode_postings` call; hits cost a dict lookup."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
+        misses read the missing terms' rows of the open segments' term_bucket
+        files (IndexReader.posting_rows) and decode them all in ONE batched
+        `decode_postings` call; hits cost a dict lookup."""
         cache = self._postings_cache
         missing = [t for t in terms if t not in cache]
         if missing:
-            tbls = [pf.read(columns=["term", "range_id", "n_docs", "doc_gaps",
-                                     "tfs"], use_threads=False)
-                    for b in set(_term_buckets(missing,
-                                               self.cfg.num_term_buckets))
-                    for pf in self._seg_files.get(b, ())]
+            tbl = self.reader.posting_rows(
+                missing, ["term", "range_id", "n_docs", "doc_gaps", "tfs"],
+                self._segments)
             got: dict[str, list] = {t: [] for t in missing}
-            if tbls:
-                tbl = pa.concat_tables(tbls)
-                tbl = tbl.filter(pc.is_in(tbl["term"],
-                                          value_set=pa.array(missing)))
+            if tbl.num_rows:
                 rids = tbl["range_id"].to_numpy()
                 # range base 0: the decoded docids are offsets in the range
                 off, tf, bounds = decode_postings(

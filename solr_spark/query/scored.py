@@ -107,10 +107,11 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
     by a phrase clause alone; Lucene's exhaustive BooleanQuery has no window,
     deviation documented).
 
-    filters / filter_docids: q+fq (see bm25_topk) — compiled ONCE here and
-    shared by every clause kernel; phrase-only queries score their FULL match
-    set and intersect before ranking, so a selective filter still returns k
-    hits."""
+    filters / filter_docids: q+fq (see bm25_topk) — the term query hands
+    them to bm25_topk as given (fq strings hit the reader's filterCache);
+    the phrase clauses share one compiled DocSet; phrase-only queries score
+    their FULL match set and intersect before ranking, so a selective
+    filter still returns k hits."""
     from solr_spark.query.multiterm import expand_fuzzy, expand_wildcard
     from solr_spark.query.phrase import (match_scores, phrase_matches,
                                          phrase_topk)
@@ -120,6 +121,9 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         filters = None  # empty fq list = no filter, skip the bitmap machinery
     if filters is not None and filter_docids is not None:
         raise ValueError("pass filters OR filter_docids, not both")
+    # the term query takes the fq as given, so fq strings hit the reader's
+    # filterCache (bm25_topk); the phrase paths need it as docids
+    term_fq = {"filters": filters, "filter_docids": filter_docids, "now": now}
     if filters is not None:
         from solr_spark.query.docsets import filter_docids as _compile_fq
 
@@ -170,8 +174,7 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
                          k=max(k * 4, 100) if sq.phrases else k, mode="wand",
                          synonyms=synonyms or None, boosts=boosts or None,
                          prohibited=sq.prohibited or None,
-                         required=required_canon or None,
-                         filter_docids=filter_docids)
+                         required=required_canon or None, **term_fq)
         if not sq.phrases:
             return main
         main = main.select("docid", "score")

@@ -334,12 +334,12 @@ def test_graph_terms_df_cap(spark, built_index):
 
 def test_wand_query_job_budget(spark, built_index, count_jobs, kernel_tasks,
                                python_nodes, collected_arrow):
-    """A WAND query whose postings fit one kernel task runs exactly one
-    Spark job in all, inside the call: the posting scan is collected as
-    Arrow by a JVM-only job, the range driver scores it on the driver and
-    the ranked winners come back as a local relation. Collecting the result
-    runs no job, and neither plan holds a Python node, so no Python worker
-    task runs."""
+    """A WAND query whose postings fit one kernel task runs no Spark job:
+    its posting rows come from one pyarrow read of the scan terms' bucket
+    files (IndexReader.posting_rows), the range driver scores them on the
+    driver and the ranked winners come back as a local relation. Nothing is
+    collected through Spark, collecting the result runs no job, and the plan
+    holds no Python node."""
     index_dir, cfg, _ = built_index
     reader = IndexReader.open(index_dir, cfg)
     q = "error timeout connect"
@@ -348,13 +348,10 @@ def test_wand_query_job_budget(spark, built_index, count_jobs, kernel_tasks,
     del collected_arrow[:]
     df, call_jobs = count_jobs(lambda: bm25_topk(spark, reader, q, k=10))
     rows, run_jobs = count_jobs(df.collect)
-    assert (call_jobs, run_jobs) == (1, 0)
+    assert (call_jobs, run_jobs) == (0, 0)
     assert [tuple(r) for r in rows] == want
     assert _is_local(df) and kernel_tasks(df) == []
-    assert len(collected_arrow) == 1
-    scan = collected_arrow[0]
-    assert python_nodes(scan) == [] and python_nodes(df) == []
-    assert "Exchange" not in _plan_text(scan)
+    assert collected_arrow == [] and python_nodes(df) == []
 
 
 def _is_local(df) -> bool:
@@ -406,17 +403,25 @@ def test_kernel_spreads_over_tasks_by_postings(spark, built_index, oracle,
                                                monkeypatch, mode, fq):
     """A scan above POSTINGS_PER_TASK spreads over one kernel task per
     budget (capped by the shuffle partitions and the index's ranges); a scan
-    within it runs its one kernel task on the driver. Both placements
-    return a local relation, and the oracle's rows, plain and with fq."""
+    within it runs its one kernel task on the driver and collects nothing
+    once the reader holds the fq's words (the first fq query collects only
+    its bitmaps). Both placements return a local relation, and the oracle's
+    rows, plain and with fq."""
     index_dir, cfg, _ = built_index
     reader = IndexReader.open(index_dir, cfg)
     q, k = "error timeout connect", 25
     filters = [fq] if fq else None
 
+    first = _rows(bm25_topk(spark, reader, q, k=k, mode=mode,
+                            filters=filters))
+    assert [df.columns for df in collected_arrow] == \
+        ([["range_id", "filter_bits"]] if fq else [])
+    del collected_arrow[:]
     one = bm25_topk(spark, reader, q, k=k, mode=mode, filters=filters)
     assert _is_local(one) and kernel_tasks(one) == []
-    assert [kernel_tasks(df) for df in collected_arrow] == [[]]
+    assert collected_arrow == []
     want = _rows(one)
+    assert want == first
 
     n = _spread(monkeypatch, reader, spark, q, k)
     del collected_arrow[:]
@@ -486,13 +491,17 @@ def test_warm_runs_only_the_segment_job(spark, built_index, count_jobs):
 
 
 def test_cold_reader_lists_segments_once(spark, small_corpus, count_jobs,
-                                         tmp_path):
+                                         tmp_path, monkeypatch):
     """On an index with more term_bucket partitions than Spark lists on the
     driver (the default 64 buckets; above 32 a listing is a Spark job), a
     reader lists its segments once: after its first query, every
-    bm25_topk runs one Spark job over call + collect."""
+    bm25_topk that scans its postings in Spark (the driver's byte budget
+    set to 0) runs one Spark job over call + collect."""
     from solr_spark.config import IndexConfig
     from solr_spark.indexing import build_index
+    from solr_spark.query import bm25
+
+    monkeypatch.setattr(bm25, "DRIVER_SCAN_BYTES", 0)
 
     idx = str(tmp_path / "idx64")
     build_index(spark, small_corpus.limit(200), idx,

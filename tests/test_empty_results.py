@@ -202,10 +202,10 @@ def _bm25_tasks(spark, reader):
 
 # the Spark jobs each call runs on the test index, its reader's parquet
 # handles already resolved
-RANKED = [(_scored_terms, 1), (_scored_terms_phrase, 6), (_edismax_mm, 4),
+RANKED = [(_scored_terms, 0), (_scored_terms_phrase, 5), (_edismax_mm, 4),
           (_phrase_hit, 4), (_sloppy_phrase_hit, 4), (_complex_phrase_hit, 5),
           (_near_hit, 4), (_span_hit, 4),
-          (_xml_constant_score, 1), (_bm25, 1), (_bm25_tasks, 1)]
+          (_xml_constant_score, 1), (_bm25, 0), (_bm25_tasks, 1)]
 
 
 @pytest.mark.parametrize("front_end, jobs", RANKED,

@@ -280,6 +280,31 @@ def test_ttest_anova_mw_ks(spark):
     assert ks_same["p_value"] == pytest.approx(0.76377, abs=1e-4)
 
 
+def test_prefix_sum_callers_leave_nothing_persisted(spark):
+    """distributed_cumsum pins its range boundaries without a cache, so its
+    callers leave the session's persistent RDDs as they found them, and the
+    running sums still match a sort on the driver across range partitions
+    (a string key, repeated values, and nulls at ordinal 0)."""
+    from solr_spark.functions.funcquery import with_ord
+
+    rng = np.random.default_rng(11)
+    xs = rng.integers(0, 40, 300)
+    rows = [(i, float(x), float(x + rng.normal()), "ab"[i % 2],
+             None if i % 17 == 0 else f"k{x:03d}") for i, x in enumerate(xs)]
+    df = spark.createDataFrame(
+        rows, "id long, x double, y double, g string, s string")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+
+    got = {r.id: r.rord_s for r in with_ord(df, "s", reverse=True).collect()}
+    vals = sorted({s for *_, s in rows if s is not None})
+    rord = {v: len(vals) - i for i, v in enumerate(vals)}
+    assert got == {i: rord.get(s, 0) for i, *_, s in rows}
+    E.mann_whitney(df, "x", "g")
+    E.dataset_corr(df, "x", "y", method="spearman").collect()
+    assert set(persisted().keys()) == before
+
+
 def test_hist_freqtable_ecdf(spark):
     vals = [1.0, 1.0, 2.0, 2.0, 2.0, 3.0, 8.0, 9.0, 10.0, 10.0]
     df = spark.createDataFrame([(v,) for v in vals], "v double")

@@ -72,24 +72,86 @@ def test_filtered_matches_bruteforce_and_exact_mode(spark, built):
 
 def test_filtered_query_job_budget(spark, built, count_jobs, kernel_tasks,
                                    python_nodes, collected_arrow):
-    """A role-fq WAND query whose postings fit one kernel task runs exactly
-    one Spark job in all, inside the call: the posting scan joined to the fq
-    bitmaps (built in the JVM, both sides exchanged once into one range_id
-    partition) is collected as Arrow, scored on the driver and returned as
-    a local relation. Collecting the result runs no job, and no plan holds
-    a Python node. The first query on a reader resolves its forward-table
-    handle, so the budget is pinned on the second."""
+    """A role-fq WAND query whose postings fit one kernel task: the first fq
+    on a reader runs one Spark job, which builds the fq bitmaps in the JVM
+    and collects them as Arrow into the reader's filterCache; its postings
+    are read with pyarrow and scored on the driver. The repeat runs no job
+    and collects nothing. Neither collecting the result nor any plan runs
+    Python."""
     reader = IndexReader.open(built, CFG)
-    want = _rows(bm25_topk(spark, reader, Q, k=10, filters=FQ))
+    df, call_jobs = count_jobs(
+        lambda: bm25_topk(spark, reader, Q, k=10, filters=FQ))
+    want, run_jobs = count_jobs(lambda: _rows(df))
+    assert (call_jobs, run_jobs) == (1, 0)
+    assert len(collected_arrow) == 1
+    assert collected_arrow[0].columns == ["range_id", "filter_bits"]
+    assert python_nodes(collected_arrow[0]) == []
+
     del collected_arrow[:]
     df, call_jobs = count_jobs(
         lambda: bm25_topk(spark, reader, Q, k=10, filters=FQ))
     rows, run_jobs = count_jobs(lambda: _rows(df))
-    assert (call_jobs, run_jobs) == (1, 0)
+    assert (call_jobs, run_jobs) == (0, 0)
     assert rows == want and rows
     assert kernel_tasks(df) == [] and python_nodes(df) == []
-    assert len(collected_arrow) == 1
-    assert python_nodes(collected_arrow[0]) == []
+    assert collected_arrow == []
+
+
+def test_scored_term_query_shares_the_filter_cache(spark, built, count_jobs):
+    """scored_topk hands fq strings to bm25_topk, so a scored term query
+    and bm25_topk with the same fq share one cached DocSet: the first runs
+    the fq's one bitmap job, the other then runs none."""
+    from solr_spark.query.scored import scored_topk
+
+    reader = IndexReader.open(built, CFG)
+    first, jobs = count_jobs(
+        lambda: _rows(scored_topk(spark, reader, Q, k=10, filters=FQ)))
+    assert jobs == 1 and first
+    again, jobs = count_jobs(
+        lambda: _rows(bm25_topk(spark, reader, Q, k=10, filters=FQ)))
+    assert (again, jobs) == (first, 0)
+
+
+def test_now_filter_is_never_cached(spark, built, count_jobs):
+    """A NOW-relative fq with now=None re-anchors to the wall clock on every
+    call, so the reader's filterCache never keeps it: each query rebuilds
+    its bitmaps in one job. Anchored by `now`, the same fq caches."""
+    reader = IndexReader.open(built, CFG)
+    fq = ["ts:[NOW-100YEARS TO *]"]
+    runs = [count_jobs(lambda: _rows(bm25_topk(spark, reader, Q, k=10,
+                                               filters=fq)))
+            for _ in range(2)]
+    assert [jobs for _, jobs in runs] == [1, 1]
+    assert runs[0][0] == runs[1][0] and runs[0][0]
+    assert len(reader._filter_cache) == 0
+    now = "2024-01-01T00:00:00Z"
+    anchored = [count_jobs(lambda: _rows(bm25_topk(
+        spark, reader, Q, k=10, filters=fq, now=now))) for _ in range(2)]
+    assert [jobs for _, jobs in anchored] == [1, 0]
+    assert anchored[0][0] == anchored[1][0] == runs[0][0]
+    assert len(reader._filter_cache) == 1
+
+
+def test_filter_cache_evicts_by_bytes(spark, built, count_jobs, monkeypatch):
+    """The filterCache is an LRU bounded by the bytes of its words: with
+    room for one fq's words, a second fq evicts the first, which then
+    misses again (one job) and returns the same rows."""
+    from solr_spark.query import docsets
+
+    reader = IndexReader.open(built, CFG)
+    a, b = ["role:assistant"], ["role:user"]
+    rows_a = _rows(bm25_topk(spark, reader, Q, k=10, filters=a))
+    (key_a, words), = reader._filter_cache.items()
+    monkeypatch.setattr(docsets, "FILTER_CACHE_BYTES",
+                        sum(w.nbytes for w in words.values()))
+    rows_b = _rows(bm25_topk(spark, reader, Q, k=10, filters=b))
+    assert rows_b and rows_b != rows_a
+    assert key_a not in reader._filter_cache
+    assert len(reader._filter_cache) == 1
+    again, jobs = count_jobs(lambda: _rows(
+        bm25_topk(spark, reader, Q, k=10, filters=a)))
+    assert (again, jobs) == (rows_a, 1)
+    assert list(reader._filter_cache) == [key_a]
 
 
 def test_filter_docids_precomputed_handle(spark, built):
@@ -100,6 +162,8 @@ def test_filter_docids_precomputed_handle(spark, built):
     via_handle = _rows(bm25_topk(spark, reader, Q, k=10, filter_docids=ds))
     via_strings = _rows(bm25_topk(spark, reader, Q, k=10, filters=FQ))
     assert via_handle == via_strings
+    # only the strings' words are cached: a DataFrame has no cache key
+    assert [k[0] for k in reader._filter_cache] == [tuple(FQ)]
     with pytest.raises(ValueError, match="not both"):
         bm25_topk(spark, reader, Q, k=10, filters=FQ, filter_docids=ds)
 

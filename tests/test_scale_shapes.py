@@ -59,10 +59,12 @@ def test_no_unpartitioned_window_in_functions():
             "with the argument for why its input is bounded.")
 
 
-def _call_sites(names: set[str]) -> list[tuple[str, str, str]]:
+def _call_sites(names: set[str], qualified: bool = False
+                ) -> list[tuple[str, str, str]]:
     """(callee, file, enclosing function) of every call of `names` under
     solr_spark/ — parsed, so comments, docstrings and the definitions
-    themselves never count."""
+    themselves never count. qualified: the enclosing function as its dotted
+    chain of enclosing classes and functions."""
     sites = []
     for dirpath, _dirs, files in os.walk(PACKAGE_DIR):
         for fname in sorted(files):
@@ -74,6 +76,9 @@ def _call_sites(names: set[str]) -> list[tuple[str, str, str]]:
 
             def visit(node, owner):
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    owner = f"{owner}.{node.name}" if qualified and owner \
+                        else node.name
+                elif qualified and isinstance(node, ast.ClassDef):
                     owner = node.name
                 if isinstance(node, ast.Call):
                     fn = node.func
@@ -95,6 +100,18 @@ def test_one_range_loop():
         ("_merge_topk", os.path.join("query", "bm25.py"), "score_ranges"),
         ("_score_group", os.path.join("query", "bm25.py"), "score_ranges"),
     ]
+
+
+def test_one_posting_fetch():
+    """Both driver-side scorers (LocalSearcher's postings misses and a
+    one-task bm25_topk) read segment files through IndexReader.posting_rows:
+    it is the only code under query/ that opens a ParquetFile, apart from
+    the real-time get's reads of the forward table (query/rtg.py)."""
+    sites = [s for s in _call_sites({"ParquetFile"}, qualified=True)
+             if s[1].startswith("query" + os.sep)]
+    assert [s for s in sites if s[1] != os.path.join("query", "rtg.py")] \
+        == [("ParquetFile", os.path.join("query", "bm25.py"),
+             "IndexReader.posting_rows.open_files")]
 
 
 def test_unimax_null_lang_budget_not_stranded(spark):

@@ -1,6 +1,8 @@
 """Serving-tier edge shapes: exact score ties cut by k, an index of more than
 one live segment, and a shard that owns no docid range. LocalSearcher and
-ShardedSearcher must agree with bm25_topk on all of them."""
+ShardedSearcher must agree with bm25_topk on all of them. On the tombstoned
+two-segment index, bm25_topk's fq cache (the reader's filterCache) and its
+Spark-scan fallback are checked against the oracle too."""
 
 from __future__ import annotations
 
@@ -133,31 +135,46 @@ def test_local_over_two_segments_matches_exact(spark, two_segments):
 ROLE_FQ = "role:user"
 
 
+TOMB_SCHEMA = ("conv_id string, turn_idx int, role string, text string, "
+               "tool string, ts timestamp")
+
+
+def _batch(n: int, seed: int, prefix: str):
+    from solr_spark.data import synth_transcripts_pandas
+
+    pdf = synth_transcripts_pandas(n, seed=seed)
+    pdf["conv_id"] = prefix + pdf["conv_id"]
+    return pdf
+
+
+def _tomb_oracle(*pdfs):
+    """The oracle over `pdfs` added in order, each batch's turns in the
+    arrival (docid) order the engine gives them, and docid -> role."""
+    from solr_spark.oracle import OracleIndex
+
+    oracle = OracleIndex(MULTI_CFG)
+    role = {}
+    for pdf in pdfs:
+        for c, t, r, x in sorted(zip(pdf["conv_id"], pdf["turn_idx"],
+                                     pdf["role"], pdf["text"])):
+            role[oracle.add(c, t, x)] = r
+    return oracle, role
+
+
 @pytest.fixture(scope="module")
 def tombstoned(spark, tmp_path_factory):
     """Two live segments with the role stored, tombstones in both, and an
     oracle over the arrival-ordered docids (tombstones still count in its
     stats, as in the engine's until merge)."""
-    from solr_spark.data import synth_transcripts_pandas
     from solr_spark.indexing.deletes import delete_docids
-    from solr_spark.oracle import OracleIndex
 
-    base = synth_transcripts_pandas(400, seed=5)
-    batch = synth_transcripts_pandas(120, seed=6)
-    batch["conv_id"] = "nrt-" + batch["conv_id"]
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
+    base, batch = _batch(400, 5, ""), _batch(120, 6, "nrt-")
     idx = str(tmp_path_factory.mktemp("tomb_idx"))
-    build_index(spark, spark.createDataFrame(base, schema), idx, MULTI_CFG,
-                input_token="tomb-400", stored_cols=("role",))
-    add_documents(spark, spark.createDataFrame(batch, schema), idx,
+    build_index(spark, spark.createDataFrame(base, TOMB_SCHEMA), idx,
+                MULTI_CFG, input_token="tomb-400", stored_cols=("role",))
+    add_documents(spark, spark.createDataFrame(batch, TOMB_SCHEMA), idx,
                   MULTI_CFG)
-    oracle = OracleIndex(MULTI_CFG)
-    role = {}
-    for pdf in (base, batch):
-        for c, t, r, x in sorted(zip(pdf["conv_id"], pdf["turn_idx"],
-                                     pdf["role"], pdf["text"])):
-            role[oracle.add(c, t, x)] = r
+    oracle, role = _tomb_oracle(base, batch)
     # the best role-filtered hits of each segment die
     hits = [h[2] for h in oracle.topk(MULTI_QUERIES[0], k=oracle.n_docs)
             if role[h[2]] == "user"]
@@ -208,3 +225,119 @@ def test_every_placement_agrees_on_a_tombstoned_index(
             assert [r["rank"] for r in rows] == list(range(1, k + 1))
             for r, (_d, s) in zip(rows, want):
                 assert r["score"] == pytest.approx(s, abs=1e-9), (q, name)
+
+
+def _role_want(oracle, role, dead, q, k):
+    """The oracle's role-fq top k, tombstoned docs dropped."""
+    return [(d, s) for _c, _t, d, s in oracle.topk(q, k=oracle.n_docs)
+            if role[d] == "user" and d not in dead][:k]
+
+
+def _assert_want(rows, want):
+    assert len(want) == len(rows) and rows
+    assert [r.docid for r in rows] == [d for d, _ in want]
+    assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
+    for r, (_d, s) in zip(rows, want):
+        assert r.score == pytest.approx(s, abs=1e-9)
+
+
+# bm25_topk placements and the module constants that force them: the
+# driver's pyarrow fetch, the Spark scan above DRIVER_SCAN_BYTES, and the
+# n-task kernel. Value: (constants, Spark jobs of a query whose fq words
+# are cached, what it collects as Arrow)
+PLACEMENTS = {"driver": ({}, 0, []),
+              "spark_scan": ({"DRIVER_SCAN_BYTES": 0}, 1, ["term"]),
+              "tasks": ({"POSTINGS_PER_TASK": 16}, 1, ["docid"])}
+
+
+@pytest.mark.parametrize("placement", list(PLACEMENTS))
+def test_plain_query_on_every_placement_matches_oracle(
+        spark, tombstoned, collected_arrow, monkeypatch, placement):
+    """Without fq, every placement returns the oracle's rows with the
+    tombstoned winners dropped, and collects only what the placement
+    reads through Spark."""
+    from solr_spark.query import bm25
+
+    idx, oracle, _role, dead = tombstoned
+    consts, _, collects = PLACEMENTS[placement]
+    for name, value in consts.items():
+        monkeypatch.setattr(bm25, name, value)
+    reader = IndexReader.open(idx, MULTI_CFG)
+    q, k = MULTI_QUERIES[0], 20
+    ranked = [(d, s) for _c, _t, d, s in oracle.topk(q, k=oracle.n_docs)]
+    assert dead & {d for d, _ in ranked[:k]}  # a tombstoned doc would rank
+    rows = bm25_topk(spark, reader, q, k=k).collect()
+    assert [df.columns[0] for df in collected_arrow] == collects
+    _assert_want(rows, [(d, s) for d, s in ranked if d not in dead][:k])
+
+
+@pytest.mark.parametrize("placement", list(PLACEMENTS))
+def test_filter_cache_hit_and_miss_match_oracle(
+        spark, tombstoned, count_jobs, collected_arrow, monkeypatch,
+        placement):
+    """The first role-fq query on a reader collects the fq's bitmap words
+    in one extra job; the repeat takes them from the reader's filterCache.
+    On every placement both return the oracle's rows with the tombstoned
+    winners dropped."""
+    from solr_spark.query import bm25
+
+    idx, oracle, role, dead = tombstoned
+    consts, hit_jobs, collects = PLACEMENTS[placement]
+    for name, value in consts.items():
+        monkeypatch.setattr(bm25, name, value)
+    reader = IndexReader.open(idx, MULTI_CFG)
+    q, k = MULTI_QUERIES[0], 20
+
+    def topk():
+        return bm25_topk(spark, reader, q, k=k, filters=[ROLE_FQ]).collect()
+
+    miss, miss_jobs = count_jobs(topk)
+    assert [df.columns[0] for df in collected_arrow] == \
+        ["range_id"] + collects
+    del collected_arrow[:]
+    hit, jobs = count_jobs(topk)
+    assert [df.columns[0] for df in collected_arrow] == collects
+    assert (miss_jobs, jobs) == (hit_jobs + 1, hit_jobs)
+    assert miss == hit
+    assert len(reader._filter_cache) == 1
+    _assert_want(hit, _role_want(oracle, role, dead, q, k))
+
+
+def test_filter_cache_follows_deletes_and_new_batches(spark, tombstoned,
+                                                      count_jobs, tmp_path):
+    """A cached fq never hides an index change. delete_docids drops a doc
+    from a cached fq's results with no job (tombstones apply after the
+    words). add_documents adds an analyzed batch, so the same fq misses
+    under its new key, and a reopened reader returns the new index's
+    rows."""
+    import shutil
+
+    from solr_spark.indexing.deletes import delete_docids
+
+    idx0, _oracle, _role, dead = tombstoned
+    idx = str(tmp_path / "idx")
+    shutil.copytree(idx0, idx)
+    reader = IndexReader.open(idx, MULTI_CFG)
+    q, k = MULTI_QUERIES[0], 20
+
+    def topk(r):
+        return bm25_topk(spark, r, q, k=k, filters=[ROLE_FQ]).collect()
+
+    victim = topk(reader)[0].docid
+    delete_docids(spark, idx, spark.createDataFrame([(victim,)],
+                                                    "docid long"))
+    dead = dead | {victim}
+    rows, jobs = count_jobs(lambda: topk(reader))
+    assert jobs == 0 and victim not in [r.docid for r in rows]
+    base, batch = _batch(400, 5, ""), _batch(120, 6, "nrt-")
+    _assert_want(rows, _role_want(*_tomb_oracle(base, batch), dead, q, k))
+
+    extra = _batch(80, 7, "late-")
+    add_documents(spark, spark.createDataFrame(extra, TOMB_SCHEMA), idx,
+                  MULTI_CFG)
+    assert count_jobs(lambda: topk(reader))[1] == 1
+    assert len(reader._filter_cache) == 2
+    oracle, role = _tomb_oracle(base, batch, extra)
+    want = _role_want(oracle, role, dead, q, k)
+    assert any(d >= 520 for d, _ in want)  # a new doc ranks
+    _assert_want(topk(IndexReader.open(idx, MULTI_CFG)), want)

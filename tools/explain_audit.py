@@ -137,10 +137,19 @@ def main() -> None:
         build_index(spark, corpus, idx, cfg, input_token="plan-audit",
                     stored_cols=("role",))
         reader = IndexReader.open(idx, cfg)
-        # a one-task query collects its posting scan (p4) inside the call
+        from solr_spark.query import bm25 as _bm25
+
+        # a one-task query reads its postings on the driver and collects
+        # nothing; with the driver's byte budget at 0 it collects its Spark
+        # posting scan (p4) inside the call instead
         topk, scans = collected_scans(
             lambda: bm25_topk(spark, reader, "error timeout", k=5))
-        p4 = scans[0]
+        scan_bytes, _bm25.DRIVER_SCAN_BYTES = _bm25.DRIVER_SCAN_BYTES, 0
+        try:
+            _, (p4,) = collected_scans(
+                lambda: bm25_topk(spark, reader, "error timeout", k=5))
+        finally:
+            _bm25.DRIVER_SCAN_BYTES = scan_bytes
         import zlib
 
         from solr_spark.analysis import analyze_text
@@ -197,39 +206,43 @@ def main() -> None:
 
         # 6c. filtered ranked search (q+fq): the fq predicate pushes into
         # the FORWARD-table scan (stored column `role`), and the DocSet
-        # reaches the posting scan as a per-range bitmap join — never a
-        # post-join of the top-k. On one kernel task the joined scan is what
-        # the call collects: the posting scan and the bitmaps are each
-        # exchanged once into the same single range_id partition, and
-        # nothing in it runs Python
-        ftk, fscans = collected_scans(lambda: bm25_topk(
-            spark, reader, "error timeout", k=5, filters=["role:assistant"]))
+        # reaches the kernel as per-range bitmap words — never a post-join
+        # of the top-k. The first fq on a reader collects only those
+        # bitmaps, built in the JVM (no Python, no broadcast, no posting
+        # scan); the repeat hits the reader's filterCache and collects
+        # nothing
+        fq5 = lambda: bm25_topk(  # noqa: E731
+            spark, reader, "error timeout", k=5, filters=["role:assistant"])
+        ftk, fscans = collected_scans(fq5)
+        _, fscans2 = collected_scans(fq5)
         pf = fscans[0]
         checks.append((
-            "filtered topk: fq pushed to forward scan, bitmap range join, "
-            "one range_id exchange per input, no Python",
+            "filtered topk: fq pushed to forward scan, bitmaps collected "
+            "once per reader, no posting scan, no Python",
             pf,
             ["PushedFilters: [IsNotNull(role), EqualTo(role,assistant)]",
-             "filter_bits", "ShuffledHashJoin", "REPARTITION_BY_NUM"],
-            ["BroadcastExchange", *PYTHON_NODES]))
-        fx = [(range_parts(p), o) for p, o in exchanges(pf)
-              if range_parts(p)]
-        assert fx == [(1, "REPARTITION_BY_NUM")] * 2, \
-            f"expected the posting scan and the bitmaps each exchanged once " \
-            f"into one range_id partition, found {fx}"
+             "filter_bits", "HashAggregate"],
+            ["BroadcastExchange", "term_bucket", *PYTHON_NODES]))
+        assert len(fscans) == 1 and fscans2 == [], \
+            f"expected one bitmap collect on the first fq query and none " \
+            f"on its repeat, found {len(fscans)} then {len(fscans2)}"
 
         # 6d. one-task placement: the returned plan is a local relation of
-        # the ranked winners (collecting it runs no job), and the plain scan
-        # the call collected has no exchange and no Python node — the
-        # kernel ran on the driver
+        # the ranked winners (collecting it runs no job), a plain query
+        # collects nothing (the kernel ran on the driver over a pyarrow
+        # read), and the Spark scan it falls back to above the driver's
+        # byte budget has no exchange and no Python node
         checks.append((
             "one-task topk: result is a local relation", plan_of(
                 topk, "extended"),
             ["LocalRelation", "LocalTableScan"],
             ["Scan parquet", "Exchange", *PYTHON_NODES]))
+        assert scans == [], \
+            f"expected a plain one-task query to collect nothing, found " \
+            f"{len(scans)} collects"
         checks.append((
-            "one-task topk: collected posting scan has no exchange, no "
-            "Python", p4, ["PartitionFilters: [term_bucket"],
+            "one-task topk over the byte budget: collected posting scan has "
+            "no exchange, no Python", p4, ["PartitionFilters: [term_bucket"],
             ["Exchange", *PYTHON_NODES]))
 
         # 6e. distributed WAND plan (the per-task postings budget lowered so
@@ -240,11 +253,9 @@ def main() -> None:
         # turn_idx) are read on the driver after the collect, so no Window,
         # no norms broadcast, no doc-map join, no broadcast at all. The
         # (docid, score) candidates reach the driver through one
-        # TakeOrderedAndProject. Then the fq variant: the fq bitmaps are
-        # exchanged into the same partitions, so the join adds no exchange
-        # and nothing re-shuffles to the default count
-        from solr_spark.query import bm25 as _bm25
-
+        # TakeOrderedAndProject. Then the fq variant: the reader's cached
+        # bitmap words are unioned into the posting rows, as a local relation,
+        # ahead of that one exchange, so the fq adds no exchange and no join
         budget = _bm25.POSTINGS_PER_TASK
         _bm25.POSTINGS_PER_TASK = 1
         try:
@@ -270,18 +281,18 @@ def main() -> None:
             f"expected one range_id exchange into >1 kernel tasks, found {dx}"
         assert n_python == 1, f"expected 1 Python node, found {n_python}"
 
-        fx = [(range_parts(p), o) for p, o in exchanges(p6)
-              if (range_parts(p) or 0) > 1]
+        fx = [(range_parts(p), o) for p, o in exchanges(p6)]
         checks.append((
-            "fq WAND plan: one range_id exchange into the kernel, bitmaps "
-            "co-partitioned, no join exchange, no broadcast",
-            p6, ["ShuffledHashJoin", "REPARTITION_BY_NUM", "filter_bits",
+            "fq WAND plan: the cached bitmap words unioned into the posting "
+            "rows ahead of the kernel's one range_id exchange, no join, no "
+            "broadcast",
+            p6, ["Union", "LocalTableScan", "REPARTITION_BY_NUM",
                  "TakeOrderedAndProject"],
-            ["BroadcastExchange"]))
-        assert len(fx) == 2 and len(set(fx)) == 1 \
-            and fx[0][1] == "REPARTITION_BY_NUM", \
-            f"expected the posting scan and the bitmaps each exchanged once " \
-            f"into the kernel's >1 partitions, found {fx}"
+            ["BroadcastExchange", "Join"]))
+        assert len(fx) == 1 and fx[0][1] == "REPARTITION_BY_NUM" \
+            and (fx[0][0] or 0) > 1, \
+            f"expected the posting rows and the bitmap words exchanged " \
+            f"once, together, into the kernel's >1 partitions, found {fx}"
 
         # 40. field sort on the scored path (round 5): the match set comes
         # from the term_bucket-pruned postings, fq pushes into the forward
@@ -770,18 +781,21 @@ def main() -> None:
         ["BatchEvalPython", "ArrowEvalPython"]))
 
     # 38. CCNet perplexity buckets: the quantile prefix-sum runs through
-    # distributed_cumsum — DISTINCT-score aggregate, then RANGE partitioning
-    # with per-partition windows (Exchange rangepartitioning present,
-    # Exchange SinglePartition absent: no task ever sees the whole table)
+    # distributed_cumsum — DISTINCT-score aggregate, then per-range-bucket
+    # windows. The range boundaries come from the totals job that runs
+    # inside the call, so this plan exchanges on the bucket each key maps
+    # to (hashpartitioning(__pid) present, SinglePartition absent: no task
+    # ever sees the whole table)
     from solr_spark.functions.sampling import perplexity_buckets
     scored38 = t("documents").select(
         "doc_id", (F.col("n_chars") % 97).cast("double").alias("perplexity"))
     p38 = plan_of(perplexity_buckets(scored38))
     checks.append((
-        "ccnet buckets: distinct-score aggregate feeds a RANGE-partitioned "
-        "distributed prefix sum — no single-partition window, no Python",
+        "ccnet buckets: distinct-score aggregate feeds a distributed prefix "
+        "sum windowed per range bucket — no single-partition window, no "
+        "Python",
         p38,
-        ["HashAggregate", "rangepartitioning"],
+        ["HashAggregate", "Window", "hashpartitioning(__pid"],
         ["SinglePartition", "BatchEvalPython", "ArrowEvalPython"]))
 
     # 39. UniMax fractional epoch: threshold variant — the md5-bucket
