@@ -28,6 +28,7 @@ Entry points: `ev(name, *args)` dispatches by reference name (e.g.
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 from typing import Any
 
 import numpy as np
@@ -871,6 +872,17 @@ def anova(df: DataFrame, value: str, group: str) -> dict:
     return {"f_ratio": f, "p_value": f_sf(f, d1, d2)}
 
 
+@contextmanager
+def _persisted(df: DataFrame):
+    """`df` persisted for the block (the passes of one eager statistic over
+    it), released after."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
 def distributed_cumsum(per: DataFrame, order_col: str, cols: list[str],
                        inclusive: bool = True) -> DataFrame:
     """Prefix sums over a value-keyed table WITHOUT a global unpartitioned
@@ -881,11 +893,14 @@ def distributed_cumsum(per: DataFrame, order_col: str, cols: list[str],
     back, running sum within each partition. Exact for integer-valued counts
     (the rank-statistics inputs here). Adds `cum_<col>` per requested column.
 
-    One job collects each range partition's min key and totals. The running
-    sums re-derive a row's partition from those mins (a key belongs to the
-    last partition whose min is <= it; nulls sort first): a pure function
-    of the key, so no cache pins the sampled boundaries between the two
-    passes and nothing is left persisted.
+    One job (after the range sampling job) collects each range partition's
+    min key and totals. The running sums re-derive a row's partition from
+    those mins by a binary search (a key belongs to the last partition
+    whose min is <= it; nulls sort first): a pure function of the key, so
+    nothing pins the sampled boundaries and nothing is left persisted. The
+    price is one more evaluation of `per` per action on the result; a
+    caller that consumes the result at once persists `per` around it
+    (mann_whitney, kolmogorov_smirnov).
     """
     spark = per.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
@@ -896,10 +911,17 @@ def distributed_cumsum(per: DataFrame, order_col: str, cols: list[str],
              *[F.sum(c).alias(c) for c in cols]).collect(),
         key=lambda r: r["__pid"])
     mins = [r["__min"] for r in parts if r["__min"] is not None]
+    key = F.col(order_col)
+
+    def bucket(lo: int, hi: int):
+        """The index in [lo, hi] of the last min <= key (lo for a null)."""
+        if lo >= hi:
+            return F.lit(lo)
+        mid = (lo + hi + 1) // 2
+        return F.when(key >= F.lit(mins[mid]), bucket(mid, hi)) \
+            .otherwise(bucket(lo, mid - 1))
     # partition j (in key order) holds the keys in [mins[j], mins[j+1]);
     # nulls and a nulls-only first partition fold into partition 0
-    bucket = sum((F.when(F.col(order_col) >= F.lit(m), 1).otherwise(0)
-                  for m in mins[1:]), F.lit(0))
     totals = [{c: 0.0 for c in cols} for _ in range(max(1, len(mins)))]
     j = 0
     for r in parts:
@@ -918,7 +940,7 @@ def distributed_cumsum(per: DataFrame, order_col: str, cols: list[str],
     from pyspark.sql import Window
     w = Window.partitionBy("__pid").orderBy(order_col) \
         .rowsBetween(Window.unboundedPreceding, bound)
-    out = per.withColumn("__pid", bucket.cast("int")) \
+    out = per.withColumn("__pid", bucket(0, len(mins) - 1).cast("int")) \
         .join(F.broadcast(off_df), "__pid")
     for c in cols:
         out = out.withColumn(
@@ -946,15 +968,16 @@ def mann_whitney(df: DataFrame, value: str, group: str) -> dict:
     per = df.groupBy(v.alias("v")).agg(
         F.sum(F.when(F.col(group) == g1, 1.0).otherwise(0.0)).alias("c1"),
         F.count("*").cast("double").alias("ct"))
-    cum = distributed_cumsum(per, "v", ["ct"], inclusive=False)
-    stats = cum.agg(
-        F.sum("c1").alias("n1"),
-        F.sum(F.col("ct") - F.col("c1")).alias("n2"),
-        F.sum(F.col("c1") * (F.col("cum_ct") + (F.col("ct") + 1) / 2.0)
-              ).alias("r1"),
-        F.sum(F.col("ct") * F.col("ct") * F.col("ct") - F.col("ct")
-              ).alias("tie_term"),
-    ).collect()[0]
+    with _persisted(per):
+        cum = distributed_cumsum(per, "v", ["ct"], inclusive=False)
+        stats = cum.agg(
+            F.sum("c1").alias("n1"),
+            F.sum(F.col("ct") - F.col("c1")).alias("n2"),
+            F.sum(F.col("c1") * (F.col("cum_ct") + (F.col("ct") + 1) / 2.0)
+                  ).alias("r1"),
+            F.sum(F.col("ct") * F.col("ct") * F.col("ct") - F.col("ct")
+                  ).alias("tie_term"),
+        ).collect()[0]
     n1, n2, r1 = float(stats["n1"]), float(stats["n2"]), float(stats["r1"])
     tie_term = float(stats["tie_term"])
     u1 = r1 - n1 * (n1 + 1) / 2.0
@@ -991,12 +1014,14 @@ def kolmogorov_smirnov(df: DataFrame, value: str, group: str) -> dict:
     per = (df.groupBy(F.col(value).cast("double").alias("v"))
              .agg(F.sum(F.when(F.col(group) == g1, 1.0).otherwise(0.0)).alias("c1"),
                   F.sum(F.when(F.col(group) != g1, 1.0).otherwise(0.0)).alias("c2")))
-    tot = per.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2")).collect()[0]
-    n1, n2 = float(tot["n1"]), float(tot["n2"])
-    cum = distributed_cumsum(per, "v", ["c1", "c2"], inclusive=True)
-    d = (cum.select(
-            F.abs(F.col("cum_c1") / n1 - F.col("cum_c2") / n2).alias("d"))
-           .agg(F.max("d").alias("d")).collect()[0]["d"])
+    with _persisted(per):
+        tot = per.agg(F.sum("c1").alias("n1"),
+                      F.sum("c2").alias("n2")).collect()[0]
+        n1, n2 = float(tot["n1"]), float(tot["n2"])
+        cum = distributed_cumsum(per, "v", ["c1", "c2"], inclusive=True)
+        d = (cum.select(
+                F.abs(F.col("cum_c1") / n1 - F.col("cum_c2") / n2).alias("d"))
+               .agg(F.max("d").alias("d")).collect()[0]["d"])
     ne = n1 * n2 / (n1 + n2)
     lam = (math.sqrt(ne) + 0.12 + 0.11 / math.sqrt(ne)) * d
     p = 2.0 * sum((-1) ** (k - 1) * math.exp(-2.0 * k * k * lam * lam)

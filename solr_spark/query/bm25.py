@@ -39,11 +39,10 @@ follows from the count:
   n tasks: ONE repartition(n, range_id) feeds a `mapInPandas` that runs the
            range driver per partition and emits (docid, score) candidates;
            `rank_topk` collects their top k in one TakeOrdered job.
-An fq reaches both placements as the reader's cached {range_id: filter
-words} (docsets.filter_words: one job on a miss, none on a hit). On one
-task the kernel takes them as they are; on n tasks they ship as a local
-relation unioned into the posting rows ahead of that one exchange, so
-there is no join.
+An fq reaches the one-task kernel as the reader's cached {range_id: filter
+words} (docsets.filter_words: one job on a miss, none on a hit). On n tasks
+the words stay in the JVM: bitmaps exchanged into the kernel's partitions
+and joined to the posting rows there, so the join adds no exchange.
 
 Global (not per-shard) df/N/avgdl are shipped into the kernel — the
 ExactStatsCache lesson (search/stats/ExactStatsCache.java:61) applied by design.
@@ -250,14 +249,20 @@ class IndexReader:
         than `max_bytes`.
 
         Each file's footer is parsed once per segment list (see _handle),
-        so a fetch reads only row data. A shard that owns no docid range
-        has an EMPTY segment dir (only _SUCCESS), hence no files: every
-        query over it matches nothing."""
+        so a fetch stats the segment dirs and reads only row data. A shard
+        that owns no docid range has an EMPTY segment dir (only _SUCCESS),
+        hence no files: every query over it matches nothing. A segment dir
+        that is gone raises FileNotFoundError."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         paths = self.segment_paths() if segments is None else [
             os.path.join(self.index_dir, "segments", n) for n in segments]
+        # keyed by each segment dir's inode and mtime, not its path: a merge
+        # that rewrites a segment dir in place recreates it, so it opens the
+        # new files (and a dir that is gone raises FileNotFoundError)
+        stamps = [(p, st.st_ino, st.st_mtime_ns)
+                  for p in paths for st in (os.stat(p),)]
 
         def open_files():  # term_bucket -> [(ParquetFile, file bytes)]
             files: dict[int, list] = {}
@@ -268,7 +273,7 @@ class IndexReader:
                     files.setdefault(bucket, []).append(
                         (pq.ParquetFile(f), os.path.getsize(f)))
             return files
-        files = self._handle("posting_files", None, paths, open_files)
+        files = self._handle("posting_files", None, stamps, open_files)
         picked = [f for b in sorted(set(_term_buckets(
             terms, self.config.num_term_buckets))) for f in files.get(b, ())]
         if max_bytes is not None and sum(n for _, n in picked) > max_bytes:
@@ -669,11 +674,13 @@ def score_ranges(plan: QueryPlan, ranges, dels: np.ndarray | None):
 # task costs to schedule, so a smaller query gains nothing from a second task
 POSTINGS_PER_TASK = 1 << 20
 # Bucket-file bytes a one-task query reads on the driver (posting_rows)
-# rather than through a Spark scan job. On a 4-vCPU box the fetch ran at
-# 115-126 MB/s over 0.8-1.6 MB bucket files (70 MB/s at 0.2 MB; medians of
-# 80 one-term reads) and the same scan as one Spark job took ~63-78 ms, so
-# 8 MiB on the driver costs about one job. The fetch reads whole bucket
-# files, so at scale this bound, not the posting count, keeps it small.
+# rather than through a Spark scan job. On a 4-vCPU box (local[4]; medians
+# of 80 one-term reads of 80k/160k-turn indexes built with 1-4 term
+# buckets) the fetch took 18 / 33 / 66 / 142 ms over 3.1 / 6.2 / 12.3 /
+# 24.6 MB of bucket files (165-190 MB/s), and the same scan as one Spark
+# job 56 / 46 / 50 / 46 ms: the fetch costs about one job at ~8-9 MB. It
+# reads whole bucket files, so at scale this bound, not the posting
+# count, keeps it small.
 DRIVER_SCAN_BYTES = 8 << 20
 # the segment columns the kernel reads
 _SCAN_COLUMNS = ("term", "range_id", "n_docs", "doc_gaps", "tfs", "max_tf")
@@ -936,12 +943,12 @@ def bm25_topk(
     attribute columns, conv_id/turn_idx, and `text` = analyzed tokens;
     `now` anchors date-math endpoints like `ts:[NOW-7DAYS TO *]`);
     `filter_docids` is a precomputed DataFrame(docid). Either becomes
-    per-range bitmap words (docsets.filter_words; `filters` are cached per
-    reader, the filterCache): ranges with no allowed doc are skipped
-    WITHOUT decoding (composing with WAND's bound skipping), surviving docs
-    are masked before heap collection, and a selective filter still returns
-    k hits (post-joining the top-k would not). Scoring stats stay GLOBAL —
-    fq narrows the result set, never the scoring model.
+    per-range bitmap words (query/docsets.py; on one task `filters` are
+    cached per reader, the filterCache): ranges with no allowed doc are
+    skipped WITHOUT decoding (composing with WAND's bound skipping),
+    surviving docs are masked before heap collection, and a selective filter
+    still returns k hits (post-joining the top-k would not). Scoring stats
+    stay GLOBAL — fq narrows the result set, never the scoring model.
 
     similarity: scoring model — "bm25" (default), "classic" (TF-IDF),
     "boolean", "lmdirichlet", "lmjelinekmercer", or a Similarity instance
@@ -984,11 +991,7 @@ def bm25_topk(
         filters = None  # empty fq list = no filter
     if filters is not None and filter_docids is not None:
         raise ValueError("pass filters OR filter_docids, not both")
-    allow = None
-    if filters is not None or filter_docids is not None:
-        from solr_spark.query.docsets import filter_words
-
-        allow = filter_words(spark, reader, filters, filter_docids, now)
+    use_filter = filters is not None or filter_docids is not None
 
     index_dir = reader.index_dir
     # liveDocs mask (indexing/deletes.py): tombstoned docids are dropped
@@ -1020,39 +1023,45 @@ def bm25_topk(
                                    max_bytes=DRIVER_SCAN_BYTES)
         if rows is None:
             rows = spark_scan().toArrow()
+        allow = None
+        if use_filter:
+            from solr_spark.query.docsets import filter_words
+
+            allow = filter_words(spark, reader, rows["range_id"].to_numpy(),
+                                 filters, filter_docids, now)
         return _ranked(spark, index_dir, *_kernel_topk(
             plan, rows.to_pandas(), index_dir, dels, prune, allow))
 
-    rows = spark_scan()
-    if allow is not None:
-        # the cached fq words ride the posting rows as rows of their own
-        # (term null), so one exchange brings a range's words to its kernel
-        rows = rows.unionByName(local_df(spark, pa.table({
-            "range_id": pa.array(list(allow), pa.int64()),
-            "filter_bits": pa.array(list(allow.values()),
-                                    pa.list_(pa.int64()))}),
-            "range_id long, filter_bits array<bigint>"),
-            allowMissingColumns=True)
-    use_filter = allow is not None  # a flag: the closure never ships words
+    # the plan's one exchange: every row of a range meets in one kernel
+    # call, which orders its ranges by WAND bound itself
+    rows = spark_scan().repartition(n_tasks, "range_id")
+    if use_filter:
+        from solr_spark.query.docsets import docid_range_bitmaps
+        from solr_spark.query.docsets import filter_docids as _compile_fq
+
+        if filters is not None:
+            filter_docids = _compile_fq(spark, reader, filters, now=now)
+        # the fq words stay in the JVM: exchanged into the kernel's
+        # partitions, so the shuffle join adds no exchange and no broadcast;
+        # a range with no allowed doc never reaches the kernel
+        rows = rows.join(docid_range_bitmaps(
+            filter_docids, reader.config.range_shift, n_tasks)
+            .hint("shuffle_hash"), "range_id")
 
     def topk_iter(batches):
-        """This partition's rows (the query terms' posting rows of its
-        ranges, and under fq their words) -> its top-k."""
+        """This partition's posting rows (the query terms' rows of its
+        ranges, each with its range's `filter_bits` under fq) -> its
+        top-k."""
         frames = [b for b in batches if len(b)]
         if frames:
             pdf = pd.concat(frames, ignore_index=True)
             words = None
             if use_filter:
-                bits = pdf["term"].isna().to_numpy()
-                words = dict(zip(pdf["range_id"][bits],
-                                 pdf["filter_bits"][bits]))
-                pdf = pdf[~bits]
+                first = pdf.drop_duplicates("range_id")
+                words = dict(zip(first["range_id"], first["filter_bits"]))
             d, s = _kernel_topk(plan, pdf, index_dir, dels, prune, words)
             if len(d):
                 yield pd.DataFrame({"docid": d, "score": s})
 
-    # the plan's one exchange: every row of a range meets in one kernel
-    # call, which orders its ranges by WAND bound itself
-    return rank_topk(spark, reader, rows.repartition(n_tasks, "range_id")
-                     .mapInPandas(topk_iter, "docid long, score double"),
-                     plan.k)
+    return rank_topk(spark, reader, rows.mapInPandas(
+        topk_iter, "docid long, score double"), plan.k)

@@ -108,10 +108,10 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
     deviation documented).
 
     filters / filter_docids: q+fq (see bm25_topk) — the term query hands
-    them to bm25_topk as given (fq strings hit the reader's filterCache);
-    the phrase clauses share one compiled DocSet; phrase-only queries score
-    their FULL match set and intersect before ranking, so a selective
-    filter still returns k hits."""
+    them to bm25_topk as given (fq strings hit the reader's filterCache),
+    and phrase boosts only rescore its hits; phrase-only queries compile
+    the fq once, score their FULL match set and intersect before ranking,
+    so a selective filter still returns k hits."""
     from solr_spark.query.multiterm import expand_fuzzy, expand_wildcard
     from solr_spark.query.phrase import (match_scores, phrase_matches,
                                          phrase_topk)
@@ -121,13 +121,6 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
         filters = None  # empty fq list = no filter, skip the bitmap machinery
     if filters is not None and filter_docids is not None:
         raise ValueError("pass filters OR filter_docids, not both")
-    # the term query takes the fq as given, so fq strings hit the reader's
-    # filterCache (bm25_topk); the phrase paths need it as docids
-    term_fq = {"filters": filters, "filter_docids": filter_docids, "now": now}
-    if filters is not None:
-        from solr_spark.query.docsets import filter_docids as _compile_fq
-
-        filter_docids = _compile_fq(spark, reader, filters, now=now)
     sq = parse_scored_query(q)
     required_set = set(sq.required)
 
@@ -174,10 +167,16 @@ def scored_topk(spark: SparkSession, reader: IndexReader, q: str,
                          k=max(k * 4, 100) if sq.phrases else k, mode="wand",
                          synonyms=synonyms or None, boosts=boosts or None,
                          prohibited=sq.prohibited or None,
-                         required=required_canon or None, **term_fq)
+                         required=required_canon or None,
+                         filters=filters, filter_docids=filter_docids, now=now)
         if not sq.phrases:
             return main
         main = main.select("docid", "score")
+    elif sq.phrases and filters is not None:
+        # a phrase-only query semi-joins the fq, so it needs it as docids
+        from solr_spark.query.docsets import filter_docids as _compile_fq
+
+        filter_docids = _compile_fq(spark, reader, filters, now=now)
 
     if (sq.phrases and main is None and len(sq.phrases) == 1
             and filter_docids is None):

@@ -281,10 +281,11 @@ def test_ttest_anova_mw_ks(spark):
 
 
 def test_prefix_sum_callers_leave_nothing_persisted(spark):
-    """distributed_cumsum pins its range boundaries without a cache, so its
-    callers leave the session's persistent RDDs as they found them, and the
-    running sums still match a sort on the driver across range partitions
-    (a string key, repeated values, and nulls at ordinal 0)."""
+    """distributed_cumsum pins its range boundaries without a cache, and
+    the eager statistics release what they persist, so its callers leave
+    the session's persistent RDDs as they found them; the running sums
+    still match a sort on the driver across range partitions (a string
+    key, repeated values, and nulls at ordinal 0)."""
     from solr_spark.functions.funcquery import with_ord
 
     rng = np.random.default_rng(11)
@@ -301,6 +302,7 @@ def test_prefix_sum_callers_leave_nothing_persisted(spark):
     rord = {v: len(vals) - i for i, v in enumerate(vals)}
     assert got == {i: rord.get(s, 0) for i, *_, s in rows}
     E.mann_whitney(df, "x", "g")
+    E.kolmogorov_smirnov(df, "x", "g")
     E.dataset_corr(df, "x", "y", method="spearman").collect()
     assert set(persisted().keys()) == before
 

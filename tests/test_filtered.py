@@ -154,6 +154,33 @@ def test_filter_cache_evicts_by_bytes(spark, built, count_jobs, monkeypatch):
     assert list(reader._filter_cache) == [key_a]
 
 
+def test_filter_cache_never_flushed_by_an_fq_it_cannot_hold(
+        spark, built, count_jobs, collected_arrow, monkeypatch):
+    """An fq whose words could exceed the cache bound is collected for the
+    query's own ranges only and never inserted, so the entries already
+    cached stay; it runs its one job on every call and returns the same
+    rows as a reader with room for it."""
+    from solr_spark.query import docsets
+
+    reader = IndexReader.open(built, CFG)
+    a, b, c = ["role:assistant"], ["role:user"], ["role:system"]
+    for fq in (a, b):
+        _rows(bm25_topk(spark, reader, Q, k=10, filters=fq))
+    keys = list(reader._filter_cache)
+    entry = sum(w.nbytes for w in reader._filter_cache[keys[0]].values())
+    monkeypatch.setattr(docsets, "FILTER_CACHE_BYTES", entry - 1)
+    del collected_arrow[:]
+    runs = [count_jobs(lambda: _rows(bm25_topk(spark, reader, Q, k=10,
+                                               filters=c)))
+            for _ in range(2)]
+    assert [jobs for _, jobs in runs] == [1, 1]
+    assert list(reader._filter_cache) == keys
+    monkeypatch.undo()
+    want = _rows(bm25_topk(spark, IndexReader.open(built, CFG), Q, k=10,
+                           filters=c))
+    assert runs[0][0] == runs[1][0] == want and want
+
+
 def test_filter_docids_precomputed_handle(spark, built):
     from solr_spark.query.docsets import filter_docids
 

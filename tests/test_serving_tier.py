@@ -243,11 +243,11 @@ def _assert_want(rows, want):
 
 # bm25_topk placements and the module constants that force them: the
 # driver's pyarrow fetch, the Spark scan above DRIVER_SCAN_BYTES, and the
-# n-task kernel. Value: (constants, Spark jobs of a query whose fq words
-# are cached, what it collects as Arrow)
-PLACEMENTS = {"driver": ({}, 0, []),
-              "spark_scan": ({"DRIVER_SCAN_BYTES": 0}, 1, ["term"]),
-              "tasks": ({"POSTINGS_PER_TASK": 16}, 1, ["docid"])}
+# n-task kernel. Value: (constants, Spark jobs of a plain query, the first
+# column of each frame it collects as Arrow, whether an fq is cached)
+PLACEMENTS = {"driver": ({}, 0, [], True),
+              "spark_scan": ({"DRIVER_SCAN_BYTES": 0}, 1, ["term"], True),
+              "tasks": ({"POSTINGS_PER_TASK": 16}, 1, ["docid"], False)}
 
 
 @pytest.mark.parametrize("placement", list(PLACEMENTS))
@@ -259,7 +259,7 @@ def test_plain_query_on_every_placement_matches_oracle(
     from solr_spark.query import bm25
 
     idx, oracle, _role, dead = tombstoned
-    consts, _, collects = PLACEMENTS[placement]
+    consts, _, collects, _ = PLACEMENTS[placement]
     for name, value in consts.items():
         monkeypatch.setattr(bm25, name, value)
     reader = IndexReader.open(idx, MULTI_CFG)
@@ -275,14 +275,16 @@ def test_plain_query_on_every_placement_matches_oracle(
 def test_filter_cache_hit_and_miss_match_oracle(
         spark, tombstoned, count_jobs, collected_arrow, monkeypatch,
         placement):
-    """The first role-fq query on a reader collects the fq's bitmap words
-    in one extra job; the repeat takes them from the reader's filterCache.
-    On every placement both return the oracle's rows with the tombstoned
+    """On one task (the driver or the Spark scan) the first role-fq query
+    on a reader collects the fq's bitmap words in one extra job, and the
+    repeat takes them from the reader's filterCache. On n tasks the words
+    stay in the JVM, joined to the posting rows, and nothing is cached. On
+    every placement both return the oracle's rows with the tombstoned
     winners dropped."""
     from solr_spark.query import bm25
 
     idx, oracle, role, dead = tombstoned
-    consts, hit_jobs, collects = PLACEMENTS[placement]
+    consts, jobs, collects, cached = PLACEMENTS[placement]
     for name, value in consts.items():
         monkeypatch.setattr(bm25, name, value)
     reader = IndexReader.open(idx, MULTI_CFG)
@@ -293,13 +295,13 @@ def test_filter_cache_hit_and_miss_match_oracle(
 
     miss, miss_jobs = count_jobs(topk)
     assert [df.columns[0] for df in collected_arrow] == \
-        ["range_id"] + collects
+        collects + ["range_id"] * cached
     del collected_arrow[:]
-    hit, jobs = count_jobs(topk)
+    hit, hit_jobs = count_jobs(topk)
     assert [df.columns[0] for df in collected_arrow] == collects
-    assert (miss_jobs, jobs) == (hit_jobs + 1, hit_jobs)
+    assert (miss_jobs, hit_jobs) == (jobs + cached, jobs)
     assert miss == hit
-    assert len(reader._filter_cache) == 1
+    assert len(reader._filter_cache) == cached
     _assert_want(hit, _role_want(oracle, role, dead, q, k))
 
 
@@ -341,3 +343,40 @@ def test_filter_cache_follows_deletes_and_new_batches(spark, tombstoned,
     want = _role_want(oracle, role, dead, q, k)
     assert any(d >= 520 for d, _ in want)  # a new doc ranks
     _assert_want(topk(IndexReader.open(idx, MULTI_CFG)), want)
+
+
+def test_reader_reads_a_segment_rewritten_in_place(spark, tombstoned,
+                                                    tmp_path):
+    """merge_segments rewrites segments/merged-000 in place when it purges
+    new tombstones. A long-lived reader's driver posting fetch opens the
+    rewritten files (its handles are keyed by the segment dir's inode and
+    mtime, not its path), so a doc deleted and purged between two merges never
+    comes back once its tombstone is cleared. A fetch from a segment dir
+    that is gone fails loudly rather than reading nothing."""
+    import shutil
+
+    from solr_spark.indexing.deletes import deleted_array, delete_docids
+    from solr_spark.indexing.merge import merge_segments
+
+    idx0, _oracle, _role, dead = tombstoned
+    idx = str(tmp_path / "idx")
+    shutil.copytree(idx0, idx)
+    reader = IndexReader.open(idx, MULTI_CFG)
+    q, k = MULTI_QUERIES[0], 20
+
+    def docids():
+        return [r.docid for r in bm25_topk(spark, reader, q, k=k).collect()]
+
+    assert not dead & set(docids())
+    merge_segments(spark, idx, MULTI_CFG)
+    victim = docids()[0]
+    delete_docids(spark, idx, spark.createDataFrame([(victim,)],
+                                                    "docid long"))
+    merge_segments(spark, idx, MULTI_CFG)
+    assert live_segments(idx) == ["merged-000"]
+    assert not len(deleted_array(spark, idx))
+    got = docids()
+    assert len(got) == k
+    assert victim not in got and not dead & set(got)
+    with pytest.raises(FileNotFoundError):  # a segment no longer on disk
+        reader.posting_rows(["error"], ["term"], ["no-such-segment"])
